@@ -53,9 +53,8 @@ changing load and its per-query deltas should be read against the
 WIDER of the two spreads.
 
 Row-drift pin (r12+): per-query RESULT row counts are compared against
-the most recent prior artifact that parsed at the same sf (BENCH_r*.json
-``parsed.rows``, falling back to a previous BENCH_LOCAL.json); any
-mismatch prints a ``# ROW-DRIFT WARNING`` line to stderr. Warn-only by
+the previous run's BENCH_LOCAL.json at the same sf; any mismatch prints
+a ``# ROW-DRIFT WARNING`` line to stderr. Warn-only by
 design — a legitimate operator change can move a count — but a query
 that "improved" by silently returning fewer rows now leaves a visible
 mark in the round's log.
@@ -65,7 +64,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
@@ -132,6 +130,7 @@ def compact_payload(
             else None
         )
 
+    nc, ncp = canary_min_max(canary), canary_min_max(canary_pre)
     return {
         "metric": "headline_query_total",
         "value": round(total, 3),
@@ -150,8 +149,8 @@ def compact_payload(
         "methodology": METHODOLOGY,
         "materialization": "noop",
         "timing": TIMING_LABEL,
-        "noise_canary": canary_min_max(canary),
-        "noise_canary_pre": canary_min_max(canary_pre),
+        "noise_canary": nc,
+        "noise_canary_pre": ncp,
         # r16 (additive, VERDICT r15 item 7): the canary FLOOR — the
         # best the host could do on the fixed canary query across both
         # canary passes — as one machine-readable number, so cross-round
@@ -159,13 +158,7 @@ def compact_payload(
         # (r15's 11 "regressed" queries tracked a 0.26 -> 0.343 floor
         # shift) instead of by narrative. Timing methodology unchanged.
         "canary_floor": (
-            min(
-                x["min"]
-                for x in (canary_min_max(canary), canary_min_max(canary_pre))
-                if x
-            )
-            if (canary or canary_pre)
-            else None
+            min(x["min"] for x in (nc, ncp) if x) if (nc or ncp) else None
         ),
         # raw per-query samples + full canary arrays
         "detail": "BENCH_LOCAL.json",
@@ -173,50 +166,27 @@ def compact_payload(
     }
 
 
-def prior_rows(repo: str, sf: float) -> tuple[str, dict] | None:
-    """Most recent prior per-query row counts at the same sf: the latest
-    driver artifact whose stdout parsed (BENCH_r*.json ``parsed.rows``),
-    else the previous run's BENCH_LOCAL.json."""
-    arts = [
-        f for f in os.listdir(repo) if re.fullmatch(r"BENCH_r\d+\.json", f)
-    ]
-    arts.sort(key=lambda f: int(re.search(r"r(\d+)", f).group(1)))
-    for f in reversed(arts):
-        try:
-            with open(os.path.join(repo, f)) as fh:
-                parsed = json.load(fh).get("parsed")
-            if (
-                isinstance(parsed, dict)
-                and parsed.get("sf") == sf
-                and isinstance(parsed.get("rows"), dict)
-            ):
-                return f, parsed["rows"]
-        except (OSError, ValueError):
-            continue
-    local = os.path.join(repo, "BENCH_LOCAL.json")
+def prior_rows(repo: str, sf: float) -> dict | None:
+    """The previous run's per-query row counts (BENCH_LOCAL.json), if it
+    ran at the same sf."""
     try:
-        with open(local) as fh:
+        with open(os.path.join(repo, "BENCH_LOCAL.json")) as fh:
             prev = json.load(fh)
-        if prev.get("sf") == sf and isinstance(prev.get("rows"), dict):
-            return "BENCH_LOCAL.json", prev["rows"]
     except (OSError, ValueError):
-        pass
+        return None
+    if prev.get("sf") == sf and isinstance(prev.get("rows"), dict):
+        return prev["rows"]
     return None
 
 
 def check_row_drift(repo: str, sf: float, rows: dict) -> list[str]:
-    """Warn-only row-count drift vs the last comparable artifact."""
-    ref = prior_rows(repo, sf)
-    if ref is None:
-        return []
-    src, prev = ref
-    warnings = []
-    for name, n in rows.items():
-        if name in prev and n is not None and prev[name] != n:
-            warnings.append(
-                f"# ROW-DRIFT WARNING {name}: {prev[name]} -> {n} (vs {src})"
-            )
-    return warnings
+    """Warn-only row-count drift vs the previous run."""
+    prev = prior_rows(repo, sf) or {}
+    return [
+        f"# ROW-DRIFT WARNING {name}: {prev[name]} -> {n} (vs BENCH_LOCAL.json)"
+        for name, n in rows.items()
+        if name in prev and n is not None and prev[name] != n
+    ]
 
 
 def main():
@@ -333,8 +303,8 @@ def main():
 
     canary = run_canary("post")
 
-    # row-drift pin BEFORE overwriting BENCH_LOCAL.json (it may be the
-    # comparison source when no driver artifact parsed at this sf)
+    # row-drift pin BEFORE overwriting BENCH_LOCAL.json (the comparison
+    # source)
     for w in check_row_drift(repo, sf, rows):
         print(w, file=sys.stderr)
 

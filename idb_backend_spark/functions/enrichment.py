@@ -83,7 +83,7 @@ def geo_normalize(lat_raw: Column, lon_raw: Column) -> dict[str, Column]:
     should use ``with_geo_normalize`` — the staged form that parses each
     coordinate ONCE into an explicit column (r15 A/B on the 600k-row
     enrichment frame: 1.53 s -> 0.94 s for the geo+flags+shift subtree,
-    tools/probe_geo_staged.py). This form stays for single-reference
+    OPTIMIZATION_r15.md §6). This form stays for single-reference
     expression contexts and as the semantics anchor.
     """
     # py_double, not a bare try_cast (r12): the reference's float() call

@@ -1014,9 +1014,9 @@ def ingest_subfiles_routed(
     work: a handful of mega-recordsets no longer pin one executor.
 
     ``kernel_max_rows`` default comes from the MEASURED memory profile
-    (tools/probe_ingest_memory.py, SCALING.md r13 addendum 1): the
-    kernel's Python worker holds ~3.6 KB/row end-to-end (pandas group
-    + lookup dicts + outcome rows; linear 250 k → 5 M rows), so
+    (SCALING.md, Round-13 addendum 1): the kernel's Python worker
+    holds ~3.6 KB/row end-to-end (pandas group + lookup dicts +
+    outcome rows; linear 250 k → 5 M rows), so
     1.2 M rows ≈ 4.1 GiB — a safe per-task budget on an 8–16 GiB
     executor. Scale it with the executor's python-worker budget:
     rows ≈ budget_bytes / 3600.

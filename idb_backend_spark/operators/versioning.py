@@ -64,7 +64,7 @@ def latest_per_key_agg(
     ``ColumnPruning``'s NestedColumnAliasing then ping-ponged the join
     across that Project with fresh ``_extract_*`` aliases every
     iteration — the optimizer hit ``Max iterations (100)`` without
-    reaching a fixpoint (probed: tools/probe_optimizer_convergence.py).
+    reaching a fixpoint (SCALING.md, Round-14 addendum 1).
     Row atomicity is preserved: the N ``max_by`` calls are structurally
     identical, so PhysicalAggregation dedupes them to ONE aggregation
     buffer — one winner row, fields torn from the same struct.

@@ -1,109 +1,24 @@
 """The demo catalog — every operator from SURVEY §2 registered as a
-driver-gradable (query, oracle) pair.
+gradable (query, oracle) pair.
 
 This module is the aggregation point: importing it registers every entry
 in the topic modules (side-effect registration through the @query
 decorator in plans.registry) and re-exports the registry surface the
-driver contract (__spark_entry__) reads. The synthetic-input SQL
-builders shared across modules live in plans.synth.
+driver contract (__spark_entry__) reads. Q and ORACLE keep plain module
+registration order. The synthetic-input SQL builders shared across
+modules live in plans.synth.
 
-Grading-window rotation
------------------------
-The driver grades the FIRST 50 registered entries each round, so
-registration order decides which entries get driver evidence. Rather
-than relying on module import order (which let three round-4 entries —
-keyset_deep_page, fulltext_skipping_scan, ann_batch_topk — land outside
-the window and go ungraded), the front of the registration order is now
-COMPUTED: `_grade_front()` reads the latest CORRECTNESS_r*.json in the
-repo root and returns every entry with no green row there — which
-automatically includes every entry added since that artifact — and
-`_reorder()` rebuilds Q/ORACLE so those entries occupy the first slots.
+Two rules still constrain what registers here:
 
-Rotation rule (enforced by tests/test_catalog_window.py): the computed
-front must fit inside the 50-entry window. With the catalog at exactly
-100 entries this alternates the two halves round by round with no
-manual flip — each half is re-graded every other round. A red or
-errored row stays in the computed front; at the 100-entry ceiling that
-overflows the window and fails the rotation tests until an entry is
-retired — deliberate: a failing entry can never silently rotate out of
-grading. Adding an entry likewise requires retiring one (the window
-keeps at most 2x50 entries fresh within two rounds).
-
-The two sketch entries whose hash families are not SQL-expressible
-(minhash_lsh_pairs, simhash_pairs) are registered graded=False: they
-stay runnable (bench.py times them via UNGRADED) but no longer consume
-grading slots as permanent no-oracle rows; their recall is oracle-proven
-by minhash_exact_verified / simhash_exact_verified.
-
-Round-6 retirements: total_count, stats_daily_rollup, keyset_pagination
-(each redundantly covered — see the comments at their former
-registration sites) freed slots for export_jobs_queue and
-video_frame_sample at 99 total; a second pass retired date_features and
-bpe_token_count (both single-expression entries whose operator classes
-stay graded by date_fallback_assembly / token_count_quality +
-text_quality_metrics) for mixture_sample and sequence_packing. The
-sessionize/sessionize_batch pair was deliberately NOT folded: the
-streaming and batch operators are distinct code paths
-(applyInPandasWithState vs gaps-and-islands) and each needs its own
-driver evidence. A third pass retired max_watermark (see q_relational)
-for quantized_cosine_topk.
-
-Round-7 retirements — draining the round-6 grading queue (verdict r6
-task 1): eight entries in the round-7 front retired (rationales at
-their former registration sites — doc_fingerprint, ngram_jaccard_pairs,
-fulltext_skipping_scan, ann_batch_topk, deterministic_sample in
-q_textsim; raw_field_access, tombstone_deletes in q_store;
-shim_range_prefix folded into shim_exists_range in q_shim), making room
-for NINE new entries (q_corpusops.py): cms_heavy_hitters,
-cap_per_domain, remove_repeated_spans, neardup_index_probe (build + add
-+ compact + exact probe in one graded path), nb_quality_score,
-bigram_lm_score, epoch_shuffle, sketch_audits (hll_distinct_audit +
-quantile_audit FOLDED into one slot — verdict r6 task 8), and
-perceptual_neardup (T35's first oracle — verdict r6 task 3; planted
-byte-identical blobs through image_phash + the pigeonhole Hamming
-kernel at radius 0). Two judge-suggested retirements were corrected
-against the source: media_presence_flags is the ONLY driver evidence
-for P14 (index_sink_roundtrip does not exercise it — it stays);
-deterministic_sample and tombstone_deletes were retired instead
-(mixture_sample grades the same md5-cut kernel; anti_join_deletes +
-ingest_e2e's detect_deletes path grade both halves of U2).
-
-Round-11 promotions — the last two §2 components without driver
-evidence, `datasets_index_codes` (S15) and `media_serving_table` (P15),
-promoted to graded slots (verdict r10 task 1). The two slots: (a)
-`ann_cosine_topk` retired from grading (q_textsim.py — its brute-force
-rounded-cosine top-k kernel IS the oracle inside `ivf_ann_topk` and
-`pq_recall_audit`, both graded; kept graded=False on bench's HEADLINE),
-and (b) `shim_geo_distance` FOLDED into `shim_geo_bounding_box`
-(q_shim.py — P9's dispatch grades as the `in_dist_p9` projected flag
-plus the `dist_km` haversine projection, the same fold discipline as
-r10's shim_geo_polygon -> shim_geo_shape). Both retirements come from
-the r11 rotation front so the computed front stays at exactly 50.
-
-Round-13 rotation — `ingest_kernel_outcomes` registered (q_enrichment:
-driver-graded evidence for the r12 cogrouped ingest kernel + size
-router, both legs against one closed-form oracle; verdict r12 task 1),
-`versioned_merge` retired from the same rotation half (rationale at its
-former site in q_store.py — merge_batch stays value-hashed inside
-ingest_e2e). Catalog holds at exactly 100; the computed front stays 50.
-
-Round-8 registrations — the grading queue is now EMPTY: the last two
-queued operators, tfidf_top_terms (operators/tfidf.py, twin
-tfidf_top_terms_sql, rounded-score ranking with integer tie-break) and
-pq_recall_audit (operators/pq.py — product quantization, BOTH
-deployment shapes in the one slot: flat PQ ADC + exact re-rank at a
-recall>=0.8 gate and the bucket-pruned IVF-PQ composition at
-recall>=0.7; audit-contract grading like the sketch tiers: exact-cosine
-id sets + the per-method booleans, never the raw recalls), registered
-in q_textsim.py. The two slots came from the pre-verified round-7
-candidates, re-verified against source this round before executing:
-latest_object_per_url (J6 — the identical versioning.latest_per_key_agg
-max_by(struct) kernel latest_version_per_key grades in the same
-rotation half; kept as graded=False because bench.py's HEADLINE times
-it) and dqs_score (A8/F18 — records_typed_projection grades the real
-table-driven dqs_score_for kernel in the same half; the retired entry's
-inline documents-table formula was a restatement, not a distinct
-kernel). Rationales at the former registration sites in q_relational.py.
+- Sketch entries whose hash families are not SQL-expressible
+  (minhash_lsh_pairs, simhash_pairs) register with graded=False and land
+  in UNGRADED: runnable (bench.py times them) but never graded. Their
+  recall is oracle-proven by minhash_exact_verified /
+  simhash_exact_verified.
+- A retired entry's kernel stays graded inside a sibling entry. Each
+  retirement comment at the former registration site names the sibling
+  that grades the same kernel, and an entry is retired only when such a
+  sibling exists.
 """
 
 from __future__ import annotations
@@ -128,71 +43,3 @@ from idb_backend_spark.plans import (  # noqa: F401  (side-effect registration)
     q_textsim,
     q_corpusops,
 )
-
-# The grading front is COMPUTED, not hand-listed: every entry with no
-# FULLY green row (rows + schema + value hash — a rows-only match is a
-# value-level failure, see collection_counts_pivot in CORRECTNESS_r01)
-# in the latest CORRECTNESS artifact leads registration, in module
-# registration order; that automatically includes every entry added
-# since the artifact was recorded. With the catalog at 100 entries and
-# a 50-slot window, this alternates the two halves round by round with
-# no manual flip. A red/errored row stays in the computed front, which
-# then holds 51 names — tests/test_catalog_window.py fails the build
-# until an entry is retired to make room, so a red row can never be
-# silently rotated out of grading (the window cannot keep more than
-# 2x50 entries fresh within two rounds; the test is the alarm, not a
-# formality).
-
-
-def _grade_front() -> list[str]:
-    import json
-    import os
-    import re as _re
-
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    arts = [
-        f
-        for f in os.listdir(repo)
-        if _re.fullmatch(r"CORRECTNESS_r\d+\.json", f)
-    ]
-    # numeric round order — lexicographic sort misreads r100 < r99 and
-    # unpadded names like r5 vs r04
-    arts.sort(key=lambda f: int(_re.search(r"r(\d+)", f).group(1)))
-    green: set[str] = set()
-    if arts:
-        try:
-            with open(os.path.join(repo, arts[-1])) as fh:
-                prev = json.load(fh)
-            green = {
-                n
-                for n, row in prev.items()
-                if isinstance(row, dict)
-                and row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            }
-        except (OSError, ValueError):
-            green = set()
-    return [n for n in Q if n not in green]
-
-
-_GRADE_FRONT = _grade_front()
-
-
-def _reorder() -> None:
-    """Rebuild Q/ORACLE so _GRADE_FRONT entries register first (driver
-    grades the first 50); the rest keep their module registration order."""
-    front = [n for n in _GRADE_FRONT if n in Q]
-    rest = [n for n in Q if n not in set(front)]
-    order = front + rest
-    q_ordered = {n: Q[n] for n in order}
-    Q.clear()
-    Q.update(q_ordered)
-    o_ordered = {n: ORACLE[n] for n in order if n in ORACLE}
-    ORACLE.clear()
-    ORACLE.update(o_ordered)
-
-
-_reorder()

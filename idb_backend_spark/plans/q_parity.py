@@ -110,7 +110,7 @@ def _typed_projection_oracle() -> str:
     # F15 derived commonnames (conversions.py:818-835): the RAW verbatim
     # seed, unfolded — no lower/trim (the raw map here has no gbif keys,
     # so the gbif loop contributes nothing; the loop half is graded by
-    # etl_enrichment_pipeline in the other rotation half). coalesce: the
+    # etl_enrichment_pipeline as well). coalesce: the
     # engine's empty assembly is [] -> '' after the boundary join.
     vern = _RAW_SYNTH["dwc:vernacularName"]
     cols.append(f"coalesce({vern}, '') AS commonnames")

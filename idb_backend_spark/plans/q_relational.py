@@ -168,11 +168,11 @@ def anti_join_deletes(spark, sf_dir):
 
 
 # Catalog entry `latest_object_per_url` retired from GRADING in round 8
-# to free a window slot for `tfidf_top_terms` (catalog.py rotation
+# to free a window slot for `tfidf_top_terms` (catalog.py retirement
 # rule). J6 stays covered: the operator body is the SAME
 # versioning.latest_per_key_agg max_by(struct) kernel that
-# `latest_version_per_key` drives to a green row in the same rotation
-# half (J6 binds it to a composite fact key instead of a single entity
+# `latest_version_per_key` drives to a green row in the same catalog
+# (J6 binds it to a composite fact key instead of a single entity
 # key — key arity changes the grouping expression, not the kernel), and
 # the kernel's window-form equivalence is pinned by
 # tests/test_plan_properties.py. Registered graded=False rather than
@@ -278,7 +278,7 @@ def citation_counts(spark, sf_dir):
 
 
 # A2 (filtered total count) — catalog entry `total_count` retired in
-# round 6 to fit the 50-slot grading window (catalog.py rotation rule).
+# round 6 to fit the 50-slot grading window (catalog.py retirement rule).
 # The operator stays covered: `download_e2e` drives the shim-compiled
 # filter -> count composition end-to-end (its citation totals come from
 # compile_shim-filtered counts), the count/hit_counts aggregation shape
@@ -363,7 +363,7 @@ def collection_counts_pivot(spark, sf_dir):
 
 # A7 (basic daily rollup) — catalog entry `stats_daily_rollup` retired in
 # round 6 to free a grading slot for `export_jobs_queue` (catalog.py
-# rotation rule). The A7 operator stays driver-graded through
+# retirement rule). The A7 operator stays driver-graded through
 # `stats_rollup_nested` (q_store.py — the full nested-freq-map shape);
 # agg.stats_rollup remains unit-tested in tests/test_plan_properties.py.
 
@@ -398,8 +398,8 @@ def majority_vote(spark, sf_dir):
 
 
 # Catalog entry `dqs_score` retired in round 8 to free a window slot
-# for `pq_recall_audit` (catalog.py rotation rule). A8/F18 stay
-# driver-graded in the SAME rotation half: `records_typed_projection`
+# for `pq_recall_audit` (catalog.py retirement rule). A8/F18 stay
+# driver-graded in the same catalog: `records_typed_projection`
 # computes its dqs column through the real table-driven kernel
 # (functions.flags.dqs_score_for over the §1.4 typed schema's
 # weights/maxscore — the reference's conversions.py:218-224,:264-271
@@ -413,7 +413,7 @@ def majority_vote(spark, sf_dir):
 
 # O1 (LIMIT/OFFSET page) — catalog entry `keyset_pagination` retired in
 # round 6 to free a grading slot for `video_frame_sample` (catalog.py
-# rotation rule). O1 stays driver-graded through `keyset_deep_page`
+# retirement rule). O1 stays driver-graded through `keyset_deep_page`
 # (the continuation walk, which exercises the same ordered-page
 # machinery deeper), and paginate()/keyset equivalence is pinned by
 # tests/test_plan_properties.py::test_paginate_and_keyset_walk_the_same_sequence.
@@ -546,7 +546,7 @@ def ordered_group_iteration(spark, sf_dir):
 # .py:74-100). PROMOTED to a graded slot in round 11 (the slot freed by
 # the ann_cosine_topk retirement, q_textsim.py — verdict r10 task 1;
 # registered graded=False in r10 only because the catalog sat at the
-# 2x50 rotation ceiling). The kernel quirks (strict >0.9 gate with the
+# 100-entry ceiling). The kernel quirks (strict >0.9 gate with the
 # total-docs denominator, the single-bucket OR arm, verbatim cc vs
 # true_ic-folded ic, count-desc/key-asc top bucket) stay unit-pinned in
 # tests/test_datasets_index.py; the oracle grades them end-to-end.

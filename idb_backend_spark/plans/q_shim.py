@@ -13,9 +13,6 @@ from idb_backend_spark.plans.synth import GEO_LON as _GEO_LON
 # --------------------------------------------------------------------------
 # §2.2 — the iDigBio query format (shim) predicates
 # --------------------------------------------------------------------------
-# (registration order within this module no longer affects grading: the
-# window front is COMPUTED from the latest CORRECTNESS artifact by
-# plans/catalog._grade_front)
 
 _SHIM_FULLTEXT = {"fulltext": {"type": "fulltext", "value": "spark window merge"}}
 
@@ -56,7 +53,7 @@ def shim_term_terms(spark, sf_dir):
 
 
 # Catalog entry `shim_range_prefix` retired in round 7, FOLDED into
-# `shim_exists_range` below (catalog.py rotation rule): one combined
+# `shim_exists_range` below (catalog.py retirement rule): one combined
 # conjunction now drives exists + explicit range (both bounds) + prefix
 # through the same shim compilation the two entries exercised
 # separately — P3/P4/P5/P6 all stay driver-graded in one slot. Terms

@@ -29,8 +29,8 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 # Catalog entry `versioned_merge` retired in round 13 to free the slot
 # for `ingest_kernel_outcomes` (q_enrichment — driver-graded evidence
 # for the r12 cogrouped ingest kernel + size router; verdict r12
-# task 1). W2/X5 stay driver-graded without it, in the SAME rotation
-# half: `versioning.merge_batch` — the exact kernel this entry drove —
+# task 1). W2/X5 stay driver-graded without it, in the same
+# catalog: `versioning.merge_batch` — the exact kernel this entry drove —
 # runs INSIDE `ingest_e2e` (q_download), where apply_harvest_batch's
 # merge (store.py:252) feeds the live latest view that ingest_e2e
 # value-hashes, including the etag-gate (unchanged rows filtered) and
@@ -41,7 +41,7 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 
 
 # Catalog entry `tombstone_deletes` retired in round 7 to free a grading
-# slot (catalog.py rotation rule). U2 stays double-graded without it:
+# slot (catalog.py retirement rule). U2 stays double-graded without it:
 # the anti-join delete DETECTION shape is `anti_join_deletes`
 # (q_relational), and `versioning.tombstones_for_deletes` itself — the
 # fixed-tombstone-etag emission — runs INSIDE the driver-graded
@@ -290,9 +290,9 @@ def _etl_oracle_sql() -> str:
 def _etl_raw_frame(spark, sf_dir):
     """The etl pipeline's shared input stage: synthesized verbatim
     projection over the spread lineitem scan, staged geo normalization,
-    and the Molodensky shift. Factored out (r16) so the staged-flags A/B
-    probe (tools/probe_etl_flags_staged.py) builds the r15 form over the
-    identical input subtree."""
+    and the Molodensky shift. The r16 staged-flags A/B built both the
+    r15 and the staged form over this subtree (OPTIMIZATION_r16.md
+    §1)."""
     # the enrichment stack costs ~10x its scan bytes; a narrow scan
     # strands every other core on the whole row-wise pipeline
     # (guarded: no exchange when the scan is wide)
@@ -515,7 +515,7 @@ def etl_enrichment_pipeline(spark, sf_dir):
 
 
 # Catalog entry `raw_field_access` retired in round 7 to free a grading
-# slot (catalog.py rotation rule). P13's raw-map addressing stays
+# slot (catalog.py retirement rule). P13's raw-map addressing stays
 # driver-graded through `records_typed_projection` (the whole typed
 # projection is GetMapValue lookups out of the raw `data` map, schema-
 # table-driven, incl. missing-key NULL folds); the row-PREDICATE form —
@@ -1500,7 +1500,7 @@ def media_url_discovery(spark, sf_dir):
 # 3-table join + latest object + API response assembly). PROMOTED to a
 # graded slot in round 11 (the slot freed by folding shim_geo_distance
 # into shim_geo_bounding_box, q_shim.py — verdict r10 task 1; registered
-# graded=False in r10 only because the catalog sat at the rotation
+# graded=False in r10 only because the catalog sat at the 100-entry
 # ceiling). The oracle replicates the closed-form of the part-derived
 # domain: latest-object per url (the k%4 second version wins over the
 # k%2 first by `modified`), the type/mime Python-or folds, the storage

@@ -59,9 +59,9 @@ def token_count_quality(spark, sf_dir):
 
 
 # Catalog entry `doc_fingerprint` retired in round 7 to free a grading
-# slot (catalog.py rotation rule). The operator stays covered:
+# slot (catalog.py retirement rule). The operator stays covered:
 # text.fingerprint is the SAME md5-of-normalized-text expression
-# `exact_dedup` grades per-group (its fp column) every rotation, and
+# `exact_dedup` grades per-group (its fp column), and
 # the byte-exact content-hash discipline stays driver-graded through
 # `versioned_merge` (etag chain) — plus unit tests in tests/test_etags.py.
 
@@ -99,8 +99,8 @@ def lang_id_heuristic(spark, sf_dir):
 
 
 # Catalog entry `ngram_jaccard_pairs` retired in round 7 to free a
-# grading slot (catalog.py rotation rule). The exact-Jaccard semantics
-# stay driver-graded every rotation: `minhash_exact_verified` computes
+# grading slot (catalog.py retirement rule). The exact-Jaccard semantics
+# stay driver-graded: `minhash_exact_verified` computes
 # the SAME inverted-index exact-Jaccard pair set as its recall oracle
 # (synth.EXACT_JACCARD_SQL, identical threshold contract), and
 # `neardup_index_probe` grades the cross-frame variant; the operator
@@ -113,7 +113,7 @@ def lang_id_heuristic(spark, sf_dir):
 # free a slot for the S15 `datasets_index_codes` promotion
 # (q_relational.py) — same discipline as the round-8 dqs_score /
 # latest_object_per_url retirements: the brute-force rounded-cosine
-# top-k kernel stays ORACLE-graded every rotation because it IS the
+# top-k kernel stays ORACLE-graded because it IS the
 # oracle of `ivf_ann_topk` (the exact-cosine top-10 at 6 decimals the
 # IVF result must reproduce) and of `pq_recall_audit` (whose audit
 # contract hashes the exact-cosine id sets), both computed through the
@@ -524,7 +524,7 @@ def corpus_curation_pipeline(spark, sf_dir):
 
 
 # Catalog entry `fulltext_skipping_scan` retired in round 7 to free a
-# grading slot (catalog.py rotation rule). P7 fulltext semantics stay
+# grading slot (catalog.py retirement rule). P7 fulltext semantics stay
 # driver-graded via `shim_fulltext` (same tokenizer, same whole-token
 # conjunction); the skip-index maintenance loop stays driver-graded via
 # `token_index_update` (bootstrap + incremental update + pruned scan,
@@ -533,9 +533,9 @@ def corpus_curation_pipeline(spark, sf_dir):
 # in tests/test_skipping.py.
 
 # Catalog entry `ann_batch_topk` retired in round 7 to free a grading
-# slot (catalog.py rotation rule). The batched-query kernel is the SAME
+# slot (catalog.py retirement rule). The batched-query kernel is the SAME
 # rounded-cosine + window-top-k expression `ann_cosine_topk` grades
-# single-query every rotation; `ann.batch_topk` keeps its broadcast-
+# single-query; `ann.batch_topk` keeps its broadcast-
 # plan assertion AND a per-query-equals-exact-brute-force value test in
 # tests/test_plan_properties.py / tests/test_properties.py.
 
@@ -747,8 +747,8 @@ def pii_redaction(spark, sf_dir):
 
 
 # Catalog entry `deterministic_sample` retired in round 7 to free a
-# grading slot (catalog.py rotation rule). The md5-prefix-cut keep
-# expression is the SAME kernel `mixture_sample` grades every rotation
+# grading slot (catalog.py retirement rule). The md5-prefix-cut keep
+# expression is the SAME kernel `mixture_sample` grades
 # (a uniform sample is its single-domain case — sampling.py:126 builds
 # per-domain cuts from the identical md5_cut/keep_expr primitive), and
 # the operator keeps its value tests in tests/test_properties.py

@@ -16,12 +16,15 @@ def _cpus() -> int:
     """SPARK_GRAFT_CPUS parsed LAZILY with a fallback — an import-time
     int() made any non-numeric value (an empty string from a CI
     template) an ImportError for the whole package, pointing at module
-    import instead of configuration."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    import instead of configuration. Unset or non-numeric falls back to
+    the cores this process may run on, not a fixed width."""
     try:
-        return max(1, int(raw))
+        return max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "")))
     except ValueError:
-        return 32
+        try:
+            return len(os.sched_getaffinity(0))
+        except AttributeError:  # no affinity API (macOS, Windows)
+            return os.cpu_count() or 1
 
 
 def get_spark(
@@ -193,9 +196,8 @@ def _est_scan_tasks(spark, paths: list[str], cores: int) -> int:
     return min(byte_splits, max(row_groups, 1))
 
 
-#: default spread sizing: one task per 64 KiB of input (see
-#: spread_for_compute's docstring for the cost model); conf-overridable
-#: via spark.idb.spread.minBytesPerTask
+#: spread sizing: one task per 64 KiB of input (see spread_for_compute's
+#: docstring for the cost model)
 SPREAD_MIN_BYTES_PER_TASK = 64 << 10
 
 
@@ -232,7 +234,7 @@ def spread_for_compute(
     contract — but exact replay of an ordered stream would not).
 
     The spread width is DATA-PROPORTIONAL (r16): ``min(cores,
-    ceil(input_bytes / minBytesPerTask))`` rather than a flat
+    ceil(input_bytes / SPREAD_MIN_BYTES_PER_TASK))`` rather than a flat
     ``cores``. A fixed count pinned every tiny input to 32-way task
     overhead (the r15 driver artifact has exact_dedup 2x FASTER on 8
     cores than 32 at sf0.1 — pure scheduling cost), and
@@ -241,14 +243,12 @@ def spread_for_compute(
     right tool here: the spread exists because downstream CPU cost is
     ~10-100x the scan bytes, and AQE's 1 MB-floor parallelism rule
     would coalesce a 600 KB corpus to one partition and serialize the
-    very work the spread parallelizes. ``minBytesPerTask`` defaults to
-    64 KiB (enrichment-class expression stacks cost ~1-4 us/byte, so a
-    64 KiB slice is ~0.1-0.3 s of compute — well above the ~10 ms task
-    overhead); override with spark conf
-    ``spark.idb.spread.minBytesPerTask`` for kernels with a very
-    different cost-per-byte. At cluster scale nothing changes: a wide
-    scan still short-circuits above, and a genuinely large narrow
-    input still spreads to every core.
+    very work the spread parallelizes. The floor is 64 KiB
+    (enrichment-class expression stacks cost ~1-4 us/byte, so a 64 KiB
+    slice is ~0.1-0.3 s of compute — well above the ~10 ms task
+    overhead; the width A/B is in OPTIMIZATION_r16.md §2). At cluster
+    scale nothing changes: a wide scan still short-circuits above, and
+    a genuinely large narrow input still spreads to every core.
     """
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
@@ -265,10 +265,7 @@ def spread_for_compute(
             total += os.path.getsize(p)
         except OSError:
             return df  # vanished/unreadable: don't add an exchange
-    floor = _bytes_conf(
-        spark, "spark.idb.spread.minBytesPerTask", SPREAD_MIN_BYTES_PER_TASK
-    )
-    n = min(cores, max(1, -(-total // max(floor, 1))))
+    n = min(cores, max(1, -(-total // SPREAD_MIN_BYTES_PER_TASK)))
     if _est_scan_tasks(spark, input_paths, cores) >= n:
         return df
     if by:
@@ -309,8 +306,7 @@ def barrier_filter(df, cond):
     the column). The r15-s2 answer was a standalone nondeterministic
     FILTER (`where(spark_partition_id() >= 0)` — deleted r16, ADVICE:
     dead code once this helper superseded it; its rationale lives on
-    here and the historical A/B stays runnable in
-    tools/probe_corpus_barrier.py).
+    here and the A/B is recorded in OPTIMIZATION_r15.md §7).
 
     That predicate-only barrier pins the RELATIVE order of
     filters, and a nondeterministic PREDICATE does not help either:

@@ -2,7 +2,7 @@
 
 The driver captures the LAST 2000 chars of bench stdout and parses the
 JSON line; round 11's full payload outgrew that window and the driver
-recorded ``parsed: null`` (BENCH_r11.json) — the round lost its headline
+recorded ``parsed: null`` for round 11 — the round lost its headline
 number. These tests keep the rendered stdout line inside the budget at
 the CURRENT headline size with worst-case field widths, so adding a
 query to HEADLINE that would overflow the capture fails the suite
@@ -62,7 +62,7 @@ def test_compact_payload_has_no_sample_arrays():
 def test_compact_payload_core_fields():
     core = _worst_case_core()
     # the driver-facing contract: these keys are what cross-round
-    # tooling reads out of BENCH_r{N}.json["parsed"]
+    # tooling reads out of the parsed stdout line
     for key in (
         "metric",
         "value",
@@ -85,15 +85,11 @@ def test_compact_payload_core_fields():
 
 
 def test_row_drift_detects_change(tmp_path):
-    # a prior parsed artifact at the same sf with a differing count must
+    # the previous run at the same sf with a differing count must
     # produce exactly one warning line naming the query and both counts
-    art = {
-        "parsed": {
-            "sf": 0.1,
-            "rows": {"exact_dedup": 4992, "majority_vote": 14999},
-        }
-    }
-    (tmp_path / "BENCH_r98.json").write_text(json.dumps(art))
+    prev = {"exact_dedup": 4992, "majority_vote": 14999}
+    local = tmp_path / "BENCH_LOCAL.json"
+    local.write_text(json.dumps({"sf": 0.1, "rows": prev}))
     warnings = bench.check_row_drift(
         str(tmp_path), 0.1, {"exact_dedup": 4000, "majority_vote": 14999}
     )
@@ -103,25 +99,11 @@ def test_row_drift_detects_change(tmp_path):
 
 
 def test_row_drift_skips_unparsed_and_other_sf(tmp_path):
-    # parsed: null (the r11 failure mode) and a different-sf artifact
-    # must both be skipped; with no comparable source there is no warning
-    (tmp_path / "BENCH_r97.json").write_text(json.dumps({"parsed": None}))
-    (tmp_path / "BENCH_r96.json").write_text(
-        json.dumps({"parsed": {"sf": 0.01, "rows": {"exact_dedup": 1}}})
-    )
-    assert bench.check_row_drift(str(tmp_path), 0.1, {"exact_dedup": 99}) == []
-
-
-def test_row_drift_prefers_latest_parsed_artifact(tmp_path):
-    # r95 parsed, r99 unparsed, local file present: the latest PARSED
-    # driver artifact wins over BENCH_LOCAL.json
-    (tmp_path / "BENCH_r95.json").write_text(
-        json.dumps({"parsed": {"sf": 0.1, "rows": {"q": 10}}})
-    )
-    (tmp_path / "BENCH_r99.json").write_text(json.dumps({"parsed": None}))
-    (tmp_path / "BENCH_LOCAL.json").write_text(
-        json.dumps({"sf": 0.1, "rows": {"q": 20}})
-    )
-    src, rows = bench.prior_rows(str(tmp_path), 0.1)
-    assert src == "BENCH_r95.json"
-    assert rows == {"q": 10}
+    # no previous run, an unreadable one and a different-sf one must all
+    # be skipped; with no comparable source there is no warning
+    rows, local = {"exact_dedup": 99}, tmp_path / "BENCH_LOCAL.json"
+    assert bench.check_row_drift(str(tmp_path), 0.1, rows) == []
+    local.write_text("{truncated")
+    assert bench.check_row_drift(str(tmp_path), 0.1, rows) == []
+    local.write_text(json.dumps({"sf": 0.01, "rows": {"exact_dedup": 1}}))
+    assert bench.check_row_drift(str(tmp_path), 0.1, rows) == []

@@ -1,73 +1,52 @@
-"""Grading-window rotation invariants.
+"""Catalog registration invariants.
 
-The driver grades the first 50 entries of ``queries()``. Round 4 showed
-what goes wrong when ordering is implicit: three new entries registered
-past position 50 and were never driver-graded. These tests make the
-rotation rule structural:
-
-  every catalog entry with no green row in the previous round's
-  CORRECTNESS artifact (which includes every newly added entry) must
-  register inside the first 50 slots.
+Q and ORACLE hold plain module registration order, and importing the
+catalog reads nothing outside the package: no entry's position depends
+on which files sit in the repo root.
 """
 
 from __future__ import annotations
 
-import json
 import os
 import re
+import subprocess
+import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-WINDOW = 50
 
 
-def _latest_correctness() -> dict:
-    arts = [
-        f
-        for f in os.listdir(REPO)
-        if re.fullmatch(r"CORRECTNESS_r\d+\.json", f)
-    ]
-    # numeric round order (lexicographic misreads r100 < r99 / unpadded r5)
-    arts.sort(key=lambda f: int(re.search(r"r(\d+)", f).group(1)))
-    assert arts, "no CORRECTNESS artifact in repo root"
-    with open(os.path.join(REPO, arts[-1])) as fh:
-        return json.load(fh)
-
-
-def _green(row) -> bool:
-    # fully green only: a rows-only match with a failed value hash is a
-    # real failure (precedent: collection_counts_pivot in r1) and must
-    # re-enter the grading window
-    return (
-        isinstance(row, dict)
-        and bool(row.get("rows_match"))
-        and bool(row.get("schema_match"))
-        and bool(row.get("hash_match"))
-    )
-
-
-def test_ungraded_entries_lead_registration():
+def test_catalog_keeps_registration_order():
     from idb_backend_spark.plans.catalog import Q
 
-    prev = _latest_correctness()
-    graded_green = {name for name, row in prev.items() if _green(row)}
-    names = list(Q)
-    window = set(names[:WINDOW])
-    missing = [
-        n for n in names if n not in graded_green and n not in window
-    ]
-    assert not missing, (
-        f"entries with no prior green row must register inside the first "
-        f"{WINDOW} slots, but these landed outside: {missing}"
-    )
+    # each topic module's entries are contiguous and in source order
+    keys = [(f.__module__, f.__code__.co_firstlineno) for f in Q.values()]
+    mods = list(dict.fromkeys(m for m, _ in keys))
+    assert keys == sorted(keys, key=lambda k: (mods.index(k[0]), k[1]))
 
 
-def test_front_list_fits_window():
-    from idb_backend_spark.plans import catalog
+_IMPORT_PROBE = """
+import os, sys
+root, seen = sys.argv[1], []
 
-    front = [n for n in catalog._GRADE_FRONT if n in catalog.Q]
-    assert len(front) <= WINDOW
-    names = list(catalog.Q)
-    assert names[: len(front)] == front
+def hook(ev, args):
+    if ev == "open" and isinstance(args[0], str):
+        p = os.path.abspath(args[0])
+        if os.path.dirname(p) == root:
+            seen.append(p)
+
+sys.addaudithook(hook)
+sys.path.insert(0, root)
+import idb_backend_spark.plans.catalog
+print(seen)
+"""
+
+
+def test_catalog_import_reads_no_repo_root_file():
+    out = subprocess.run(
+        [sys.executable, "-c", _IMPORT_PROBE, REPO],
+        capture_output=True, text=True, check=True,
+    ).stdout
+    assert out.strip() == "[]", out
 
 
 def test_oracle_keys_subset_and_ungraded_disjoint():
@@ -77,17 +56,6 @@ def test_oracle_keys_subset_and_ungraded_disjoint():
     assert not (set(UNGRADED) & set(Q))
     # The two rows-only sketches stay runnable outside the graded set.
     assert {"minhash_lsh_pairs", "simhash_pairs"} <= set(UNGRADED)
-
-
-def test_front_is_the_artifact_complement():
-    """The computed front must be exactly the entries with no green row
-    in the latest artifact — the property that makes the rotation
-    self-maintaining (no hand-flipped list to go stale)."""
-    from idb_backend_spark.plans.catalog import Q, _GRADE_FRONT
-
-    prev = _latest_correctness()
-    green = {name for name, row in prev.items() if _green(row)}
-    assert set(_GRADE_FRONT) == set(Q) - green
 
 
 def test_readme_count_matches_catalog():

@@ -1,12 +1,13 @@
 """Structural guard: every ``tests/test_*.py`` path cited inside the
-package (retirement rationales, docstrings, comments — the grading
-audit trail) must name a file that actually exists, and a cited
-``::test_function`` must exist inside that file.
+package, bench.py or the tests (retirement rationales, docstrings,
+comments — the grading audit trail) must name a file that actually
+exists, and a cited ``::test_function`` must exist inside that file.
+Cited ``tools/*.py`` scripts and repo-root ``*.md`` docs must exist too.
 
 Round-8 defect #2 was exactly this drift: a dqs retirement rationale
-cited ``tests/test_flags.py``, which had never existed — a dangling
-citation in the one place whose whole job is to explain a grading gap.
-Same guard class as tests/test_catalog_window.py.
+cited a flags test file that had never existed — a dangling citation in
+the one place whose whole job is to explain a grading gap. Deleting a
+tool or doc without repointing its citations is the same drift.
 """
 
 from __future__ import annotations
@@ -21,17 +22,24 @@ PKG = REPO / "idb_backend_spark"
 # (`...test_typed_schema.py::\n# test_dqs_...`), so \s* and an optional
 # comment prefix sit between the separator and the function name.
 _CITE = re.compile(r"tests/(test_\w+)\.py(?:\s*::\s*(?:#\s*)?(test_\w+))?")
+_TOOL = re.compile(r"tools/(\w+)\.py")
+# a bare doc name, not a path into a subdirectory (perfbench/README.md)
+_DOC = re.compile(r"(?<![\w/.-])([\w-]+\.md)\b")
+
+
+def _sources() -> list[Path]:
+    return [
+        *PKG.rglob("*.py"),
+        REPO / "__spark_entry__.py",
+        REPO / "bench.py",
+        *(REPO / "tests").rglob("*.py"),
+    ]
 
 
 def _cited() -> list[tuple[Path, str, str | None]]:
     out = []
-    sources = list(PKG.rglob("*.py")) + [
-        REPO / "__spark_entry__.py",
-        REPO / "bench.py",
-    ]
-    for src in sources:
-        text = src.read_text()
-        for m in _CITE.finditer(text):
+    for src in _sources():
+        for m in _CITE.finditer(src.read_text()):
             out.append((src, m.group(1), m.group(2)))
     return out
 
@@ -49,3 +57,17 @@ def test_cited_test_files_exist():
                 f"{src.relative_to(REPO)} cites {fname}.py::{func} (no such test)"
             )
     assert not missing, "dangling test citations:\n" + "\n".join(missing)
+
+
+def test_cited_tools_and_docs_exist():
+    missing = []
+    for src in _sources():
+        text = src.read_text()
+        cited = [f"tools/{m.group(1)}.py" for m in _TOOL.finditer(text)]
+        cited += [m.group(1) for m in _DOC.finditer(text)]
+        missing += [
+            f"{src.relative_to(REPO)} cites {c} (absent)"
+            for c in cited
+            if not (REPO / c).exists()
+        ]
+    assert not missing, "dangling tool/doc citations:\n" + "\n".join(missing)

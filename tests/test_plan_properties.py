@@ -708,7 +708,7 @@ def test_staged_geo_normalize_parses_each_coordinate_once(spark):
     coordinate). Pinned on the optimized logical plan because the
     regression mode is expression duplication, not a physical-shape
     change (controlled A/B: 3.02 s -> 1.82 s on the sf0.1 bench frame,
-    tools/probe_geo_staged.py)."""
+    OPTIMIZATION_r15.md §6)."""
     from idb_backend_spark.functions.enrichment import with_geo_normalize
 
     cust = spark.read.parquet(f"{SF}/customer.parquet").select(
@@ -768,7 +768,7 @@ def test_etl_flag_kernels_evaluate_once(spark):
     assert optimized.count("aberration") == 3
 
 
-def test_pushdown_barrier_keeps_quality_gate_above_spread():
+def test_pushdown_barrier_keeps_quality_gate_above_spread(monkeypatch):
     """r15: the corpus pipeline's quality gate embeds the full
     quality-score regex stack; without a barrier PushDownPredicate
     substitutes it through the enrichment projection AND the spread
@@ -783,6 +783,7 @@ def test_pushdown_barrier_keeps_quality_gate_above_spread():
     below the bottom exchange is free of regex work, (c) NO Filter in
     the whole plan evaluates a regex — the gate reads the staged q /
     n_tok attributes only."""
+    from idb_backend_spark import session
     from idb_backend_spark.plans.catalog import Q
     from idb_backend_spark.session import get_spark
 
@@ -790,15 +791,8 @@ def test_pushdown_barrier_keeps_quality_gate_above_spread():
     # the sf0.001 corpus sits under the r16 data-proportional spread's
     # default 64 KiB/task floor; force the spread to fire so the
     # barrier-vs-spread interaction this test pins actually exists
-    prev = spark.conf.get("spark.idb.spread.minBytesPerTask", None)
-    spark.conf.set("spark.idb.spread.minBytesPerTask", "4096")
-    try:
-        q = Q["corpus_curation_pipeline"](spark, SF)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.idb.spread.minBytesPerTask", prev)
-        else:
-            spark.conf.unset("spark.idb.spread.minBytesPerTask")
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES_PER_TASK", 4096)
+    q = Q["corpus_curation_pipeline"](spark, SF)
     p = q._jdf.queryExecution().executedPlan().toString()
     assert "SPARK_PARTITION_ID()" in p, p
     # everything below the first (bottom-most) Exchange must be free of

@@ -14,6 +14,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from idb_backend_spark import session
 from idb_backend_spark.session import (
     _bytes_conf,
     _est_scan_tasks,
@@ -26,35 +27,26 @@ def _cores(spark):
     return spark.sparkContext.defaultParallelism
 
 
-def test_narrow_single_file_spreads(spark, sf_dir):
+def test_narrow_single_file_spreads(spark, sf_dir, monkeypatch):
     """r16 contract: the spread width is DATA-PROPORTIONAL —
-    min(cores, ceil(bytes / minBytesPerTask)) — so a narrow scan widens
-    to one task per byte floor, not flat to machine width (a tiny input
-    pinned to 32 tasks was pure scheduling overhead: the r15 driver
-    artifact has exact_dedup 2x faster on 8 cores than 32)."""
+    min(cores, ceil(bytes / SPREAD_MIN_BYTES_PER_TASK)) — so a narrow
+    scan widens to one task per byte floor, not flat to machine width
+    (a tiny input pinned to 32 tasks was pure scheduling overhead: the
+    r15 driver artifact has exact_dedup 2x faster on 8 cores than 32)."""
     import math
     import os
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
     size = os.path.getsize(f"{sf_dir}/documents.parquet")
 
-    prev = spark.conf.get("spark.idb.spread.minBytesPerTask", None)
-    try:
-        spark.conf.set("spark.idb.spread.minBytesPerTask", "4096")
-        out = spread_for_compute(df, "doc_id")
-        expect = min(_cores(spark), math.ceil(size / 4096))
-        assert out.rdd.getNumPartitions() == expect
-        # and under the default 64 KiB floor a sub-floor file must NOT
-        # pay an exchange at all (the scan is already as wide as the
-        # data deserves)
-        spark.conf.unset("spark.idb.spread.minBytesPerTask")
-        if size <= 64 << 10:
-            assert spread_for_compute(df, "doc_id") is df
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.idb.spread.minBytesPerTask", prev)
-        else:
-            spark.conf.unset("spark.idb.spread.minBytesPerTask")
+    # under the default 64 KiB floor a sub-floor file must NOT pay an
+    # exchange at all (the scan is already as wide as the data deserves)
+    if size <= 64 << 10:
+        assert spread_for_compute(df, "doc_id") is df
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES_PER_TASK", 4096)
+    out = spread_for_compute(df, "doc_id")
+    expect = min(_cores(spark), math.ceil(size / 4096))
+    assert out.rdd.getNumPartitions() == expect
 
 
 def test_in_memory_frame_untouched(spark):
@@ -132,7 +124,7 @@ def test_parse_bytes_fallbacks():
     assert _parse_bytes(None, 9) == 9
 
 
-def test_spread_uri_decoding(spark, tmp_path):
+def test_spread_uri_decoding(spark, tmp_path, monkeypatch):
     """A local path with a space must round-trip through Spark's
     percent-encoded inputFiles() URI and still be stat-able — a raw
     uri[5:] slice used to read '%20' literally, silently disabling the
@@ -142,18 +134,11 @@ def test_spread_uri_decoding(spark, tmp_path):
     p = d / "t.parquet"
     pq.write_table(pa.table({"k": list(range(100))}), p)
     df = spark.read.parquet(str(p))
-    prev = spark.conf.get("spark.idb.spread.minBytesPerTask", None)
-    try:
-        # floor of 1 byte/task: the data-proportional width saturates at
-        # cores, so the assertion stays about the URI decode, not sizing
-        spark.conf.set("spark.idb.spread.minBytesPerTask", "1")
-        out = spread_for_compute(df, "k")
-        assert out.rdd.getNumPartitions() == _cores(spark)
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.idb.spread.minBytesPerTask", prev)
-        else:
-            spark.conf.unset("spark.idb.spread.minBytesPerTask")
+    # floor of 1 byte/task: the data-proportional width saturates at
+    # cores, so the assertion stays about the URI decode, not sizing
+    monkeypatch.setattr(session, "SPREAD_MIN_BYTES_PER_TASK", 1)
+    out = spread_for_compute(df, "k")
+    assert out.rdd.getNumPartitions() == _cores(spark)
 
 
 def test_registry_cache_invalidates_on_rewrite(spark, tmp_path):
@@ -170,3 +155,18 @@ def test_registry_cache_invalidates_on_rewrite(spark, tmp_path):
     second = _table_paths(sf, "tbl")
     assert second == [str(p)]
     assert _table_paths(sf, "missing") is None
+
+
+def test_cpus_unset_or_empty_falls_back_to_affinity(monkeypatch):
+    """local[N] follows the cores this process may run on when
+    SPARK_GRAFT_CPUS is unset or blank — not a fixed 32."""
+    try:
+        expect = len(os.sched_getaffinity(0))
+    except AttributeError:
+        expect = os.cpu_count()
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert session._cpus() == expect
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+    assert session._cpus() == expect
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert session._cpus() == 3
