@@ -11,8 +11,9 @@ The reference spends ~1.33 ms/record in single-core Python here
 by scan cost instead.
 
 Flag discipline (F17, conversions.py:955-962): every normalizer returns
-its value column plus zero or more conditional flag columns built with
-``flags.flag_when``; callers fold them with ``flags.fold_flags``.
+its value column plus zero or more ``flags.FlagSpec`` flags built with
+``flags.flag_when``; callers fold them with ``flags.fold_flags``, or
+render one as a string column with ``flags.flag_column``.
 """
 
 from __future__ import annotations
@@ -23,50 +24,19 @@ import uuid
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from idb_backend_spark.functions.flags import flag_when
-from idb_backend_spark.functions.grabbers import decimal_exponent, getfield
+from idb_backend_spark.functions.flags import FlagSpec, flag_column, flag_when
+from idb_backend_spark.functions.grabbers import getfield
 
 # --------------------------------------------------------------------------
 # F6 — geoGrabber: lat/lon parse, auto-flip, bounds check, precision flag
 # (reference conversions.py:446-564). The CRS datum transform and the
-# reverse-geocode flip search live in geo.py (UDF kernels); the coordinate
+# reverse-geocode flip search live in geo.py; the coordinate
 # normalization below is the pure-expression part.
 # --------------------------------------------------------------------------
 
 
-def _geo_branch_logic(
-    lat0: Column, lon0: Column, exp_lat: Column, exp_lon: Column
-) -> dict[str, Column]:
-    """The flip/bounds/precision branch logic over ALREADY-PARSED
-    coordinates — shared by the expression form (geo_normalize) and the
-    staged form (with_geo_normalize) so the two can never drift."""
-    have = lat0.isNotNull() & lon0.isNotNull()
-
-    flip = (
-        have
-        & (((lat0 >= -180) & (lat0 < -90)) | ((lat0 > 90) & (lat0 <= 180)))
-        & (lon0 >= -90)
-        & (lon0 <= 90)
-    )
-    lat1 = F.when(flip, lon0).otherwise(lat0)
-    lon1 = F.when(flip, lat0).otherwise(lon0)
-
-    oob = have & (
-        (lat1 < -90) | (lat1 > 90) | (lon1 < -180) | (lon1 > 180)
-    )
-    ok = have & ~oob
-    low_prec = ok & ((exp_lat <= 2) | (exp_lon <= 2))
-    return {
-        "lat": F.when(ok, lat1),
-        "lon": F.when(ok, lon1),
-        "flag_pre_flip": flag_when("geopoint_pre_flip", flip & ~oob),
-        "flag_bounds": flag_when("geopoint_bounds", oob),
-        "flag_low_precision": flag_when("geopoint_low_precision", low_prec),
-    }
-
-
-def geo_normalize(lat_raw: Column, lon_raw: Column) -> dict[str, Column]:
-    """Coordinate normalization with the reference's flag semantics:
+def with_geo_normalize(df, lat_raw: Column, lon_raw: Column):
+    """F6 coordinate normalization with the reference's flag semantics:
 
     * auto-flip when lat is out of ±90 but plausible as a lon while the
       stated lon fits ±90 (flag ``geopoint_pre_flip``, conversions.py:460-465)
@@ -75,53 +45,26 @@ def geo_normalize(lat_raw: Column, lon_raw: Column) -> dict[str, Column]:
     * ``geopoint_low_precision`` when either verbatim coordinate has ≤2
       decimal places (conversions.py:457-477 via getExponent, :246-251)
 
-    Returns {"lat", "lon", "flag_pre_flip", "flag_bounds", "flag_low_precision"}.
+    The parse is py_double, not a bare try_cast: the reference's float()
+    call (conversions.py:454-455) accepts unicode Nd digits and rejects
+    Java literal suffixes, where Spark's cast does the opposite on both
+    counts; unparseable still yields a null point, no exception (the
+    bare-except contract, conversions.py:478-480).
 
-    PERF: this inline-expression form re-inlines the py_double parse
-    subtree at every conditional reference (codegen subexpression
-    elimination skips CaseWhen branch contexts), so pipeline call sites
-    should use ``with_geo_normalize`` — the staged form that parses each
-    coordinate ONCE into an explicit column (r15 A/B on the 600k-row
-    enrichment frame: 1.53 s -> 0.94 s for the geo+flags+shift subtree,
-    OPTIMIZATION_r15.md §6). This form stays for single-reference
-    expression contexts and as the semantics anchor.
-    """
-    # py_double, not a bare try_cast (r12): the reference's float() call
-    # (conversions.py:454-455) accepts unicode Nd digits and rejects
-    # Java literal suffixes — Spark's cast does the opposite on both
-    # counts, so '٣٤.٥' lost its point and '12.5f' minted one the
-    # reference refuses; unparseable still -> null point, no exception
-    # (the bare-except contract, conversions.py:478-480)
-    from idb_backend_spark.functions.grabbers import py_double
+    Staged, like geo.with_molodensky_shift: the NORMALIZED input strings
+    (full-class strip + 650-char Nd->ASCII translate) land first as their
+    own columns, then the py_double parses and decimal exponents, and
+    the flip/bounds/precision branches run over those cheap double/int
+    column reads. Every parse is referenced 4-8 times from CaseWhen
+    contexts, which codegen subexpression elimination cannot share, so
+    an inline form re-inlines the whole parse chain at each reference
+    (OPTIMIZATION_r15.md §6). CollapseProject keeps the stage boundaries
+    because the staged columns are referenced more than once by non-cheap
+    consumers.
 
-    return _geo_branch_logic(
-        py_double(getfield(lat_raw)),
-        py_double(getfield(lon_raw)),
-        decimal_exponent(lat_raw),
-        decimal_exponent(lon_raw),
-    )
-
-
-def with_geo_normalize(df, lat_raw: Column, lon_raw: Column):
-    """Staged (DataFrame-level) F6 coordinate normalization — the form
-    for pipeline call sites, same rationale as geo.with_molodensky_shift:
-    the py_double parses and decimal exponents land ONCE as explicit
-    columns, and the flip/bounds/precision branches (which reference
-    each parse 4-8 times from CaseWhen contexts codegen CSE cannot
-    share) run over cheap double/int column reads. CollapseProject keeps
-    the stage boundary because the staged columns are referenced more
-    than once by non-cheap consumers.
-
-    Adds ``__geo_lat``, ``__geo_lon``, ``__flag_pre_flip``,
-    ``__flag_bounds``, ``__flag_low_precision``; the ``__geo_p_*`` parse
-    temporaries are dropped.
-
-    Two stages below the parse stage (r15): the NORMALIZED input strings
-    (full-class strip + 650-char Nd->ASCII translate) land first as
-    their own columns — the validate/cast and exponent expressions
-    reference them from CaseWhen contexts 2-5 times each, and every
-    such reference re-inlined the whole translate chain (14 copies in
-    the etl plan; 4 after).
+    Adds ``__geo_lat``, ``__geo_lon`` and the staged string flag columns
+    ``__flag_pre_flip``, ``__flag_bounds``, ``__flag_low_precision``; the
+    parse temporaries are dropped.
     """
     from idb_backend_spark.functions.grabbers import (
         decimal_exponent_from_norm,
@@ -145,19 +88,34 @@ def with_geo_normalize(df, lat_raw: Column, lon_raw: Column):
             "__geo_p_explon": decimal_exponent_from_norm(F.col("__geo_d_lon")),
         }
     )
-    r = _geo_branch_logic(
-        F.col("__geo_p_lat0"),
-        F.col("__geo_p_lon0"),
-        F.col("__geo_p_explat"),
-        F.col("__geo_p_explon"),
+    lat0, lon0 = F.col("__geo_p_lat0"), F.col("__geo_p_lon0")
+    have = lat0.isNotNull() & lon0.isNotNull()
+    flip = (
+        have
+        & (((lat0 >= -180) & (lat0 < -90)) | ((lat0 > 90) & (lat0 <= 180)))
+        & (lon0 >= -90)
+        & (lon0 <= 90)
+    )
+    lat1 = F.when(flip, lon0).otherwise(lat0)
+    lon1 = F.when(flip, lat0).otherwise(lon0)
+    oob = have & (
+        (lat1 < -90) | (lat1 > 90) | (lon1 < -180) | (lon1 > 180)
+    )
+    ok = have & ~oob
+    low_prec = ok & (
+        (F.col("__geo_p_explat") <= 2) | (F.col("__geo_p_explon") <= 2)
     )
     return tmp.withColumns(
         {
-            "__geo_lat": r["lat"],
-            "__geo_lon": r["lon"],
-            "__flag_pre_flip": r["flag_pre_flip"],
-            "__flag_bounds": r["flag_bounds"],
-            "__flag_low_precision": r["flag_low_precision"],
+            "__geo_lat": F.when(ok, lat1),
+            "__geo_lon": F.when(ok, lon1),
+            "__flag_pre_flip": flag_column(
+                flag_when("geopoint_pre_flip", flip & ~oob)
+            ),
+            "__flag_bounds": flag_column(flag_when("geopoint_bounds", oob)),
+            "__flag_low_precision": flag_column(
+                flag_when("geopoint_low_precision", low_prec)
+            ),
         }
     ).drop(
         "__geo_n_lat", "__geo_n_lon", "__geo_d_lat", "__geo_d_lon",
@@ -195,7 +153,7 @@ def date_fallback(
     error that kills the query (ASCII-numeric parts only — dateutil's
     month-NAME leniency is a documented non-goal of the native path).
 
-    Documented modeling choice (r9): the reference's sdoy arm calls
+    Documented modeling choice: the reference's sdoy arm calls
     ``datetime.datetime(year, 1, 1)`` with getfield's value VERBATIM —
     it only succeeds when the provider's JSON typed ``dwc:year`` as a
     NUMBER (getfield passes non-strings through, conversions.py:282-285;
@@ -232,7 +190,7 @@ def date_fallback(
 
 def date_bounds_flag(
     d: Column, lower: str = "1500-01-02", name: str = "datecollected_bounds"
-) -> Column:
+) -> FlagSpec:
     """checkBounds (conversions.py:227-243): flag dates outside
     [1500-01-02, now]."""
     return flag_when(
@@ -358,10 +316,9 @@ def fold_scientificname(c: Column, field_name: str) -> Column:
     "scientificname"): v = v.capitalize()``), shared by
     operators/aggregates.unique_values and export/writers.
     uniquevals_frame so neither the fold nor the WHICH-columns trigger
-    can drift between the graded A3 kernel and the export path (the
-    r11 differential found exactly that drift). Identifier backticks
-    strip first so quoted columns like `dwc:scientificName` still hit
-    the endswith check."""
+    can drift between the graded A3 kernel and the export path.
+    Identifier backticks strip first so quoted columns like
+    `dwc:scientificName` still hit the endswith check."""
     if field_name.strip("`").lower().endswith("scientificname"):
         return py_capitalize(c)
     return c
@@ -388,9 +345,9 @@ def access_uri(
 ) -> Column:
     """accessuri precedence: ac:accessURI > ac:bestQualityAccessURI >
     (identifiers, only when NO ac: key is present) — conversions.py:
-    711-723. r9 parity correction: the reference's ``or`` chains treat
-    EMPTY STRING as absent at every non-final alternative (Python
-    falsy), so '' in ac:accessURI falls through to bestQuality — BUT a
+    711-723. The reference's ``or`` chains treat EMPTY STRING as absent
+    at every non-final alternative (Python falsy), so '' in
+    ac:accessURI falls through to bestQuality — BUT a
     chain that RESOLVES to '' (bestQuality == '') blocks the identifier
     fallback, because the fallback gate is ``url is None``, not
     falsiness. first_nonempty + one coalesce reproduce both edges."""
@@ -445,51 +402,40 @@ BOR_RULES: list[tuple[tuple[str, ...], str]] = [
 ]
 
 
-def fix_basis_of_record(bor: Column) -> dict[str, Column]:
+def fix_basis_of_record(bor: Column) -> dict[str, Column | FlagSpec]:
     """Returns {"value", "flag_removed", "flag_invalid"} with the
     reference's rule order, including the machine+observation special
-    case. r10 differential finding: the reference's ``filled()`` is
-    ``k in d and d[k] is not None`` (conversions.py:741-742) — an EMPTY
-    STRING counts as present, matches no rule, and is flagged
-    removed+invalid with the value nulled; the old ``v != ''`` gate here
-    silently passed it unflagged."""
+    case; the flags come from ``bor_flags`` over this ``value``. The
+    reference's ``filled()`` is ``k in d and d[k] is not None``
+    (conversions.py:741-742): an EMPTY STRING counts as present, matches
+    no rule, and is flagged removed+invalid with the value nulled."""
     v = getfield(bor)
     filled = v.isNotNull()
-    expr = None
+    matched = None  # no rule matched: NULL
     for needles, out in BOR_RULES:
         cond = v.contains(needles[0])
         for n in needles[1:]:
             cond = cond & v.contains(n)
-        expr = F.when(cond, F.lit(out)) if expr is None else expr.when(
-            cond, F.lit(out)
+        matched = (
+            F.when(cond, F.lit(out)) if matched is None
+            else matched.when(cond, F.lit(out))
         )
-    matched = expr  # else: NULL
     value = F.when(filled, matched)
-    removed = filled & matched.isNull()
-    return {
-        "value": value,
-        "flag_removed": flag_when("dwc_basisofrecord_removed", removed),
-        "flag_invalid": flag_when(
-            "dwc_basisofrecord_invalid", removed | ~filled
-        ),
-    }
+    return {"value": value, **bor_flags(filled, value)}
 
 
-def bor_flags_from_staged(filled: Column, value: Column) -> dict[str, Column]:
-    """F13 flags derived from STAGED outputs — for call sites that land
-    ``fix_basis_of_record(...)['value']`` as a column anyway (etl): the
-    flag conditions then read the cheap staged column instead of
-    re-evaluating the contains-rule chain once per flag (guide §1.2;
-    r16: the etl flags fold carried 3 full chain evaluations per row
-    even after the fold_flags single-evaluation fix — 1 after this).
+def bor_flags(filled: Column, value: Column) -> dict[str, FlagSpec]:
+    """F13 flags from the normalized ``value`` and the input's
+    ``filled``: the one definition, used by fix_basis_of_record on its
+    own value and by call sites that stage ``value`` as a column anyway
+    (etl), so the flag conditions read the cheap staged column instead
+    of re-evaluating the contains-rule chain once per flag.
 
-    Equivalence to fix_basis_of_record's inline flags (``value`` is
-    ``when(filled, matched)`` with non-null ``filled``):
-    ``removed = filled & matched.isNull()`` — when filled,
-    value == matched, so ``filled & value.isNull()`` is identical; when
-    not filled both forms are false. ``invalid = removed | ~filled``
-    unchanged. Pinned by
-    tests/test_enrichment.py::test_staged_bor_rank_flags_match_inline."""
+    Equal to the reference's conditions (conversions.py:856-893; with
+    ``value = when(filled, matched)``): ``removed`` is
+    ``filled & matched.isNull()`` — when filled, value == matched, so
+    ``filled & value.isNull()`` is identical; when not filled both are
+    false. ``invalid = removed | ~filled``."""
     removed = filled & value.isNull()
     return {
         "flag_removed": flag_when("dwc_basisofrecord_removed", removed),
@@ -499,31 +445,28 @@ def bor_flags_from_staged(filled: Column, value: Column) -> dict[str, Column]:
     }
 
 
-def taxon_rank_flags_from_staged(
-    v: Column, value: Column
-) -> dict[str, Column]:
-    """F14 flags derived from STAGED columns: ``v`` the folded input
-    (``getfield(rank)``, staged) and ``value`` the staged
-    ``fix_taxon_rank(...)['value']`` output. Avoids re-probing the
-    313-literal mapping once per flag condition (guide §1.2).
+def taxon_rank_flags(v: Column, value: Column) -> dict[str, FlagSpec]:
+    """F14 flags from ``v`` the folded input (``getfield(rank)``) and
+    ``value`` the normalized rank: the one definition, used by
+    fix_taxon_rank on its own value and by call sites that stage both as
+    columns (etl), so the flag conditions do not re-probe the
+    313-literal mapping once per flag.
 
-    Equivalence (``value = when(filled & in_mapping, mapped)
+    Equal to the reference's conditions (conversions.py:895-913; with
+    ``value = when(filled & in_mapping, mapped)
     .when(filled & acceptable, v)``, ``filled = v.isNotNull()``):
 
-    * ``replaced = filled & in_mapping & mapped.isNotNull() &
+    * ``replaced`` is ``filled & in_mapping & mapped.isNotNull() &
       (mapped != v)`` — when filled & in_mapping, value == mapped, so
-      ``(value != v)`` is false/null exactly where the old conjuncts
-      were (a NULL mapped makes the comparison NULL, which flag_when's
-      ``when`` treats as false, matching the old isNotNull guard).
-    * ``removed`` fired on (in_mapping & mapped.isNull()) |
+      ``(value != v)`` is false/null exactly where those conjuncts are
+      (a NULL mapped makes the comparison NULL, which the flag's
+      ``when`` treats as false, like the isNotNull guard).
+    * ``removed`` fires on (in_mapping & mapped.isNull()) |
       (~in_mapping & ~acceptable) — exactly the filled rows whose
-      ``value`` came out NULL (the two no-arm cases); the remaining
-      filled cases (mapped non-null; acceptable passthrough of a
-      non-null v) leave value non-null. So ``filled & value.isNull()``.
-
-    ``flag_invalid`` (same condition as removed) is included for parity
-    with fix_taxon_rank. Pinned by
-    tests/test_enrichment.py::test_staged_bor_rank_flags_match_inline."""
+      ``value`` is NULL (the two no-arm cases); the remaining filled
+      cases (mapped non-null; acceptable passthrough of a non-null v)
+      leave value non-null. So ``filled & value.isNull()``.
+    * ``invalid`` has the same condition as ``removed``."""
     filled = v.isNotNull()
     in_mapping = v.isin(list(TAXON_RANK_MAPPING.keys()))
     replaced = filled & in_mapping & (value != v)
@@ -547,14 +490,14 @@ from idb_backend_spark.data.taxon_ranks import (  # noqa: E402
 )
 
 
-def fix_taxon_rank(rank: Column) -> dict[str, Column]:
+def fix_taxon_rank(rank: Column) -> dict[str, Column | FlagSpec]:
     """Returns {"value", "flag_replaced", "flag_removed", "flag_invalid"}
     (conversions.py:895-913): mapped → replacement (flag when different;
-    None mapping removes); unmapped and not acceptable → removed.
-    r10 differential finding: ``filled()`` counts an EMPTY STRING as
-    present (conversions.py:741-742), so '' lands in the
-    removed+invalid arm like any unknown rank — the old ``v != ''``
-    gate passed it silently."""
+    None mapping removes); unmapped and not acceptable → removed. The
+    flags come from ``taxon_rank_flags`` over this ``value``.
+    ``filled()`` counts an EMPTY STRING as present
+    (conversions.py:741-742), so '' lands in the removed+invalid arm like
+    any unknown rank."""
     v = getfield(rank)
     filled = v.isNotNull()
     map_pairs = [
@@ -568,16 +511,7 @@ def fix_taxon_rank(rank: Column) -> dict[str, Column]:
     value = F.when(
         filled & in_mapping, mapped
     ).when(filled & acceptable, v)
-    replaced = filled & in_mapping & mapped.isNotNull() & (mapped != v)
-    removed = filled & (
-        (in_mapping & mapped.isNull()) | (~in_mapping & ~acceptable)
-    )
-    return {
-        "value": value,
-        "flag_replaced": flag_when("dwc_taxonrank_replaced", replaced),
-        "flag_removed": flag_when("dwc_taxonrank_removed", removed),
-        "flag_invalid": flag_when("dwc_taxonrank_invalid", removed),
-    }
+    return {"value": value, **taxon_rank_flags(v, value)}
 
 
 # --------------------------------------------------------------------------
@@ -591,7 +525,7 @@ def fix_taxon_rank(rank: Column) -> dict[str, Column]:
 
 def scientificname_fill(
     scientificname: Column, genus: Column, epithet: Column
-) -> dict[str, Column]:
+) -> dict[str, Column | FlagSpec]:
     """genus [+ specificepithet] → scientificname when missing
     (conversions.py:758-768); flag scientificname_added."""
     assembled = F.when(
@@ -636,10 +570,8 @@ def munge_identifier(c: Column) -> Column:
     The trim is Python str.strip()'s FULL whitespace class, not just
     spaces — mungeid receives raw DwC-A values (the archive reader does
     not pre-strip, unlike the delimited CSV path), so a tab- or
-    CR-padded identifier must still fold to its bare form (r12
-    differential finding, test_reference_differential_etl::
-    test_identify_record_vs_reference with the widened padding pool;
-    same class as the r11 delimited value-strip fix)."""
+    CR-padded identifier must still fold to its bare form (pinned by
+    test_reference_differential_etl::test_identify_record_vs_reference)."""
     from idb_backend_spark.functions.grabbers import _PY_STRIP_CHARS
 
     return F.lower(

@@ -8,10 +8,10 @@ spec: record identity is the SHA-1 hex digest of the compact JSON encoding
 reproduction matters: any drift breaks versioning/dedup parity
 (SURVEY §7.7 item 1).
 
-Distributed use: `etag_udf` is an Arrow-batched pandas UDF (the hash needs
-Python's json.dumps canonicalization, so it cannot be a native expression);
-for flat all-string records `etag_expr` builds the same bytes with native
-concat/sha1 and stays JVM-side.
+Distributed use: `etag_expr` (flat all-string records) and
+`etag_pairs_expr` (the ingest (k, v) pair-array format) build the same
+bytes as `calc_etag`, their scalar reference, with native concat/sha1
+and stay JVM-side.
 """
 
 from __future__ import annotations
@@ -19,10 +19,8 @@ from __future__ import annotations
 import hashlib
 import json
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType
 
 #: SHA-1 of {"deleted": true} — the tombstone sentinel version
 #: (reference idb/postgres_backend/db.py:33).
@@ -76,21 +74,6 @@ def object_hash(data, hash_type: str = "sha1", sort_arrays: bool = False,
         raise TypeError(f"unhashable type for object_hash: {type(data)}")
     h.update(s.encode("utf8"))
     return h.hexdigest()
-
-
-@F.pandas_udf(StringType())
-def etag_udf(data: pd.Series) -> pd.Series:
-    """Etag of a map<string,string> column (Arrow-batched).
-
-    None-valued map entries serialize as JSON null, exactly like calcEtag
-    on a dict containing None — a present-but-null key and an absent key
-    hash differently, as in the reference.
-    """
-    def one(d):
-        if d is None:
-            return None
-        return calc_etag(dict(d))
-    return data.map(one)
 
 
 def _json_str(c: Column) -> Column:

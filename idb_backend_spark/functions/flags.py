@@ -8,29 +8,35 @@ column; the data-quality score ``dqs`` is
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from typing import NamedTuple
+
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def flag_when(name: str, cond: Column) -> Column:
-    """A single conditional flag: value `name` when cond else null.
+class FlagSpec(NamedTuple):
+    """One conditional flag: ``name`` is raised on the rows where
+    ``cond`` holds."""
 
-    The (name, cond) pair is attached to the returned Column so that
-    ``fold_flags`` can rebuild the single-evaluation form
-    ``when(cond, array(name))`` instead of wrapping the opaque column in
-    ``when(c.isNotNull(), array(c))`` — which evaluates ``cond`` TWICE
-    per row (once in the null check, once re-inlined inside the array:
-    CaseWhen branch contexts defeat codegen subexpression elimination,
-    the r15 staging finding). Derived Columns (.alias(), boolean
-    combinations) drop the attribute and fold through the generic path,
-    which stays value-identical."""
-    c = F.when(cond, F.lit(name))
-    c._flag_spec = (name, cond)
-    return c
+    name: str
+    cond: Column
 
 
-def fold_flags(*flag_cols: Column) -> Column:
-    """F17 — collect non-null flags into a compact array (conversions.py:955-962).
+def flag_when(name: str, cond: Column) -> FlagSpec:
+    """A single conditional flag, kept as its explicit (name, cond) spec
+    so ``fold_flags`` can fold it with one evaluation of ``cond``; use
+    ``flag_column`` where a string column is needed."""
+    return FlagSpec(name, cond)
+
+
+def flag_column(spec: FlagSpec) -> Column:
+    """The spec as a string column: ``name`` where ``cond`` holds, else
+    NULL."""
+    return F.when(spec.cond, F.lit(spec.name))
+
+
+def fold_flags(*flags: FlagSpec | Column) -> Column:
+    """F17 — collect raised flags into a compact array (conversions.py:955-962).
 
     Deliberately NOT ``array_compact(array(...))``: array_compact
     rewrites to the higher-order ArrayFilter, a CodegenFallback that
@@ -39,33 +45,30 @@ def fold_flags(*flag_cols: Column) -> Column:
     its widest select). Concat of per-flag 0/1-element arrays computes
     the identical value inside codegen.
 
-    A ``flag_when``-built column folds as ``when(cond, array(name))`` —
-    one evaluation of ``cond`` per row instead of the two the generic
-    ``when(c.isNotNull(), array(c))`` form pays (r16: the etl flags fold
-    carried 5 full evaluations of the BOR contains-chain per row, 3
-    after; equivalence: ``when(cond, lit(name))`` is non-null exactly
-    when ``cond`` is true, since ``name`` is a non-null literal).
+    Each argument is either a ``FlagSpec``, folded as
+    ``when(cond, array(name))`` — one evaluation of ``cond`` per row —
+    or a staged string flag column (NULL = not raised), folded as
+    ``when(c.isNotNull(), array(c))``. Only pass a staged column there:
+    an unstaged conditional column would be evaluated twice per row,
+    because CaseWhen branch contexts defeat codegen subexpression
+    elimination.
     """
-    if not flag_cols:
-        return F.array().cast("array<string>")
     empty = F.array().cast("array<string>")
+    if not flags:
+        return empty
 
-    def one(c: Column) -> Column:
-        # instance-dict read, NOT getattr: Column.__getattr__ resolves
-        # unknown names as struct-field accesses, so getattr on a plain
-        # column would return a bogus Column instead of None
-        spec = c.__dict__.get("_flag_spec")
-        if spec is not None:
-            name, cond = spec
-            return F.when(cond, F.array(F.lit(name))).otherwise(empty)
-        return F.when(c.isNotNull(), F.array(c)).otherwise(empty)
+    def one(f: FlagSpec | Column) -> Column:
+        if isinstance(f, Column):
+            return F.when(f.isNotNull(), F.array(f)).otherwise(empty)
+        name, cond = f
+        return F.when(cond, F.array(F.lit(name))).otherwise(empty)
 
-    return F.concat(*[one(c) for c in flag_cols])
+    return F.concat(*[one(f) for f in flags])
 
 
 def raw_data_flags(data: Column) -> Column:
     """F17's third flag source — grabAll's RAW-DATA flag fold
-    (conversions.py:960-962, r9: previously unimplemented): every key of
+    (conversions.py:960-962): every key of
     the raw record map that starts with ``flag_`` appends its suffix to
     the flags array, prefix stripped via the reference's
     ``"_".join(k.split("_")[1:])`` — which for a ``flag_``-prefixed key
@@ -80,7 +83,7 @@ def raw_data_flags(data: Column) -> Column:
     computed flags, and concat null-propagates — without the coalesce a
     null map would silently drop EVERY computed flag for the row. The
     reference has no such row (a missing raw dict cannot occur there),
-    so [] is the only concat-safe parity choice (r9 ADVICE)."""
+    so [] is the only concat-safe parity choice."""
     return F.coalesce(
         F.transform(
             F.filter(F.map_keys(data), lambda k: k.startswith("flag_")),
@@ -90,7 +93,7 @@ def raw_data_flags(data: Column) -> Column:
     )
 
 
-def standard_coord_flags(lat: Column, lon: Column) -> list[Column]:
+def standard_coord_flags(lat: Column, lon: Column) -> list[FlagSpec]:
     """The declarative geopoint flags of the reference's setFlags table
     (conversions.py:235-246, emitted as ``<key>_<flag>`` by :255-261):
     ``geopoint_0_coord`` when EITHER coordinate is zero (x[0] == 0 OR
@@ -142,6 +145,3 @@ def dqs_score_for(
         weights = {k: w for k, w in weights.items() if k in cols}
     return dqs_score(weights, flags_col, maxscore(record_type))
 
-
-def with_flags(df: DataFrame, *flag_cols: Column, out: str = "flags") -> DataFrame:
-    return df.withColumn(out, fold_flags(*flag_cols))

@@ -1,22 +1,21 @@
-"""F6/F7 UDF kernels — datum CRS transform and reverse geocoding
+"""F6/F7 kernels — datum shift and reverse geocoding
 (reference conversions.py:485-563; idb/helpers/rg.py).
 
 Architecture (the part that matters at 100 TB):
 
 * The pure-expression coordinate normalization (flip/bounds/precision)
-  lives in enrichment.geo_normalize — native, codegen'd, free.
-* The datum transform (pyproj) and point-in-polygon reverse geocode
-  (shapely) are irreducibly Python. Both are Arrow-batched pandas UDFs.
-* The reverse geocoder broadcasts its polygon table once per executor and
-  prunes candidates with the reference's 1°-bucket coarse grid
-  (rg.py:21-50) before any exact containment test — the polygon set is a
-  dimension table, never shuffled with the data.
+  lives in enrichment.with_geo_normalize — native, codegen'd, free.
+* The datum shift is native too: ``with_molodensky_shift`` runs the
+  abridged Molodensky arithmetic over a broadcast 34-datum parameter
+  table; ``molodensky_shift_py`` is its scalar reference.
+* The point-in-polygon reverse geocode is irreducibly Python and runs
+  as an Arrow-batched pandas UDF. It broadcasts its polygon table once
+  per executor and prunes candidates with the reference's 1°-bucket
+  coarse grid (rg.py:21-50) before any exact containment test — the
+  polygon set is a dimension table, never shuffled with the data.
 
-pyproj/shapely are not installed in this container: both kernels gate on
-import and fall back to a deterministic pass-through (datum) / grid-only
-containment (rev-geocode) so the plumbing, batching, and flag semantics
-are fully testable. Swapping in the real libraries changes only the
-per-batch inner function.
+shapely is optional: without it the reverse geocoder falls back to a
+pure-Python ray cast with identical semantics for simple rings.
 """
 
 from __future__ import annotations
@@ -34,13 +33,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-try:  # pragma: no cover - not present in this container
-    from pyproj import CRS, Transformer
-
-    HAVE_PYPROJ = True
-except ImportError:
-    HAVE_PYPROJ = False
 
 #: Datum alias normalization (conversions.py:423-430, extended with the
 #: mangled verbose spellings providers actually write; keys are already
@@ -121,7 +113,7 @@ DATUM_ALIASES = {
     "4612": "JGD2000",
     "EPSG4674": "SIRGAS2000",
     "4674": "SIRGAS2000",
-    # r8 datum-coverage extension (see MOLODENSKY_PARAMS below): verbose
+    # regional datums (see MOLODENSKY_PARAMS below): verbose
     # provider spellings + the EPSG geographic-2D codes, same
     # mangle-normalized key discipline as the rows above.
     "PROVISIONALSOUTHAMERICANDATUM1956": "PSAD56",
@@ -180,8 +172,9 @@ DATUM_ALIASES = {
 # datum registry). This is the NATIVE path for the datums the reference
 # reaches through proj's +datum= registry plus the other majors — pure
 # arithmetic on trig built-ins, fully codegen'd, no Python in the hot
-# loop. pyproj (when present) remains the exact path for arbitrary CRS
-# strings (7-parameter / grid-shift accuracy).
+# loop. A datum outside the table flags ``geopoint_datum_error``: there
+# is no pyproj path for arbitrary CRS strings (7-parameter / grid-shift
+# accuracy).
 # --------------------------------------------------------------------------
 
 #: WGS84 ellipsoid.
@@ -229,7 +222,7 @@ MOLODENSKY_PARAMS: dict[str, tuple[float, float, float, float, float, float]] = 
     "POTSDAM": (*_BESSEL_1841, 606.0, 23.0, 413.0, 0.0),
     "HERMANNSKOGEL": (*_BESSEL_1841, 653.0, -212.0, 449.0, 0.0),
     "GGRS87": (*_GRS80, -199.87, 74.79, 246.62, 0.0),
-    # r8 extension — the additional regional datums biodiversity
+    # the additional regional datums biodiversity
     # provider data actually carries (verbatimSRS/geodeticDatum values
     # across Latin-American, African, and SE-Asian collections); same
     # public source as the rows above: NIMA/DMA TR 8350.2 local mean
@@ -263,8 +256,6 @@ IDENTITY_DATUMS = {
     "GDA94", "GDA2020", "JGD2000", "JGD2011", "SIRGAS2000", "ITRF",
 }
 
-_KNOWN_DATUMS = set(MOLODENSKY_PARAMS) | IDENTITY_DATUMS
-
 
 def _molodensky_terms(datum: str) -> tuple[float, float, float, float, float, float, float, float]:
     """Precompute the per-datum constants (e², aΔf+fΔa, …) once."""
@@ -277,9 +268,9 @@ def _molodensky_terms(datum: str) -> tuple[float, float, float, float, float, fl
 def molodensky_shift_py(
     lat: float, lon: float, datum: str
 ) -> tuple[float, float]:
-    """One point through the abridged Molodensky shift (scalar reference
-    implementation — also the pyproj-absent UDF fallback). ``datum`` must
-    be a key of MOLODENSKY_PARAMS."""
+    """One point through the abridged Molodensky shift — the scalar
+    reference for ``with_molodensky_shift``. ``datum`` must be a key of
+    MOLODENSKY_PARAMS."""
     a, e2, dx, dy, dz, adf_fda, dlam_sec, _f = _molodensky_terms(datum)
     phi, lam = math.radians(lat), math.radians(lon)
     sp, cp = math.sin(phi), math.cos(phi)
@@ -293,32 +284,11 @@ def molodensky_shift_py(
     return lat + math.degrees(dphi), lon + math.degrees(dlam)
 
 
-def _mol_const(datum_col: Column, idx: int) -> Column:
-    """Per-datum Molodensky constant as a small CASE chain (one arm per
-    datum, constants only) — hoisted so the shared trig tree stays
-    O(ops + datums), not O(ops × datums). The ONE builder both the
-    inline-expression and staged forms use; a second copy drifted once
-    (2·sinφ·cosφ vs sin 2φ) before this was extracted."""
-    c = None
-    for d in sorted(MOLODENSKY_PARAMS):
-        terms = _molodensky_terms(d)
-        vals = (
-            terms[0], terms[1], terms[2], terms[3], terms[4], terms[5],
-            math.radians(terms[6] / 3600.0),
-        )
-        arm = F.lit(vals[idx])
-        c = F.when(datum_col == d, arm) if c is None else c.when(
-            datum_col == d, arm
-        )
-    return c
-
-
 def _mol_dim(spark):
-    """The 34-row per-datum Molodensky parameter DIMENSION — the
-    broadcast-join form of _mol_const for DataFrame-level staging
-    (with_molodensky_shift). Same _molodensky_terms source, so the two
-    forms cannot diverge; columns carry the __mg_ prefix the staged
-    pipeline already reserves."""
+    """The 34-row per-datum Molodensky parameter DIMENSION that
+    with_molodensky_shift broadcast-joins, from the same
+    _molodensky_terms as the scalar kernel; columns carry the __mg_
+    prefix the staged pipeline already reserves."""
     rows = []
     for d in sorted(MOLODENSKY_PARAMS):
         t = _molodensky_terms(d)
@@ -336,60 +306,6 @@ def _mol_dim(spark):
     )
 
 
-def molodensky_shift_expr(
-    lat: Column, lon: Column, datum_norm: Column
-) -> dict[str, Column]:
-    """F6 datum transform as a NATIVE expression (conversions.py:485-509
-    semantics, abridged Molodensky arithmetic).
-
-    ``datum_norm`` is the already alias-normalized datum string (apply
-    ``mangle_string``/DATUM_ALIASES upstream, e.g. via normalize_datum_expr).
-    Returns {"lat", "lon", "flag"} where flag is
-    'geopoint_datum_missing' / 'geopoint_datum_error' / NULL and unknown or
-    missing datums pass coordinates through unchanged — the reference's
-    failure contract. Poles (|lat| = 90) pass through (Δλ undefined there).
-    """
-    lat_c, lon_c = lat.cast("double"), lon.cast("double")
-
-    p_a, p_e2 = _mol_const(datum_norm, 0), _mol_const(datum_norm, 1)
-    p_dx, p_dy = _mol_const(datum_norm, 2), _mol_const(datum_norm, 3)
-    p_dz = _mol_const(datum_norm, 4)
-    p_adf, p_dlam = _mol_const(datum_norm, 5), _mol_const(datum_norm, 6)
-
-    phi = F.radians(lat_c)
-    sp, cp = F.sin(phi), F.cos(phi)
-    lam = F.radians(lon_c)
-    sl, cl = F.sin(lam), F.cos(lam)
-    w2 = F.lit(1.0) - p_e2 * sp * sp
-    w = F.sqrt(w2)
-    rm = p_a * (F.lit(1.0) - p_e2) / (w2 * w)
-    rn = p_a / w
-    dphi = (
-        -p_dx * sp * cl - p_dy * sp * sl + p_dz * cp
-        # 2·sinφ·cosφ, NOT F.sin(2φ): mathematically equal but not
-        # bit-identical in floating point — the staged form, the scalar
-        # kernel, and the DuckDB oracle (synth.molodensky_cte_chain) all
-        # use the product form, so this path must too
-        + p_adf * (F.lit(2.0) * sp * cp)
-    ) / rm
-    dlam = (-p_dx * sl + p_dy * cl) / (rn * cp) + p_dlam
-
-    have = lat_c.isNotNull() & lon_c.isNotNull()
-    missing = datum_norm.isNull() | (F.trim(datum_norm) == "")
-    at_pole = F.abs(lat_c) >= 90.0
-    identity = datum_norm.isin(*sorted(IDENTITY_DATUMS))
-    known_shift = datum_norm.isin(*sorted(MOLODENSKY_PARAMS))
-
-    apply_shift = have & ~at_pole & known_shift
-    out_lat = F.when(apply_shift, lat_c + F.degrees(dphi)).otherwise(lat_c)
-    out_lon = F.when(apply_shift, lon_c + F.degrees(dlam)).otherwise(lon_c)
-
-    flag = F.when(have & missing, "geopoint_datum_missing").when(
-        have & ~identity & ~known_shift, "geopoint_datum_error"
-    )
-    return {"lat": out_lat, "lon": out_lon, "flag": flag}
-
-
 def with_molodensky_shift(
     df,
     lat: Column,
@@ -399,20 +315,27 @@ def with_molodensky_shift(
     out_lon: str = "lon_wgs84",
     out_flag: str = "datum_flag",
 ):
-    """Staged (DataFrame-level) form of the F6 shift — the form to use in
-    real pipelines.
+    """F6 datum transform to WGS84 (conversions.py:485-509 semantics,
+    abridged Molodensky arithmetic), staged at the DataFrame level.
 
-    molodensky_shift_expr composed inline re-inlines the normalized-datum
-    subtree at every constant site (~datums × 7), which breaches janino's
-    64 KB method limit and silently drops the stage out of whole-stage
-    codegen. Here the seven per-datum constants come from a BROADCAST
-    join against the 34-row parameter dimension instead of CASE chains:
-    the 7 × 17-arm string-compare CASEs made the fused generated method
-    too large for HotSpot's JIT, so the whole consume loop (trig
-    included) ran as interpreted bytecode — measured 4.7x slower than
-    the join form on the 600k-row enrichment bench. A left join on a
-    unique key preserves rows; an unknown/NULL datum gets NULL constants,
-    exactly the CASE-with-no-ELSE semantics. Adds out_lat/out_lon/
+    ``datum_raw`` is normalized here (normalize_datum_expr). ``out_flag``
+    is 'geopoint_datum_missing' / 'geopoint_datum_error' / NULL, and
+    unknown or missing datums pass coordinates through unchanged — the
+    reference's failure contract. Poles (|lat| = 90) pass through (Δλ is
+    undefined there).
+
+    The seven per-datum constants come from a BROADCAST join against
+    the 34-row parameter dimension, not per-constant CASE chains over
+    the datum: an inline CASE form re-inlines the normalized-datum
+    subtree at every constant site (~datums × 7), which breaches
+    janino's 64 KB method limit, and its 7 × 17-arm string-compare CASEs
+    made the fused generated method too large for HotSpot's JIT, so the
+    whole consume loop (trig included) ran as interpreted bytecode —
+    measured 4.7x slower than the join form on the 600k-row enrichment
+    bench. A left join on a unique key preserves rows; an unknown/NULL
+    datum gets NULL constants. The Δφ term is ``2·sinφ·cosφ``, not
+    ``sin 2φ``, to match the DuckDB oracle chain
+    (synth.molodensky_cte_chain) bit for bit. Adds out_lat/out_lon/
     out_flag; temp columns dropped.
     """
     tmp = df.withColumns(
@@ -484,7 +407,7 @@ def normalize_datum_expr(datum_raw: Column) -> Column:
     # UNDERSCORES and unicode letters/digits SURVIVE the fold — so
     # 'NAD_83' stays 'NAD_83' (an UNKNOWN datum there, never shifted),
     # where an ASCII-only [^A-Za-z0-9] fold would alias it to NAD83 and
-    # apply a shift the reference refuses (r12 differential finding,
+    # apply a shift the reference refuses (pinned by
     # test_reference_differential_etl::test_mangle_string_vs_reference).
     # \p{L}\p{N}_ is Python \w's exact class (isalnum + underscore) —
     # up to the JVM regex engine's Unicode version: letters assigned
@@ -514,80 +437,6 @@ def mangle_string(s: str) -> str:
     strip ``[\W]+`` — keeping underscores and unicode alnums — then
     uppercase."""
     return re.sub(r"[\W]+", "", s).upper()
-
-
-_transform_schema = StructType(
-    [
-        StructField("lon", DoubleType()),
-        StructField("lat", DoubleType()),
-        StructField("flag", StringType()),
-    ]
-)
-
-
-@F.pandas_udf(_transform_schema)
-def datum_transform_udf(
-    lon: pd.Series, lat: pd.Series, datum: pd.Series
-) -> pd.DataFrame:
-    """CRS transform to EPSG:4326 (conversions.py:485-509). Emits flag
-    'geopoint_datum_missing' / 'geopoint_datum_error' / None.
-
-    Without pyproj, the WGS84-family identity datums pass through,
-    NAD27/WGS72 go through the abridged-Molodensky scalar kernel (same
-    arithmetic as the native molodensky_shift_expr), and unknown datums
-    flag datum_error, matching the reference's failure contract.
-    """
-    out_lon, out_lat, out_flag = [], [], []
-    transformer_cache: dict = {}
-    for lo, la, dt in zip(lon, lat, datum):
-        if (
-            lo is None
-            or la is None
-            or (isinstance(lo, float) and math.isnan(lo))
-            or (isinstance(la, float) and math.isnan(la))
-        ):
-            out_lon.append(None), out_lat.append(None), out_flag.append(None)
-            continue
-        if dt is None or (isinstance(dt, float) and math.isnan(dt)):
-            out_lon.append(lo), out_lat.append(la)
-            out_flag.append("geopoint_datum_missing")
-            continue
-        norm = DATUM_ALIASES.get(mangle_string(str(dt)), mangle_string(str(dt)))
-        if not norm:
-            # missing is judged on the MANGLED form, matching the native
-            # twins (molodensky_shift_expr/with_molodensky_shift, whose
-            # normalize_datum_expr reduces '???' to '' -> missing): a
-            # punctuation-only datum carries no datum information —
-            # flagging it 'error' here while the native path says
-            # 'missing' made the two F6 engines disagree
-            out_lon.append(lo), out_lat.append(la)
-            out_flag.append("geopoint_datum_missing")
-            continue
-        if HAVE_PYPROJ:  # pragma: no cover
-            try:
-                tr = transformer_cache.get(norm)
-                if tr is None:
-                    src = CRS.from_user_input(f"+proj=latlon +datum={norm}")
-                    tr = Transformer.from_crs(
-                        src, CRS.from_epsg(4326), always_xy=True
-                    )
-                    transformer_cache[norm] = tr
-                lo2, la2 = tr.transform(lo, la)
-                out_lon.append(lo2), out_lat.append(la2), out_flag.append(None)
-            except Exception:
-                out_lon.append(lo), out_lat.append(la)
-                out_flag.append("geopoint_datum_error")
-        else:
-            if norm in MOLODENSKY_PARAMS and abs(la) < 90.0:
-                la2, lo2 = molodensky_shift_py(la, lo, norm)
-                out_lon.append(lo2), out_lat.append(la2), out_flag.append(None)
-            elif norm in _KNOWN_DATUMS:  # identity datums, or a known
-                # shift datum at a pole (IDENTITY_DATUMS ⊂ _KNOWN_DATUMS)
-                out_lon.append(lo), out_lat.append(la), out_flag.append(None)
-            else:
-                out_lon.append(lo), out_lat.append(la)
-                out_flag.append("geopoint_datum_error")
-    return pd.DataFrame({"lon": out_lon, "lat": out_lat, "flag": out_flag})
 
 
 # --------------------------------------------------------------------------

@@ -29,21 +29,7 @@ from idb_backend_spark.functions.text import (
     shingles_from_tokens,
     tokens,
 )
-
-
-def _spread(df: DataFrame, n_partitions: int | None) -> DataFrame:
-    """Repartition before per-row heavy map work (signature computation
-    runs as a single task on a one-row-group file otherwise). With no
-    explicit width this delegates to session.spread_for_compute, whose
-    scan-width estimate (split formula + row-group bound) makes it a
-    TRUE no-op when the scan already parallelizes — the old
-    unconditional repartition added a pointless exchange (and a
-    shrink!) on wide inputs at real scale."""
-    if n_partitions:
-        return df.repartition(n_partitions)
-    from idb_backend_spark.session import spread_for_compute
-
-    return spread_for_compute(df)
+from idb_backend_spark.session import spread_for_compute
 
 
 def _shingle_df(
@@ -51,7 +37,9 @@ def _shingle_df(
 ) -> DataFrame:
     """(id, sh) with tokenization staged through projection boundaries so
     the shingle window reads attributes, not re-evaluated expressions."""
-    staged = _spread(df.select(F.col(id_col), F.col(text_col)), None).select(
+    staged = spread_for_compute(
+        df.select(F.col(id_col), F.col(text_col))
+    ).select(
         F.col(id_col).alias("id"),
         tokens(text_col).alias("__t"),
         normalize_text(text_col).alias("__norm"),
@@ -94,7 +82,7 @@ def exact_dedup_keep_first(
     aggregate-then-semi-join formulation scanned (and re-evaluated any
     upstream enrichment expressions of) ``df`` twice.
 
-    ``keep_cols`` (r15, guide §2.3 — project before the exchange): the
+    ``keep_cols`` (project before the exchange): the
     output columns the CALLER actually consumes downstream. When given,
     the fingerprint is computed map-side and only ``keep_cols`` cross
     the dedup exchange — in particular the document text itself stays
@@ -104,7 +92,7 @@ def exact_dedup_keep_first(
     1.521 s -> 1.290 s min-of-3, identical rows. Default None keeps
     every column (the generic contract).
 
-    ``norm_col`` (r15 s3): a caller that already staged
+    ``norm_col``: a caller that already staged
     ``normalize_text(text_col)`` as a column passes it here so the
     fingerprint md5 reads it instead of re-running the normalize chain
     (fingerprint == md5(normalize_text) by construction, and
@@ -117,10 +105,10 @@ def exact_dedup_keep_first(
     out_cols = list(df.columns) if keep_cols is None else list(keep_cols)
     if id_col not in out_cols:
         raise ValueError(f"keep_cols must include id_col {id_col!r}")
-    # fail loudly up front (r16, ADVICE r15): a keep_cols entry absent
-    # from the frame used to be silently dropped by the staged select
-    # and only surfaced as an opaque AnalysisException at the final
-    # select; a missing norm_col would likewise fail far from its cause
+    # fail loudly up front: a keep_cols entry absent from the frame
+    # would be silently dropped by the staged select and only surface
+    # as an opaque AnalysisException at the final select; a missing
+    # norm_col would likewise fail far from its cause
     missing = [c for c in out_cols if c not in df.columns]
     if missing:
         raise ValueError(f"keep_cols not in df.columns: {missing}")
@@ -263,7 +251,7 @@ def _minhash_candidate_pairs(
     banded = sig.select(
         "id", F.explode(F.array(*_band_structs(num_hashes, bands))).alias("bk")
     ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    # SHUFFLE_HASH (r15 s3, the hamming_pairs rationale): the default
+    # SHUFFLE_HASH (the hamming_pairs rationale): the default
     # broadcast of one banded side re-executes the ENTIRE signature
     # subtree (a full shingle+minhash pass over the corpus) to build the
     # broadcast — exchange reuse only fires when both sides plan the
@@ -353,7 +341,9 @@ def simhash_pairs(
     # whole hashing UDF a second time below it (guide §4.4's
     # duplication, observed as 2x ArrowEvalPython when the radius
     # filter moved ahead of the dedup).
-    fp = _spread(df.select(F.col(id_col), F.col(text_col)), None).select(
+    fp = spread_for_compute(
+        df.select(F.col(id_col), F.col(text_col))
+    ).select(
         F.col(id_col).alias("id"),
         F.coalesce(simhash64(tokens(text_col)), F.lit(0)).alias("fp"),
     )
@@ -396,12 +386,12 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     # upstream fp plan once PER BRANCH per join side — with a pandas-UDF
     # fingerprint (simhash64 / image_phash) that was 2x(max_hamming+1)
     # full hashing passes over the corpus; this shape does one per side
-    # (and AQE's ReusedExchange collapses the identical sides). r11:
+    # (and AQE's ReusedExchange collapses the identical sides):
     # simhash_pairs wall at sf0.1 dropped ~3x.
     banded = fp.select(
         "id", "fp", F.posexplode(F.array(*keys)).alias("chunk", "ckey")
     )
-    # SHUFFLE_HASH hint (r15, guide §3.1/§2.4): the planner's default for
+    # SHUFFLE_HASH hint: the planner's default for
     # this self-join is a BroadcastHashJoin of one banded side — which
     # re-executes the ENTIRE fingerprint subtree (the pandas-UDF hashing
     # pass over the whole corpus) a second time to build the broadcast,
@@ -414,7 +404,7 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     # 1.445 s -> 1.046 s). At scale the broadcast was wrong anyway: the
     # banded side IS the corpus, far over any broadcast cap, and the
     # bucketed equi-join is exactly the shape AQE skew-split handles.
-    # Hot-key evidence (r16, SCALING.md round-16 addendum): measured at
+    # Hot-key evidence (SCALING.md round-16 addendum): measured at
     # 4x the bench corpus with ONE chunk key holding 10%/30% of all
     # rows — completes, wall tracks the inherent n^2 pair output, build
     # memory is the hot group's (id, fp) rows; a group large enough to
@@ -430,11 +420,11 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
             F.col("b.id").alias("id_b"),
             hamming64(F.col("a.fp"), F.col("b.fp")).alias("hamming"),
         )
-        # Radius filter BEFORE the dedup exchange (r15, guide §2.3):
+        # Radius filter BEFORE the dedup exchange:
         # hamming is a pure function of the pair, so filter-then-dedup
         # == dedup-then-filter — but chunk collisions are overwhelmingly
         # FAR pairs (sf0.1: 250,557 collision rows vs 902 within radius,
-        # 278x), and the old order shuffled all of them into the
+        # 278x), and dedup-first would shuffle all of them into the
         # dropDuplicates aggregation just to discard them after.
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
@@ -568,11 +558,10 @@ def minhash_exact_verified_pairs(
     oracle-checkable: an exact-SQL oracle computes the true pair set, and
     any hash mismatch is a real recall loss in the sketch tier.
     """
-    # candidate generation ONLY — the old path went through
-    # minhash_lsh_pairs at threshold=0.0, paying two signature-array
-    # joins and a per-pair lane-agreement computation whose filter then
-    # passed everything; the exact-Jaccard verify below re-joins
-    # shingles anyway, so the signature verification was dead weight
+    # candidate generation ONLY, not minhash_lsh_pairs at threshold=0.0:
+    # that would pay two signature-array joins and a per-pair
+    # lane-agreement computation whose filter passes everything; the
+    # exact-Jaccard verify below re-joins shingles anyway
     if bands > num_hashes or num_hashes % bands != 0:
         raise ValueError(
             f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
@@ -585,7 +574,7 @@ def minhash_exact_verified_pairs(
     jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
         F.array_union("sh_a", "sh_b")
     )
-    # SHUFFLE_HASH on both shingle sides (r15 s3): broadcasting them
+    # SHUFFLE_HASH on both shingle sides: broadcasting them
     # re-evaluates the shingle pass once PER SIDE; as shuffle joins the
     # two sh subplans share one Exchange (the second is a
     # ReusedExchange), so the corpus is shingled once. At scale the
@@ -848,7 +837,9 @@ def remove_repeated_spans(
 
     if window < 2:
         raise ValueError(f"window must be >= 2, got {window}")
-    staged = _spread(df.select(F.col(id_col), F.col(text_col)), None).select(
+    staged = spread_for_compute(
+        df.select(F.col(id_col), F.col(text_col))
+    ).select(
         F.col(id_col).alias("id"),
         # NULL text folds to '' BEFORE tokenizing: split('') yields ['']
         # on both engines, so the (clean_text, n_removed) contract stays

@@ -2,8 +2,9 @@
 
 The reference keeps an append-only version history (uuids_data,
 db.py:280-286) and resolves "latest" with a LATERAL top-1-per-uuid join
-(db.py:37-44). In Spark that is a window rank — AQE handles key skew, and
-when the store is bucketed by the key the window needs no extra shuffle.
+(db.py:37-44). In Spark that is a ``max_by`` aggregation
+(latest_per_key_agg): map-side partial aggregation, so the shuffle
+carries one row per key and map partition.
 """
 
 from __future__ import annotations
@@ -12,24 +13,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from idb_backend_spark.functions.etags import TOMBSTONE_ETAG
-
-
-def latest_per_key(
-    df: DataFrame,
-    keys: list[str],
-    order_by: list[Column],
-    rank_col: str = "__rn",
-) -> DataFrame:
-    """J1/W1 — top-1 row per key by ordering (reference db.py:37-44).
-
-    ``order_by`` should end with a unique tie-breaker for determinism.
-    """
-    w = Window.partitionBy(*keys).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w))
-        .filter(F.col(rank_col) == 1)
-        .drop(rank_col)
-    )
 
 
 def latest_per_key_agg(
@@ -41,16 +24,16 @@ def latest_per_key_agg(
 
     ``max_by(struct(*), struct(order_cols))`` computes top-1-per-key
     with map-side partial aggregation: the shuffle carries one row per
-    (key, map-partition) instead of every row. Physical shape, honestly
-    (r14 audit): max_by's struct-typed buffer is a DECLARATIVE
+    (key, map-partition) instead of every row. Physical shape, honestly:
+    max_by's struct-typed buffer is a DECLARATIVE
     aggregate with non-mutable buffer fields, so Spark plans
     SortAggregate — each MAP partition is sorted by the grouping key
     before the partial phase (local CPU, no extra IO or exchange).
     That is still the scale-winning plan: the window form shuffles and
     sorts EVERY row globally, while here the post-shuffle side touches
-    only the collapsed partials. The window form remains for orderings
-    that cannot be expressed as a struct max (mixed asc/desc on
-    non-negatable types).
+    only the collapsed partials. Orderings that cannot be expressed as
+    a struct max (mixed asc/desc on non-negatable types) are out of its
+    reach.
 
     ``order_cols``: columns whose natural descending max order IS the
     "latest" order (e.g. modified, version, unique tie-breaker last).
@@ -73,7 +56,7 @@ def latest_per_key_agg(
     if not non_keys:
         # degenerate all-columns-are-keys call: agg() rejects an empty
         # expression list, and with no payload beyond the key "latest
-        # per key" is just the distinct keys (ADVICE r14)
+        # per key" is just the distinct keys
         return df.dropDuplicates(keys).select(*df.columns)
     ocols = [F.col(c) if isinstance(c, str) else c for c in order_cols]
     payload = F.struct(*[F.col(c) for c in df.columns])
@@ -119,8 +102,8 @@ def _dedupe_batch(batch: DataFrame, key: str, etag_col: str) -> DataFrame:
     convergence note there)."""
     non_keys = [c for c in batch.columns if c != key]
     if not non_keys:
-        # key-only frame: nothing to pick an etag winner from (ADVICE
-        # r14 — agg() rejects an empty expression list)
+        # key-only frame: nothing to pick an etag winner from (agg()
+        # rejects an empty expression list)
         return batch.dropDuplicates([key]).select(*batch.columns)
     payload = F.struct(*[F.col(c) for c in batch.columns])
     order = F.coalesce(F.col(etag_col).cast("string"), F.lit(""))
@@ -204,12 +187,11 @@ def reconcile_skip_set(
     (``pg_etag == tombstone_etag and es_etag is None``: a record
     deleted before it ever reached the index needs no delete-op).
 
-    r10 parity fix: the earlier symmetric full-outer form also emitted
-    (a) never-indexed tombstones and (b) index-side ORPHANS — docs in
-    the index with no store row. The reference's resume loop iterates
-    postgres rows only, so orphans are never visited (they linger in
-    the index until the next full reindex) — use index_orphans() to
-    surface them as the engine-side extension."""
+    Index-side ORPHANS — docs in the index with no store row — are not
+    emitted: the reference's resume loop iterates postgres rows only, so
+    orphans are never visited (they linger in the index until the next
+    full reindex) — use index_orphans() to surface them as the
+    engine-side extension."""
     a = index_side.select(F.col(key), F.col(etag_col).alias("__idx_etag"))
     b = store_side.select(F.col(key), F.col(etag_col).alias("__pg_etag"))
     joined = b.join(a, on=key, how="left")

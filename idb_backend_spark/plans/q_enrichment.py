@@ -31,6 +31,7 @@ from idb_backend_spark.plans.synth import GEO_LON as _GEO_LON
 
 from idb_backend_spark.functions import enrichment as E
 from idb_backend_spark.functions import finalize as FIN
+from idb_backend_spark.functions.flags import flag_column
 
 _POLY = [[-100.0, 10.0], [-60.0, 10.0], [-80.0, 45.0]]  # [lon, lat] ring
 
@@ -53,7 +54,7 @@ def _poly_crossing_sql(lat: str, lon: str, poly) -> str:
     return "(" + " + ".join(terms) + ") % 2 = 1"
 
 
-# Entry `shim_geo_polygon` retired round 10 (slot freed for
+# Entry `shim_geo_polygon` retired (slot freed for
 # media_url_discovery, q_store.py): P11's geo_polygon branch emits the
 # IDENTICAL unrolled ray-cast kernel as P10's polygon shapes — the one
 # distinct piece was the `{"type": "geo_polygon", "points": ...}` shim
@@ -88,8 +89,8 @@ def shim_geo_shape(spark, sf_dir):
     """P10/P11 — geo_shape dispatch: polygon-with-hole containment as
     the filter (outer-ring parity AND NOT hole parity) plus an envelope
     geo_shape as a projected flag — both through the shim compiler's
-    geo_shape branch (query_shim.py:85-86). r10 folds the retired
-    shim_geo_polygon slot in as the in_poly_p11 flag: the same unrolled
+    geo_shape branch (query_shim.py:85-86). The retired
+    shim_geo_polygon slot is folded in as the in_poly_p11 flag: the same unrolled
     ray-cast kernel reached through P11's `{"type": "geo_polygon",
     "points": ...}` dispatch (query_shim.py:89-90), so both predicate
     spellings stay driver-graded in one slot."""
@@ -172,7 +173,7 @@ def geo_normalize_flags(spark, sf_dir):
         .withColumn("lat_s", F.expr(_LAT_S))
         .withColumn("lon_s", F.expr(_LON_S))
     )
-    # staged form (r15): parse once per coordinate as explicit columns,
+    # staged form: parse once per coordinate as explicit columns,
     # branch logic over doubles — same result, no re-inlined parse
     g = E.with_geo_normalize(g, F.col("lat_s"), F.col("lon_s"))
     return g.select(
@@ -188,7 +189,7 @@ def geo_normalize_flags(spark, sf_dir):
     ).orderBy("c_custkey")
 
 
-#: r10 adds the '' arm (%11=9): the reference's filled() counts an empty
+#: the '' arm (%11=9): the reference's filled() counts an empty
 #: string as PRESENT (conversions.py:741-742), so '' flags
 #: removed+invalid like any unmatched value — graded here
 _BOR_S = (
@@ -224,11 +225,13 @@ def bor_normalize(spark, sf_dir):
     return g.select(
         "c_custkey",
         r["value"].alias("basisofrecord"),
-        F.concat_ws(",", r["flag_removed"], r["flag_invalid"]).alias("flags"),
+        F.concat_ws(
+            ",", flag_column(r["flag_removed"]), flag_column(r["flag_invalid"])
+        ).alias("flags"),
     ).orderBy("c_custkey")
 
 
-#: r10 adds the '' arm (%10=8) — filled() counts '' as present, so it
+#: the '' arm (%10=8) — filled() counts '' as present, so it
 #: takes the removed+invalid arm (conversions.py:741-742, :909-911)
 _RANK_S = (
     "CASE p_partkey % 10 WHEN 0 THEN 'species' WHEN 1 THEN 'Sp.' "
@@ -264,7 +267,10 @@ def taxon_rank_normalize(spark, sf_dir):
         "p_partkey",
         r["value"].alias("taxonrank"),
         F.concat_ws(
-            ",", r["flag_replaced"], r["flag_removed"], r["flag_invalid"]
+            ",",
+            flag_column(r["flag_replaced"]),
+            flag_column(r["flag_removed"]),
+            flag_column(r["flag_invalid"]),
         ).alias("flags"),
     ).orderBy("p_partkey")
 
@@ -310,7 +316,7 @@ def name_crossfill(spark, sf_dir):
     g = g.select(
         "c_custkey",
         filled["value"].alias("scientificname"),
-        filled["flag_added"].alias("flag"),
+        flag_column(filled["flag_added"]).alias("flag"),
     )
     parsed = E.genus_species_parse(F.col("scientificname"))
     return g.select(
@@ -517,7 +523,7 @@ def _media_precedence_oracle() -> str:
     bucket_arms = " ".join(
         f"WHEN '{k}' THEN '{v}'" for k, v in sorted(E._FORMAT_BUCKETS.items())
     )
-    # r9 — the reference's `or` chains skip EMPTY STRINGS at non-final
+    # the reference's `or` chains skip EMPTY STRINGS at non-final
     # alternatives (Python falsy; conversions.py:711-713,:727), so the
     # planted '' arms must fall through exactly like NULLs — spelled
     # nullif on every non-final alternative — while a chain RESOLVING
@@ -569,7 +575,7 @@ def media_url_precedence(spark, sf_dir):
     padding, so the lower/trim fold, the whole bucket table, and the
     unknown->NULL arm are all value-hashed.
 
-    r9 extends the slot with the Python-or EMPTY-STRING semantics
+    The slot also grades the Python-or EMPTY-STRING semantics
     (conversions.py:711-713,:727 — '' is falsy at non-final chain
     positions, but a chain resolving to '' still blocks the identifier
     fallback): planted '' arms in the url precedence AND a three-key
@@ -629,7 +635,7 @@ def media_url_precedence(spark, sf_dir):
 
 @query(
     "corrections_apply",
-    # r10 — grades the FULL chain semantics (record_corrector.py
+    # grades the FULL chain semantics (record_corrector.py
     # correct_record): replacement/removal flags; a correction FAMILY
     # sharing one key tuple where the kingdom guard's trip skips the
     # sibling field too (`continue` skips the whole correction,
@@ -765,8 +771,7 @@ def identity_match(spark, sf_dir):
 
 
 # J9 driver-graded evidence for the COGROUPED INGEST KERNEL + size
-# router (operators/ingest.py — r12's flagship, previously pytest-only;
-# verdict r12 task 1). Deterministic multi-recordset batch from orders:
+# router (operators/ingest.py). Deterministic multi-recordset batch from orders:
 # one giant recordset (o_custkey%4==0, ~25% of rows) routed to the
 # RELATIONAL leg and ~30 small ones routed to the KERNEL leg (the
 # threshold is derived from the table size so both legs run at every
@@ -978,7 +983,7 @@ _SUSPECT_CASE_SQL = (
 
 @query(
     "ingest_summary",
-    # r10 — per-recordset-group A9 counters + the is_row_suspect tag
+    # per-recordset-group A9 counters + the is_row_suspect tag
     # (ds_sum_counts.py:53-97): batch membership varies per group (mod
     # 2+g%3) so the reconciliation ratios differ across groups and
     # several suspect arms fire; media counters and datafile_ok are
@@ -1105,7 +1110,7 @@ def text_quality_metrics(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# RETIRED (round 6, second pass): `bpe_token_count` — one inline
+# RETIRED: `bpe_token_count` — one inline
 # regexp_extract_all count ('[A-Za-z0-9]+|[^A-Za-z0-9\s]', no case
 # fold) with no operator function behind it; T9 token-counting coverage
 # stays graded by `token_count_quality` and `text_quality_metrics`.
@@ -1296,10 +1301,9 @@ _DATUM_RAW = (
     "WHEN 4 THEN 'Cape' WHEN 5 THEN 'European Datum 1950' "
     "WHEN 6 THEN 'Tokyo Datum' WHEN 7 THEN 'OSGB 1936' "
     "WHEN 8 THEN 'Pulkovo 1942' WHEN 9 THEN 'GDA94' "
-    # r8: 'Campo Inchauspe' moved from the pass-through+error arm to a
-    # real shift when its NIMA parameters joined the table; the added
-    # arms exercise more of the r8 datums incl. the EPSG-code and
-    # verbose-alias resolution paths. 'Ocotepeque 1935' stays a
+    # 'Campo Inchauspe' is a real shift (its NIMA parameters are in
+    # the table); the later arms exercise more regional datums incl.
+    # the EPSG-code and verbose-alias resolution paths. 'Ocotepeque 1935' stays a
     # deliberately UNKNOWN datum so the error flag keeps graded coverage.
     "WHEN 10 THEN 'Campo Inchauspe' WHEN 11 THEN 'PSAD56' "
     "WHEN 12 THEN 'EPSG:4275' WHEN 13 THEN 'Old Hawaiian' "

@@ -26,10 +26,10 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 # --------------------------------------------------------------------------
 
 
-# Catalog entry `versioned_merge` retired in round 13 to free the slot
+# Catalog entry `versioned_merge` retired to free the slot
 # for `ingest_kernel_outcomes` (q_enrichment — driver-graded evidence
-# for the r12 cogrouped ingest kernel + size router; verdict r12
-# task 1). W2/X5 stay driver-graded without it, in the same
+# for the cogrouped ingest kernel + size router). W2/X5 stay graded
+# without it, in the same
 # catalog: `versioning.merge_batch` — the exact kernel this entry drove —
 # runs INSIDE `ingest_e2e` (q_download), where apply_harvest_batch's
 # merge (store.py:252) feeds the live latest view that ingest_e2e
@@ -40,7 +40,7 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 # tests/test_store.py.
 
 
-# Catalog entry `tombstone_deletes` retired in round 7 to free a grading
+# Catalog entry `tombstone_deletes` retired to free a grading
 # slot (catalog.py retirement rule). U2 stays double-graded without it:
 # the anti-join delete DETECTION shape is `anti_join_deletes`
 # (q_relational), and `versioning.tombstones_for_deletes` itself — the
@@ -235,7 +235,7 @@ def _etl_oracle_sql() -> str:
         "  CASE WHEN lat IS NOT NULL AND lon IS NOT NULL THEN "
         f"({molodensky_flag_sql()}) END AS datum_flag, "
         "  eventdate AS datecollected, "
-        # r8 CORRECTION: minelevation is an ELEVGRABBER field — the
+        # minelevation is an ELEVGRABBER field — the
         # reference coerces it with locale.atof (conversions.py:336-356),
         # so a fractional token ("23.5 m", ok13=11 rows) KEEPS its
         # fraction as a float; a numberless token ('unknown', ok13=12
@@ -290,9 +290,8 @@ def _etl_oracle_sql() -> str:
 def _etl_raw_frame(spark, sf_dir):
     """The etl pipeline's shared input stage: synthesized verbatim
     projection over the spread lineitem scan, staged geo normalization,
-    and the Molodensky shift. The r16 staged-flags A/B built both the
-    r15 and the staged form over this subtree (OPTIMIZATION_r16.md
-    §1)."""
+    and the Molodensky shift (the staged-flags comparison over this
+    subtree is in OPTIMIZATION_r16.md §1)."""
     # the enrichment stack costs ~10x its scan bytes; a narrow scan
     # strands every other core on the whole row-wise pipeline
     # (guarded: no exchange when the scan is wide)
@@ -388,11 +387,11 @@ def _etl_raw_frame(spark, sf_dir):
     )
     from idb_backend_spark.functions.geo import with_molodensky_shift
 
-    # staged normalization AND staged shift (not the inline expression
-    # forms): each binds its expensive subexpressions once as columns —
-    # the parse subtree for the normalize (codegen CSE skips CaseWhen
-    # branch contexts; r15 A/B 1.53 s -> 0.94 s on this frame), the
-    # per-datum constants for the shift (janino 64 KB limit)
+    # staged normalization and staged shift: each binds its expensive
+    # subexpressions once as columns — the parse subtree for the
+    # normalize (codegen CSE skips CaseWhen branch contexts; 1.53 s ->
+    # 0.94 s on this frame, OPTIMIZATION_r15.md §6), the per-datum
+    # constants for the shift (janino 64 KB limit)
     raw = E.with_geo_normalize(raw, F.col("lat_s"), F.col("lon_s"))
     raw = with_molodensky_shift(
         raw, F.col("__geo_lat"), F.col("__geo_lon"), F.col("datum_s")
@@ -436,13 +435,13 @@ def etl_enrichment_pipeline(spark, sf_dir):
         F.col("eventdate"), F.col("year_s"), F.col("month_s"),
         F.lit(None), F.lit(None),
     )
-    # Two-stage value/flags split (r16, guide §1.2): the flag conditions
+    # Two-stage value/flags split: the flag conditions
     # below read the STAGED value columns (datecollected, basisofrecord,
     # taxonrank — unconditional outputs computed once here) instead of
     # re-inlining the date_fallback tree and the bor/rank vocab chains
-    # once per flag condition (the r15 single-stage form carried 3
-    # contains-chain + 2 date-tree copies even after the fold_flags fix;
-    # this one evaluates each exactly once). The extra staged inputs the
+    # once per flag condition (a single-stage form carries 3
+    # contains-chain + 2 date-tree copies; this one evaluates each
+    # exactly once). The extra staged inputs the
     # flags still need are cheap: one bool (bor filled) and the folded
     # rank string. CollapseProject keeps the boundary because the value
     # columns are non-cheap and multi-referenced.
@@ -451,9 +450,9 @@ def etl_enrichment_pipeline(spark, sf_dir):
         F.col("lat_wgs84").alias("lat"),
         F.col("lon_wgs84").alias("lon"),
         dc.alias("datecollected"),
-        # r8 CORRECTION: minelevation is an elevGrabber (locale.atof)
-        # field — float, fraction kept; the atoi reject path now runs on
-        # the reference's real intGrabber field (version)
+        # minelevation is an elevGrabber (locale.atof) field — float,
+        # fraction kept; the atoi reject path runs on the reference's
+        # real intGrabber field (version)
         float_grabber("elev_s").alias("minelevation"),
         int_grabber("version_s").alias("version"),
         bor["value"].alias("basisofrecord"),
@@ -467,10 +466,10 @@ def etl_enrichment_pipeline(spark, sf_dir):
         grabbers.getfield(F.col("bor_s")).isNotNull().alias("__bor_filled"),
         grabbers.getfield(F.col("rank_s")).alias("__rank_v"),
     )
-    bor_f = E.bor_flags_from_staged(
+    bor_f = E.bor_flags(
         F.col("__bor_filled"), F.col("basisofrecord")
     )
-    rank_f = E.taxon_rank_flags_from_staged(
+    rank_f = E.taxon_rank_flags(
         F.col("__rank_v"), F.col("taxonrank")
     )
     enriched = values.select(
@@ -514,7 +513,7 @@ def etl_enrichment_pipeline(spark, sf_dir):
     )
 
 
-# Catalog entry `raw_field_access` retired in round 7 to free a grading
+# Catalog entry `raw_field_access` retired to free a grading
 # slot (catalog.py retirement rule). P13's raw-map addressing stays
 # driver-graded through `records_typed_projection` (the whole typed
 # projection is GetMapValue lookups out of the raw `data` map, schema-
@@ -543,13 +542,12 @@ def _map_str(col: str):
 
 @query(
     "stats_rollup_nested",
-    # r10 — A7's FULL three-branch accumulation (collect.py:132-166):
+    # A7's FULL three-branch accumulation (collect.py:132-166):
     # event_type maps onto the reference's stats types (click->view,
     # view->seen, error->search). view: +1 everywhere, items only;
     # seen: also queries +1; search: payload direction flips — totals/
-    # queries/geocodes accumulate record_count, NO items. Legacy 'items'
-    # column semantics (stats_rollup_nested r8/r9 shape) ride along in
-    # the view/seen branches' items maps.
+    # queries/geocodes accumulate record_count, NO items. The 'items'
+    # column semantics ride along in the view/seen branches' items maps.
     "WITH ev AS (SELECT CAST(date_trunc('day', ts) AS DATE) AS day, "
     "CASE event_type WHEN 'click' THEN 'view' WHEN 'view' THEN 'seen' "
     "ELSE 'search' END AS stats_type, "
@@ -627,7 +625,7 @@ def _relations_oracle_sql() -> str:
     for table-lookup kernels): the CASE arms restate the reference's
     branch outcomes — links' elif blocks sibling fallback, links text is
     the first-link uuid VERBATIM (uppercase hex preserved — grabFirstUUID
-    does no case fold, conversions.py:319-331; r9 correction), siblings
+    does no case fold, conversions.py:319-331), siblings
     are verbatim, the parent override wins everywhere — composed with
     the original hasMedia/hasSpecimen lineitem-link booleans AND the P14
     presence flag taken from the relations output itself:
@@ -665,7 +663,7 @@ def _relations_oracle_sql() -> str:
 @query("media_presence_flags", _relations_oracle_sql())
 def media_presence_flags_q(spark, sf_dir):
     """F9/P14 — the FULL relationsGrabber assembly (conversions.py:
-    632-680), r8: per-type relation columns from synthesized
+    632-680): per-type relation columns from synthesized
     idigbio:links / idigbio:siblings maps + the idigbio:parent override
     (functions.finalize.relations_grabber — links' elif blocks sibling
     fallback; links text = grabFirstUUID(first), siblings verbatim;
@@ -676,8 +674,7 @@ def media_presence_flags_q(spark, sf_dir):
     k%12=3 rows whose mediarecord links are ALL uuid-less yield an
     empty list and hasImage=true). The uuid prefixes carry hex LETTERS
     so the grabber's verbatim-case behavior is actually exercised
-    (r9: grabFirstUUID preserves case; the old lowercase fold was a
-    divergence)."""
+    (grabFirstUUID preserves case)."""
     from idb_backend_spark.functions.finalize import (
         media_presence_flags,
         relations_grabber,
@@ -759,7 +756,7 @@ def media_presence_flags_q(spark, sf_dir):
 
 @query(
     "identifier_extraction",
-    # F23 r10 — the FULL identifier_fields table (db_check.py:64-87) in
+    # F23 — the FULL identifier_fields table (db_check.py:64-87) in
     # TABLE order: recordId, recordID, ResourceRelationship (idFromRR —
     # FIRST element only, representedIn verbatim / sameAs namespaced /
     # other-or-missing nothing), occurrenceID ns, id ns, ID ns; plus the
@@ -1147,7 +1144,7 @@ def eml_harvest(spark, sf_dir):
 
 @query(
     "object_store_roundtrip",
-    # r10 extension — the media API response assembly over the landed
+    # plus the media API response assembly over the landed
     # objects (v2_media.py:29-77 via query/views.py): storage url,
     # deriv url (always .jpg, derivatives-gated), and the preview state
     # machine with its missing-mime-before-pending precedence
@@ -1174,7 +1171,7 @@ def object_store_roundtrip(spark, sf_dir):
     batch — the executor-side shape the S3 backend needs); the oracle only
     knows md5(text), so any loss in the store round-trip diverges.
 
-    r10 extends the slot with the media API response assembly over the
+    The slot also grades the media API response assembly over the
     landed rows (v2_media.py:29-77, query/views.py): the storage URL
     from the retrieved etag, a thumbnail URL gated on a planted
     derivatives flag (NULL when not generated; .jpg always), and the
@@ -1497,11 +1494,9 @@ def media_url_discovery(spark, sf_dir):
 
 
 # The media serving view (query/views.py media_serving_view — fromurl's
-# 3-table join + latest object + API response assembly). PROMOTED to a
-# graded slot in round 11 (the slot freed by folding shim_geo_distance
-# into shim_geo_bounding_box, q_shim.py — verdict r10 task 1; registered
-# graded=False in r10 only because the catalog sat at the 100-entry
-# ceiling). The oracle replicates the closed-form of the part-derived
+# 3-table join + latest object + API response assembly), graded in the
+# slot freed by folding shim_geo_distance into shim_geo_bounding_box
+# (q_shim.py). The oracle replicates the closed-form of the part-derived
 # domain: latest-object per url (the k%4 second version wins over the
 # k%2 first by `modified`), the type/mime Python-or folds, the storage
 # URL gate, the preview-text precedence chain, and the falsy-dropping

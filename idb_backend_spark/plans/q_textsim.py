@@ -49,7 +49,7 @@ def exact_dedup_q(spark, sf_dir):
 def token_count_quality(spark, sf_dir):
     """Text analysis — whitespace token counting."""
     docs = _t_spread(spark, sf_dir, "documents", "doc_id", by_range=True)
-    # normalized text staged once (r15 s3): the expression form pays the
+    # normalized text staged once: the expression form pays the
     # case-fold + whitespace-collapse chain twice (empty guard + split)
     docs = docs.withColumn("__norm", text.normalize_text("text"))
     return docs.select(
@@ -58,7 +58,7 @@ def token_count_quality(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# Catalog entry `doc_fingerprint` retired in round 7 to free a grading
+# Catalog entry `doc_fingerprint` retired to free a grading
 # slot (catalog.py retirement rule). The operator stays covered:
 # text.fingerprint is the SAME md5-of-normalized-text expression
 # `exact_dedup` grades per-group (its fp column), and
@@ -82,9 +82,9 @@ def lang_id_heuristic(spark, sf_dir):
     """Text analysis — marker-lexicon language ID (argmax, deterministic
     tie-break by language code)."""
     docs = _t_spread(spark, sf_dir, "documents", "doc_id", by_range=True)
-    # normalized text staged once (r15 s3): the expression form re-ran
+    # normalized text staged once: the expression form re-ran
     # the normalize chain once PER LANGUAGE (5 full-document passes/row);
-    # marker hits staged once (r16): the 5 per-language regexp_count
+    # marker hits staged once: the 5 per-language regexp_count
     # document scans collapse to one regexp_extract_all over the union
     # alternation; the argmax tallies re-scan only the short extracted
     # hits string (which satisfies the from_norm contract)
@@ -98,7 +98,7 @@ def lang_id_heuristic(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# Catalog entry `ngram_jaccard_pairs` retired in round 7 to free a
+# Catalog entry `ngram_jaccard_pairs` retired to free a
 # grading slot (catalog.py retirement rule). The exact-Jaccard semantics
 # stay driver-graded: `minhash_exact_verified` computes
 # the SAME inverted-index exact-Jaccard pair set as its recall oracle
@@ -109,9 +109,9 @@ def lang_id_heuristic(spark, sf_dir):
 # anyway — the graded entries are the ones a 100 TB run executes.
 
 
-# Catalog entry `ann_cosine_topk` retired from GRADING in round 11 to
+# Catalog entry `ann_cosine_topk` retired from GRADING to
 # free a slot for the S15 `datasets_index_codes` promotion
-# (q_relational.py) — same discipline as the round-8 dqs_score /
+# (q_relational.py) — same discipline as the dqs_score /
 # latest_object_per_url retirements: the brute-force rounded-cosine
 # top-k kernel stays ORACLE-graded because it IS the
 # oracle of `ivf_ann_topk` (the exact-cosine top-10 at 6 decimals the
@@ -221,7 +221,7 @@ def minhash_exact_verified_q(spark, sf_dir):
 
 @query(
     "ivf_ann_topk",
-    # exact brute-force top-k oracle (round 6): the probed buckets must
+    # exact brute-force top-k oracle: the probed buckets must
     # contain the true top-10 or the hash mismatches — the driver gate
     # doubles as an IVF recall regression test at these (nlist, nprobe)
     "WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0) "
@@ -342,7 +342,7 @@ def pq_recall_audit_q(spark, sf_dir):
     retrieval path degrades below its advertised bound. Raw recall
     values are engine-side-only and deliberately NOT graded.
 
-    r9 adds the BATCH contract to the same slot: ``batch_consistent``
+    The same slot carries the BATCH contract: ``batch_consistent``
     certifies that ivfpq_batch_topk_rerank — the one-codes-pass-per-
     panel shape that carries the deployment economics (4.6x measured
     amortization, SCALING.md) — returns the per-query results row for
@@ -451,20 +451,20 @@ def corpus_curation_pipeline(spark, sf_dir):
     on the content fingerprint and the final (tiny) per-language rollup.
     Sums go through decimal so cross-engine float ordering can't diverge."""
     from idb_backend_spark.functions import text as T
-    from idb_backend_spark.operators.dedup import _spread, exact_dedup_keep_first
-    from idb_backend_spark.session import barrier_filter
+    from idb_backend_spark.operators.dedup import exact_dedup_keep_first
+    from idb_backend_spark.session import barrier_filter, spread_for_compute
 
-    # _spread: a small single-file corpus otherwise runs the whole
+    # spread: a small single-file corpus otherwise runs the whole
     # enrichment serially in the one-split scan stage; at real scale the
-    # scan is already many-split and this is a near-no-op
-    docs = _spread(
-        _t(spark, sf_dir, "documents").select("doc_id", "text"), None
+    # scan is already many-split and this is a no-op
+    docs = spread_for_compute(
+        _t(spark, sf_dir, "documents").select("doc_id", "text")
     )
-    # normalized text staged once (r15 s3): lang (5 marker scans), q
+    # normalized text staged once: lang (5 marker scans), q
     # (stopword scan + token split) and n_tok each re-ran the full
     # normalize chain per row in the expression forms — 9 case-fold +
     # whitespace-collapse document passes collapse to 1. Marker hits
-    # staged once more (r16): lang's 5 per-language regexp_count scans
+    # staged once more: lang's 5 per-language regexp_count scans
     # AND q's stopword scan (its default list IS the en marker list)
     # all tally off ONE regexp_extract_all document scan, re-scanning
     # only the short extracted hits string (locally neutral at this
@@ -488,10 +488,9 @@ def corpus_curation_pipeline(spark, sf_dir):
         ).alias("q"),
         T.token_count_from_norm(F.col("__norm")).alias("n_tok"),
     )
-    # barrier_filter, not a plain filter (r15 s3, upgraded from the
-    # standalone pushdown_barrier): PushDownPredicate substitutes the
+    # barrier_filter, not a plain filter: PushDownPredicate substitutes the
     # gate's q/n_tok DEFINITIONS through the enrichment and __norm
-    # staging projections (and before the barrier existed, below the
+    # staging projections (and without a barrier, below the
     # spread exchange into the serial scan stage) — the full quality
     # stack then evaluated per row in the pushed filter AND again in
     # the projection. The nondeterministic conjunct makes the gate
@@ -523,7 +522,7 @@ def corpus_curation_pipeline(spark, sf_dir):
     )
 
 
-# Catalog entry `fulltext_skipping_scan` retired in round 7 to free a
+# Catalog entry `fulltext_skipping_scan` retired to free a
 # grading slot (catalog.py retirement rule). P7 fulltext semantics stay
 # driver-graded via `shim_fulltext` (same tokenizer, same whole-token
 # conjunction); the skip-index maintenance loop stays driver-graded via
@@ -532,7 +531,7 @@ def corpus_curation_pipeline(spark, sf_dir):
 # no-false-negative pruning contract keeps its dedicated unit coverage
 # in tests/test_skipping.py.
 
-# Catalog entry `ann_batch_topk` retired in round 7 to free a grading
+# Catalog entry `ann_batch_topk` retired to free a grading
 # slot (catalog.py retirement rule). The batched-query kernel is the SAME
 # rounded-cosine + window-top-k expression `ann_cosine_topk` grades
 # single-query; `ann.batch_topk` keeps its broadcast-
@@ -541,7 +540,7 @@ def corpus_curation_pipeline(spark, sf_dir):
 
 
 # --------------------------------------------------------------------------
-# Round-5 training-pipeline additions: chunking, deterministic split,
+# Training-pipeline entries: chunking, deterministic split,
 # decontamination
 # --------------------------------------------------------------------------
 
@@ -746,7 +745,7 @@ def pii_redaction(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-# Catalog entry `deterministic_sample` retired in round 7 to free a
+# Catalog entry `deterministic_sample` retired to free a
 # grading slot (catalog.py retirement rule). The md5-prefix-cut keep
 # expression is the SAME kernel `mixture_sample` grades
 # (a uniform sample is its single-domain case — sampling.py:126 builds

@@ -233,11 +233,11 @@ def spread_for_compute(
     summation order (rounded floats absorb it — the repo's 6-dp
     contract — but exact replay of an ordered stream would not).
 
-    The spread width is DATA-PROPORTIONAL (r16): ``min(cores,
+    The spread width is DATA-PROPORTIONAL: ``min(cores,
     ceil(input_bytes / SPREAD_MIN_BYTES_PER_TASK))`` rather than a flat
     ``cores``. A fixed count pinned every tiny input to 32-way task
-    overhead (the r15 driver artifact has exact_dedup 2x FASTER on 8
-    cores than 32 at sf0.1 — pure scheduling cost), and
+    overhead (exact_dedup ran 2x FASTER on 8 cores than 32 at sf0.1 —
+    pure scheduling cost), and
     REPARTITION_BY_NUM also blocks AQE coalescing, so nothing could
     undo it at runtime. AQE's own byte-based coalescing is NOT the
     right tool here: the spread exists because downstream CPU cost is
@@ -273,7 +273,7 @@ def spread_for_compute(
 
         cols = [F.col(c) for c in by]
         if by_range:
-            # Range instead of hash placement (r15, guide §2.4 — share
+            # Range instead of hash placement (share
             # one exchange): RangePartitioning(by) still satisfies a
             # downstream aggregation's ClusteredDistribution on the same
             # keys, AND — because the aggregate's map-side sort leaves
@@ -303,21 +303,20 @@ def barrier_filter(df, cond):
     `spread_for_compute` exchange whose entire purpose is to
     parallelize that work: evaluated SERIALLY in the narrow scan task,
     and twice everywhere (pushed filter + the projection that produces
-    the column). The r15-s2 answer was a standalone nondeterministic
-    FILTER (`where(spark_partition_id() >= 0)` — deleted r16, ADVICE:
-    dead code once this helper superseded it; its rationale lives on
-    here and the A/B is recorded in OPTIMIZATION_r15.md §7).
+    the column).
 
-    That predicate-only barrier pins the RELATIVE order of
-    filters, and a nondeterministic PREDICATE does not help either:
+    A standalone nondeterministic FILTER
+    (`where(spark_partition_id() >= 0)`, OPTIMIZATION_r15.md §7) only
+    pins the RELATIVE order of filters, and a nondeterministic
+    PREDICATE does not help either:
     PushPredicateThroughNonJoin pushes ANY filter through a Project
     whenever the PROJECT's fields are all deterministic (the
     nondeterminism condition guards other plan nodes), so a gate over
     staged expensive columns (``__norm``-class staging) still re-inlines
-    their definitions below the staging projection (observed r15 s3:
-    the corpus quality gate carried 6 normalize chains below the
-    staging projects, barrier intact beneath it — and the
-    spark_partition_id CONJUNCT sank with it).
+    their definitions below the staging projection (observed: the
+    corpus quality gate carried 6 normalize chains below the staging
+    projects, barrier intact beneath it — and the spark_partition_id
+    CONJUNCT sank with it).
 
     What does block the transposition is a NONDETERMINISTIC FIELD in
     the projection itself: the gate is rewritten to read a
@@ -334,7 +333,3 @@ def barrier_filter(df, cond):
     staged = df.withColumn("__nopush", F.spark_partition_id())
     return staged.where(cond & (F.col("__nopush") >= 0)).drop("__nopush")
 
-
-# (a load_tables helper used to live here — deleted as dead code: every
-# real path loads tables through plans/registry._t, which also owns the
-# events.ts nanos->timestamp conversion this raw read would skip)

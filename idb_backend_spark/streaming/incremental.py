@@ -8,7 +8,7 @@ idempotent upserts keyed by uuid with etag-equality skip (:211-214). The
 Spark-native shape is a file/Delta stream with ``foreachBatch`` merge:
 Structured Streaming supplies exactly-once batch boundaries and the
 watermark bookkeeping the reference hand-rolls; the merge body reuses the
-batch operators (versioning.latest_per_key / merge_batch).
+batch operators (versioning.latest_per_key_agg / merge_batch).
 
 Scale notes:
 * ``foreachBatch`` merge: the batch side is pre-shrunk to latest-per-key
@@ -116,6 +116,10 @@ def upsert_batch_into_store(
     swap is Spark's commit-protocol rename, so a crash can leave a touched
     bucket mid-commit (Delta's ``MERGE INTO`` is the transactional
     upgrade); untouched buckets are never at risk.
+
+    An existing store must carry the ``__bucket`` layout and the
+    ``__hwm`` column this function writes; a store without them raises
+    ``ValueError`` and is left untouched.
     """
     spark = batch.sparkSession
     # etag as the final order column: same-timestamp different-etag rows
@@ -131,6 +135,13 @@ def upsert_batch_into_store(
         # infer a schema and kills the stream
         return
     store = _read_store(spark, store_path)
+    if store is not None:
+        missing = [c for c in ("__bucket", "__hwm") if c not in store.columns]
+        if missing:
+            raise ValueError(
+                f"store {store_path} lacks column(s) {', '.join(missing)}: "
+                "not a bucketed merge store"
+            )
     prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
@@ -139,27 +150,11 @@ def upsert_batch_into_store(
                 "overwrite"
             ).partitionBy("__bucket").parquet(store_path)
             return
-        legacy = "__bucket" not in store.columns
-        if "__hwm" not in store.columns:
-            # stores written before the hwm column: seed it from the
-            # visible modified (the best lower bound available)
-            store = store.withColumn("__hwm", F.col(modified_col))
-        if legacy:
-            # one-time migration of a legacy flat store into bucket layout:
-            # merge against the FULL store and rewrite it statically —
-            # dynamic overwrite would leave the old root-level files beside
-            # the new partition directories
-            store = store.withColumn("__bucket", _bucket_of(key, n_buckets))
-            scoped = store
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "static"
-            )
-        else:
-            touched = [
-                r["__bucket"]
-                for r in newest.select("__bucket").distinct().collect()
-            ]
-            scoped = store.filter(F.col("__bucket").isin(touched))
+        touched = [
+            r["__bucket"]
+            for r in newest.select("__bucket").distinct().collect()
+        ]
+        scoped = store.filter(F.col("__bucket").isin(touched))
         probe = newest.join(
             scoped.select(
                 F.col(key),
@@ -212,15 +207,14 @@ def upsert_batch_into_store(
         # before the overwrite deletes their source files. A
         # localCheckpoint would cut the lineage into NON-REPLICATED
         # executor blocks — lose one executor mid-overwrite and the rows
-        # are unrecomputable while the store is already truncated (total
-        # loss on the legacy static path). Instead: (1) write the merged
-        # delta to a sibling staging directory — this hop reads the live
-        # store, so any failure leaves the store untouched and the batch
-        # simply retries; (2) rewrite the store FROM the staging files —
-        # this hop never reads the files it deletes, and a crash
-        # mid-overwrite leaves the full delta on disk in staging for
-        # recovery. IO cost is one extra pass over the touched-bucket
-        # delta (the one-time legacy migration pays it over the store).
+        # are unrecomputable while the store is already truncated.
+        # Instead: (1) write the merged delta to a sibling staging
+        # directory — this hop reads the live store, so any failure
+        # leaves the store untouched and the batch simply retries; (2)
+        # rewrite the store FROM the staging files — this hop never reads
+        # the files it deletes, and a crash mid-overwrite leaves the full
+        # delta on disk in staging for recovery. IO cost is one extra
+        # pass over the touched-bucket delta.
         staging = store_path.rstrip("/") + "__staging"
         _delete_path(spark, staging)  # stale staging from a prior crash
         merged.write.mode("overwrite").partitionBy("__bucket").parquet(

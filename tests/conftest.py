@@ -18,6 +18,11 @@ from idb_backend_spark.session import get_spark
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
+#: checkout of the reference project that the executed-reference
+#: differentials (*_vs_reference.py, test_reference_differential*.py)
+#: import and run
+REFERENCE_DIR = "/root/reference"
+
 
 @pytest.fixture(scope="session")
 def spark():
@@ -28,6 +33,16 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def requires_reference():
+    """Skip the requesting test when the reference checkout is absent.
+    Every fixture or test that imports the reference requests this, so
+    without the checkout those tests report as skipped with this reason
+    (``-rs`` lists them) instead of erroring."""
+    if not os.path.isdir(REFERENCE_DIR):
+        pytest.skip("reference checkout absent")
 
 
 def soak_seeds(base_seed: int) -> list[int]:

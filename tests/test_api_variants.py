@@ -148,26 +148,43 @@ def test_char_ngrams_golden(spark):
 
 
 def test_with_flags_folds_like_fold_flags(spark):
+    """fold_flags takes both flag forms: a flag_when spec folds as
+    ``when(cond, array(name))``, so its condition appears once in the
+    optimized plan, and a staged string flag column (flag_column's
+    output) folds to the same array."""
     from idb_backend_spark.functions.flags import (
+        flag_column,
         flag_when,
         fold_flags,
-        with_flags,
     )
 
-    df = spark.createDataFrame([(1, 0), (0, 0)], "a int, b int")
-    f1 = flag_when("a_set", F.col("a") == 1)
-    f2 = flag_when("b_set", F.col("b") == 1)
-    via_wrapper = [
-        r["flags"] for r in with_flags(df, f1, f2).orderBy("a").collect()
+    # spark.range, not a local relation: the optimizer would evaluate a
+    # projection over literal rows away
+    df = spark.range(4).select(
+        "id",
+        F.concat(F.lit("k"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") % 2).alias("b"),
+    )
+    a_set = flag_when("a_set", F.col("s").contains("k1"))
+    b_set = flag_when("b_set", F.col("b") == 1)
+    via_spec = df.select("id", fold_flags(a_set, b_set).alias("flags"))
+    optimized = via_spec._jdf.queryExecution().optimizedPlan().toString()
+    assert optimized.count("Contains(") == 1, optimized
+
+    staged = df.select(
+        "id",
+        flag_column(a_set).alias("__flag_a"),
+        flag_column(b_set).alias("__flag_b"),
+    )
+    via_staged = staged.select(
+        "id", fold_flags(F.col("__flag_a"), F.col("__flag_b")).alias("flags")
+    )
+    got = [
+        {r["id"]: list(r["flags"]) for r in q.collect()}
+        for q in (via_spec, via_staged)
     ]
-    via_fold = [
-        r["flags"]
-        for r in df.select(fold_flags(f1, f2).alias("flags"))
-        .orderBy(F.col("flags").cast("string"))
-        .collect()
-    ]
-    assert sorted(map(tuple, via_wrapper)) == sorted(map(tuple, via_fold))
-    assert via_wrapper[1] == ["a_set"] and via_wrapper[0] == []
+    assert got[0] == got[1] == {0: [], 1: ["a_set", "b_set"], 2: [],
+                                3: ["b_set"]}
 
 
 def test_standard_coord_flags_reference_semantics(spark):

@@ -36,7 +36,7 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def ref_corrector():
+def ref_corrector(requires_reference):
     """record_corrector loads under an auto-stub import hook; the
     RecordCorrector is built with reload=False (no postgres, no bdb)
     and its etag lookup is patched to an in-memory dict per test."""

@@ -26,7 +26,7 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def ref_delimited():
+def ref_delimited(requires_reference):
     """The reference module, with ONE repair injected after the
     shipped-bug pin below runs against the pristine module: delimited.py
     uses ``NO_CLASS__UNKNOWN_FIELD`` in its unmapped-fields warning
@@ -47,7 +47,7 @@ def ref_delimited():
     return mod
 
 
-def test_shipped_module_name_error_pinned(tmp_path):
+def test_shipped_module_name_error_pinned(tmp_path, requires_reference):
     """The pristine module (no injection): constructing a DelimitedFile
     over a file with mapped headers NameErrors at the unmapped-fields
     warning (delimited.py:194 — NO_CLASS__UNKNOWN_FIELD used, never

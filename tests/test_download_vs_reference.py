@@ -26,7 +26,7 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def ref_download():
+def ref_download(requires_reference):
     roots = {
         "gevent", "psycopg2", "boto3", "botocore", "requests",
         "elasticsearch", "celery", "redis", "lxml", "pyproj", "shapely",

@@ -63,7 +63,7 @@ def _wrap_root(el):
 
 
 @pytest.fixture(scope="module")
-def ref_dwca():
+def ref_dwca(requires_reference):
     roots = {
         "gevent", "psycopg2", "boto3", "botocore", "requests",
         "elasticsearch", "celery", "redis", "lxml", "pyproj", "shapely",

@@ -256,7 +256,7 @@ REFERENCE_EXPECTATIONS = [
 
 def test_rights_reference_corpus():
     if not os.path.isdir(REF_EML_DIR):
-        pytest.skip("reference checkout not present")
+        pytest.skip("reference checkout absent")
     got = {}
     for fname, expected in REFERENCE_EXPECTATIONS:
         with open(os.path.join(REF_EML_DIR, fname), "rb") as fh:
@@ -277,7 +277,7 @@ def test_reference_contacts_corpus():
     EMPTY <givenName></givenName> — the reference skips empty text, so
     no contact carries a None/empty first_name key."""
     if not os.path.isdir(REF_EML_DIR):
-        pytest.skip("reference checkout not present")
+        pytest.skip("reference checkout absent")
     with open(os.path.join(REF_EML_DIR, "LUC_DwC-A.eml.xml"), "rb") as fh:
         md = parse_eml(fh.read())
     assert len(md["contacts"]) > 0
@@ -431,7 +431,7 @@ def test_reference_collection_fields_corpus():
     location, the ALWAYS-SET web address ('' when no distribution url,
     eml.py:62-66), against three structurally distinct corpus files."""
     if not os.path.isdir(REF_EML_DIR):
-        pytest.skip("reference checkout not present")
+        pytest.skip("reference checkout absent")
 
     def load(fname):
         with open(os.path.join(REF_EML_DIR, fname), "rb") as fh:

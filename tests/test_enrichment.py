@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from idb_backend_spark.functions import enrichment as E
 from idb_backend_spark.functions.dates import parse_date_py, parsed_date
-from idb_backend_spark.functions.flags import fold_flags
+from idb_backend_spark.functions.flags import flag_column, fold_flags
 from idb_backend_spark.functions.geo import (
     DATUM_ALIASES,
     GridGeocoder,
@@ -47,14 +47,16 @@ def test_geo_normalize(spark):
     df = spark.createDataFrame(
         [Row(i=i, lat=c[0], lon=c[1]) for i, c in enumerate(GEO_CASES)]
     )
-    g = E.geo_normalize(F.col("lat"), F.col("lon"))
+    g = E.with_geo_normalize(df, F.col("lat"), F.col("lon"))
     out = (
-        df.select(
+        g.select(
             "i",
-            g["lat"].alias("olat"),
-            g["lon"].alias("olon"),
+            F.col("__geo_lat").alias("olat"),
+            F.col("__geo_lon").alias("olon"),
             fold_flags(
-                g["flag_pre_flip"], g["flag_bounds"], g["flag_low_precision"]
+                F.col("__flag_pre_flip"),
+                F.col("__flag_bounds"),
+                F.col("__flag_low_precision"),
             ).alias("flags"),
         )
         .orderBy("i")
@@ -209,30 +211,43 @@ def test_fix_taxon_rank(spark):
 
 
 def test_staged_bor_rank_flags_match_inline(spark):
-    """The staged-flag derivations (bor_flags_from_staged /
-    taxon_rank_flags_from_staged, r16 — flag conditions over the STAGED
-    value columns) must fold to exactly the inline fix_* flags on every
-    semantic arm: matched/unmatched/empty/NULL bor; mapped-different,
-    mapped-identical, mapped-to-None, acceptable-unmapped, unknown,
-    empty, NULL rank."""
+    """bor_flags / taxon_rank_flags are the one definition of the F13/F14
+    flag conditions: fix_* applies them to its own inline value, the etl
+    to its staged value columns. Both must raise exactly the expected
+    flags on every semantic arm: matched/unmatched/empty/NULL bor;
+    mapped-different, mapped-identical, mapped-to-None,
+    acceptable-unmapped, unknown, empty, NULL rank."""
     from idb_backend_spark.functions.grabbers import getfield
 
-    bor_pool = [c[0] for c in BOR_CASES] + ["", "  "]
-    rank_pool = [c[0] for c in RANK_CASES] + [
-        "", "  ", "aberration",  # mapped to None -> removed+invalid
-        "class",                 # identity mapping -> no replaced flag
-        "var.",                  # mapped to 'variety' -> replaced
+    bor_rm, bor_inv = "dwc_basisofrecord_removed", "dwc_basisofrecord_invalid"
+    rank_rep, rank_rm, rank_inv = (
+        "dwc_taxonrank_replaced", "dwc_taxonrank_removed",
+        "dwc_taxonrank_invalid",
+    )
+    bor_cases = [(c[0], c[2]) for c in BOR_CASES] + [
+        ("", [bor_rm, bor_inv]),     # filled() counts '' as present
+        ("  ", [bor_rm, bor_inv]),
     ]
-    n = max(len(bor_pool), len(rank_pool))
+    rank_cases = [
+        (c[0], [f for f in c[2] if f != rank_inv]) for c in RANK_CASES
+    ] + [
+        ("", [rank_rm]), ("  ", [rank_rm]),
+        ("aberration", [rank_rm]),   # mapped to None -> removed+invalid
+        ("class", []),               # identity mapping -> no replaced flag
+        ("var.", [rank_rep]),        # mapped to 'variety' -> replaced
+    ]
+    n = max(len(bor_cases), len(rank_cases))
     rows = [
-        Row(
-            i=i,
-            bor=bor_pool[i % len(bor_pool)],
-            tr=rank_pool[i % len(rank_pool)],
-        )
+        Row(i=i, bor=bor_cases[i % len(bor_cases)][0],
+            tr=rank_cases[i % len(rank_cases)][0])
         for i in range(n * 3)
     ]
     df = spark.createDataFrame(rows)
+
+    def expected(i):
+        b = bor_cases[i % len(bor_cases)][1]
+        r = rank_cases[i % len(rank_cases)][1]
+        return b + r + ([rank_inv] if rank_rm in r else [])
 
     bor = E.fix_basis_of_record(F.col("bor"))
     rank = E.fix_taxon_rank(F.col("tr"))
@@ -252,12 +267,8 @@ def test_staged_bor_rank_flags_match_inline(spark):
         getfield(F.col("bor")).isNotNull().alias("bor_filled"),
         getfield(F.col("tr")).alias("rank_v"),
     )
-    bor_f = E.bor_flags_from_staged(
-        F.col("bor_filled"), F.col("bor_value")
-    )
-    rank_f = E.taxon_rank_flags_from_staged(
-        F.col("rank_v"), F.col("rank_value")
-    )
+    bor_f = E.bor_flags(F.col("bor_filled"), F.col("bor_value"))
+    rank_f = E.taxon_rank_flags(F.col("rank_v"), F.col("rank_value"))
     derived = staged.select(
         "i",
         fold_flags(
@@ -267,9 +278,9 @@ def test_staged_bor_rank_flags_match_inline(spark):
         ).alias("flags"),
     )
 
-    a = [list(r.flags) for r in inline.orderBy("i").collect()]
-    b = [list(r.flags) for r in derived.orderBy("i").collect()]
-    assert a == b
+    want = [expected(i) for i in range(len(rows))]
+    assert [list(r.flags) for r in inline.orderBy("i").collect()] == want
+    assert [list(r.flags) for r in derived.orderBy("i").collect()] == want
 
 
 # --------------------------------------------------------------------------
@@ -373,7 +384,9 @@ def test_scientificname_crossfill(spark):
     df = spark.createDataFrame(rows)
     r = E.scientificname_fill(F.col("sn"), F.col("g"), F.col("se"))
     out = (
-        df.select("i", r["value"].alias("v"), r["flag_added"].alias("fl"))
+        df.select(
+            "i", r["value"].alias("v"), flag_column(r["flag_added"]).alias("fl")
+        )
         .orderBy("i")
         .collect()
     )
@@ -546,9 +559,8 @@ def test_molodensky_physical_sanity():
 
 def test_molodensky_expr_matches_scalar_kernel(spark):
     from idb_backend_spark.functions.geo import (
-        molodensky_shift_expr,
         molodensky_shift_py,
-        normalize_datum_expr,
+        with_molodensky_shift,
     )
 
     rows = []
@@ -557,12 +569,11 @@ def test_molodensky_expr_matches_scalar_kernel(spark):
             rows.append(Row(i=i * 10 + j, lat=lat, lon=lon,
                             datum="NAD27" if (i + j) % 2 else "WGS 72"))
     df = spark.createDataFrame(rows)
-    r = molodensky_shift_expr(
-        F.col("lat"), F.col("lon"), normalize_datum_expr(F.col("datum"))
-    )
     got = {
-        row["i"]: (row["la"], row["lo"])
-        for row in df.select("i", r["lat"].alias("la"), r["lon"].alias("lo")).collect()
+        row["i"]: (row["lat_wgs84"], row["lon_wgs84"])
+        for row in with_molodensky_shift(
+            df, F.col("lat"), F.col("lon"), F.col("datum")
+        ).collect()
     }
     for row in rows:
         norm = "NAD27" if row.datum == "NAD27" else "WGS72"
@@ -572,17 +583,13 @@ def test_molodensky_expr_matches_scalar_kernel(spark):
 
 
 def test_molodensky_expr_flags_and_passthrough(spark):
-    from idb_backend_spark.functions.geo import (
-        molodensky_shift_expr,
-        normalize_datum_expr,
-    )
+    from idb_backend_spark.functions.geo import with_molodensky_shift
 
     df = spark.createDataFrame(
         [
             Row(i=0, lat=34.0, lon=-118.25, datum="WGS84"),
             Row(i=1, lat=34.0, lon=-118.25, datum="North American Datum 1983"),
-            # r8: 'Campo Inchauspe' joined the parameter table, so the
-            # unknown-datum arm now uses a datum with no NIMA mean shift
+            # the unknown-datum arm uses a datum with no NIMA mean shift
             Row(i=2, lat=34.0, lon=-118.25, datum="Ocotepeque 1935"),
             Row(i=3, lat=34.0, lon=-118.25, datum=None),
             Row(i=4, lat=90.0, lon=0.0, datum="NAD27"),      # pole passthrough
@@ -590,13 +597,11 @@ def test_molodensky_expr_flags_and_passthrough(spark):
             Row(i=6, lat=-34.6, lon=-58.4, datum="Campo Inchauspe"),
         ]
     )
-    r = molodensky_shift_expr(
-        F.col("lat"), F.col("lon"), normalize_datum_expr(F.col("datum"))
-    )
     out = {
         row["i"]: row
-        for row in df.select(
-            "i", r["lat"].alias("la"), r["lon"].alias("lo"), r["flag"].alias("fl")
+        for row in with_molodensky_shift(
+            df, F.col("lat"), F.col("lon"), F.col("datum"),
+            out_lat="la", out_lon="lo", out_flag="fl",
         ).collect()
     }
     assert (out[0].la, out[0].lo, out[0].fl) == (34.0, -118.25, None)
@@ -605,7 +610,7 @@ def test_molodensky_expr_flags_and_passthrough(spark):
     assert (out[3].la, out[3].fl) == (34.0, "geopoint_datum_missing")
     assert (out[4].la, out[4].lo, out[4].fl) == (90.0, 0.0, None)
     assert out[5].la is None and out[5].fl is None
-    # a formerly pass-through datum now really shifts (r8 extension)
+    # a datum of the parameter table really shifts
     assert out[6].fl is None
     assert (out[6].la, out[6].lo) != (-34.6, -58.4)
 
@@ -637,13 +642,13 @@ def test_molodensky_new_datums_shift_plausibly():
         assert 10.0 < dist_m < 1500.0, (datum, dist_m)
 
 
-def test_staged_shift_matches_inline_expr(spark):
-    """with_molodensky_shift (staged columns) computes the same numbers
-    as molodensky_shift_expr (inline tree) for every datum in the table."""
+def test_staged_shift_matches_scalar_kernel(spark):
+    """with_molodensky_shift computes the scalar kernel's numbers for
+    every datum in the table, and passes coordinates through unchanged
+    at a pole and for an unknown or missing datum."""
     from idb_backend_spark.functions.geo import (
         MOLODENSKY_PARAMS,
-        molodensky_shift_expr,
-        normalize_datum_expr,
+        molodensky_shift_py,
         with_molodensky_shift,
     )
 
@@ -651,46 +656,26 @@ def test_staged_shift_matches_inline_expr(spark):
         Row(i=i, lat=10.0 + i, lon=-120.0 + 7 * i, datum=d)
         for i, d in enumerate(sorted(MOLODENSKY_PARAMS))
     ]
-    df = spark.createDataFrame(rows)
+    n = len(rows)
+    passthrough = [
+        Row(i=n, lat=-90.0, lon=45.0, datum="NAD27"),
+        Row(i=n + 1, lat=12.5, lon=-70.25, datum="Ocotepeque 1935"),
+        Row(i=n + 2, lat=12.5, lon=-70.25, datum=None),
+    ]
+    df = spark.createDataFrame(rows + passthrough)
     staged = {
         r["i"]: r
         for r in with_molodensky_shift(
             df, F.col("lat"), F.col("lon"), F.col("datum")
         ).collect()
     }
-    expr = molodensky_shift_expr(
-        F.col("lat"), F.col("lon"), normalize_datum_expr(F.col("datum"))
-    )
-    inline = {
-        r["i"]: r
-        for r in df.select(
-            "i", expr["lat"].alias("la"), expr["lon"].alias("lo")
-        ).collect()
-    }
-    for i in staged:
-        assert abs(staged[i].lat_wgs84 - inline[i].la) < 1e-9
-        assert abs(staged[i].lon_wgs84 - inline[i].lo) < 1e-9
-
-
-def test_datum_udf_fallback_uses_molodensky(spark):
-    from idb_backend_spark.functions.geo import (
-        HAVE_PYPROJ,
-        datum_transform_udf,
-        molodensky_shift_py,
-    )
-
-    if HAVE_PYPROJ:
-        pytest.skip("pyproj present: exact CRS path active")
-    df = spark.createDataFrame([Row(i=0, lon=-118.25, lat=34.0, datum="NAD27")])
-    out = (
-        df.select(datum_transform_udf("lon", "lat", "datum").alias("r"))
-        .select("r.lon", "r.lat", "r.flag")
-        .collect()[0]
-    )
-    exp_lat, exp_lon = molodensky_shift_py(34.0, -118.25, "NAD27")
-    assert abs(out.lon - exp_lon) < 1e-12
-    assert abs(out.lat - exp_lat) < 1e-12
-    assert out.flag is None
+    for row in rows:
+        exp_lat, exp_lon = molodensky_shift_py(row.lat, row.lon, row.datum)
+        assert abs(staged[row.i].lat_wgs84 - exp_lat) < 1e-9, row
+        assert abs(staged[row.i].lon_wgs84 - exp_lon) < 1e-9, row
+    for row in passthrough:
+        got = staged[row.i]
+        assert (got.lat_wgs84, got.lon_wgs84) == (row.lat, row.lon), row
 
 
 def test_pick_license_unknown_version_does_not_block_later_fragment():
@@ -723,14 +708,11 @@ def test_quality_score_null_and_range(spark):
 
 
 def test_datum_missing_flag_agrees_between_native_and_udf(spark):
-    """The two F6 engines must agree on a punctuation-only datum: it
-    mangles to '' (no datum information) and both flag
-    'geopoint_datum_missing' — the UDF previously judged missing on the
-    raw string and said 'error' where the native path said 'missing'."""
-    from idb_backend_spark.functions.geo import (
-        datum_transform_udf,
-        with_molodensky_shift,
-    )
+    """A punctuation-only datum mangles to '' (no datum information) and
+    flags 'geopoint_datum_missing' like a NULL datum — not
+    'geopoint_datum_error'. The missing verdict is judged on the mangled
+    form, as the reference's mangleString feeds it."""
+    from idb_backend_spark.functions.geo import with_molodensky_shift
 
     df = spark.createDataFrame(
         [(40.0, -75.0, "???"), (40.0, -75.0, None), (40.0, -75.0, "NAD27")],
@@ -739,13 +721,7 @@ def test_datum_missing_flag_agrees_between_native_and_udf(spark):
     native = with_molodensky_shift(
         df, F.col("lat"), F.col("lon"), F.col("datum")
     ).select("datum", "datum_flag").collect()
-    udf = df.select(
-        "datum",
-        datum_transform_udf(F.col("lon"), F.col("lat"), F.col("datum")).alias("r"),
-    ).select("datum", F.col("r.flag").alias("flag")).collect()
     nmap = {r["datum"]: r["datum_flag"] for r in native}
-    umap = {r["datum"]: r["flag"] for r in udf}
-    assert nmap == umap
     assert nmap["???"] == "geopoint_datum_missing"
     assert nmap[None] == "geopoint_datum_missing"
     assert nmap["NAD27"] is None

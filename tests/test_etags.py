@@ -11,7 +11,6 @@ from idb_backend_spark.functions.etags import (
     TOMBSTONE_ETAG,
     calc_etag,
     etag_expr,
-    etag_udf,
     object_hash,
 )
 
@@ -61,22 +60,6 @@ def test_object_hash_shapes():
     ).hexdigest()
 
 
-def test_etag_udf_matches_python(spark):
-    rows = [
-        ({"dwc:genus": "acer", "dwc:country": "united states"},),
-        ({"k": "v", "unicode": "ü"},),
-        (None,),
-        ({"k": None, "other": "x"},),  # null value serializes, not drops
-    ]
-    df = spark.createDataFrame(rows, "data map<string,string>")
-    got = [r[0] for r in df.select(etag_udf("data")).collect()]
-    assert got[0] == calc_etag(rows[0][0])
-    assert got[1] == calc_etag(rows[1][0])
-    assert got[2] is None
-    assert got[3] == calc_etag({"k": None, "other": "x"})
-    assert got[3] != calc_etag({"other": "x"})
-
-
 def test_etag_expr_matches_python(spark):
     df = spark.createDataFrame(
         [("acer", "rubrum"), ("quercus", None), ('with"quote', "tab\there")],
@@ -117,8 +100,9 @@ def test_etag_expr_control_chars(spark):
 def test_etag_pairs_expr_matches_python(spark):
     """The pair-array native etag must render calc_etag's exact bytes:
     unsorted input pairs, unicode, embedded quotes/backslashes/controls,
-    empty strings, an empty record, and a present-but-null value (a
-    dict key holding None — rendered as JSON null, NOT dropped)."""
+    empty strings, an empty record, a present-but-null value (a dict
+    key holding None — rendered as JSON null, NOT dropped), and a NULL
+    record (no record, no etag)."""
     from idb_backend_spark.functions.etags import calc_etag, etag_pairs_expr
 
     recs = [
@@ -133,6 +117,7 @@ def test_etag_pairs_expr_matches_python(spark):
     # the present-but-null value case (no dict equivalent in `recs`
     # because calc_etag is called with an explicit None below)
     rows.append((len(recs), [("k1", None), ("k0", "v")]))
+    rows.append((len(recs) + 1, None))
     df = spark.createDataFrame(
         rows, "i int, rec array<struct<k: string, v: string>>"
     )
@@ -144,6 +129,7 @@ def test_etag_pairs_expr_matches_python(spark):
     for i, rec in enumerate(recs):
         assert got[i] == calc_etag(rec), rec
     assert got[len(recs)] == calc_etag({"k1": None, "k0": "v"})
+    assert got[len(recs) + 1] is None
 
 
 def test_etag_pairs_expr_matches_ingest_kernel(spark):

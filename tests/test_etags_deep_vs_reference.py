@@ -31,7 +31,7 @@ from idb_backend_spark.functions.etags import calc_etag, object_hash
 
 
 @pytest.fixture(scope="module")
-def ref_etags():
+def ref_etags(requires_reference):
     sys.path.insert(0, "/root/reference")
     spec = importlib.util.spec_from_file_location(
         "ref_etags_mod", "/root/reference/idb/helpers/etags.py"

@@ -54,7 +54,7 @@ RSID = "00000000-0000-0000-0000-00000000rs01"
 
 
 @pytest.fixture(scope="module")
-def ref_db_check():
+def ref_db_check(requires_reference):
     import importlib.abc
     import importlib.util
 
@@ -894,7 +894,7 @@ def test_fuzz_core_loop(ref_db_check, spark, rows, rowtype):
 
 
 @pytest.fixture(scope="module")
-def ref_dwca_reader():
+def ref_dwca_reader(requires_reference):
     """The reference's own DwC-A reader (DwcaRecordFile + xml2d), loaded
     under the same hook — battery 6 feeds it the engine-written zip."""
     import importlib  # the ref_db_check hook is already installed by use

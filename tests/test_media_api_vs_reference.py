@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 
 @pytest.fixture(scope="module")
-def ref_v2media():
+def ref_v2media(requires_reference):
     roots = {
         "gevent", "psycopg2", "boto3", "botocore", "requests",
         "elasticsearch", "celery", "redis", "lxml", "pyproj", "shapely",

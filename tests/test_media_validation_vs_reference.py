@@ -16,7 +16,7 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def ref_mv():
+def ref_mv(requires_reference):
     sys.modules.setdefault("magic", mock.MagicMock())
     sys.path.insert(0, "/root/reference")
     spec = importlib.util.spec_from_file_location(
@@ -95,7 +95,7 @@ def test_zip_sniff_prefix_vs_reference(ref_mv):
     assert ref_mv.sniff_mime(b"\xff\xd8\xffdata") is not None  # mock object
 
 
-def test_annotation_identity_vs_reference():
+def test_annotation_identity_vs_reference(requires_reference):
     """AnnotationsLoader.add_corrections' identity tuple
     (loader.py:53-54) executed — instance created without the DB
     connection; the method only appends — vs annotation_identity +
@@ -147,7 +147,7 @@ def test_annotation_identity_vs_reference():
 
 
 @pytest.fixture(scope="module")
-def ref_fetcher():
+def ref_fetcher(requires_reference):
     """mediaing.fetcher loads under the auto-stub hook (requests /
     gevent / psycopg2 / botocore fabricated; Status + IGNORE_PREFIXES
     from the real mediaing package)."""

@@ -741,12 +741,12 @@ def test_staged_geo_normalize_parses_each_coordinate_once(spark):
 def test_etl_flag_kernels_evaluate_once(spark):
     """r16: the etl flags/dqs subtree must evaluate each expensive
     kernel exactly once per row. Two changes pin here: (a) fold_flags
-    rebuilds flag_when columns as ``when(cond, array(name))`` instead of
+    folds flag_when specs as ``when(cond, array(name))`` instead of
     ``when(c.isNotNull(), array(c))`` — the latter evaluated every flag
     condition twice (CaseWhen branch contexts defeat codegen CSE); (b)
     the etl call site derives the bor/rank/date flag conditions from the
-    STAGED value columns (bor_flags_from_staged /
-    taxon_rank_flags_from_staged) instead of re-inlining the kernels.
+    STAGED value columns (bor_flags / taxon_rank_flags) instead of
+    re-inlining the kernels.
     Before: 5 evaluations of the 9-rule BOR contains-chain, 7 of the
     date_fallback tree, 9 probes of the 313-literal rank map in the
     optimized etl plan. After: exactly one BOR chain, one date tree

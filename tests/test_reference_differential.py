@@ -190,7 +190,7 @@ def _shims(rng, n=40):
     return out
 
 
-def test_shim_compiler_matches_reference_dsl(spark):
+def test_shim_compiler_matches_reference_dsl(spark, requires_reference):
     ref = _load_ref()
     rng = random.Random(1009)
     docs = _docs(rng)
@@ -219,7 +219,7 @@ def test_shim_compiler_matches_reference_dsl(spark):
     assert not mismatches, mismatches[:3]
 
 
-def test_uuid5_surrogates_match_reference(spark):
+def test_uuid5_surrogates_match_reference(spark, requires_reference):
     """identification.py:6-21 executed against the engine's A4
     semantics. The reference passes ``name.encode('utf-8')`` into
     uuid5 — a py2 idiom: py2's uuid5 concatenates the raw bytes, which

@@ -31,10 +31,11 @@ from pyspark.sql import functions as F
 
 from idb_backend_spark.functions import enrichment as E
 from idb_backend_spark.functions import grabbers as G
+from idb_backend_spark.functions.flags import flag_column
 
 
 @pytest.fixture(scope="module")
-def ref():
+def ref(requires_reference):
     import pandas  # noqa: F401 — pandas must initialize against the
     # REAL pytz; a fake seeded first poisons its import in subset runs
     fake_pytz = types.ModuleType("pytz")
@@ -189,8 +190,8 @@ def test_fix_bor_vs_reference(ref, spark):
         for r in df.select(
             "v",
             out["value"].alias("value"),
-            out["flag_removed"].alias("rm"),
-            out["flag_invalid"].alias("inv"),
+            flag_column(out["flag_removed"]).alias("rm"),
+            flag_column(out["flag_invalid"]).alias("inv"),
         ).collect()
     }
     for s in vals:
@@ -415,7 +416,7 @@ def test_date_fallback_vs_reference(ref, spark):
             assert g_date == exp_date, (i, raw, g_date, exp_date)
 
 
-def test_etag_vs_reference(spark):
+def test_etag_vs_reference(spark, requires_reference):
     """calcEtag/objectHasher (idb/helpers/etags.py — imports clean, no
     stubs needed) vs the engine's canonical hashers over randomized
     nested structures: byte-exact identity is the versioning/dedup
@@ -470,7 +471,7 @@ def test_etag_vs_reference(spark):
             ), (st, nested)
 
 
-def test_canonical_names_vs_reference(spark):
+def test_canonical_names_vs_reference(spark, requires_reference):
     """get_canonical_name (idb/helpers/fieldnames.py:594-631) over the
     translate_dict's OWN key domain — the reference lookup is an
     exact-match dict probe (curies and verbatim header variants; a
@@ -709,7 +710,7 @@ def test_relations_grabber_vs_reference(ref, spark):
 
 
 @pytest.fixture(scope="module")
-def ref_db_check():
+def ref_db_check(requires_reference):
     """db_check loads under an auto-stub import hook (every IO/driver
     dependency fabricated; the functions differentialed here — mungeid,
     idFromRR, identifyRecord, strip_nuls — touch none of them)."""
@@ -1033,9 +1034,9 @@ def test_fix_taxon_rank_vs_reference(ref, spark):
         for r in df.select(
             "v",
             out["value"].alias("value"),
-            out["flag_removed"].alias("rm"),
-            out["flag_invalid"].alias("inv"),
-            out["flag_replaced"].alias("rep"),
+            flag_column(out["flag_removed"]).alias("rm"),
+            flag_column(out["flag_invalid"]).alias("inv"),
+            flag_column(out["flag_replaced"]).alias("rep"),
         ).collect()
     }
     for v in vals:
@@ -1141,7 +1142,7 @@ def _soak_prep_for_es(RIX, FIN, spark, rng):
         assert g["version"] == exp.get("version"), (d, exp)
 
 
-def test_render_query_text_vs_reference():
+def test_render_query_text_vs_reference(requires_reference):
     """format_row's query humanizer EXECUTED (idb/reporting/stats_by_rs
     .py:22-58; statsdb stubbed — format_row is pure) vs
     operators/reporting.render_query_text. On py3 the reference's
@@ -1256,7 +1257,7 @@ def test_geo_grabber_vs_reference(ref, spark):
     float() coercion (unicode digits accepted, Java suffixes rejected),
     the auto-flip window, the bounds nulling, and the <=2 low-precision
     gate fed by getExponent."""
-    from idb_backend_spark.functions.enrichment import geo_normalize
+    from idb_backend_spark.functions.enrichment import with_geo_normalize
     from pyspark.sql import functions as F
 
     CONV = ref
@@ -1279,13 +1280,14 @@ def test_geo_grabber_vs_reference(ref, spark):
          for i, d in enumerate(cases)],
         "i int, lat string, lon string",
     )
-    g = geo_normalize(F.col("lat"), F.col("lon"))
+    g = with_geo_normalize(df, F.col("lat"), F.col("lon"))
     got = {
         r["i"]: r
-        for r in df.select(
-            "i", g["lat"].alias("la"), g["lon"].alias("lo"),
-            g["flag_pre_flip"].alias("ff"), g["flag_bounds"].alias("fb"),
-            g["flag_low_precision"].alias("fp"),
+        for r in g.select(
+            "i", F.col("__geo_lat").alias("la"), F.col("__geo_lon").alias("lo"),
+            F.col("__flag_pre_flip").alias("ff"),
+            F.col("__flag_bounds").alias("fb"),
+            F.col("__flag_low_precision").alias("fp"),
         ).collect()
     }
     for i, d in enumerate(cases):
@@ -1330,7 +1332,7 @@ def test_case_fold_class_python_vs_spark(spark):
         assert got[v] == v.lower(), (v, got[v], v.lower())
 
 
-def test_lone_surrogate_etag_raises_both_sides():
+def test_lone_surrogate_etag_raises_both_sides(requires_reference):
     """r13 pin: a lone UTF-16 surrogate in a record value cannot be
     UTF-8 encoded — the reference's calcEtag raises UnicodeEncodeError
     at .encode('utf8') (the ingest loop's bare-except bucket); the

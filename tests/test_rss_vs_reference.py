@@ -49,7 +49,7 @@ PUB_UUID = "pub-uuid-1"
 
 
 @pytest.fixture(scope="module")
-def ref_rss():
+def ref_rss(requires_reference):
     import importlib.abc
     import importlib.util
 

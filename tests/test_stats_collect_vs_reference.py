@@ -21,7 +21,7 @@ import pytest
 
 
 @pytest.fixture(scope="module")
-def ref_collect():
+def ref_collect(requires_reference):
     roots = {
         "gevent", "psycopg2", "boto3", "botocore", "requests",
         "elasticsearch", "celery", "redis", "lxml", "pyproj", "shapely",

@@ -497,7 +497,7 @@ def _reference_is_row_suspect(row: dict):
     return False
 
 
-def test_suspect_tag_grid_matches_reference(spark):
+def test_suspect_tag_grid_matches_reference(spark, requires_reference):
     """A9 suspects: the native when-chain equals the reference over a
     65k-combination grid (every arm and every short-circuit-guarded
     division is exercised; False maps to NULL). r11 upgrade: the

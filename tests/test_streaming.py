@@ -158,16 +158,30 @@ def test_upsert_rewrites_only_touched_buckets(spark, tmp_path):
     assert got["b"]["etag"] == "e-b"
 
 
-def test_upsert_migrates_legacy_flat_store(spark, tmp_path):
+def test_upsert_rejects_legacy_flat_store(spark, tmp_path):
+    # a store without the bucket layout and hwm column is refused by
+    # name, and its files are left as they were
+    import hashlib
+    import pathlib
+
     store = str(tmp_path / "flatstore")
     _rows(
         spark, [("x", "e1", _ts("2024-01-01T00:00:00"), "v1")]
     ).write.mode("overwrite").parquet(store)
+
+    def files():
+        return {
+            f.name: hashlib.sha256(f.read_bytes()).hexdigest()
+            for f in pathlib.Path(store).iterdir()
+        }
+
+    before = files()
     batch = _rows(spark, [("y", "e2", _ts("2024-01-02T00:00:00"), "v1")])
-    inc.upsert_batch_into_store(store, batch, n_buckets=4)
+    with pytest.raises(ValueError, match="__bucket, __hwm"):
+        inc.upsert_batch_into_store(store, batch, n_buckets=4)
+    assert files() == before
     got = {r["uuid"]: r["etag"] for r in spark.read.parquet(store).collect()}
-    assert got == {"x": "e1", "y": "e2"}
-    assert _bucket_inventory(store)  # now in bucket layout
+    assert got == {"x": "e1"}
 
 
 def test_read_store_propagates_non_missing_errors(spark, tmp_path):

@@ -25,7 +25,7 @@ BASE = "https://search.idigbio.org/v2/view/"
 
 
 @pytest.fixture(scope="module")
-def ref_views():
+def ref_views(requires_reference):
     roots = {
         "gevent", "psycopg2", "boto3", "botocore", "requests",
         "elasticsearch", "celery", "redis", "lxml", "pyproj", "shapely",

@@ -118,7 +118,7 @@ def test_taxon_rank_table_full():
 def _load_ref(relpath):
     p = REF / relpath
     if not p.exists():
-        pytest.skip("reference checkout not present")
+        pytest.skip("reference checkout absent")
     spec = importlib.util.spec_from_file_location(p.stem, p)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
