@@ -88,10 +88,10 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # The DwC-A reader intentionally reads header-bearing members under a
-    # positional _cN schema (terms come from meta.xml, never the file's
-    # header — sources/dwca.py read_member), which makes CSVHeaderChecker
-    # log a name-mismatch WARN per member. The check is advisory
+    # The delimited read core intentionally reads header-bearing files
+    # under a positional _cN schema (terms come from meta.xml or the
+    # sniffed header — sources/delimited.py read_positional), which makes
+    # CSVHeaderChecker log a name-mismatch WARN per file. The check is advisory
     # (enforceSchema=true semantics are exactly what the reader wants);
     # silence just that logger, not the log level.
     try:

@@ -1,29 +1,41 @@
-"""S2/S3 — delimited (CSV/TSV) source with term canonicalization and
-per-row fault isolation (reference idigbio_ingestion/lib/delimited.py).
+"""S2/S3 — delimited (CSV/TSV) source, and the one positional read core
+the DwC-A member reader shares (reference idigbio_ingestion/lib/
+delimited.py, whose ``DelimitedFile`` ``DwcaRecordFile`` subclasses).
 
-Spark-first formulation: ``spark.read.csv`` in PERMISSIVE mode does the
-reference's per-row error recovery (bad lines land in a corrupt-record
-column instead of failing the batch — SURVEY §7.7 item 8); header
-canonicalization is a driver-side rename through the fieldnames registry;
-blank-string fields become nulls to match the reference's
-"dict of non-blank fields" contract (delimited.py:49-52).
+``read_positional`` reads a file by POSITION: the caller hands it the
+file's ``Dialect`` and an index→term map — from meta.xml for a DwC-A
+member (sources/dwca.py), from the canonicalized raw header for a bare
+CSV/TSV (``read_delimited``). The header record(s) are sniffed once on
+the driver with the csv module (header lines only, never data rows);
+the read itself is ``spark.read.csv`` with an explicit all-string
+``_cN`` schema that skips the header by position, so no
+schema-inference job runs. PERMISSIVE mode does the reference's per-row
+error recovery (bad rows are flagged, not fatal — SURVEY §7.7 item 8).
 
-At scale the read is fully distributed: one task per input split,
-predicate/column pruning applies downstream, and the canonicalization is
-pure metadata (no data movement) — for local single files it is a
-POSITIONAL fold from the raw header line, so several headers claiming
-one canonical term collapse to the reference's last-non-empty-wins
-value (delimited.py:265-268), duplicate literal headers included.
+Value contract (delimited.py:255-268): every value is ``str.strip()``-ed
+with Python's full whitespace class, a blank value is NULL (the
+reference drops the key), and a term claimed by several positions takes
+the last non-empty value.
+
+A directory or glob takes its header from its first data file, so the
+same bytes fold the same way whichever way the path is spelled; its
+files must share that header shape.
 """
 
 from __future__ import annotations
 
+import csv
+import glob
+import itertools
+import os
 import re
 from functools import reduce
 from operator import or_
+from typing import NamedTuple
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from idb_backend_spark.sources.fieldnames import get_canonical_name
 
@@ -39,12 +51,10 @@ _BYTE_TRANSPARENT_ENCODINGS = {
 
 def file_contains_char(path: str, ch: str, encoding: str | None) -> bool:
     """Whether the file contains ``ch`` at all — the splittability probe
-    behind the multiLine decision in both delimited and DwC-A reads.
-    Conservative: any path we cannot byte-scan exactly (directory/glob,
-    non-transparent encoding, multi-byte needle) reports True, which
-    only costs parallelism, never correctness."""
-    import os
-
+    behind ``read_positional``'s multi-line decision. Conservative: any
+    path we cannot byte-scan exactly (directory/glob, non-transparent
+    encoding, multi-byte needle) reports True, which only costs
+    parallelism, never correctness."""
     if not os.path.isfile(path):
         return True
     enc = (encoding or "utf-8").lower().replace("-", "").replace("_", "")
@@ -61,33 +71,6 @@ def file_contains_char(path: str, ch: str, encoding: str | None) -> bool:
             if needle in chunk:
                 return True
     return False
-
-
-def _raw_header(
-    path: str, sep: str, quote: str, encoding: str | None
-) -> list[str] | None:
-    """The file's verbatim header row, parsed with the same csv dialect
-    the reference's reader uses (csv.reader, doublequote, no
-    escapechar) — or None when the path is not a local single file we
-    can read exactly (directory/glob/URI). Only the header LINE is
-    read; the driver never scans data rows."""
-    import csv
-    import os
-
-    if not os.path.isfile(path):
-        return None
-    try:
-        with open(path, "r", encoding=encoding or "utf-8", newline="") as f:
-            if quote:
-                r = csv.reader(f, delimiter=sep, quotechar=quote)
-            else:
-                r = csv.reader(f, delimiter=sep, quoting=csv.QUOTE_NONE)
-            return next(r, None)
-    except (OSError, UnicodeDecodeError, LookupError, csv.Error, TypeError):
-        # TypeError: csv.reader rejects a multi-character or otherwise
-        # invalid quotechar — fall back to the name-based path instead
-        # of crashing the read (ADVICE r14)
-        return None
 
 
 def normalize_delimiter(d: str | None, default: str = ",") -> str:
@@ -135,237 +118,183 @@ def normalize_delimiter(d: str | None, default: str = ",") -> str:
     return d
 
 
+
+
+class Dialect(NamedTuple):
+    """How a delimited file is written — the reference ``DelimitedFile``
+    constructor's arguments (delimited.py:130-175)."""
+
+    sep: str = ","
+    #: '' = no quoting
+    quote: str = '"'
+    encoding: str = "utf-8"
+    #: record terminator for multi-line reads; None = Spark detects it
+    line_sep: str | None = None
+    header_rows: int = 1
+
+
+def _first_data_file(path: str) -> str | None:
+    """``path`` itself, or the first data file (name order, hidden and
+    ``_``-prefixed names skipped as Spark skips them) of a directory or
+    glob; None when nothing local matches."""
+    for match in sorted(glob.glob(path)):
+        if os.path.isfile(match):
+            return match
+        for root, dirs, files in os.walk(match):
+            dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+            for name in sorted(files):
+                if not name.startswith(("_", ".")):
+                    return os.path.join(root, name)
+    return None
+
+
+def sniff_header(path: str, dialect: Dialect) -> list[list[str]] | None:
+    """The first ``max(header_rows, 1)`` non-empty records of ``path``'s
+    first data file, parsed with the reference reader's own csv-module
+    dialect (doublequote, no escapechar): the header rows, or with
+    none declared the first data record, which sizes the schema. Bad
+    bytes decode to U+FFFD, as Spark decodes them. None when the path is
+    not local or the csv module cannot parse the dialect (an unknown
+    encoding, or a quotechar it rejects with TypeError)."""
+    first = _first_data_file(path)
+    if first is None:
+        return None
+    try:
+        with open(first, encoding=dialect.encoding or "utf-8",
+                  errors="replace", newline="") as f:
+            rows = csv.reader(
+                f, delimiter=dialect.sep, quotechar=dialect.quote or None,
+                quoting=csv.QUOTE_MINIMAL if dialect.quote else csv.QUOTE_NONE,
+            )
+            return list(itertools.islice(
+                filter(None, rows), max(dialect.header_rows, 1)
+            ))
+    except (OSError, LookupError, csv.Error, TypeError):
+        return None
+
+
+def read_positional(
+    spark: SparkSession,
+    path: str,
+    dialect: Dialect,
+    headers: list[list[str]] | None,
+    terms: dict[int, str],
+    corrupt_col: str | None = None,
+) -> tuple[DataFrame, dict[str, Column]]:
+    """Read ``path`` by position -> (the ``_cN`` frame, term -> value).
+
+    The schema is ``_c0 .. _cW-1`` with W the widest of the sniffed
+    ``headers`` and the highest index in ``terms``, so an index past a
+    short row reads NULL instead of failing to resolve. Header rows are
+    skipped by position (Spark's ``header`` option drops the first
+    record of each file; the caller drops any further ones). Each value
+    is ``term -> Column`` over the frame: ``py_strip``-ed, blank as
+    NULL, and a term several indexes claim (in ``terms`` order) folds to
+    the LAST non-empty claim — the reference row loop's dict assignment
+    (delimited.py:265-268), where a blank value never assigns.
+    ``corrupt_col`` adds Spark's malformed-row capture column.
+
+    Records may span lines only when the quote char occurs in the file:
+    quoted values may hold embedded newlines, which only Spark's
+    multi-line mode parses, but that mode reads each file in one task.
+    The probe is a sequential byte scan that keeps the common
+    never-quoting feed splittable; a directory or glob is assumed to
+    quote. In multi-line mode an unclosed quote runs to the end of the
+    file, as it does in the reference's reader.
+    """
+    from idb_backend_spark.functions.grabbers import blank_to_null
+
+    # '' = no quoting: \u0000 disables Spark's quote handling instead of
+    # silently reinstating '"'. Embedded quotes use RFC-4180 doubling —
+    # what write_csv_member emits and the reference's csv module parses
+    # (doublequote, no escapechar, so a backslash is data); Spark's
+    # default backslash escape would corrupt doubled quotes.
+    quote = dialect.quote or "\u0000"
+    reader = (
+        spark.read.option("header", str(dialect.header_rows > 0).lower())
+        .option("sep", dialect.sep)
+        .option("quote", quote)
+        .option("escape", quote)
+        .option("encoding", dialect.encoding)
+        .option("mode", "PERMISSIVE")
+    )
+    if dialect.quote and file_contains_char(
+        path, dialect.quote, dialect.encoding
+    ):
+        reader = reader.option("multiLine", "true")
+        if dialect.line_sep:
+            # multi-line mode otherwise detects the terminator from the
+            # first line, and a mixed-ending file would parse as one record
+            reader = reader.option("lineSep", dialect.line_sep)
+    width = max([len(h) for h in headers or []] + [max(terms, default=0) + 1])
+    fields = [StructField(f"_c{i}", StringType()) for i in range(width)]
+    if corrupt_col:
+        reader = reader.option("columnNameOfCorruptRecord", corrupt_col)
+        fields.append(StructField(corrupt_col, StringType()))
+    df = reader.schema(StructType(fields)).csv(path)
+    claims: dict[str, list[Column]] = {}
+    for idx, term in terms.items():
+        claims.setdefault(term, []).append(blank_to_null(F.col(f"_c{idx}")))
+    return df, {
+        term: srcs[0] if len(srcs) == 1 else F.coalesce(*reversed(srcs))
+        for term, srcs in claims.items()
+    }
+
+
 def read_delimited(
     spark: SparkSession,
     path: str,
     sep: str | None = ",",
     encoding: str = "utf-8",
-    header: bool = True,
     quote: str = '"',
-    canonicalize: bool = True,
-    blank_as_null: bool = True,
-    multiline: bool | None = None,
 ) -> DataFrame:
-    """Read a delimited file into a DataFrame with canonicalized CURIE
-    column names and a ``flag_corrupt_row`` marker column.
+    """Read a delimited file (or a directory/glob of same-header files)
+    into canonicalized CURIE columns plus ``flag_corrupt_row`` and
+    ``flag_encoding_error``.
 
-    PERMISSIVE + columnNameOfCorruptRecord replaces the reference's
-    per-row try/except-log-skip loop (delimited.py:256-305): corrupt rows
-    survive with the flag set and all fields null — downstream decides.
-    Two reference behaviors deliberately NOT reproduced (pinned in
+    Each header is canonicalized through the fieldnames registry
+    (delimited.py:176-189); a column the registry marks as bookkeeping
+    is dropped, and headers that canonicalize to one term — literal
+    duplicates included — fold to its last non-empty value.
+
+    Corrupt rows survive with ``flag_corrupt_row`` set — the reference's
+    per-row try/except-log-skip loop (delimited.py:256-305) drops them.
+    The reference also pins the expected row length from the FIRST DATA
+    ROW, not the header (delimited.py:244-248), so a short first row
+    makes it skip every full-length row after it; here the header sets
+    the width and bad rows are flagged, not dropped (pinned in
     tests/test_sources_export.py
-    ``test_reference_first_row_pins_line_length``): mismatched-length
-    rows are silently SKIPPED there (logged, absent from output), and
-    the expected length is pinned from the FIRST DATA ROW — not the
-    declared field count (delimited.py:244-248) — so a short first row
-    makes the reader skip every correct full-length row after it. Here
-    the schema comes from the header/meta declaration and bad rows are
-    flagged, not dropped.
-
-    ``multiline``: None (default) probes the file for the quote char and
-    enables multiLine only when one is present — quoted fields with
-    embedded newlines then parse as ONE record (the reference's
-    csv.reader behavior) at the cost of a single-task read. The
-    trade-off is inherent to quoted CSV: under multiLine an UNCLOSED
-    quote swallows the rest of the file into one field (exactly what
-    csv.reader does too), so per-row corrupt isolation is strongest on
-    line-oriented feeds; pass ``multiline=False`` to force line-split
-    parsing (splittable, best isolation, breaks embedded newlines) or
-    ``True`` to skip the probe.
-
-    The probe only byte-scans LOCAL single files; directories, globs,
-    and object-store URIs conservatively take the multiLine path
-    (correct, one task per file). At cluster scale pass ``multiline``
-    explicitly — you know whether the feed quotes — instead of paying
-    the conservative default or the driver-side scan of a large local
-    file.
+    ``test_reference_first_row_pins_line_length``).
     """
-    reader = (
-        spark.read.option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", CORRUPT_COL)
-        .option("header", str(header).lower())
-        .option("sep", normalize_delimiter(sep))
-        .option("quote", quote)
-        # RFC-4180 quote doubling — what write_csv_member emits and the
-        # reference's csv.reader parses (doublequote=True, no escapechar);
-        # Spark's default backslash escape corrupts any quoted value
-        # containing the quote char
-        .option("escape", quote)
-        .option("encoding", encoding)
-        .option("enforceSchema", "false")
+    dialect = Dialect(normalize_delimiter(sep), quote, encoding)
+    headers = sniff_header(path, dialect)
+    if headers is None:
+        raise ValueError(
+            f"{path!r}: no header row readable on the driver (a local "
+            "file, directory or glob in a csv-module dialect is needed)"
+        )
+    terms = {}
+    for pos, verbatim in enumerate(headers[0] if headers else []):
+        term, _cls = get_canonical_name(verbatim)
+        if term is not None:  # None: the registry drops the column
+            terms[pos] = term
+    df, cols = read_positional(
+        spark, path, dialect, headers, terms, corrupt_col=CORRUPT_COL
     )
-    if multiline is None:
-        # probe: multiLine only when a quote char is actually present —
-        # the common no-quotes case stays a splittable parallel read
-        # (same byte-scan bound as the DwC-A member reader)
-        multiline = bool(quote) and file_contains_char(path, quote, encoding)
-    if multiline:
-        reader = reader.option("multiLine", "true")
-    raw = _raw_header(path, normalize_delimiter(sep), quote, encoding)
-    df = reader.csv(path)
-    if CORRUPT_COL not in df.columns:
-        # Spark only EMITS columnNameOfCorruptRecord when that column is
-        # part of a user-supplied schema — an inferred read silently
-        # drops the malformed-row capture and flag_corrupt_row could
-        # never fire. The first pass only discovers the header (all
-        # columns are strings, nothing is inferred); the second read
-        # supplies that schema plus the corrupt column so PERMISSIVE
-        # mode actually lands bad rows in it.
-        from pyspark.sql.types import StringType, StructField, StructType
-
-        schema = StructType(
-            [StructField(f.name, StringType()) for f in df.schema.fields]
-            + [StructField(CORRUPT_COL, StringType())]
-        )
-        # enforceSchema=true on the schema-bearing read of a VERIFIED
-        # local single file: the schema IS that file's own header (plus
-        # the corrupt column), but Spark's header validation compares
-        # literal header tokens against schema names and duplicate
-        # headers were DEDUPED positionally by the first pass
-        # (genus,genus -> genus0,genus1) — validation would fail the
-        # read at runtime on exactly the files the duplicate-canonical
-        # fold exists for. Directory/glob reads keep the validation:
-        # there a mismatched second file's header SHOULD fail loudly
-        # rather than parse positionally.
-        if raw is not None:
-            reader = reader.option("enforceSchema", "true")
-        df = reader.schema(schema).csv(path)
-    if canonicalize and header:
-        data_cols = [c for c in df.columns if c != CORRUPT_COL]
-        if raw is not None and len(raw) == len(data_cols):
-            # Positional canonicalization from the RAW header — the
-            # reference's exact shape (delimited.py:176-189 builds
-            # fields{index: canonical} from the header line, and the row
-            # loop's dict assignment makes the LAST NON-EMPTY column win
-            # a term claimed by several headers, :265-268 — empty values
-            # never assign, so an earlier non-empty value survives a
-            # later blank duplicate). Working from the raw header also
-            # covers LITERAL duplicate headers, which Spark's reader
-            # renames positionally (genus, genus -> genus0, genus1) and
-            # a name-based rename could never reunite.
-            from idb_backend_spark.functions.grabbers import blank_to_null
-
-            groups: dict[str, list[str]] = {}
-            order: list[str] = []
-            for pos, verbatim in enumerate(raw):
-                term, _cls = get_canonical_name(verbatim)
-                if term is None:
-                    # registry marks the column as bookkeeping — drop
-                    continue
-                if term not in groups:
-                    groups[term] = []
-                    order.append(term)
-                groups[term].append(data_cols[pos])
-            sel = []
-            for term in order:
-                srcs = [F.col(f"`{c}`") for c in groups[term]]
-                if len(srcs) == 1:
-                    expr = srcs[0]
-                else:
-                    # last non-empty wins: blank-after-strip values are
-                    # skipped by the reference's fold, so coalesce the
-                    # blank-nulled columns in reverse file order
-                    expr = F.coalesce(
-                        *[blank_to_null(s) for s in reversed(srcs)]
-                    )
-                sel.append(expr.alias(term))
-            df = df.select(*sel, F.col(CORRUPT_COL))
-        else:
-            # no byte-exact raw header (directory/glob/remote path or a
-            # non-transparent encoding): name-based rename, no fold —
-            # a duplicate-canonical pair keeps the second column
-            # verbatim here (renaming both would produce duplicate
-            # columns and an ambiguous-reference failure)
-            renames, drops = {}, []
-            claimed: dict[str, str] = {}
-            dup_pairs: list[tuple[str, str]] = []
-            for c in data_cols:
-                term, _cls = get_canonical_name(c)
-                if term is None:
-                    drops.append(c)
-                    continue
-                if term in claimed or (term != c and term in df.columns):
-                    dup_pairs.append((c, term))
-                elif term != c:
-                    renames[c] = term
-                    claimed[term] = c
-                else:
-                    claimed[term] = c
-            dup_terms = {t for _, t in dup_pairs}
-            if not dup_terms:
-                # literal/case-duplicate headers never reach this branch
-                # as duplicates: Spark's CSV reader already renamed them
-                # positionally (genus,Genus -> genus0,Genus1). Recover
-                # the verbatim headers of the LOCAL files the scan
-                # listed and check those — exact, header-line reads
-                # only; remote URIs stay undetectable and undetected.
-                from urllib.parse import unquote, urlparse
-
-                # header-line reads only, capped: a feed's files share
-                # one header shape, so probing a handful is enough —
-                # never an O(file-count) driver loop on a big directory
-                for uri in df.inputFiles()[:8]:
-                    if not uri.startswith("file:"):
-                        continue
-                    hdr = _raw_header(
-                        unquote(urlparse(uri).path),
-                        normalize_delimiter(sep),
-                        quote,
-                        encoding,
-                    )
-                    if not hdr:
-                        continue
-                    terms = [get_canonical_name(h)[0] for h in hdr]
-                    terms = [t for t in terms if t is not None]
-                    dup_terms |= {
-                        t for t in terms if terms.count(t) > 1
-                    }
-            if dup_terms:
-                # the same bytes read as a local single file would FOLD
-                # these columns (last non-empty wins, the positional
-                # branch above); here they silently stay separate and
-                # etags can differ by path spelling — surface it
-                # (ADVICE r14)
-                import warnings
-
-                warnings.warn(
-                    "duplicate canonical header(s) "
-                    f"{sorted(dup_terms)} in {path!r} read without a "
-                    "byte-exact raw header (directory/glob/URI path): "
-                    "columns kept verbatim instead of folded — the same "
-                    "file read as a local single path would fold them "
-                    "(last non-empty wins)",
-                    stacklevel=2,
-                )
-            df = df.drop(*drops).withColumnsRenamed(renames)
-    out_cols = [c for c in df.columns if c != CORRUPT_COL]
-    if blank_as_null:
-        from idb_backend_spark.functions.grabbers import blank_to_null
-
-        df = df.select(
-            *[
-                blank_to_null(F.col(f"`{c}`")).alias(c)
-                for c in out_cols
-            ],
-            F.col(CORRUPT_COL),
-        )
-    # flag_encoding_error — the reference registers a codecs error
-    # handler that splices a literal "DECODEERROR:<hexbytes>" marker
-    # into any field whose bytes fail the declared charset
-    # (delimited.py:42-47). Spark's JVM-side charset decode substitutes
-    # U+FFFD instead, so the BAD BYTES are unrecoverable here — a
-    # declared boundary — but the SIGNAL is not: any U+FFFD in any
-    # field marks the row, the same row-level fact the reference's
-    # marker carries downstream.
+    # flag_encoding_error — the reference splices a literal
+    # "DECODEERROR:<hexbytes>" marker into any field whose bytes fail the
+    # declared charset (delimited.py:42-47). Spark's JVM-side decode
+    # substitutes U+FFFD instead, so the BAD BYTES are unrecoverable here
+    # — a declared boundary — but the SIGNAL is not: any U+FFFD in any
+    # field marks the row, the same row-level fact the marker carries.
     had_decode_error = reduce(
         or_,
-        [F.coalesce(F.col(f"`{c}`").contains("�"), F.lit(False))
-         for c in out_cols],
+        [F.coalesce(c.contains("\ufffd"), F.lit(False))
+         for c in cols.values()],
         F.lit(False),
     )
-    return df.withColumns(
-        {
-            "flag_corrupt_row": F.col(CORRUPT_COL).isNotNull(),
-            "flag_encoding_error": had_decode_error,
-        }
-    ).drop(CORRUPT_COL)
+    return df.select(
+        *[c.alias(term) for term, c in cols.items()],
+        F.col(CORRUPT_COL).isNotNull().alias("flag_corrupt_row"),
+        had_decode_error.alias("flag_encoding_error"),
+    )

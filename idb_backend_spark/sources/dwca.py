@@ -9,10 +9,14 @@ engine parses unvalidated (no network dependency) with the same tolerant
 attribute defaults.
 
 Spark shape: meta.xml is driver-side metadata (bytes, not data); each
-member file becomes one distributed ``spark.read.csv`` with an explicit
-positional column→CURIE mapping and literal default columns. Extraction
-is one driver-side unzip — at scale archives land pre-extracted on
-object storage and ``read_member`` takes the file path directly.
+member file is read by the positional read core the delimited source
+uses (sources/delimited.py ``read_positional``, as the reference's
+``DwcaRecordFile`` subclasses ``DelimitedFile``), fed the member's
+declared dialect and column-index → CURIE map. On top of it the member
+reader adds only what DwC-A has: the id/coreid binding, declared
+defaults, extra header lines, and the NUL strip. Extraction is one
+driver-side unzip — at scale archives land pre-extracted on object
+storage and ``read_member`` takes the file path directly.
 """
 
 from __future__ import annotations
@@ -21,13 +25,17 @@ import os
 import xml.etree.ElementTree as ET
 import zipfile
 from dataclasses import dataclass, field
+from functools import reduce
+from operator import and_
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from idb_backend_spark.sources.delimited import (
-    file_contains_char as _member_contains_char,
+    Dialect,
     normalize_delimiter,
+    read_positional,
+    sniff_header,
 )
 from idb_backend_spark.sources.fieldnames import (
     ROWTYPE_TO_TYPE,
@@ -122,10 +130,10 @@ def _parse_file_block(el) -> DwcaFileDescriptor:
             idx = child.get("index")
             d.id_index = int(idx) if idx is not None else None
             d.id_is_coreid = tag == "coreid"
-    # fields iterate in xml2d's merge order, NOT document order (r10
-    # pin — see _xml2d_field_order: a singleton run followed by a
-    # multi-element run puts the earlier field LAST, which flips the
-    # duplicate-index winner on interleaved metas)
+    # fields iterate in xml2d's merge order, NOT document order (see
+    # _xml2d_field_order: a singleton run followed by a multi-element
+    # run puts the earlier field LAST, which flips the duplicate-index
+    # winner on interleaved metas)
     for child in _xml2d_field_order(el):
         # quote-stripped term, exactly like the reference
         # (dwca.py:221 — `fld['#term'].replace('"','')`; IPT metas
@@ -134,7 +142,7 @@ def _parse_file_block(el) -> DwcaFileDescriptor:
         idx = child.get("index")
         # duplicate column index: the FIRST declaration wins and the
         # later one is ignored (dwca.py:243-246 — `if ... not in
-        # fields`; r9 correction, this used to be last-wins)
+        # fields`)
         if idx is not None and int(idx) not in d.term_by_index:
             d.term_by_index[int(idx)] = term
         # a default applies whether or not the field also has an
@@ -172,11 +180,6 @@ def parse_meta_xml(xml_bytes: bytes) -> tuple[DwcaFileDescriptor, list[DwcaFileD
     return core, extensions, metadata
 
 
-# (the splittability probe lives in sources/delimited.py — both the
-# delimited reader and the DwC-A member reader gate multiLine on it;
-# imported at the top as _member_contains_char)
-
-
 class DwcaArchive:
     """Extracted DwC-A with Spark readers per member.
 
@@ -187,28 +190,35 @@ class DwcaArchive:
     def __init__(self, zip_path: str, workdir: str | None = None):
         self.zip_path = zip_path
         self.workdir = workdir or zip_path.rsplit(".", 1)[0] + "_extracted"
-        with zipfile.ZipFile(zip_path, "r") as z:
-            z.extractall(self.workdir)
-            names = z.namelist()
-        # exact-basename match, shallowest first: the common 'zip the
-        # directory' layout nests everything under one folder, and member
-        # locations in meta.xml are relative to meta.xml's own directory —
-        # a loose endswith would also misfire on members like 'eml-meta.xml'
-        metas = sorted(
-            (n for n in names if os.path.basename(n).lower() == "meta.xml"),
-            key=lambda n: n.count("/"),
-        )
-        if not metas:
-            raise ValueError(f"{zip_path}: no meta.xml in archive")
-        meta_name = metas[0]
-        #: directory all member/EML locations resolve against
-        self.base_dir = os.path.join(
-            self.workdir, os.path.dirname(meta_name)
-        )
-        with open(os.path.join(self.workdir, meta_name), "rb") as f:
-            self.core, self.extensions, self.metadata_loc = parse_meta_xml(
-                f.read()
+        try:
+            with zipfile.ZipFile(zip_path, "r") as z:
+                z.extractall(self.workdir)
+                names = z.namelist()
+            # exact-basename match, shallowest first: the common 'zip the
+            # directory' layout nests everything under one folder, and
+            # member locations in meta.xml are relative to meta.xml's own
+            # directory — a loose endswith would also misfire on members
+            # like 'eml-meta.xml'
+            metas = sorted(
+                (n for n in names
+                 if os.path.basename(n).lower() == "meta.xml"),
+                key=lambda n: n.count("/"),
             )
+            if not metas:
+                raise ValueError(f"{zip_path}: no meta.xml in archive")
+            meta_name = metas[0]
+            #: directory all member/EML locations resolve against
+            self.base_dir = os.path.join(
+                self.workdir, os.path.dirname(meta_name)
+            )
+            with open(os.path.join(self.workdir, meta_name), "rb") as f:
+                self.core, self.extensions, self.metadata_loc = (
+                    parse_meta_xml(f.read())
+                )
+        except Exception:
+            # an archive that cannot be opened leaves no extracted tree
+            self.close()
+            raise
 
     def eml(self) -> dict | None:
         """Parse the EML metadata member if declared (S4)."""
@@ -225,221 +235,83 @@ class DwcaArchive:
     def read_member(
         self, spark: SparkSession, desc: DwcaFileDescriptor
     ) -> DataFrame:
-        """One member file -> DataFrame with CURIE columns, the id/coreid
-        column, default-value columns, and blank→null normalization."""
-        path = os.path.join(self.base_dir, desc.location)
-        reader = (
-            spark.read.option("header", "false")
-            .option("sep", desc.fields_terminated_by)
-            # fieldsEnclosedBy="" means NO quoting — \u0000 disables
-            # Spark's quote handling instead of silently reinstating '"'
-            .option("quote", desc.fields_enclosed_by or "\u0000")
-            # embedded quotes use the RFC-4180 doubling convention — the
-            # one our own writer emits (writers.py escape='"'), the
-            # csv-module header sniff below assumes (doublequote=True),
-            # AND the reference's member reader implements
-            # (idigbio_ingestion/lib/delimited.py:165-169: csv.reader
-            # with quotechar only — doublequote=True, no escapechar, so
-            # a backslash is literal data). Spark's default escape '\'
-            # would both corrupt doubled quotes and diverge from the
-            # reference on backslash-bearing values; matching the
-            # doubling convention is exact reference parity.
-            .option("escape", desc.fields_enclosed_by or "\u0000")
-            .option("encoding", desc.encoding)
-            .option("mode", "PERMISSIVE")
-        )
-        if desc.fields_enclosed_by and _member_contains_char(
-            path, desc.fields_enclosed_by, desc.encoding
-        ):
-            # Quoted members may carry embedded newlines (our own writer
-            # emits them), which only multiLine parses correctly — but
-            # multiLine makes the CSV non-splittable (ONE task reads the
-            # whole member). So probe first: a member with no quote char
-            # at all cannot have an embedded newline, and most published
-            # archives declare fieldsEnclosedBy='"' yet never quote — the
-            # probe is a sequential byte scan (GB/s, no parsing) that
-            # keeps the common case splittable. When quotes ARE present
-            # the single-task read is the accepted member-size bound (the
-            # single-node zip extract already bounds member throughput).
-            # Pin lineSep to the declared terminator: multiLine mode
-            # auto-detects the separator from the first line, and a
-            # mixed-ending file would otherwise parse as one record.
-            sep_map = {"\\n": "\n", "\\r\\n": "\r\n", "\\r": "\r"}
-            line_sep = sep_map.get(
-                desc.lines_terminated_by, desc.lines_terminated_by
-            ) or "\n"
-            reader = reader.option("multiLine", "true").option(
-                "lineSep", line_sep
-            )
-        n_skip = desc.ignore_header_lines or 0
-        if n_skip:
-            # sniff the header record(s) once on the driver: their width
-            # sizes the explicit schema, and records beyond the first
-            # feed the equality fallback below
-            import csv as _csv
+        """One member file -> DataFrame: the id/coreid column, the CURIE
+        columns, then the default-value columns.
 
-            with open(path, "r", encoding=desc.encoding, newline="") as f:
-                if desc.fields_enclosed_by:
-                    sniff = _csv.reader(
-                        f,
-                        delimiter=desc.fields_terminated_by,
-                        quotechar=desc.fields_enclosed_by,
-                    )
-                else:
-                    sniff = _csv.reader(
-                        f,
-                        delimiter=desc.fields_terminated_by,
-                        quoting=_csv.QUOTE_NONE,
-                    )
-                headers = []
-                for _ in range(n_skip):
-                    # a member shorter than its declared header count is
-                    # just empty — not a crash
-                    row = next(sniff, None)
-                    if row is None:
-                        break
-                    headers.append(row)
-            # Skip the FIRST header record by POSITION: Spark's header
-            # option drops the first record of the (single-file) member,
-            # and the explicit all-string schema keeps our positional
-            # _cN naming (the file's header names are never trusted —
-            # terms come from meta.xml). Exact: a data row that happens
-            # to EQUAL the header tuple survives, and a header row with
-            # empty cells is still skipped.
-            from pyspark.sql.types import StringType, StructField, StructType
-
-            declared = list(desc.term_by_index)
-            if desc.id_index is not None:
-                declared.append(desc.id_index)
-            width = max(
-                [len(h) for h in headers]
-                + [(max(declared) + 1) if declared else 1]
-            )
-            schema = StructType(
-                [StructField(f"_c{i}", StringType()) for i in range(width)]
-            )
-            df = reader.option("header", "true").schema(schema).csv(path)
-            # ignoreHeaderLines > 1 (rare): the extra header records drop
-            # by equality — an approximation (a data row equal to one of
-            # them drops too); empty header cells compare as ''
-            for hdr in headers[1:]:
-                cond = None
-                for i, v in enumerate(hdr[:width]):
-                    c = F.coalesce(F.col(f"_c{i}"), F.lit("")) == F.lit(v)
-                    cond = c if cond is None else (cond & c)
-                if cond is not None:
-                    df = df.filter(~cond)
-        else:
-            df = reader.csv(path)
-        # Reference value contract, exactly (delimited.py:255-268, which
-        # DwcaRecordFile inherits): every value is ``.strip()``-ed — the
-        # FULL Python whitespace class — and a blank-after-strip value
-        # is DROPPED from the row dict (null here). r12 fix: this read
-        # path previously nulled only space-blank values and KEPT the
-        # padding on non-blank ones; engine-written archives never
-        # showed it (the writer pre-strips) but a foreign archive's
-        # tab-padded values diverged (test_dwca_vs_reference::
-        # test_foreign_archive_value_strip_vs_reference). NULs are
-        # removed AFTER the blank rule, like db_check's later
-        # strip_nuls pass (:170-179): a value of NUL+whitespace strips
-        # to the bare NUL (not blank — NUL is not isspace), survives
-        # the reader, and THEN loses its NUL — an empty-string value
-        # with its key present, on both sides.
+        Values follow ``read_positional``'s contract, which
+        DwcaRecordFile inherits from DelimitedFile (delimited.py:255-268;
+        executed: tests/test_dwca_vs_reference.py
+        test_foreign_archive_value_strip_vs_reference). A term declared at
+        several indexes folds in meta.xml declaration order, the last
+        non-empty declaration winning (dwca.py:241-243;
+        test_duplicate_term_meta_fold_vs_reference). An index past the
+        member's width reads as NULL and the rows are kept, where the
+        reference raises MissingFieldsException on every row and reads the
+        member as empty (delimited.py:250-253;
+        test_declared_index_beyond_width_vs_reference).
+        """
         from idb_backend_spark.functions.enrichment import strip_nuls
-        from idb_backend_spark.functions.grabbers import py_strip
 
-        def stripped(src: Column) -> Column:
-            return strip_nuls(F.nullif(py_strip(src), F.lit("")))
-
-        have = set(df.columns)
-
-        def src_col(idx: int) -> Column:
-            # a declared index past the member's actual width reads as
-            # NULL (key absent) instead of an unresolved-column crash —
-            # the reference MissingFieldsExceptions EVERY row there and
-            # the whole member reads as empty (delimited.py:250-253,
-            # executed: tests/test_dwca_vs_reference.py
-            # test_declared_index_beyond_width_vs_reference); the
-            # engine keeps the rows with the over-declared term absent,
-            # the same keep-and-flag stance as its short-row handling
-            # (r14 fuzz finding — the old F.col crash lost the ARCHIVE)
-            name = f"_c{idx}"
-            return (
-                F.col(name) if name in have
-                else F.lit(None).cast("string")
-            )
-
-        cols = []
+        path = os.path.join(self.base_dir, desc.location)
+        line_sep = {"\\n": "\n", "\\r\\n": "\r\n", "\\r": "\r"}.get(
+            desc.lines_terminated_by, desc.lines_terminated_by
+        )
+        dialect = Dialect(
+            desc.fields_terminated_by, desc.fields_enclosed_by,
+            desc.encoding, line_sep or "\n", desc.ignore_header_lines,
+        )
+        headers = sniff_header(path, dialect)
+        # The id/coreid binding claims its index BEFORE the field loop
+        # (fields[idfld] = idtag, dwca.py:199-201): it leads the columns,
+        # and a <field> whose bare term is literally 'id'/'coreid' claims
+        # the same key after it, so that field's non-empty value beats
+        # the id column in the fold and ONE id column comes out (two
+        # would be ambiguous to every downstream select;
+        # test_id_term_collision_vs_reference).
         id_name = "coreid" if desc.id_is_coreid else "id"
-        id_src = None
+        claims = list(desc.term_by_index.items())
         if desc.id_index is not None:
-            # the id/coreid column goes through the same loop (the
-            # descriptor maps it into ``fields``, dwca.py:200-201): a
-            # blank id leaves the key ABSENT from the row dict
-            id_src = stripped(src_col(desc.id_index))
-            if id_name not in desc.term_by_index.values():
-                # a default recorded for the id's own name (a <field
-                # term="id" default=...> whose index was a dropped
-                # duplicate — the descriptor keeps the default outside
-                # the dedup check) fills BLANK ids; emitting it as a
-                # constant column below would duplicate the id column
-                # (r14 fuzz finding — asDict() then shadowed every real
-                # id with the constant)
-                d_val = desc.defaults.get(id_name)
-                if d_val is not None:
-                    id_src = F.coalesce(id_src, F.lit(d_val))
-                cols.append(id_src.alias(id_name))
-            # else: a <field> whose bare term is literally 'id'/'coreid'
-            # CLAIMS the same dict key — the reference seeds
-            # fields[id_index] = idtag BEFORE the field loop
-            # (dwca.py:199-201), so the later-declared field's non-empty
-            # value beats the id column in the row fold; the id column
-            # joins that term's coalesce group below instead of emitting
-            # a DUPLICATE column (two 'id' columns would be ambiguous to
-            # every downstream select and put duplicate keys on the
-            # ingest wire). Executed: tests/test_dwca_vs_reference.py
-            # test_id_term_collision_vs_reference.
-        # group indexes by term in DECLARATION order (term_by_index is
-        # insertion-ordered by the meta.xml field loop): the reference
-        # maps EVERY declared index into fields{index: term} and the row
-        # loop's dict assignment makes the LAST NON-EMPTY declaration
-        # win a term claimed twice (delimited.py:265-268 via
-        # DwcaRecordFile's header dict, dwca.py:241-243) — so a
-        # duplicate-term meta.xml folds here with a reverse-declaration
-        # coalesce over the blank-nulled columns, r14 pool class
-        # (executed: tests/test_dwca_vs_reference.py
-        # test_duplicate_term_meta_fold_vs_reference)
-        groups: dict[str, list[int]] = {}
-        for idx, term in desc.term_by_index.items():
-            # (desc.term_by_index never holds id_index — the descriptor
-            # drops a field sharing the id's index, reference parity)
-            groups.setdefault(term, []).append(idx)
-        for term, idxs in groups.items():
-            srcs = [stripped(src_col(i)) for i in idxs]
-            if term == id_name and id_src is not None:
-                # the id column is the FIRST claimant of this key (see
-                # the id_name note above) — later field declarations
-                # beat it when non-empty
-                srcs.insert(0, id_src)
-            if len(srcs) == 1:
-                src = srcs[0]
-            else:
-                src = F.coalesce(*reversed(srcs))
-            d_val = desc.defaults.get(term)
-            if d_val is not None:
+            at = next(
+                (i for i, (_, term) in enumerate(claims) if term == id_name),
+                0,
+            )
+            claims.insert(at, (desc.id_index, id_name))
+        df, values = read_positional(spark, path, dialect, headers,
+                                     dict(claims))
+        # ignoreHeaderLines > 1 (rare): the extra header records drop by
+        # equality — an approximation (a data row equal to one of them
+        # drops too); empty header cells compare as ''
+        for hdr in (headers or [])[1:]:
+            df = df.filter(~reduce(and_, [
+                F.coalesce(F.col(f"_c{i}"), F.lit("")) == F.lit(v)
+                for i, v in enumerate(hdr)
+            ]))
+        cols = []
+        for term, value in values.items():
+            # NULs go AFTER the blank rule, like db_check's later
+            # strip_nuls pass (:170-179): NUL+whitespace strips to the
+            # bare NUL (not blank — NUL is not isspace) and then loses
+            # it, leaving an empty string with its key present
+            value = strip_nuls(value)
+            if term in desc.defaults:
                 # a <field> with BOTH index and default: blank/missing
-                # values take the declared default (DwC-A text guide),
-                # instead of nulling and never applying it — documented
-                # divergence (the reference never APPLIES defaults)
-                expr = F.coalesce(src, F.lit(d_val))
-            else:
-                expr = src
-            cols.append(expr.alias(term))
-        for term, default in desc.defaults.items():
-            if term not in desc.term_by_index.values() and not (
-                term == id_name and id_src is not None
-            ):  # the id binding already folded its own default in
-                cols.append(F.lit(default).alias(term))
+                # values take the declared default (DwC-A text guide) —
+                # documented divergence (the reference never APPLIES
+                # defaults). A default recorded for the id's own name (a
+                # <field term="id" default=...> whose index was a dropped
+                # duplicate) fills blank ids the same way instead of
+                # adding a second id column
+                # (test_id_default_on_dropped_duplicate_index_vs_reference)
+                value = F.coalesce(value, F.lit(desc.defaults[term]))
+            cols.append(value.alias(term))
+        # an index-less default — or one whose index was a dropped
+        # duplicate; the reference records defaults outside the dedup
+        # check — is a constant column
+        cols += [
+            F.lit(default).alias(term)
+            for term, default in desc.defaults.items()
+            if term not in values
+        ]
         return df.select(*cols)
 
     def read_core(self, spark: SparkSession) -> DataFrame:

@@ -35,26 +35,31 @@ def test_random_header_fuzz_vs_reference(ref_delimited, spark, tmp_path):
                       s_i * 25)
 
 
+def _random_file(rng, tmp_path, it):
+    """One seeded random-header CSV file; returns (path, header)."""
+    ncols = rng.randint(1, 6)
+    hdr = (rng.sample(HEADERS, ncols) if rng.random() < 0.5
+           else [rng.choice(HEADERS) for _ in range(ncols)])
+    rows = [
+        [rng.choice(VALS) for _ in range(ncols)]
+        for _ in range(rng.randint(1, 5))
+    ]
+    hdr = ["__rowid"] + hdr
+    rows = [[str(i)] + r for i, r in enumerate(rows)]
+    buf = io.StringIO()
+    w = csv.writer(buf)
+    w.writerow(hdr)
+    w.writerows(rows)
+    p = tmp_path / f"f{it}.csv"
+    p.write_text(buf.getvalue(), encoding="utf-8")
+    return p, hdr
+
+
 def _fuzz_headers(ref_delimited, spark, tmp_path, rng, base):
     from idb_backend_spark.sources.delimited import read_delimited
 
     for it in range(base, base + 25):
-        ncols = rng.randint(1, 6)
-        hdr = (rng.sample(HEADERS, ncols) if rng.random() < 0.5
-               else [rng.choice(HEADERS) for _ in range(ncols)])
-        rows = [
-            [rng.choice(VALS) for _ in range(ncols)]
-            for _ in range(rng.randint(1, 5))
-        ]
-        hdr = ["__rowid"] + hdr
-        rows = [[str(i)] + r for i, r in enumerate(rows)]
-        buf = io.StringIO()
-        w = csv.writer(buf)
-        w.writerow(hdr)
-        w.writerows(rows)
-        p = tmp_path / f"f{it}.csv"
-        p.write_text(buf.getvalue(), encoding="utf-8")
-
+        p, hdr = _random_file(rng, tmp_path, it)
         ref_rows = _read_all(ref_delimited.DelimitedFile(str(p), logname="t"))
         eng = read_delimited(spark, str(p)).collect()
         eng_by = {}

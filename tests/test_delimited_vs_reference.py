@@ -343,56 +343,44 @@ def test_delimitedfile_iteration_is_broken(ref_delimited, tmp_path):
         next(iter(f))
 
 
-def test_name_based_duplicate_fold_warns_on_glob_path(spark, tmp_path):
-    """ADVICE r14: identical bytes produce DIFFERENT columns depending on
-    how the path is spelled — the positional fold needs the byte-exact
-    raw header, which a directory/glob read cannot supply. That
-    local-vs-glob behavior difference must be OBSERVABLE: the name-based
-    fallback now warns when it meets duplicate-canonical headers."""
+@pytest.mark.parametrize("spelling", ["directory", "glob"])
+def test_path_spelling_parity(spark, tmp_path, spelling):
+    """Identical bytes give identical columns and rows whichever way the
+    path is spelled: a directory or glob takes its header from its first
+    data file, so duplicate-canonical headers fold (last non-empty wins)
+    exactly as they do for the file itself, and nothing warns."""
     import warnings
 
     from idb_backend_spark.sources.delimited import read_delimited
 
     d = tmp_path / "dupdir"
     d.mkdir()
-    (d / "part.csv").write_text(
-        "genus,Genus,catalogNumber\nQuercus,Betula,c1\n", encoding="utf-8"
-    )
-    with warnings.catch_warnings(record=True) as caught:
-        warnings.simplefilter("always")
-        df = read_delimited(spark, str(d))  # directory path -> no raw header
-        cols = df.columns
-    msgs = [str(w.message) for w in caught]
-    assert any("duplicate canonical header" in m for m in msgs), msgs
-    # and the documented fallback shape: Spark's positional rename of
-    # the case-duplicate pair survives, nothing is folded
-    assert "genus0" in cols and "Genus1" in cols
-
-    # the same bytes as a local single file: folded, NO warning
-    f = tmp_path / "single.csv"
+    f = d / "part.csv"
     f.write_text(
-        "genus,Genus,catalogNumber\nQuercus,Betula,c1\n", encoding="utf-8"
+        "genus,Genus,catalogNumber\nQuercus,Betula,c1\nAcer,,c2\n",
+        encoding="utf-8",
     )
+    other = str(d) if spelling == "directory" else str(d / "*.csv")
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        df1 = read_delimited(spark, str(f))
-    assert not [
-        w for w in caught
-        if "duplicate canonical header" in str(w.message)
+        one, many = read_delimited(spark, str(f)), read_delimited(spark, other)
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+    assert many.columns == one.columns == [
+        "dwc:genus", "dwc:catalogNumber",
+        "flag_corrupt_row", "flag_encoding_error",
     ]
-    assert df1.columns.count("dwc:genus") == 1
-    assert not any(c.lower().startswith("genus") for c in df1.columns)
+    rows = sorted(r.asDict().items() for r in one.collect())
+    assert sorted(r.asDict().items() for r in many.collect()) == rows
+    assert [dict(r)["dwc:genus"] for r in rows] == ["Betula", "Acer"]
 
 
-def test_invalid_quotechar_falls_back_instead_of_crashing(spark, tmp_path):
-    """ADVICE r14: csv.reader raises TypeError for a multi-character
-    quotechar; _raw_header must swallow it and fall back to the
-    name-based path rather than crash the read."""
-    from idb_backend_spark.sources.delimited import _raw_header
+def test_invalid_quotechar_falls_back_instead_of_crashing(tmp_path):
+    """csv.reader raises TypeError for a multi-character quotechar; the
+    one header sniff must swallow it and report no header rather than
+    crash the driver."""
+    from idb_backend_spark.sources.delimited import Dialect, sniff_header
 
     p = tmp_path / "q.csv"
     p.write_text("genus,catalogNumber\nQuercus,c1\n", encoding="utf-8")
-    assert _raw_header(str(p), ",", '""', "utf-8") is None
-    assert _raw_header(str(p), ",", '"', "utf-8") == [
-        "genus", "catalogNumber",
-    ]
+    assert sniff_header(str(p), Dialect(quote='""')) is None
+    assert sniff_header(str(p), Dialect()) == [["genus", "catalogNumber"]]

@@ -15,6 +15,7 @@ from idb_backend_spark.sources import fieldnames as fn
 from idb_backend_spark.sources.delimited import normalize_delimiter, read_delimited
 from idb_backend_spark.sources.dwca import DwcaArchive, parse_meta_xml
 from idb_backend_spark.sources.eml import parse_eml
+from tests.test_delimited_vs_reference import DUP_HEADER_POOL
 
 META_XML = b"""<?xml version="1.0" encoding="UTF-8"?>
 <archive xmlns="http://rs.tdwg.org/dwc/text/" metadata="eml.xml">
@@ -139,17 +140,33 @@ def test_read_delimited_canonicalize_and_corrupt(spark, tmp_path):
         ',"unclosed quote,3\n'
         "6,Jim Poe,30.1\n"
     )
-    # multiline=False: line-oriented parsing gives the strongest per-row
-    # corrupt isolation (the unclosed quote poisons ONE row, not the
-    # file tail — under multiLine/csv.reader semantics an unclosed quote
-    # swallows everything after it, see read_delimited's docstring)
-    df = read_delimited(spark, str(p), multiline=False)
-    assert "dwc:month" in df.columns
-    assert "dwc:recordedBy" in df.columns
-    assert "dwc:decimalLatitude" in df.columns
-    rows = df.collect()
-    good = [r for r in rows if not r["flag_corrupt_row"]]
-    assert {r["dwc:month"] for r in good} >= {"5", "6"}
+    df = read_delimited(spark, str(p))
+    assert df.columns == [
+        "dwc:month", "dwc:recordedBy", "dwc:decimalLatitude",
+        "flag_corrupt_row", "flag_encoding_error",
+    ]
+    # a quote char in the file turns multiLine on, where an unclosed
+    # quote runs to the end of the file (as in csv.reader): the tail is
+    # one short, flagged record
+    rows = [(r["dwc:month"], r["dwc:recordedBy"], r["flag_corrupt_row"])
+            for r in df.collect()]
+    assert sorted(rows, key=repr) == sorted([
+        ("5", "Jane Roe", False),
+        (None, "unclosed quote,3\n6,Jim Poe,30.1", True),
+    ], key=repr)
+
+    # a quote-free feed reads line by line: a wrong-width row is flagged
+    # and its neighbours are untouched
+    q = tmp_path / "wide.csv"
+    q.write_text(
+        "MonthCollected,Collector,Latitude\n"
+        "5,Jane Roe,29.65\n"
+        "7,Extra,1.0,surplus\n"
+        "6,Jim Poe,30.1\n"
+    )
+    flags = {r["dwc:month"]: r["flag_corrupt_row"]
+             for r in read_delimited(spark, str(q)).collect()}
+    assert flags == {"5": False, "7": True, "6": False}
 
 
 def test_csv_member_and_citations(spark, tmp_path):
@@ -295,20 +312,44 @@ def test_member_quote_probe(tmp_path):
     all reads without multiLine (splittable); any uncertainty — quote
     present, non-byte-transparent encoding, multi-byte needle — must
     report True (single-task but correct)."""
-    from idb_backend_spark.sources.dwca import _member_contains_char
+    from idb_backend_spark.sources.delimited import file_contains_char
 
     plain = tmp_path / "plain.csv"
     plain.write_text("id,genus\nr1,Acer\n")
-    assert _member_contains_char(str(plain), '"', "utf-8") is False
+    assert file_contains_char(str(plain), '"', "utf-8") is False
 
     quoted = tmp_path / "quoted.csv"
     quoted.write_text('id,note\nr1,"line\nbreak"\n')
-    assert _member_contains_char(str(quoted), '"', "utf-8") is True
+    assert file_contains_char(str(quoted), '"', "utf-8") is True
 
     # exotic encodings can't be byte-scanned exactly -> conservative True
-    assert _member_contains_char(str(plain), '"', "utf-16") is True
+    assert file_contains_char(str(plain), '"', "utf-16") is True
     # multi-byte needle -> conservative True
-    assert _member_contains_char(str(plain), "“", "utf-8") is True
+    assert file_contains_char(str(plain), "“", "utf-8") is True
+    # a directory or glob is assumed to quote
+    assert file_contains_char(str(tmp_path), '"', "utf-8") is True
+
+
+@pytest.mark.parametrize("meta,error", [
+    pytest.param(None, ValueError, id="no-meta-xml"),
+    pytest.param(b"<archive><core", SyntaxError, id="unparseable-meta-xml"),
+])
+def test_archive_open_failure_removes_workdir(tmp_path, meta, error):
+    """An archive that cannot be opened raises and leaves no extracted
+    tree on disk."""
+    zp = tmp_path / "bad.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("occurrence.csv", OCCURRENCE_CSV)
+        if meta is not None:
+            z.writestr("meta.xml", meta)
+    workdir = tmp_path / "x"
+    with pytest.raises(error):
+        DwcaArchive(str(zp), workdir=str(workdir))
+    assert not workdir.exists()
+    # the default workdir, beside the zip, is removed too
+    with pytest.raises(error):
+        DwcaArchive(str(zp))
+    assert not (tmp_path / "bad_extracted").exists()
 
 
 def test_dwca_member_with_embedded_newlines_still_parses(spark, tmp_path):
@@ -503,7 +544,7 @@ def test_read_delimited_flags_encoding_errors(spark, tmp_path):
         fh.write(b"CAT-1,Acer\n")
         fh.write(b"CAT-2,Qu\xff\xfeercus\n")  # invalid UTF-8 bytes
         fh.write(b"CAT-3,Pinus\n")
-    df = read_delimited(spark, str(p), multiline=False)
+    df = read_delimited(spark, str(p))
     got = {
         r["dwc:catalogNumber"]: r["flag_encoding_error"]
         for r in df.collect()
@@ -734,3 +775,254 @@ def test_meta_xml_field_order_follows_xml2d_merge():
     </archive>"""
     core2, _, _ = parse_meta_xml(meta2)
     assert core2.term_by_index[0] == "dwc:genus"
+
+
+# --------------------------------------------------------------------------
+# Reader behaviour pinned without the reference checkout. Each expected
+# row is the reference's documented result (the executed differentials in
+# test_delimited_vs_reference / test_dwca_vs_reference assert the same
+# values against the reference reader when it is present).
+# --------------------------------------------------------------------------
+
+#: the last-non-empty-wins result of each DUP_HEADER_POOL row
+DUP_HEADER_EXPECTED = [
+    {"dwc:catalogNumber": "c1", "dwc:decimalLatitude": "22.0"},
+    {"dwc:catalogNumber": "c1", "dwc:decimalLatitude": "11.0"},
+    {"dwc:catalogNumber": "c1", "dwc:decimalLatitude": "11.0"},
+    {"dwc:catalogNumber": "c1", "dwc:decimalLatitude": "22.0"},
+    {"dwc:catalogNumber": "c1"},
+    {"dwc:genus": "Betula", "dwc:catalogNumber": "c1"},
+    {"dwc:genus": "Quercus", "dwc:catalogNumber": "c1"},
+    {"dwc:decimalLatitude": "3.0", "id": "r1"},
+    {"dwc:decimalLatitude": "2.0", "id": "r1"},
+    {"dwc:genus": "Betula"},
+]
+
+READ_DELIMITED_CASES = [
+    pytest.param(f"{h}\n{r}\n", [e], id=f"dup-header-{i}")
+    for i, ((h, r), e) in enumerate(zip(DUP_HEADER_POOL, DUP_HEADER_EXPECTED,
+                                        strict=True))
+] + [
+    # every value is str.strip()-ed with Python's full whitespace class
+    # (tabs, vertical tab, form feed), and blank-after-strip is absent
+    pytest.param(
+        "catalogNumber,locality\n"
+        "c1,\tpadded with tab\t\n"
+        "c2, \t \n"
+        "c3,\x0bvertical\x0c\n",
+        [
+            {"dwc:catalogNumber": "c1", "dwc:locality": "padded with tab"},
+            {"dwc:catalogNumber": "c2"},
+            {"dwc:catalogNumber": "c3", "dwc:locality": "vertical"},
+        ],
+        id="whitespace-class-strip",
+    ),
+]
+
+
+def _multiset(rows) -> list:
+    import json
+
+    return sorted(json.dumps(sorted(d.items())) for d in rows)
+
+
+@pytest.mark.parametrize("text,expected", READ_DELIMITED_CASES)
+def test_read_delimited_value_contract(spark, tmp_path, text, expected):
+    """Header fold and value strip of read_delimited: several headers
+    claiming one term fold to the last non-empty value, and a blank
+    value is absent (delimited.py:255-268)."""
+    p = tmp_path / "case.csv"
+    p.write_text(text, encoding="utf-8")
+    got = [
+        {k: v for k, v in r.asDict().items()
+         if v is not None and not k.startswith("flag_")}
+        for r in read_delimited(spark, str(p)).collect()
+    ]
+    assert _multiset(got) == _multiset(expected)
+
+
+def _dwca_meta(fields: str, quote: str = "", header_lines: int = 0) -> str:
+    return (
+        '<archive xmlns="http://rs.tdwg.org/dwc/text/">'
+        '<core rowType="http://rs.tdwg.org/dwc/terms/Occurrence"'
+        ' fieldsTerminatedBy="," linesTerminatedBy="\\n"'
+        f' fieldsEnclosedBy="{quote}" encoding="UTF-8"'
+        f' ignoreHeaderLines="{header_lines}">'
+        "<files><location>occurrence.csv</location></files>"
+        f"{fields}</core></archive>"
+    )
+
+
+_DWC = "http://rs.tdwg.org/dwc/terms/"
+
+READ_MEMBER_CASES = [
+    pytest.param(
+        # a foreign archive: values padded with tabs, NBSP and CR/LF strip
+        # with the full whitespace class; a blank id is absent; a value
+        # of NUL+whitespace strips to the NUL, which the reader then
+        # removes (an empty string, key present)
+        _dwca_meta(
+            '<id index="0"/>'
+            f'<field index="1" term="{_DWC}genus"/>'
+            f'<field index="2" term="{_DWC}country"/>',
+            quote="&quot;", header_lines=1,
+        ),
+        "id,genus,country\n"
+        '1,"\tRosa\t","\t"\n'
+        '2," x ",us\n'
+        '"\t", nb ,"\r\n"\n'
+        '4," \x00 ",ok\n',
+        ["id", "dwc:genus", "dwc:country"],
+        [
+            {"id": "1", "dwc:genus": "Rosa"},
+            {"id": "2", "dwc:genus": "x", "dwc:country": "us"},
+            {"dwc:genus": "nb"},
+            {"id": "4", "dwc:genus": "", "dwc:country": "ok"},
+        ],
+        id="whitespace-class-strip",
+    ),
+    pytest.param(
+        # one term declared at two indexes, index 3 before index 2: the
+        # LAST DECLARED non-empty value wins (dwca.py:241-243)
+        _dwca_meta(
+            '<id index="0"/>'
+            f'<field index="1" term="{_DWC}catalogNumber"/>'
+            f'<field index="3" term="{_DWC}genus"/>'
+            f'<field index="2" term="{_DWC}genus"/>'
+        ),
+        "1,c1,Quercus,Betula\n"
+        "2,c2,Acer,\n"
+        "3,c3,,Salix\n"
+        "4,c4,,\n"
+        "5,c5, \t ,  \n",
+        ["id", "dwc:catalogNumber", "dwc:genus"],
+        [
+            {"id": "1", "dwc:catalogNumber": "c1", "dwc:genus": "Quercus"},
+            {"id": "2", "dwc:catalogNumber": "c2", "dwc:genus": "Acer"},
+            {"id": "3", "dwc:catalogNumber": "c3", "dwc:genus": "Salix"},
+            {"id": "4", "dwc:catalogNumber": "c4"},
+            {"id": "5", "dwc:catalogNumber": "c5"},
+        ],
+        id="duplicate-term-meta-fold",
+    ),
+    pytest.param(
+        # a <field term="id"> claims the id binding's key after it: a
+        # non-empty field value beats the id column, one `id` column
+        _dwca_meta(
+            '<id index="0"/>'
+            '<field index="1" term="id"/>'
+            f'<field index="2" term="{_DWC}genus"/>'
+        ),
+        "r1,other-id,Quercus\n"
+        "r2,,Acer\n"
+        "r3, \t ,Salix\n",
+        ["id", "dwc:genus"],
+        [
+            {"id": "other-id", "dwc:genus": "Quercus"},
+            {"id": "r2", "dwc:genus": "Acer"},
+            {"id": "r3", "dwc:genus": "Salix"},
+        ],
+        id="id-term-collision",
+    ),
+    pytest.param(
+        # an index past the member's width reads as absent, rows kept
+        _dwca_meta(
+            '<id index="0"/>'
+            f'<field index="1" term="{_DWC}genus"/>'
+            f'<field index="5" term="{_DWC}country"/>'
+        ),
+        "r0,Rosa,x\nr1,Acer,y\n",
+        ["id", "dwc:genus", "dwc:country"],
+        [{"id": "r0", "dwc:genus": "Rosa"}, {"id": "r1", "dwc:genus": "Acer"}],
+        id="declared-index-beyond-width",
+    ),
+    pytest.param(
+        # a default on a <field term="id"> whose index was a dropped
+        # duplicate fills blank ids; it never adds a second `id` column
+        _dwca_meta(
+            '<id index="0"/>'
+            f'<field index="1" term="{_DWC}genus"/>'
+            '<field index="1" term="id" default="fallback-id"/>'
+        ),
+        "r0,Rosa\n,Acer\n",
+        ["id", "dwc:genus"],
+        [
+            {"id": "r0", "dwc:genus": "Rosa"},
+            {"id": "fallback-id", "dwc:genus": "Acer"},
+        ],
+        id="id-default-on-dropped-duplicate-index",
+    ),
+]
+
+
+@pytest.mark.parametrize("meta,body,columns,expected", READ_MEMBER_CASES)
+def test_read_member_value_contract(spark, tmp_path, meta, body, columns,
+                                    expected):
+    """The DwC-A member reader's columns, in order, and its rows."""
+    zp = tmp_path / "case.zip"
+    with zipfile.ZipFile(zp, "w") as z:
+        z.writestr("meta.xml", meta)
+        z.writestr("occurrence.csv", body)
+    arch = DwcaArchive(str(zp), workdir=str(tmp_path / "x"))
+    df = arch.read_core(spark)
+    assert df.columns == columns
+    got = [
+        {k: v for k, v in r.asDict().items() if v is not None}
+        for r in df.collect()
+    ]
+    arch.close()
+    assert _multiset(got) == _multiset(expected)
+
+
+def _fuzz_rows_dwca(spark, tmp_path):
+    import random
+
+    from tests.test_dwca_meta_fuzz import _random_archive
+
+    rng = random.Random(0xD3CA)
+    for it in range(25):
+        zp, _meta = _random_archive(rng, str(tmp_path), it)
+        arch = DwcaArchive(zp, workdir=str(tmp_path / f"x{it}"))
+        df = arch.read_core(spark)
+        yield df.columns, [r.asDict() for r in df.collect()]
+        arch.close()
+
+
+def _fuzz_rows_delimited(spark, tmp_path):
+    import random
+
+    from tests.test_delimited_header_fuzz import _random_file
+
+    rng = random.Random(0xDE11)
+    for it in range(25):
+        p, _hdr = _random_file(rng, tmp_path, it)
+        df = read_delimited(spark, str(p))
+        yield df.columns, [r.asDict() for r in df.collect()]
+
+
+#: sha256 over every generated file's sorted column set and row multiset
+FUZZ_DIGESTS = {
+    "dwca": (
+        "7004631a6acb9e27071dbecb4e31326383baacfc13262d48a4b4084e7af6f361"
+    ),
+    "delimited": (
+        "1c4a907ee0c5749bb23882f71a5ccc9ad74c4469a0dfdaeb47fa49e59e6d02ea"
+    ),
+}
+
+
+@pytest.mark.parametrize("reader", sorted(FUZZ_DIGESTS))
+def test_seeded_fuzz_rows_digest(spark, tmp_path, reader):
+    """The seeded generators of test_dwca_meta_fuzz (seed 0xD3CA) and
+    test_delimited_header_fuzz (seed 0xDE11), engine only: every
+    file's column set and row multiset (NULLs included) hash to a
+    pinned digest, so a reader change that moves any generated row
+    fails here even where the reference checkout is absent."""
+    import hashlib
+    import json
+
+    gen = {"dwca": _fuzz_rows_dwca, "delimited": _fuzz_rows_delimited}
+    h = hashlib.sha256()
+    for columns, rows in gen[reader](spark, tmp_path):
+        h.update(json.dumps([sorted(columns), _multiset(rows)]).encode())
+    assert h.hexdigest() == FUZZ_DIGESTS[reader]

@@ -1,12 +1,15 @@
-"""Capture .explain("formatted") for catalog entries into plans/r16/.
+"""Capture Spark's explain output for catalog entries into a directory.
 
 Usage:
-    python tools/capture_plans.py <suffix> [--no-aqe] [query ...]
+    python tools/capture_plans.py SUFFIX --out DIR [--no-aqe]
+        [--mode formatted|extended|cost|codegen] [query ...]
 
-Writes plans/r16/<query>_<suffix>.txt for each requested entry (all
-headline + graded entries when none named). Driver-only — builds the
-DataFrame and renders the plan, never executes a job, so it is cheap
-and safe to run alongside other work.
+Writes DIR/<query>_<SUFFIX>.txt for each requested entry (all headline +
+graded entries when none named). Driver-only — builds the DataFrame and
+renders the plan, never executes a job, so it is cheap and safe to run
+alongside other work. ``--mode extended`` also renders the optimized
+logical plan; two checkouts' captures compare with ``diff`` once
+expression ids (``#123``) and temporary paths are normalized.
 
 ``--no-aqe`` renders with spark.sql.adaptive.enabled=false so that
 exchange reuse is visible in the capture: a pre-execution
@@ -20,35 +23,35 @@ AQE wrapper and runtime re-optimization.
 
 from __future__ import annotations
 
+import argparse
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
-
-REPO = "/root/repo"
-OUT = os.path.join(REPO, "plans", "r16")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    args = sys.argv[1:]
-    no_aqe = "--no-aqe" in args
-    args = [a for a in args if a != "--no-aqe"]
-    suffix = args[0] if args else "before"
-    names = args[1:]
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("suffix")
+    ap.add_argument("names", nargs="*", metavar="query")
+    ap.add_argument("--out", required=True, help="output directory")
+    ap.add_argument("--no-aqe", action="store_true")
+    ap.add_argument("--mode", default="formatted",
+                    choices=["formatted", "extended", "cost", "codegen"])
+    args = ap.parse_intermixed_args()
 
     from idb_backend_spark.plans.catalog import Q, UNGRADED
     from idb_backend_spark.session import get_spark
 
     runnable = {**Q, **UNGRADED}
-    if not names:
-        names = list(runnable)
-    os.makedirs(OUT, exist_ok=True)
+    names = args.names or list(runnable)
+    os.makedirs(args.out, exist_ok=True)
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark("idb-backend-spark-plans")
     spark.sparkContext.setLogLevel("ERROR")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    if no_aqe:
+    if args.no_aqe:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
 
     try:
@@ -57,12 +60,12 @@ def main() -> None:
                 df = runnable[name](spark, sf_dir)
                 plan = df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
+                        args.mode
                     )
                 )
             except Exception as e:  # keep going; record the failure
                 plan = f"ERROR building plan: {e!r}\n"
-            path = os.path.join(OUT, f"{name}_{suffix}.txt")
+            path = os.path.join(args.out, f"{name}_{args.suffix}.txt")
             with open(path, "w") as fh:
                 fh.write(plan)
             print(f"wrote {path} ({len(plan)} chars)")
