@@ -221,12 +221,18 @@ def citation_text(
 def recordset_counts(df: DataFrame, recordset_col: str) -> list[tuple[str, int]]:
     """A1 collect — per-recordset counts desc (terms agg, download.py:101-124).
     The agg output is tiny (bounded by recordset cardinality) — safe to
-    collect."""
+    collect, and sorted on the driver rather than by a Spark range sort:
+    count desc, then key ascending with a NULL key first, the order
+    ``orderBy(desc("count"), key)`` gives."""
     rows = (
         df.groupBy(recordset_col)
         .agg(F.count(F.lit(1)).alias("count"))
-        .orderBy(F.desc("count"), F.col(recordset_col))
         .collect()
+    )
+    rows.sort(
+        key=lambda r: (
+            -r["count"], r[recordset_col] is not None, r[recordset_col]
+        )
     )
     return [(str(r[recordset_col]), r["count"]) for r in rows]
 

@@ -9,6 +9,9 @@ CPU-bound scan and an Arrow-serialization bottleneck.
 
 from __future__ import annotations
 
+from functools import reduce
+from operator import and_, or_
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -131,7 +134,7 @@ def analyzer_tokenize(s: str) -> list[str]:
     U+10570.., Toto, Cypro-Minoan, ...) this function produces tokens
     the JVM document side can never emit. Query compilation therefore
     goes through `query_tokens` below, which evaluates the engine's OWN
-    expression; this fallback is used only when no SparkSession is live
+    expression; this fallback is used only when no SparkContext is live
     (and the two agree on every code point both Unicode versions assign
     identically — tests/test_fulltext_prop.py pins that over the curated
     pool).
@@ -145,10 +148,11 @@ def analyzer_tokenize(s: str) -> list[str]:
 
 
 #: engine-evaluated query-token cache. Keyed by the raw query string;
-#: values are the token tuples the JVM itself produced, so repeated shim
-#: compiles of the same query cost zero jobs. Bounded: a query workload
-#: with >4096 distinct fulltext strings re-evaluates (one tiny local
-#: job), it never grows without limit on a long-lived driver.
+#: values are the token tuples the JVM itself produced, so a repeated shim
+#: compile of the same query skips even the planning round trip. Bounded:
+#: past 4096 distinct fulltext strings new ones are tokenized per call
+#: (still no Spark job); it never grows without limit on a long-lived
+#: driver.
 _ENGINE_TOKENS_CACHE: dict[str, tuple[str, ...]] = {}
 _ENGINE_TOKENS_CACHE_MAX = 4096
 
@@ -163,37 +167,43 @@ def query_tokens_batch(strings: list[str]) -> list[list[str]]:
     tokenizes under CPython 3.11 but is unassigned to JDK 17 — a query
     containing it matched nothing, and the token-skipping index pruned
     every file). So the query side asks the engine itself: evaluate
-    `analyzer_tokens(lit(query))` on a one-row frame at compile time.
-    Agreement with the stored token arrays is then true by construction,
-    whatever Unicode version the JVM has. One tiny local job per batch
-    of uncached strings; results are cached per query string.
+    `analyzer_tokens` over the strings as a local ``VALUES`` relation
+    (bound as named parameters, so no string is spliced into SQL text).
+    The optimizer folds that projection into a local relation, so the
+    collect runs no Spark job, and agreement with the stored token arrays
+    is still true by construction, whatever Unicode version the JVM has.
+    Results are cached per query string.
 
     Falls back to the pure-Python `analyzer_tokenize` twin only when no
-    usable SparkSession exists (e.g. oracle-SQL rendering after the
-    session closed) — identical output for any string both Unicode
-    versions treat alike, which covers every catalog query.
+    SparkContext is live (e.g. oracle-SQL rendering after the session
+    stopped) — identical output for any string both Unicode versions
+    treat alike, which covers every catalog query. With a live context
+    an engine error propagates: falling back there would bring back the
+    Unicode skew this function exists to prevent.
     """
+    from pyspark import SparkContext
     from pyspark.sql import SparkSession
 
-    spark = SparkSession.getActiveSession()
+    live = SparkContext._active_spark_context is not None
     missing = sorted({s for s in strings if s not in _ENGINE_TOKENS_CACHE})
     fresh: dict[str, tuple[str, ...]] = {}
-    if spark is not None and missing:
-        try:
-            df = spark.createDataFrame(
-                list(enumerate(missing)), "i long, s string"
+    if live and missing:
+        spark = SparkSession.builder.getOrCreate()
+        values = ", ".join(f"({i}, :s{i})" for i in range(len(missing)))
+        rows = (
+            spark.sql(
+                f"SELECT * FROM VALUES {values} AS v(i, s)",
+                args={f"s{i}": s for i, s in enumerate(missing)},
             )
-            rows = df.select(
-                "i", analyzer_tokens("s").alias("t")
-            ).collect()
-            fresh = {missing[r["i"]]: tuple(r["t"]) for r in rows}
-        except Exception:  # stopped/broken session: engine unusable
-            spark = None
+            .select("i", analyzer_tokens("s").alias("t"))
+            .collect()
+        )
+        fresh = {missing[r["i"]]: tuple(r["t"]) for r in rows}
     out: list[list[str]] = []
     for s in strings:
         t = _ENGINE_TOKENS_CACHE.get(s)
         if t is None:
-            if spark is None:
+            if not live:
                 out.append(analyzer_tokenize(s))
                 continue
             t = fresh[s]
@@ -208,6 +218,11 @@ def query_tokens(s: str) -> list[str]:
     return query_tokens_batch([s])[0]
 
 
+#: a maximal run of this class separates two analyzer tokens — the
+#: complement of ANALYZER_TOKEN_RE's class
+_NON_TOKEN_RE = r"[^\p{L}\p{N}_]+"
+
+
 def whole_token_match(c: Column | str, query: str) -> Column:
     """ES `_all` operator:and semantics: every analyzer token of
     ``query`` must appear as a WHOLE analyzer token of column ``c``
@@ -219,18 +234,38 @@ def whole_token_match(c: Column | str, query: str) -> Column:
     never diverge from shim filtering. Query tokens come from the
     ENGINE (`query_tokens`), so they always agree with what
     `analyzer_tokens` emits for documents on this JVM.
+
+    No row is tokenized into an array. Each distinct query token ``t``
+    is tested twice, cheap test first:
+
+    - guard: ``lower(c)`` contains ``t``. A whole token of the folded
+      text is a substring of it, and the folded text equals ``lower(c)``
+      unless ``lower(c)`` holds a fold character (ς, U+0307) — such rows
+      bypass the guard;
+    - boundary, behind the guards: the folded text, each maximal
+      non-token run replaced by one space and padded with spaces,
+      contains `` t ``. The space-free runs between two spaces of that
+      string are exactly the analyzer tokens, so this is the
+      tokenizer's own answer.
+
+    The boundary regex is a constant and the tokens are string literals,
+    which generated code holds as references, so every query with the
+    same token count reuses one compiled filter.
     """
     toks = sorted(set(query_tokens(query)))
     if not toks:
         return F.lit(True)
-    tok_arr = analyzer_tokens(c)
-    # ONE evaluation of the tokenizer per row: a per-token array_contains
-    # conjunction would embed the regexp-extraction subtree once per
-    # query token (10-token query = 10 tokenizations of every row inside
-    # the scan filter)
-    return F.size(
-        F.array_intersect(tok_arr, F.array(*[F.lit(t) for t in toks]))
-    ) == F.lit(len(toks))
+    c = F.col(c) if isinstance(c, str) else c
+    low = F.lower(c)
+    guard = reduce(and_, [low.contains(t) for t in toks]) | reduce(
+        or_, [low.contains(ch) for ch in _FOLD_FROM]
+    )
+    spaced = F.concat(
+        F.lit(" "),
+        F.regexp_replace(_fold_lower(c), _NON_TOKEN_RE, " "),
+        F.lit(" "),
+    )
+    return guard & reduce(and_, [spaced.contains(f" {t} ") for t in toks])
 
 
 def analyzer_contains_sql(col_expr: str, token_sql_lit: str) -> str:

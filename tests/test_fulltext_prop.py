@@ -19,11 +19,16 @@ Unicode version the JVM has. These tests enforce:
   both Unicode versions treat identically), including the case-mapping
   traps (final sigma, Turkish dotted I, titlecase digraphs);
 - the documented apostrophe divergence vs ES ("don't" -> don,t);
-- the DuckDB SQL twin by cross-engine execution.
+- the DuckDB SQL twin by cross-engine execution;
+- the array-free matcher against the token-array form it replaced;
+- the pure-Python fallback only when no SparkContext is live.
 """
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
 from hypothesis import example, given, settings, strategies as st
 
 from idb_backend_spark.functions.text import (
@@ -295,3 +300,109 @@ def test_sql_twin_unicode_residue_is_pinned(spark):
     # JVM splits on the unknown letter -> 'a' is a whole token; RE2
     # glues 'a<U+10570>b' into one token -> no match
     assert spark_hit and not duck_hit, (spark_hit, duck_hit)
+
+
+def _array_intersect_match(c, query):
+    """The matcher `whole_token_match` replaced, kept as the reference:
+    tokenize every row into an array and intersect it with the query's
+    distinct tokens."""
+    from pyspark.sql import functions as F
+
+    from idb_backend_spark.functions.text import analyzer_tokens
+
+    toks = sorted(set(query_tokens(query)))
+    if not toks:
+        return F.lit(True)
+    return F.size(
+        F.array_intersect(analyzer_tokens(c), F.array(*map(F.lit, toks)))
+    ) == F.lit(len(toks))
+
+
+#: words whose fold matters (final sigma, dotted capital I and its
+#: lowercase i + U+0307) or that sit inside others, for rows and queries
+#: built from the same pieces so that most queries hit some row
+_WORDS = ["spark", "sparks", "a", "_x", "x_", "é", "漢字", "ΟΔΟΣ", "οδος",
+          "οδοσ", "Σ", "ς", "İstanbul", "i\u0307stanbul", "istanbul", "İ",
+          "i", "\u0307"]
+_SEPS = [" ", "", ",", ".", "'", "-", "(", ")", "\t", "!"]
+_pieces = st.lists(st.sampled_from(_WORDS + _SEPS), max_size=8).map("".join)
+
+
+@settings(max_examples=25, deadline=None)
+@given(
+    rows=st.lists(
+        st.one_of(st.none(), st.just(""), _pieces,
+                  st.text(alphabet=_ALPHABET, max_size=40)),
+        min_size=1, max_size=20,
+    ),
+    queries=st.lists(
+        st.one_of(
+            # the first word repeated: duplicate query tokens
+            st.lists(st.sampled_from(_WORDS), min_size=1, max_size=3).map(
+                lambda ws: " ".join(ws + ws[:1])),
+            _pieces,
+            st.text(alphabet=_ALPHABET, max_size=12),
+        ),
+        min_size=1, max_size=4,
+    ),
+)
+@example(
+    rows=["İstanbul", "i\u0307stanbul!", "ΟΔΟΣ,", "(οδος)", "Σ", "ς", None,
+          "", "sparks", "spark_x", "x spark"],
+    queries=["istanbul", "İSTANBUL", "οδοσ", "ΟΔΟΣ ΟΔΟΣ", "σ", "spark",
+             "x spark x", "İ"],
+)
+def test_whole_token_match_equals_token_array_form(spark, rows, queries):
+    """Differential: the guard + boundary matcher gives exactly the
+    token-array matcher's value (NULL included) on every row, through
+    the shim's entry point and through the token index's residual
+    (`skipping.token_match`). The seeded example fails if fold rows
+    (ς, U+0307 after lower) stop bypassing the substring guard."""
+    from idb_backend_spark.functions.text import whole_token_match
+    from idb_backend_spark.plans.skipping import token_match
+
+    df = spark.createDataFrame(list(enumerate(rows)), "i long, text string")
+    cols = []
+    for j, q in enumerate(queries):
+        cols += [
+            _array_intersect_match("text", q).alias(f"ref{j}"),
+            whole_token_match("text", q).alias(f"new{j}"),
+            token_match(q, "text").alias(f"idx{j}"),
+        ]
+    for r in df.select("i", *cols).collect():
+        for j, q in enumerate(queries):
+            ref = r[f"ref{j}"]
+            assert r[f"new{j}"] == ref, (rows[r["i"]], q)
+            assert r[f"idx{j}"] == ref, (rows[r["i"]], q)
+
+
+def test_query_tokens_fall_back_only_without_live_context(monkeypatch):
+    """No live SparkContext (e.g. oracle SQL rendered after the session
+    stopped): the pure-Python twin answers, and its tokens are not
+    cached as the engine's."""
+    from pyspark import SparkContext
+
+    from idb_backend_spark.functions import text
+
+    s = f"fallback Probe,{uuid.uuid4().hex}"
+    monkeypatch.setattr(SparkContext, "_active_spark_context", None)
+    assert text.query_tokens(s) == text.analyzer_tokenize(s)
+    assert s not in text._ENGINE_TOKENS_CACHE
+
+
+def test_query_tokens_raise_engine_errors_with_live_context(spark,
+                                                            monkeypatch):
+    """With a live context an engine failure propagates instead of
+    silently switching to the Python tokenizer, whose Unicode tables can
+    disagree with the JVM's (the U+10570 class)."""
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import functions as F
+
+    from idb_backend_spark.functions import text
+
+    s = f"engine error probe {uuid.uuid4().hex}"
+    monkeypatch.setattr(text, "analyzer_tokens",
+                        lambda c: F.col("no_such_column"))
+    with pytest.raises(AnalysisException):
+        text.query_tokens(s)
+    assert s not in text._ENGINE_TOKENS_CACHE

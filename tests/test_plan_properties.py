@@ -275,19 +275,30 @@ def test_bucketed_self_join_is_colocated(spark, bucketed_history):
 
 
 def test_fulltext_conjunction_not_udf(spark):
-    """P7: fulltext token conjunction is one native array-intersect over
-    a SINGLE tokenizer evaluation per row — not a Python tokenizer, and
-    not a per-token conjunction re-running the regexp extraction once
-    per query token."""
+    """P7: the fulltext token conjunction is native JVM expressions —
+    no Python tokenizer — and tokenizes no row into an array: each query
+    token's boundary check (the regexp over the folded text) sits behind
+    the cheap substring guards, so a row lacking a query token and any
+    fold character never reaches a regexp."""
     docs = spark.read.parquet(f"{SF}/documents.parquet").withColumn(
         "fulltext", F.lower(F.col("text"))
     )
     q = docs.filter(compile_shim({"fulltext": {"type": "fulltext", "value": "alpha beta"}}))
-    p = plan_str(q)
+    p = plan_str(q, "extended")
     assert "EvalPython" not in p
-    assert "array_intersect" in p
-    # the tokenizer subtree appears ONCE regardless of query token count
-    assert p.count("regexp_extract_all") == 1
+    cond = next(
+        line for line in p[p.index("== Optimized Logical Plan =="):].splitlines()
+        if line.lstrip("+- ").startswith("Filter ")
+    )
+    # no per-row token array anywhere in the Filter
+    for array_fn in ("regexp_extract_all", "split(", "array_intersect",
+                     "array_contains"):
+        assert array_fn not in cond, array_fn
+    # both substring guards precede the first boundary regexp
+    first_regexp = cond.index("regexp_replace")
+    for tok in ("alpha", "beta"):
+        assert cond.index(f", {tok})") < first_regexp, tok
+        assert f",  {tok} )" in cond[first_regexp:], tok
 
 
 def test_typed_projection_is_single_stage_no_shuffle(spark):

@@ -12,10 +12,11 @@ Usage: python tools/audit_plan_convergence.py [sf_dir] [threshold]
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def effective_rule_counts(df):

@@ -21,10 +21,11 @@ Usage: python tools/gen_unicode_case_delta.py [out_path]
 
 from __future__ import annotations
 
+import os
 import sys
 import unicodedata
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
