@@ -125,8 +125,8 @@ def ivf_build(
 
 def _probe_buckets(centroids: list, query_vec, nprobe: int) -> list[int]:
     """The nprobe bucket ids whose centroids are nearest the query —
-    the ONE probe-selection kernel both ivf_topk and ivf_topk_from_store
-    use (a divergent copy here would silently split their semantics)."""
+    the ONE probe-selection kernel ivf_topk and pq.ivfpq_batch_topk
+    share (a divergent copy here would silently split their semantics)."""
     import numpy as np
 
     if not centroids:
@@ -154,7 +154,10 @@ def ivf_topk(
     k: int = 10,
     nprobe: int = 4,
 ) -> DataFrame:
-    """Probe the nprobe buckets whose centroids are nearest the query."""
+    """Probe the nprobe buckets whose centroids are nearest the query.
+    Over a bucket-partitioned store (``spark.read.parquet`` of an
+    ivf_write path) the bucket IN-list is a partition filter, so only
+    nprobe/nlist of the files are read."""
     probe = _probe_buckets(centroids, query_vec, nprobe)
     sim = cosine_similarity(F.col(vec_col), _vec_lit(query_vec))
     return (
@@ -207,30 +210,6 @@ def ivf_add_vectors(
     )
 
 
-def ivf_topk_from_store(
-    spark,
-    path: str,
-    centroids: list,
-    query_vec,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    nprobe: int = 4,
-) -> DataFrame:
-    """Probe a bucket-partitioned IVF store: the bucket IN-list predicate
-    prunes partitions at the scan, so only nprobe/nlist of the files are
-    read."""
-    probe = _probe_buckets(centroids, query_vec, nprobe)
-    store = spark.read.parquet(path)
-    sim = cosine_similarity(F.col(vec_col), _vec_lit(query_vec))
-    return (
-        store.filter(F.col("bucket").isin(probe))
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def batch_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -250,6 +229,7 @@ def batch_topk(
     candidate rows after the window's partial rank pruning, not the
     |corpus|×|queries| cross product. At 100 TB this is the batched
     retrieval pattern: scan cost is paid once for the whole query set.
+    pq.recall_audit ranks its exact panel top-k here.
 
     Output: (query_id, vec_id, cosine, rank), rank 1..k per query,
     deterministic tie-break on vec_id.

@@ -399,11 +399,13 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     # and the broadcast side has none. Forcing a shuffled hash join puts
     # the SAME Exchange(hashpartitioning(chunk, ckey)) on both sides, so
     # the second side becomes a ReusedExchange and the fingerprint UDF
-    # runs ONCE per materialization (plans/r15/simhash_pairs_after.txt:
-    # 2x ArrowEvalPython -> 1x + ReusedExchange; sf0.1 A/B min-of-3
-    # 1.445 s -> 1.046 s). At scale the broadcast was wrong anyway: the
-    # banded side IS the corpus, far over any broadcast cap, and the
-    # bucketed equi-join is exactly the shape AQE skew-split handles.
+    # runs ONCE per materialization (2x ArrowEvalPython -> 1x +
+    # ReusedExchange, pinned by tests/test_plan_properties.py::
+    # test_hamming_pairs_single_fingerprint_evaluation; sf0.1 A/B
+    # min-of-3 1.445 s -> 1.046 s). At scale the broadcast was wrong
+    # anyway: the banded side IS the corpus, far over any broadcast
+    # cap, and the bucketed equi-join is exactly the shape AQE
+    # skew-split handles.
     # Hot-key evidence (SCALING.md round-16 addendum): measured at
     # 4x the bench corpus with ONE chunk key holding 10%/30% of all
     # rows — completes, wall tracks the inherent n^2 pair output, build

@@ -6,9 +6,15 @@ operators/ann.py), IVF (reads nprobe/nlist of the data), SQ8
 tier real 100 TB deployments run, because it changes the SCAN UNIT:
 each D-dim float vector (4·D bytes) is stored as ``m`` small codes
 (m bytes at k <= 256), so the candidate scan reads ~32x fewer bytes
-than float vectors and never touches a float array — and IVF-PQ
-(bottom of this module), which composes the two reductions: the
-candidate scan reads nprobe/nlist of the ROWS at m bytes each.
+than float vectors and never touches a float array.
+
+PQ runs behind IVF's coarse quantizer (FAISS's IVFPQ shape, ONE shared
+codebook, so one ADC LUT per query serves every probed bucket): PQ
+shrinks the BYTES PER ROW the candidate scan reads, IVF shrinks the
+ROWS it touches (nprobe/nlist of the corpus, a partition-pruned scan
+when the codes land bucket-partitioned via ann.ivf_write). There is one
+retrieval path: flat PQ is IVF-PQ probed at nprobe = nlist (the bucket
+filter keeps every row), and a single query is a panel of one.
 
   * ``pq_train`` — per-subspace Lloyd codebooks, ALL subspaces in one
     distributed pass per iteration: the (sub, cid, pos) means are one
@@ -26,20 +32,22 @@ candidate scan reads nprobe/nlist of the ROWS at m bytes each.
     for the join formulation. Map-side partial aggregation folds the
     m·k joined rows back to m lanes per vector before the single
     id-keyed exchange.
-  * ``pq_topk`` — ADC (asymmetric distance computation): the m×k table
-    of query-subvector · centroid partials is computed ONCE per query
-    (driver-side numpy — it is m·k floats), broadcast as literals, and
-    each stored vector scores as sum_s LUT[s][code_s]: m array lookups
-    per row over the m-byte codes.
-  * ``pq_topk_rerank`` — the production two-stage: ADC shortlist of
-    ``shortlist`` ids (codes-only scan), then exact cosine re-rank of
-    just those rows (reads ``shortlist`` float vectors, not the
-    corpus). Recall approaches exact as shortlist grows while the
-    corpus-wide scan stays on codes.
-  * ``pq_recall_audit`` — certifies PQ recall against the exact top-k
-    the way the sketch tiers are graded (operators/sketches.py): both
-    paths run at audit scale, the output carries the exact ids and a
-    within-bound boolean contract.
+  * ``ivfpq_build`` — ann.ivf_build's coarse quantizer, one pq_train
+    codebook and one encode; the codes keep the bucket column.
+  * ``ivfpq_batch_topk`` — ADC (asymmetric distance computation) for a
+    whole query panel in ONE pass over the codes: each query's m×k
+    table of query-subvector · centroid partials (driver-side — m·k
+    floats) rides a (query, probed bucket) dimension joined into the
+    codes scan, and each row scores as sum_s LUT[s][code_s]: m array
+    lookups over the m-byte codes.
+  * ``ivfpq_batch_topk_rerank`` — the production two-stage: ADC
+    shortlist of ``shortlist`` ids per query (codes-only scan), then
+    exact cosine re-rank of just those rows (reads |panel|·shortlist
+    float vectors, not the corpus).
+  * ``recall_audit`` — certifies recall against the exact top-k the
+    way the sketch tiers are graded (operators/sketches.py): one build,
+    one exact panel ranking, one batched retrieval per probe width; the
+    output carries the exact ids and a within-bound boolean contract.
 
 Cosine ranking via PQ: vectors are L2-NORMALIZED before training and
 encoding (native expression), so inner product == cosine and the ADC
@@ -58,10 +66,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from idb_backend_spark.functions.similarity import cosine_similarity
+from idb_backend_spark.operators import ann
 
 
 def _l2_normalize(vec: Column) -> Column:
@@ -173,27 +182,8 @@ def pq_train(
     norm = df.select(
         F.col(id_col), _l2_normalize(F.col(vec_col)).alias("v")
     ).localCheckpoint(eager=True)
-    return _lloyd_codebook(norm, id_col, d_sub, m, k, iterations, sample_seed)
-
-
-def _lloyd_codebook(
-    vframe: DataFrame,
-    id_col: str,
-    d_sub: int,
-    m: int,
-    k: int,
-    iterations: int,
-    sample_seed: int,
-) -> list[list[list[float]]]:
-    """The per-subspace Lloyd loop over a prepared ``v`` column — shared
-    by pq_train (v = the L2-normalized vector) and the residual trainer
-    (v = vector − bucket centroid, deliberately NOT re-normalized:
-    residual magnitudes carry the information). ``vframe`` should be
-    pinned (localCheckpoint) by the caller — every round reads it."""
     sample = (
-        vframe.orderBy(
-            F.xxhash64(F.col("v").cast("string"), F.lit(sample_seed))
-        )
+        norm.orderBy(F.xxhash64(F.col("v").cast("string"), F.lit(sample_seed)))
         .limit(k)
         .collect()
     )
@@ -205,7 +195,7 @@ def _lloyd_codebook(
         for s in range(m)
     ]
     for _ in range(max(0, iterations)):
-        coded = _with_codes(vframe, codebook, [id_col])
+        coded = _with_codes(norm, codebook, [id_col])
         means = (
             coded.select(F.posexplode("codes").alias("sub", "cid"), "v")
             .select(
@@ -239,188 +229,42 @@ def pq_encode(
     codebook: list[list[list[float]]],
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    keep: tuple[str, ...] = (),
 ) -> DataFrame:
-    """(id, codes array<int>) — the stored form: m small ints per
+    """(id, *keep, codes array<int>) — the stored form: m small ints per
     vector. One assignment join + one id-keyed aggregation; at scale
     this frame is what the candidate scan reads (write it columnar and
     the float vectors are never touched until re-rank)."""
-    norm = df.select(
-        F.col(id_col), _l2_normalize(F.col(vec_col)).alias("v")
-    )
-    return _with_codes(norm, codebook, [id_col]).drop("v")
+    cols = [id_col, *keep]
+    norm = df.select(*cols, _l2_normalize(F.col(vec_col)).alias("v"))
+    return _with_codes(norm, codebook, cols).drop("v")
 
 
-def _adc_lut(codebook: list[list[list[float]]], query_vec) -> list[list[float]]:
-    """m×k table of query-subvector · centroid partials (driver-side:
-    it is m·k floats; the query is normalized here so LUT sums are
-    cosine approximations)."""
+def _adc_lut(codebook: list[list[list[float]]], query_vec) -> list[float]:
+    """The m×k table of query-subvector · centroid partials, flattened
+    row-major (entry s·k + c). Driver-side: it is m·k floats; the query
+    is normalized here so LUT sums are cosine approximations."""
     d_sub = len(codebook[0][0])
     q = [float(x) for x in query_vec]
     n = math.sqrt(sum(x * x for x in q)) or 1.0
     q = [x / n for x in q]
     return [
-        [
-            sum(q[s * d_sub + j] * float(c[j]) for j in range(d_sub))
-            for c in cb_s
-        ]
+        sum(q[s * d_sub + j] * float(c[j]) for j in range(d_sub))
         for s, cb_s in enumerate(codebook)
+        for c in cb_s
     ]
 
 
-def adc_score(codes: Column, lut: list[list[float]]) -> Column:
-    """sum_s LUT[s][code_s] — m 0-based array lookups (F.get) over the
-    codes column against broadcast literal rows."""
-    parts = [
-        F.get(
-            F.array(*[F.lit(float(v)) for v in lut_s]),
-            F.element_at(codes, s + 1),
-        )
-        for s, lut_s in enumerate(lut)
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out + p
-    return out
-
-
-def pq_topk(
-    codes_df: DataFrame,
-    codebook: list[list[list[float]]],
-    query_vec,
-    id_col: str = "vec_id",
-    k: int = 10,
-) -> DataFrame:
-    """ADC top-k over the codes frame: (id, adc) — TakeOrderedAndProject
-    (per-partition top-k, driver merge), never a full sort."""
-    lut = _adc_lut(codebook, query_vec)
-    return (
-        codes_df.select(
-            F.col(id_col),
-            F.round(adc_score(F.col("codes"), lut), 6).alias("adc"),
-        )
-        .orderBy(F.desc("adc"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_topk_rerank(
-    df: DataFrame,
-    codes_df: DataFrame,
-    codebook: list[list[list[float]]],
-    query_vec,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    shortlist: int = 100,
-) -> DataFrame:
-    """Two-stage production shape: ADC shortlist over codes (m bytes a
-    vector), exact cosine re-rank of only the shortlisted rows. The
-    shortlist id set is broadcast into a semi-ish inner join against
-    the float vectors — ``shortlist`` rows read, corpus untouched.
-    Output: (id, cosine) exact over the shortlist, top-k."""
-    short = pq_topk(codes_df, codebook, query_vec, id_col, shortlist).select(
-        id_col
-    )
-    from idb_backend_spark.operators.ann import _vec_lit
-
-    sim = cosine_similarity(F.col(vec_col), _vec_lit(query_vec))
-    return (
-        df.join(F.broadcast(short), id_col)
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def pq_recall_audit(
-    df: DataFrame,
-    queries: list[tuple],
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    shortlist: int = 100,
-    min_recall: float = 1.0,
-    m: int = 8,
-    n_codes: int = 16,
-    iterations: int = 3,
-) -> DataFrame:
-    """(query_id, exact_ids, recall, within_bound) per query — the
-    sketch-audit pattern (operators/sketches.py): train, encode, run
-    the two-stage PQ AND the exact top-k, and certify recall@k >=
-    ``min_recall``. ``queries`` is [(query_id, vector), ...] — a SMALL
-    audit panel (the loop runs 2 bounded jobs per query; batch
-    retrieval at scale is ann.batch_topk's broadcast shape, not this).
-    The exact ids (sorted) ride along so a gate slot hashes real
-    content, not just booleans. recall is rounded to 6 dp. Shortlist
-    sizing: recall rises with shortlist/corpus — measured minima over
-    a 10-query panel at 500 vectors: 0.7 / 0.8 / 0.9 at shortlist
-    100 / 150 / 200; the shortlist only changes how many FLOAT vectors
-    the re-rank reads, never the corpus-wide codes scan."""
-    from idb_backend_spark.operators.ann import brute_force_topk
-
-    codebook = pq_train(
-        df, dim, vec_col, id_col, m=m, k=n_codes, iterations=iterations
-    )
-    codes = pq_encode(df, codebook, vec_col, id_col).localCheckpoint(
-        eager=True
-    )
-    rows = []
-    for qid, qv in queries:
-        exact = [
-            r[id_col] for r in brute_force_topk(df, qv, vec_col, id_col, k).collect()
-        ]
-        got = {
-            r[id_col]
-            for r in pq_topk_rerank(
-                df, codes, codebook, qv, vec_col, id_col, k, shortlist
-            ).collect()
-        }
-        recall = (
-            len(got.intersection(exact)) / float(len(exact)) if exact else 1.0
-        )
-        rows.append(
-            (
-                int(qid),
-                sorted(int(i) for i in exact),
-                round(recall, 6),
-                recall >= min_recall,
-            )
-        )
-    spark = df.sparkSession
-    return spark.createDataFrame(
-        rows,
-        "query_id long, exact_ids array<long>, recall double, "
-        "within_bound boolean",
-    )
-
-
-# --------------------------------------------------------------------------
-# IVF-PQ — bucket-pruned PQ scan (the composition of the two tiers a
-# 100 TB ANN deployment actually runs: FAISS's IVFPQ shape, here in the
-# by_residual=False variant — ONE shared codebook, so one ADC LUT per
-# query serves every probed bucket; residual encoding would buy recall
-# at the cost of per-bucket LUT rebuilds and is a documented refinement,
-# not a different plan shape).
-#
-# What each tier contributes at scale: PQ shrinks the BYTES PER ROW the
-# candidate scan reads (m codes, ~32x less than float vectors); IVF
-# shrinks the ROWS the scan touches (nprobe/nlist of the corpus, a
-# partition-pruned scan when the codes land bucket-partitioned via
-# ann.ivf_write). Together the candidate stage reads
-# nprobe/nlist × m/(4·dim) of the raw corpus bytes.
-# --------------------------------------------------------------------------
-
-
-def _normalized_centroids(centroids: list) -> list[list[float]]:
-    """ĉ_b = c_b / ||c_b|| — the residual reference points (the coarse
-    centroids are raw-embedding means; the encoded vectors are
-    L2-normalized, so residuals must subtract the normalized form or
-    they would carry the magnitude mismatch instead of the geometry)."""
-    out = []
-    for c in centroids:
-        n = math.sqrt(sum(float(x) * float(x) for x in c)) or 1.0
-        out.append([float(x) / n for x in c])
+def adc_score(codes: Column, lut: Column, m: int, n_codes: int) -> Column:
+    """sum_s lut[s·n_codes + code_s] over a flat LUT column — m
+    element_at lookups unrolled into one native sum. No higher-order
+    function: an aggregate(sequence(...)) fold is a CodegenFallback
+    expression and would take the scoring Project out of whole-stage
+    codegen for the same values."""
+    out = None
+    for s in range(m):
+        term = F.element_at(lut, F.element_at(codes, s + 1) + (s * n_codes + 1))
+        out = term if out is None else out + term
     return out
 
 
@@ -434,251 +278,30 @@ def ivfpq_build(
     n_codes: int = 16,
     ivf_iterations: int = 2,
     pq_iterations: int = 3,
-    by_residual: bool = False,
 ) -> tuple[DataFrame, list, list[list[list[float]]]]:
     """(codes_df(id, bucket, codes), centroids, codebook).
 
     The coarse quantizer is ann.ivf_build's Lloyd loop; the codebook is
-    pq_train's — both trained on the same corpus, independently. The
-    codes frame keeps the bucket column so ann.ivf_write can land it
-    hive-partitioned (queries then prune partitions, not just filter).
+    pq_train's — both trained on the same corpus, independently, so the
+    codebook does not depend on nlist. The codes frame keeps the bucket
+    column so ann.ivf_write can land it hive-partitioned (queries then
+    prune partitions, not just filter).
 
-    ``by_residual=True`` is the FAISS-default refinement: the codebook
-    is trained on (and the codes encode) v̂ − ĉ_bucket instead of v̂.
-    On CLUSTERED corpora residuals are smaller than raw vectors, so the
-    same m·k code budget spends its resolution on the part of the
-    vector the coarse quantizer did NOT already explain; scoring adds
-    the exact per-(query, bucket) constant q̂·ĉ_b back (the identity
-    q̂·v̂ = q̂·ĉ_b + q̂·(v̂−ĉ_b)), so nothing is approximated twice.
-    Same plan shape either way — one extra broadcast join at build, one
-    per-bucket literal at query time.
-
-    Measured on the shipped synthetic embeddings (UNIFORMLY spread —
-    IVF's documented worst case, see ivf_ann_topk): residual coding
-    does NOT beat flat here (mean |adc − cosine| 0.083 vs 0.071 at
-    sf0.01; recall@10 comparable, both hold the 0.7 contract with
-    margin) because the coarse centroids explain almost nothing on a
-    cluster-free corpus, so residuals are as large as the vectors.
-    The flag exists for real (clustered) corpora; the honest default
-    stays False.
+    Residual coding (FAISS's default: encode v̂ − ĉ_bucket) is not
+    offered: measured on the shipped synthetic embeddings (uniformly
+    spread — IVF's documented worst case, see ivf_ann_topk) it did not
+    beat the shared codebook (mean |adc − cosine| 0.083 vs 0.071 at
+    sf0.01), because coarse centroids explain almost nothing on a
+    cluster-free corpus.
     """
-    from idb_backend_spark.operators import ann
-
     assigned, centroids = ann.ivf_build(
         df, vec_col, id_col, nlist=nlist, iterations=ivf_iterations
     )
-    if not by_residual:
-        codebook = pq_train(
-            df, dim, vec_col, id_col, m=m, k=n_codes, iterations=pq_iterations
-        )
-        norm = assigned.select(
-            F.col(id_col),
-            F.col("bucket"),
-            _l2_normalize(F.col(vec_col)).alias("v"),
-        )
-        codes = _with_codes(norm, codebook, [id_col, "bucket"]).drop("v")
-        return codes, centroids, codebook
-
-    spark = df.sparkSession
-    cn = _normalized_centroids(centroids)
-    cdim = spark.createDataFrame(
-        list(enumerate(cn)), "bucket int, __cb array<double>"
+    codebook = pq_train(
+        df, dim, vec_col, id_col, m=m, k=n_codes, iterations=pq_iterations
     )
-    resid = (
-        assigned.select(
-            F.col(id_col),
-            F.col("bucket"),
-            _l2_normalize(F.col(vec_col)).alias("__vn"),
-        )
-        .join(F.broadcast(cdim), "bucket")
-        .select(
-            F.col(id_col),
-            F.col("bucket"),
-            F.zip_with("__vn", "__cb", lambda a, b: a - b).alias("v"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    codebook = _lloyd_codebook(
-        resid, id_col, _check_geometry(dim, m), m, n_codes, pq_iterations, 42
-    )
-    codes = _with_codes(resid, codebook, [id_col, "bucket"]).drop("v")
+    codes = pq_encode(assigned, codebook, vec_col, id_col, keep=("bucket",))
     return codes, centroids, codebook
-
-
-def _bucket_offsets(centroids: list, query_vec, probe: list[int]) -> dict[int, float]:
-    """q̂·ĉ_b per probed bucket — the exact constants residual ADC adds
-    back (driver-side: nprobe doubles)."""
-    q = [float(x) for x in query_vec]
-    n = math.sqrt(sum(x * x for x in q)) or 1.0
-    q = [x / n for x in q]
-    cn = _normalized_centroids(centroids)
-    return {
-        b: sum(q[j] * cn[b][j] for j in range(len(q))) for b in probe
-    }
-
-
-def ivfpq_topk(
-    codes_df: DataFrame,
-    centroids: list,
-    codebook: list[list[list[float]]],
-    query_vec,
-    id_col: str = "vec_id",
-    k: int = 10,
-    nprobe: int = 4,
-    by_residual: bool = False,
-) -> DataFrame:
-    """ADC top-k over the PROBED buckets only: the bucket filter prunes
-    the codes scan to nprobe/nlist of the corpus (partition pruning when
-    the frame comes off an ann.ivf_write store), then the same m-lookup
-    ADC as pq_topk. Probe selection is ann._probe_buckets — the one
-    kernel every IVF variant shares. ``by_residual`` must match how the
-    codes were built: the score adds the exact q̂·ĉ_bucket constant per
-    probed bucket (a CASE over nprobe literals — free in codegen)."""
-    from idb_backend_spark.operators.ann import _probe_buckets
-
-    probe = _probe_buckets(centroids, query_vec, nprobe)
-    lut = _adc_lut(codebook, query_vec)
-    score = adc_score(F.col("codes"), lut)
-    if by_residual:
-        offs = _bucket_offsets(centroids, query_vec, probe)
-        off = None
-        for b in probe:
-            arm = F.lit(offs[b])
-            off = (
-                F.when(F.col("bucket") == b, arm)
-                if off is None
-                else off.when(F.col("bucket") == b, arm)
-            )
-        score = score + off
-    return (
-        codes_df.filter(F.col("bucket").isin(probe))
-        .select(
-            F.col(id_col),
-            F.round(score, 6).alias("adc"),
-        )
-        .orderBy(F.desc("adc"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivfpq_topk_rerank(
-    df: DataFrame,
-    codes_df: DataFrame,
-    centroids: list,
-    codebook: list[list[list[float]]],
-    query_vec,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    shortlist: int = 100,
-    nprobe: int = 4,
-    by_residual: bool = False,
-) -> DataFrame:
-    """Two-stage IVF-PQ: bucket-pruned ADC shortlist, exact cosine
-    re-rank of the shortlisted float vectors (pq_topk_rerank's shape
-    with the candidate scan further cut to the probed buckets)."""
-    from idb_backend_spark.operators.ann import _vec_lit
-
-    short = ivfpq_topk(
-        codes_df, centroids, codebook, query_vec, id_col, shortlist,
-        nprobe, by_residual,
-    ).select(id_col)
-    sim = cosine_similarity(F.col(vec_col), _vec_lit(query_vec))
-    return (
-        df.join(F.broadcast(short), id_col)
-        .select(F.col(id_col), F.round(sim, 6).alias("cosine"))
-        .orderBy(F.desc("cosine"), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivfpq_recall_audit(
-    df: DataFrame,
-    queries: list[tuple],
-    dim: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 10,
-    shortlist: int = 100,
-    nprobe: int = 4,
-    min_recall: float = 1.0,
-    nlist: int = 8,
-    m: int = 8,
-    n_codes: int = 16,
-    by_residual: bool = False,
-    certify_batch: bool = False,
-) -> DataFrame:
-    """pq_recall_audit's contract for the bucket-pruned composition:
-    (query_id, exact_ids, recall, within_bound) per audit query, recall
-    measured for the FULL two-stage IVF-PQ path (prune + ADC shortlist
-    + exact re-rank) against brute force. Loses recall vs flat PQ only
-    through the bucket pruning — at nprobe=nlist it must equal flat PQ
-    by construction (tests pin that identity).
-
-    ``certify_batch=True`` (r9) additionally runs the BATCHED panel
-    retrieval — ivfpq_batch_topk_rerank, the one-codes-pass-per-panel
-    shape that carries the deployment economics (4.6x measured
-    amortization at 16 queries) — over the same panel and appends a
-    ``batch_consistent`` boolean per query: the batched (vec_id,
-    cosine) ranking must equal the per-query loop's ROW FOR ROW,
-    scores included. The batch path shares every kernel with the
-    per-query path by construction; this column is the end-to-end
-    proof in the graded slot."""
-    from idb_backend_spark.operators.ann import brute_force_topk
-
-    codes, centroids, codebook = ivfpq_build(
-        df, dim, vec_col, id_col, nlist=nlist, m=m, n_codes=n_codes,
-        by_residual=by_residual,
-    )
-    codes = codes.localCheckpoint(eager=True)
-    rows = []
-    ranked: dict[int, list[tuple]] = {}
-    for qid, qv in queries:
-        exact = [
-            r[id_col]
-            for r in brute_force_topk(df, qv, vec_col, id_col, k).collect()
-        ]
-        got_rows = ivfpq_topk_rerank(
-            df, codes, centroids, codebook, qv,
-            vec_col, id_col, k, shortlist, nprobe, by_residual,
-        ).collect()
-        ranked[int(qid)] = [(r[id_col], r["cosine"]) for r in got_rows]
-        got = {r[id_col] for r in got_rows}
-        recall = (
-            len(got.intersection(exact)) / float(len(exact)) if exact else 1.0
-        )
-        rows.append(
-            (
-                int(qid),
-                sorted(int(i) for i in exact),
-                round(recall, 6),
-                recall >= min_recall,
-            )
-        )
-    spark = df.sparkSession
-    if not certify_batch:
-        return spark.createDataFrame(
-            rows,
-            "query_id long, exact_ids array<long>, recall double, "
-            "within_bound boolean",
-        )
-    batch_rows = ivfpq_batch_topk_rerank(
-        df, codes, centroids, codebook, queries,
-        vec_col, id_col, "query_id", k, shortlist, nprobe, by_residual,
-    ).collect()
-    got_batch: dict[int, list[tuple]] = {}
-    for r in sorted(batch_rows, key=lambda r: (r["query_id"], r["rank"])):
-        got_batch.setdefault(int(r["query_id"]), []).append(
-            (r[id_col], r["cosine"])
-        )
-    rows = [
-        r + (got_batch.get(r[0], []) == ranked[r[0]],) for r in rows
-    ]
-    return spark.createDataFrame(
-        rows,
-        "query_id long, exact_ids array<long>, recall double, "
-        "within_bound boolean, batch_consistent boolean",
-    )
 
 
 def ivfpq_batch_topk(
@@ -690,77 +313,49 @@ def ivfpq_batch_topk(
     query_id_col: str = "query_id",
     k: int = 10,
     nprobe: int = 4,
-    by_residual: bool = False,
 ) -> DataFrame:
-    """ADC top-k for MANY queries in ONE pass over the codes — the
-    batched form of ivfpq_topk (ann.batch_topk's amortization argument:
-    per-query jobs re-scan the corpus per query; here the codes are
-    read once for the whole panel).
+    """ADC top-k for a panel of queries in ONE pass over the codes
+    (ann.batch_topk's amortization argument: per-query jobs re-scan the
+    corpus per query; here the codes are read once for the panel).
 
-    ``queries`` is a driver-side [(query_id, vector), ...] panel — the
-    per-query probe sets and ADC LUTs are computed with the SAME shared
-    kernels the per-query path uses (ann._probe_buckets, _adc_lut), so
-    batch results equal per-query results row-for-row (test-pinned);
-    each LUT is m·k floats, so even thousands of queries are KBs. The
-    (query_id, bucket, lut) dimension joins the codes scan on bucket —
+    ``queries`` is a driver-side [(query_id, vector), ...] panel. Each
+    query's probe set is ann._probe_buckets (the one kernel every IVF
+    variant shares) and its LUT is m·k floats, so even thousands of
+    queries are KBs. The codes scan is filtered to the union of the
+    panel's probe sets BEFORE the join — off an ann.ivf_write store
+    that filter is a partition filter, so unprobed buckets are never
+    read. The (query_id, bucket, lut) dimension then joins on bucket —
     broadcast when it fits (size-gated, the neardup_index._gate_broadcast
     discipline: estimate rows × lut bytes, fall back to a plain join) —
-    then one native aggregate scores each (row, query) pair and a
-    per-query window keeps the top k.
-
-    ``by_residual`` MUST match how the codes were built (same contract
-    as ivfpq_topk): residual codes need the exact q̂·ĉ_bucket constant
-    added back per (query, bucket), and the qdim dimension already
-    carries exactly those rows — the offset rides it as one extra
-    double (``__off``, 0.0 in flat mode — adding an exact 0.0 keeps
-    the flat score bit-identical). Feeding residual-built codes through
-    with the default False silently mis-scores, so callers that build
-    with by_residual=True must pass it here too — r9, after ADVICE
-    flagged the schema-compatible silent-wrong-answer hole.
+    adc_score scores each (row, query) pair and a per-query window keeps
+    the top k. nprobe >= nlist probes every bucket: flat PQ.
 
     Output: (query_id, vec_id, adc, rank), rank 1..k per query,
     deterministic tie-break on vec_id.
     """
-    from pyspark.sql import Window
-
-    from idb_backend_spark.operators.ann import _probe_buckets
+    from idb_backend_spark.operators.neardup_index import _gate_broadcast
 
     spark = codes_df.sparkSession
-    m = len(codebook)
-    n_codes = len(codebook[0])
+    m, n_codes = len(codebook), len(codebook[0])
     rows = []
     for qid, qv in queries:
         lut = _adc_lut(codebook, qv)
-        flat = [float(v) for lut_s in lut for v in lut_s]
-        probe = _probe_buckets(centroids, qv, nprobe)
-        offs = (
-            _bucket_offsets(centroids, qv, probe)
-            if by_residual
-            else {b: 0.0 for b in probe}
-        )
-        for b in probe:
-            rows.append((int(qid), int(b), flat, float(offs[b])))
+        for b in ann._probe_buckets(centroids, qv, nprobe):
+            rows.append((int(qid), int(b), lut))
     qdim = spark.createDataFrame(
-        rows,
-        f"{query_id_col} long, bucket int, __lut array<double>, __off double",
+        rows, f"{query_id_col} long, bucket int, __lut array<double>"
     )
-    # size-gated broadcast — the one shared gate (threshold parsing
-    # incl. '64m'-style suffixes lives in exactly one place)
-    from idb_backend_spark.operators.neardup_index import _gate_broadcast
-
-    qdim = _gate_broadcast(qdim, len(rows) * (m * n_codes * 8 + 72), spark)
-    score = F.col("__off") + F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.col("__lut"), s * n_codes + F.element_at(F.col("codes"), s + 1) + 1
-        ),
-    )
-    scored = codes_df.join(qdim, "bucket").select(
-        F.col(query_id_col),
-        F.col(id_col),
-        F.round(score, 6).alias("adc"),
+    qdim = _gate_broadcast(qdim, len(rows) * (m * n_codes * 8 + 64), spark)
+    probed = sorted({r[1] for r in rows})
+    score = adc_score(F.col("codes"), F.col("__lut"), m, n_codes)
+    scored = (
+        codes_df.filter(F.col("bucket").isin(probed))
+        .join(qdim, "bucket")
+        .select(
+            F.col(query_id_col),
+            F.col(id_col),
+            F.round(score, 6).alias("adc"),
+        )
     )
     w = Window.partitionBy(query_id_col).orderBy(F.desc("adc"), F.col(id_col))
     return (
@@ -782,32 +377,26 @@ def ivfpq_batch_topk_rerank(
     k: int = 10,
     shortlist: int = 100,
     nprobe: int = 4,
-    by_residual: bool = False,
 ) -> DataFrame:
     """Two-stage batch retrieval: one codes pass shortlists every query,
     one join against the float vectors re-ranks only the shortlisted
     (query, candidate) pairs exactly — |queries|·shortlist rows read
-    from the vector table, the corpus scanned zero extra times. The
-    per-query equivalent of ivfpq_topk_rerank (test-pinned identity).
-    ``by_residual`` must match the codes build (see ivfpq_batch_topk).
+    from the vector table, the corpus scanned zero extra times.
 
     Output: (query_id, vec_id, cosine, rank), rank 1..k per query.
     """
-    from pyspark.sql import Window
-
     spark = df.sparkSession
     short = ivfpq_batch_topk(
         codes_df, centroids, codebook, queries,
-        id_col, query_id_col, shortlist, nprobe, by_residual,
+        id_col, query_id_col, shortlist, nprobe,
     ).select(query_id_col, id_col)
     qv_rows = [
         (int(qid), [float(x) for x in qv]) for qid, qv in queries
     ]
-    # array<double>, NOT array<float>: the per-query path (_vec_lit)
-    # builds double literals, and the 'scores included, row for row'
-    # batch_consistent contract needs both paths computing cosine from
-    # identical operands — a float32-narrowed external query vector can
-    # flip 6-dp near-ties (r9 ADVICE)
+    # array<double>, NOT array<float>: the exact side (ann.batch_topk in
+    # recall_audit, ann.brute_force_topk's literals) computes cosine
+    # from double operands, and a float32-narrowed external query
+    # vector can flip 6-dp near-ties between the two
     qvec = F.broadcast(
         spark.createDataFrame(
             qv_rows, f"{query_id_col} long, __qv array<double>"
@@ -833,4 +422,68 @@ def ivfpq_batch_topk_rerank(
             query_id_col, id_col, "cosine",
             F.col("rank").cast("bigint").alias("rank"),
         )
+    )
+
+
+def recall_audit(
+    df: DataFrame,
+    queries: list[tuple],
+    dim: int,
+    methods: dict[str, tuple[int, float]],
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    k: int = 10,
+    shortlist: int = 100,
+    nlist: int = 8,
+    m: int = 8,
+    n_codes: int = 16,
+) -> DataFrame:
+    """(method, query_id, exact_ids, recall, within_bound) per method
+    and audit query — the sketch-audit pattern (operators/sketches.py):
+    certify the two-stage retrieval's recall@k against the exact top-k.
+
+    ``queries`` is [(query_id, vector), ...] — a SMALL audit panel.
+    ``methods`` maps a method name to (nprobe, min_recall): flat PQ is
+    nprobe = nlist, IVF-PQ any narrower probe. Everything the methods
+    share runs once: one ivfpq_build (so one codebook), one exact
+    ranking of the whole panel (ann.batch_topk), then one batched
+    retrieval per method. The exact ids (sorted) ride along so a gate
+    slot hashes real content, not just booleans; recall is rounded to
+    6 dp. Shortlist sizing: recall rises with shortlist/corpus —
+    measured minima for flat PQ over a 10-query panel at 500 vectors:
+    0.7 / 0.8 / 0.9 at shortlist 100 / 150 / 200; the shortlist only
+    changes how many FLOAT vectors the re-rank reads, never the
+    codes scan."""
+    spark = df.sparkSession
+    codes, centroids, codebook = ivfpq_build(
+        df, dim, vec_col, id_col, nlist=nlist, m=m, n_codes=n_codes
+    )
+    codes = codes.localCheckpoint(eager=True)
+    panel = spark.createDataFrame(
+        [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
+        "query_id long, embedding array<double>",
+    )
+    exact: dict[int, list[int]] = {}
+    for r in ann.batch_topk(df, panel, vec_col, id_col, k=k).collect():
+        exact.setdefault(r["query_id"], []).append(int(r[id_col]))
+    rows = []
+    for method, (nprobe, min_recall) in methods.items():
+        got: dict[int, set] = {}
+        for r in ivfpq_batch_topk_rerank(
+            df, codes, centroids, codebook, queries,
+            vec_col, id_col, "query_id", k, shortlist, nprobe,
+        ).collect():
+            got.setdefault(r["query_id"], set()).add(r[id_col])
+        for qid, _ in queries:
+            ids = exact.get(int(qid), [])
+            hit = got.get(int(qid), set()).intersection(ids)
+            recall = len(hit) / float(len(ids)) if ids else 1.0
+            rows.append(
+                (method, int(qid), sorted(ids), round(recall, 6),
+                 recall >= min_recall)
+            )
+    return spark.createDataFrame(
+        rows,
+        "method string, query_id long, exact_ids array<long>, "
+        "recall double, within_bound boolean",
     )

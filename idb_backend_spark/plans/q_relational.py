@@ -188,20 +188,22 @@ def latest_object_per_url(spark, sf_dir):
     on the grouping keys satisfies the aggregate's distribution
     requirement, so Catalyst adds NO second exchange — the same single
     shuffle, parallel instead of serial (measured 3.3 s -> 1.2 s at
-    sf0.1 on local[32]; guarded no-op on wide scans). r15: the spread
-    is now RANGE placement on those keys — the SortAggregate leaves
-    each partition ordered by the group key, so the final
+    sf0.1 on local[32]; guarded no-op on wide scans). The spread is
+    RANGE placement on those keys — the SortAggregate leaves each
+    partition ordered by the group key, so the final
     orderBy(l_partkey, l_suppkey) is satisfied for free and its whole
-    exchange + sort disappears (1.23 s -> 0.91 s, 2 exchanges -> 1,
-    plans/r15/latest_object_per_url_{before,after}.txt)."""
+    exchange + sort disappears (1.23 s -> 0.91 s, 2 exchanges -> 1;
+    tests/test_plan_properties.py::test_range_spread_elides_final_orderby_exchange
+    pins the one-exchange shape)."""
     li = _t_spread(
         spark, sf_dir, "lineitem", "l_partkey", "l_suppkey", by_range=True
     )
-    # project to the consumed columns BEFORE the kernel (r15 s3, guide
-    # §2.3): max_by's payload struct is opaque to column pruning, so
-    # without this the scan read and the spread exchange shuffled all
-    # 11 lineitem columns to extract 4 from the winner (ReadSchema
-    # 11 -> 5 columns, plans/r15/latest_object_per_url_after.txt)
+    # project to the consumed columns BEFORE the kernel: max_by's
+    # payload struct is opaque to column pruning, so without this the
+    # scan read and the spread exchange shuffled all 11 lineitem
+    # columns to extract 4 from the winner (ReadSchema 11 -> 5 columns,
+    # pinned by tests/test_plan_properties.py::
+    # test_latest_kernels_scan_only_consumed_columns)
     li = li.select(
         "l_partkey", "l_suppkey", "l_orderkey", "l_linenumber", "l_shipdate"
     )

@@ -224,8 +224,8 @@ def ivf_incremental_ann(spark, sf_dir):
     # the shipped scales — measured, not assumed — so pruned exact top-10
     # is not an honest promise here, and pretending otherwise would make
     # the row scale-fragile.
-    return ann.ivf_topk_from_store(
-        spark, path, centroids, qvec, k=10, nprobe=8
+    return ann.ivf_topk(
+        spark.read.parquet(path), centroids, qvec, k=10, nprobe=8
     )
 
 

@@ -295,12 +295,14 @@ def tfidf_top_terms_q(spark, sf_dir):
 # (within_bound must be TRUE at these parameters), never the raw
 # recall values — the sketch_audits pattern (q_corpusops.py): estimates
 # are implementation-defined, contracts are portable. Two methods ride
-# the slot: flat PQ (recall>=0.8 gate; measures 0.9 min on this panel)
-# and the bucket-pruned IVF-PQ composition (recall>=0.7 gate — pruning
-# honestly costs recall; measures 0.9 min at nprobe=7 on this panel).
+# the slot: flat PQ (nprobe = nlist; recall>=0.8 gate; measures 0.9 min
+# on this panel) and the bucket-pruned IVF-PQ composition (recall>=0.7
+# gate — pruning honestly costs recall; measures 0.9 min at nprobe=7 on
+# this panel).
 _PQ_NQ = 4
 _PQ_K = 10
 _PQ_SHORTLIST = 200
+_PQ_NLIST = 8
 _PQ_MIN_RECALL = 0.8
 _IVFPQ_NPROBE = 7
 _IVFPQ_MIN_RECALL = 0.7
@@ -318,8 +320,7 @@ def _pq_recall_oracle() -> str:
         "t AS (SELECT query_id, "
         "  string_agg(vec_id, '|' ORDER BY vec_id) AS exact_ids "
         f"  FROM r WHERE rn <= {_PQ_K} GROUP BY query_id) "
-        "SELECT m.method, t.query_id, t.exact_ids, TRUE AS within_bound, "
-        "TRUE AS batch_consistent "
+        "SELECT m.method, t.query_id, t.exact_ids, TRUE AS within_bound "
         "FROM t CROSS JOIN (VALUES ('pq'), ('ivfpq')) AS m(method) "
         "ORDER BY method, query_id"
     )
@@ -334,23 +335,16 @@ def pq_recall_audit_q(spark, sf_dir):
     vectors) and IVF-PQ (the same ADC behind the coarse quantizer's
     bucket pruning — the candidate scan reads nprobe/nlist of the code
     rows on top of the byte shrink; the composition a 100 TB ANN
-    actually runs). Audit-contract grading (the sketch_audits pattern):
-    each method trains, retrieves, AND runs the exact top-k; the graded
-    columns are the exact-cosine id sets (real content, same 6-dp
-    rounding as the brute-force tier) plus the per-method recall
+    actually runs). Flat PQ IS IVF-PQ probed at nprobe = nlist, so both
+    methods share one pq.recall_audit: one build, one exact top-k of
+    the panel, and one batched panel retrieval per probe width (the
+    one-codes-pass shape that carries the deployment economics,
+    SCALING.md). Audit-contract grading (the sketch_audits pattern):
+    the graded columns are the exact-cosine id sets (real content, same
+    6-dp rounding as the brute-force tier) plus the per-method recall
     contract booleans (pq>=0.8, ivfpq>=0.7) — the slot fails iff either
     retrieval path degrades below its advertised bound. Raw recall
-    values are engine-side-only and deliberately NOT graded.
-
-    The same slot carries the BATCH contract: ``batch_consistent``
-    certifies that ivfpq_batch_topk_rerank — the one-codes-pass-per-
-    panel shape that carries the deployment economics (4.6x measured
-    amortization, SCALING.md) — returns the per-query results row for
-    row, cosine scores included. The flat-PQ rows carry TRUE by
-    transitivity, not by a separate run: the batched kernel exists only
-    for the IVF-PQ composition, flat PQ's batched deployment IS ivfpq
-    at nprobe=nlist, and tests/test_pq.py::
-    test_ivfpq_full_probe_equals_flat_pq pins that identity."""
+    values are engine-side-only and deliberately NOT graded."""
     emb = _t(spark, sf_dir, "embeddings")
     panel = [
         (r["vec_id"], list(r["embedding"]))
@@ -358,49 +352,26 @@ def pq_recall_audit_q(spark, sf_dir):
         .orderBy("vec_id")
         .collect()
     ]
-    flat = pq.pq_recall_audit(
+    audit = pq.recall_audit(
         emb,
         panel,
         64,
+        {
+            "pq": (_PQ_NLIST, _PQ_MIN_RECALL),
+            "ivfpq": (_IVFPQ_NPROBE, _IVFPQ_MIN_RECALL),
+        },
         k=_PQ_K,
         shortlist=_PQ_SHORTLIST,
-        min_recall=_PQ_MIN_RECALL,
-    ).select(
-        F.lit("pq").alias("method"),
+        nlist=_PQ_NLIST,
+    )
+    return audit.select(
+        "method",
         "query_id",
-        "exact_ids",
+        F.array_join(
+            F.transform("exact_ids", lambda x: x.cast("string")), "|"
+        ).alias("exact_ids"),
         "within_bound",
-        F.lit(True).alias("batch_consistent"),  # transitive, see docstring
-    )
-    ivf = pq.ivfpq_recall_audit(
-        emb,
-        panel,
-        64,
-        k=_PQ_K,
-        shortlist=_PQ_SHORTLIST,
-        nprobe=_IVFPQ_NPROBE,
-        min_recall=_IVFPQ_MIN_RECALL,
-        certify_batch=True,
-    ).select(
-        F.lit("ivfpq").alias("method"),
-        "query_id",
-        "exact_ids",
-        "within_bound",
-        "batch_consistent",
-    )
-    return (
-        flat.unionByName(ivf)
-        .select(
-            "method",
-            "query_id",
-            F.array_join(
-                F.transform("exact_ids", lambda x: x.cast("string")), "|"
-            ).alias("exact_ids"),
-            "within_bound",
-            "batch_consistent",
-        )
-        .orderBy("method", "query_id")
-    )
+    ).orderBy("method", "query_id")
 
 
 # the quality score's stopword ratio uses the English marker list — the
@@ -533,8 +504,9 @@ def corpus_curation_pipeline(spark, sf_dir):
 
 # Catalog entry `ann_batch_topk` retired to free a grading
 # slot (catalog.py retirement rule). The batched-query kernel is the SAME
-# rounded-cosine + window-top-k expression `ann_cosine_topk` grades
-# single-query; `ann.batch_topk` keeps its broadcast-
+# rounded-cosine + window-top-k expression `ann_cosine_topk` projects
+# single-query, and it stays graded: `pq_recall_audit` ranks its exact
+# panel top-k with `ann.batch_topk`. It also keeps its broadcast-
 # plan assertion AND a per-query-equals-exact-brute-force value test in
 # tests/test_plan_properties.py / tests/test_properties.py.
 

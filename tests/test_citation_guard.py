@@ -2,7 +2,8 @@
 package, bench.py or the tests (retirement rationales, docstrings,
 comments — the grading audit trail) must name a file that actually
 exists, and a cited ``::test_function`` must exist inside that file.
-Cited ``tools/*.py`` scripts and repo-root ``*.md`` docs must exist too.
+Cited ``tools/*.py`` scripts, ``plans/<dir>/<file>`` plan captures and
+repo-root ``*.md`` docs must exist too.
 
 Round-8 defect #2 was exactly this drift: a dqs retirement rationale
 cited a flags test file that had never existed — a dangling citation in
@@ -25,6 +26,26 @@ _CITE = re.compile(r"tests/(test_\w+)\.py(?:\s*::\s*(?:#\s*)?(test_\w+))?")
 _TOOL = re.compile(r"tools/(\w+)\.py")
 # a bare doc name, not a path into a subdirectory (perfbench/README.md)
 _DOC = re.compile(r"(?<![\w/.-])([\w-]+\.md)\b")
+# a capture under the repo-root plans/ directory — not a module of the
+# package's idb_backend_spark/plans/ (the lookbehind rejects the prefix)
+_PLAN = re.compile(r"(?<![\w/.-])plans/\w+/[\w.{},-]+")
+
+
+def _plan_cites(text: str) -> list[str]:
+    """Cited plan-capture paths, ``{a,b}`` brace lists expanded."""
+    out = []
+    todo = [m.group(0).rstrip(".,") for m in _PLAN.finditer(text)]
+    while todo:
+        path = todo.pop()
+        b = re.search(r"\{([^}]*)\}", path)
+        if b is None:
+            out.append(path)
+        else:
+            todo += [
+                path[: b.start()] + alt + path[b.end() :]
+                for alt in b.group(1).split(",")
+            ]
+    return sorted(out)
 
 
 def _sources() -> list[Path]:
@@ -65,9 +86,24 @@ def test_cited_tools_and_docs_exist():
         text = src.read_text()
         cited = [f"tools/{m.group(1)}.py" for m in _TOOL.finditer(text)]
         cited += [m.group(1) for m in _DOC.finditer(text)]
+        cited += _plan_cites(text)
         missing += [
             f"{src.relative_to(REPO)} cites {c} (absent)"
             for c in cited
             if not (REPO / c).exists()
         ]
     assert not missing, "dangling tool/doc citations:\n" + "\n".join(missing)
+
+
+def test_plan_capture_citation_pattern():
+    # the root spelled apart so this file holds no citation of its own
+    d = "plans" + "/"
+    text = (
+        f"see {d}base/q_{{before,after}}.txt, and {d}noaqe/x_noaqe.txt. "
+        "Not idb_backend_spark/plans/q_relational.py"
+    )
+    assert _plan_cites(text) == [
+        f"{d}base/q_after.txt",
+        f"{d}base/q_before.txt",
+        f"{d}noaqe/x_noaqe.txt",
+    ]

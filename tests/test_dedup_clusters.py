@@ -71,6 +71,8 @@ def test_dedup_keep_canonical(spark):
 def test_ivf_partitioned_store_prunes(spark, tmp_path):
     """The IVF scale path: bucket-partitioned store + partition-pruned
     probe, recall checked against brute force."""
+    import re
+
     from pyspark.sql import functions as F
 
     from idb_backend_spark.operators import ann
@@ -81,7 +83,8 @@ def test_ivf_partitioned_store_prunes(spark, tmp_path):
     path = str(tmp_path / "ivf")
     ann.ivf_write(assigned, path)
 
-    out = ann.ivf_topk_from_store(spark, path, centroids, qvec, k=10, nprobe=8)
+    store = spark.read.parquet(path)
+    out = ann.ivf_topk(store, centroids, qvec, k=10, nprobe=8)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "bucket" in plan
     # nprobe = nlist: identical to brute force
@@ -90,9 +93,10 @@ def test_ivf_partitioned_store_prunes(spark, tmp_path):
         r["vec_id"] for r in brute.collect()
     ]
     # nprobe < nlist: the query vector's own bucket must surface vec 0 first
-    pruned = ann.ivf_topk_from_store(
-        spark, path, centroids, qvec, k=10, nprobe=3
-    )
+    pruned = ann.ivf_topk(store, centroids, qvec, k=10, nprobe=3)
+    # the probe's IN-list is a partition filter: unprobed buckets unread
+    pplan = pruned._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PartitionFilters: \[[^\]]*bucket#\d+ IN \(", pplan), pplan
     assert pruned.first()["vec_id"] == 0
 
 
@@ -119,9 +123,7 @@ def test_ivf_add_vectors_incremental(spark, tmp_path):
     # a query ON one of the added vectors finds itself with full probes
     added_id = extra.first()["vec_id"]
     qvec = extra.filter(F.col("vec_id") == added_id).first()["embedding"]
-    out = ann.ivf_topk_from_store(
-        spark, path, centroids, qvec, k=5, nprobe=4
-    )
+    out = ann.ivf_topk(store, centroids, qvec, k=5, nprobe=4)
     assert out.first()["vec_id"] == added_id
     # idempotence of the base set: original ids all still present
     assert store.filter(F.col("vec_id") < 40).count() == n_base

@@ -1,8 +1,11 @@
 """Product-quantization ANN (operators/pq.py): geometry validation,
 codebook determinism, a numpy replica of the encoder (an independent
-implementation of normalize + per-subspace argmin), ADC-vs-replica
-scoring, two-stage recall on the real embeddings table, the audit
-contract, and the broadcast/native plan shape."""
+implementation of normalize + per-subspace argmin), batched ADC scoring
+vs the replica, two-stage recall and the audit contract on the real
+embeddings table, the full-probe == flat-PQ identity, partition pruning
+off an ivf_write store, and the broadcast/native plan shapes. Every
+retrieval runs the one batched kernel; a single query is a panel of
+one, and it must rank the same alone as inside a larger panel."""
 
 import math
 
@@ -10,7 +13,52 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from idb_backend_spark.operators import pq
+from idb_backend_spark.operators import ann, pq
+
+
+def _panel(df, n):
+    return [(r["vec_id"], list(r["embedding"])) for r in df.limit(n).collect()]
+
+
+def _by_query(rows, *cols):
+    """{query_id: [(cols...), ...]} in rank order."""
+    out = {}
+    for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+        out.setdefault(r["query_id"], []).append(tuple(r[c] for c in cols))
+    return out
+
+
+def _plan(df) -> str:
+    import contextlib
+    import io
+
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        df.explain(mode="formatted")
+    return buf.getvalue()
+
+
+@pytest.fixture(scope="module")
+def built(spark, sf_dir):
+    """One IVF-PQ build of the real embeddings table (nlist=8, the
+    graded geometry), codes pinned — shared by the tests that only
+    retrieve."""
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8)
+    return codes.localCheckpoint(eager=True), cents, cb
+
+
+@pytest.fixture(scope="module")
+def audit(spark, sf_dir):
+    """The graded audit parameters: flat PQ (nprobe = nlist = 8) at
+    recall >= 0.8 and IVF-PQ at nprobe=7 at recall >= 0.7, shortlist
+    200, over a 4-query panel — one recall_audit run for both."""
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    rows = pq.recall_audit(
+        df, _panel(df, 4), 64, {"pq": (8, 0.8), "ivfpq": (7, 0.7)},
+        k=10, shortlist=200,
+    ).collect()
+    return {m: [r for r in rows if r["method"] == m] for m in ("pq", "ivfpq")}
 
 
 def _np_codes(vec, codebook):
@@ -88,39 +136,44 @@ def test_pq_encode_matches_numpy_replica(spark, sf_dir):
 
 
 def test_pq_adc_matches_numpy_lut(spark, sf_dir):
+    """The batched ADC score of every row equals a numpy LUT summed
+    over the replica's codes, for each query of a full-probe panel of 4;
+    the same query run as a panel of one gets the same rows, scores and
+    ranks."""
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(50)
-    cb = pq.pq_train(df, 64, iterations=1)
-    codes = pq.pq_encode(df, cb)
-    qv = list(df.limit(1).collect()[0]["embedding"])
-    got = {
-        r["vec_id"]: r["adc"]
-        for r in pq.pq_topk(codes, cb, qv, k=50).collect()
-    }
-    # replica: normalized-query LUT summed over the replica's codes
-    q = np.asarray(qv, dtype=float)
-    q = q / (np.linalg.norm(q) or 1.0)
-    lut = [
-        [float(np.dot(q[s * 8 : (s + 1) * 8], np.asarray(c))) for c in cb[s]]
-        for s in range(8)
-    ]
+    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=4, pq_iterations=1)
+    codes = codes.localCheckpoint(eager=True)
+    panel = _panel(df, 4)
+    got = _by_query(
+        pq.ivfpq_batch_topk(codes, cents, cb, panel, k=50, nprobe=4).collect(),
+        "vec_id", "adc",
+    )
     vecs = {r["vec_id"]: list(r["embedding"]) for r in df.collect()}
-    for vid, adc in got.items():
-        cs = _np_codes(vecs[vid], cb)
-        want = sum(lut[s][cs[s]] for s in range(8))
-        assert math.isclose(adc, round(want, 6), abs_tol=1.5e-6), vid
+    for qid, qv in panel:
+        # full probe: every row scored, none dropped by the bucket filter
+        assert len(got[qid]) == len(vecs), qid
+        # replica: normalized-query LUT summed over the replica's codes
+        q = np.asarray(qv, dtype=float)
+        q = q / (np.linalg.norm(q) or 1.0)
+        lut = [
+            [float(np.dot(q[s * 8 : (s + 1) * 8], np.asarray(c))) for c in cb[s]]
+            for s in range(8)
+        ]
+        for vid, adc in got[qid]:
+            cs = _np_codes(vecs[vid], cb)
+            want = sum(lut[s][cs[s]] for s in range(8))
+            assert math.isclose(adc, round(want, 6), abs_tol=1.5e-6), (qid, vid)
+    qid, qv = panel[-1]
+    alone = pq.ivfpq_batch_topk(codes, cents, cb, [(qid, qv)], k=50, nprobe=4)
+    assert _by_query(alone.collect(), "vec_id", "adc") == {qid: got[qid]}
 
 
-def test_pq_rerank_recall_and_audit(spark, sf_dir):
-    """Two-stage PQ (codes shortlist -> exact re-rank) must recover
-    >= 80% of the exact top-10 on the real embeddings table, and the
-    audit operator must report the same through its contract schema."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(4).collect()
-    ]
-    out = pq.pq_recall_audit(
-        df, queries, 64, k=10, shortlist=200, min_recall=0.8
-    ).collect()
+def test_pq_rerank_recall_and_audit(spark, sf_dir, built, audit):
+    """Flat PQ — the batched kernel at nprobe = nlist, codes shortlist
+    then exact re-rank — must recover >= 80% of the exact top-10 on the
+    real embeddings table, reported through the audit's contract
+    schema; a query re-ranks the same alone as inside the panel."""
+    out = audit["pq"]
     assert len(out) == 4
     for r in out:
         assert r["within_bound"], (r["query_id"], r["recall"])
@@ -128,18 +181,26 @@ def test_pq_rerank_recall_and_audit(spark, sf_dir):
         # exact ids include the query itself (cosine 1.0 with itself)
         assert r["query_id"] in r["exact_ids"]
 
+    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    codes, cents, cb = built
+    panel = _panel(df, 4)
+    whole = _by_query(
+        pq.ivfpq_batch_topk_rerank(
+            df, codes, cents, cb, panel, k=10, shortlist=200, nprobe=8
+        ).collect(),
+        "vec_id", "cosine",
+    )
+    qid, qv = panel[1]
+    alone = pq.ivfpq_batch_topk_rerank(
+        df, codes, cents, cb, [(qid, qv)], k=10, shortlist=200, nprobe=8
+    )
+    assert _by_query(alone.collect(), "vec_id", "cosine") == {qid: whole[qid]}
+
 
 def test_pq_encode_plan_is_broadcast_and_native(spark, sf_dir):
-    import contextlib
-    import io
-
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     cb = pq.pq_train(df, 64, iterations=0)
-    enc = pq.pq_encode(df, cb)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        enc.explain(mode="formatted")
-    text = buf.getvalue()
+    text = _plan(pq.pq_encode(df, cb))
     assert "BatchEvalPython" not in text and "ArrowEvalPython" not in text
     # the centroid dimension rides a broadcast — the corpus is never
     # shuffled by the assignment join
@@ -150,20 +211,19 @@ def test_pq_encode_plan_is_broadcast_and_native(spark, sf_dir):
 # --------------------------------------------------------------------------
 
 
-def test_ivfpq_full_probe_equals_flat_pq(spark, sf_dir):
-    """At nprobe == nlist the bucket filter keeps every row, the shared
-    codebook builds the identical ADC LUT, and the two-stage result must
-    EQUAL flat PQ's row-for-row — the composition adds pruning, never a
-    different scoring path. (The codebooks must be trained identically:
-    ivfpq_build calls the same pq_train with the same seed.)"""
+def test_ivfpq_full_probe_equals_flat_pq(spark, sf_dir, built):
+    """Flat PQ is IVF-PQ probed at nprobe = nlist: the bucket filter
+    keeps every row and the shared codebook builds the identical LUT,
+    so the batched kernel at full probe must EQUAL a flat PQ built with
+    no coarse quantizer — pq_train + pq_encode, every code row scored
+    with adc_score, the shortlist re-ranked by brute-force cosine — row
+    for row in both stages. (ivfpq_build calls the same pq_train with
+    the same seed, so the codebooks must match.)"""
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     qv = list(df.filter(F.col("vec_id") == 0).first()["embedding"])
+    codes, cents, cb2 = built
 
     cb = pq.pq_train(df, 64)
-    flat_codes = pq.pq_encode(df, cb)
-    flat = pq.pq_topk_rerank(df, flat_codes, cb, qv, k=10, shortlist=100)
-
-    codes, cents, cb2 = pq.ivfpq_build(df, 64, nlist=8)
     # same train, same seed -> same codebook, compared per-element with
     # a tolerance: pq.py documents that shuffle-order float sums make
     # the last ulp of a distributed mean nondeterministic in principle,
@@ -176,240 +236,88 @@ def test_ivfpq_full_probe_equals_flat_pq(spark, sf_dir):
                 assert math.isclose(
                     cb2[s][c][j], cb[s][c][j], rel_tol=1e-9, abs_tol=1e-12
                 ), (s, c, j)
-    comp = pq.ivfpq_topk_rerank(
-        df, codes, cents, cb2, qv, k=10, shortlist=100, nprobe=8
-    )
-    assert [tuple(r) for r in flat.collect()] == [
-        tuple(r) for r in comp.collect()
+
+    flat_codes = pq.pq_encode(df, cb)
+    lut = F.array(*[F.lit(x) for x in pq._adc_lut(cb, qv)])
+    flat = [
+        (r["vec_id"], r["adc"])
+        for r in flat_codes.select(
+            "vec_id",
+            F.round(pq.adc_score(F.col("codes"), lut, 8, 16), 6).alias("adc"),
+        )
+        .orderBy(F.desc("adc"), "vec_id")
+        .limit(100)
+        .collect()
     ]
+    comp = pq.ivfpq_batch_topk(codes, cents, cb2, [(0, qv)], k=100, nprobe=8)
+    assert _by_query(comp.collect(), "vec_id", "adc") == {0: flat}
+
+    short = spark.createDataFrame([(v,) for v, _ in flat], "vec_id long")
+    want = ann.brute_force_topk(df.join(short, "vec_id"), qv, k=10)
+    got = pq.ivfpq_batch_topk_rerank(
+        df, codes, cents, cb2, [(0, qv)], k=10, shortlist=100, nprobe=8
+    )
+    assert _by_query(got.collect(), "vec_id", "cosine") == {
+        0: [(r["vec_id"], r["cosine"]) for r in want.collect()]
+    }
 
 
-def test_ivfpq_recall_audit_contract(spark, sf_dir):
+def test_ivfpq_recall_audit_contract(audit):
     """The graded parameters (nprobe=7 of nlist=8, shortlist=200) must
     recover >= 70% of the exact top-10 per audit query on the real
     embeddings table — measured 0.9 minimum on this panel; the gate
     leaves the documented pruning margin."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(4).collect()
-    ]
-    out = pq.ivfpq_recall_audit(
-        df, queries, 64, k=10, shortlist=200, nprobe=7, min_recall=0.7
-    ).collect()
+    out = audit["ivfpq"]
     assert len(out) == 4
     for r in out:
         assert r["within_bound"], (r["query_id"], r["recall"])
         assert r["query_id"] in r["exact_ids"]
 
 
-def test_ivfpq_store_scan_prunes_partitions(spark, sf_dir, tmp_path):
+def test_ivfpq_store_scan_prunes_partitions(spark, sf_dir, built, tmp_path):
     """The scale claim made physical: land the codes frame through
-    ann.ivf_write (hive-partitioned by bucket) and the probed top-k scan
-    must show partition pruning — only nprobe of nlist partitions read."""
-    from idb_backend_spark.operators import ann
+    ann.ivf_write (hive-partitioned by bucket) and the batched scan must
+    show partition pruning — only the union of the panel's probe sets
+    is read — while returning what the in-memory codes return."""
+    import re
 
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8)
+    codes, cents, cb = built
     store = str(tmp_path / "ivfpq_store")
     ann.ivf_write(codes, store)
     stored = spark.read.parquet(store)
-    qv = list(df.filter(F.col("vec_id") == 0).first()["embedding"])
-    out = pq.ivfpq_topk(stored, cents, cb, qv, k=10, nprobe=3)
+    panel = _panel(df, 2)
+    out = pq.ivfpq_batch_topk(stored, cents, cb, panel, k=10, nprobe=3)
 
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(mode="formatted")
-    plan = buf.getvalue()
-    # the bucket predicate lands as a PARTITION filter on the scan (an
-    # empty "PartitionFilters: []" or a data filter would mean the probe
-    # reads all nlist partitions); inputFiles() can't check this — it
-    # lists the relation pre-pruning
-    m = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
-    assert m, plan
-    assert "bucket" in m[0] and "[]" not in m[0], m[0]
-    # and it still returns k rows scored by ADC
-    assert out.count() == 10
+    # the bucket IN-list lands as a PARTITION filter on the scan; an
+    # empty "PartitionFilters: []", or only the join's inferred
+    # isnotnull(bucket), would mean the scan reads all nlist partitions.
+    # inputFiles() can't check this — it lists the relation pre-pruning
+    m = [ln for ln in _plan(out).splitlines() if "PartitionFilters" in ln]
+    assert m, _plan(out)
+    assert re.search(r"bucket#\d+ (IN \(|INSET )", m[0]), m[0]
+    got = _by_query(out.collect(), "vec_id", "adc")
+    assert all(len(v) == 10 for v in got.values()) and len(got) == 2
+    mem = pq.ivfpq_batch_topk(codes, cents, cb, panel, k=10, nprobe=3)
+    assert got == _by_query(mem.collect(), "vec_id", "adc")
 
 
-def test_ivfpq_batch_equals_per_query(spark, sf_dir):
-    """The batched forms must equal the per-query paths ROW-FOR-ROW
-    (same probe kernel, same LUT builder, same rounding): one codes pass
-    for the panel is an amortization, never a different answer. Also
-    pins the ADC column-score expression against adc_score's literal
-    form — the two scoring implementations share doubles and sum order."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8)
-    codes = codes.localCheckpoint(eager=True)
-    panel = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(3).collect()
-    ]
-
-    batch = pq.ivfpq_batch_topk(
-        codes, cents, cb, panel, k=5, nprobe=3
-    ).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["query_id"], []).append((r["vec_id"], r["adc"]))
-    for qid, qv in panel:
-        single = [
-            (r["vec_id"], r["adc"])
-            for r in pq.ivfpq_topk(codes, cents, cb, qv, k=5, nprobe=3).collect()
-        ]
-        assert got[qid] == single, qid
-
-    rerank = pq.ivfpq_batch_topk_rerank(
-        df, codes, cents, cb, panel, k=5, shortlist=50, nprobe=3
-    ).collect()
-    got_rr = {}
-    for r in rerank:
-        got_rr.setdefault(r["query_id"], []).append((r["vec_id"], r["cosine"]))
-    for qid, qv in panel:
-        single = [
-            (r["vec_id"], r["cosine"])
-            for r in pq.ivfpq_topk_rerank(
-                df, codes, cents, cb, qv, k=5, shortlist=50, nprobe=3
-            ).collect()
-        ]
-        assert got_rr[qid] == single, qid
-
-
-def test_ivfpq_batch_residual_equals_per_query(spark, sf_dir):
-    """by_residual through the BATCH paths (r9, closing the ADVICE
-    hole: residual-built codes fed to the batch kernel with the flag
-    silently omitted the q·c_bucket offset): batch(by_residual=True)
-    over residual codes must equal per-query by_residual=True
-    row-for-row, and must DIFFER from the flag-omitted batch scoring
-    (proving the offset actually participates)."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8, by_residual=True)
-    codes = codes.localCheckpoint(eager=True)
-    panel = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(3).collect()
-    ]
-    batch = pq.ivfpq_batch_topk(
-        codes, cents, cb, panel, k=5, nprobe=3, by_residual=True
-    ).collect()
-    got = {}
-    for r in batch:
-        got.setdefault(r["query_id"], []).append((r["vec_id"], r["adc"]))
-    for qid, qv in panel:
-        single = [
-            (r["vec_id"], r["adc"])
-            for r in pq.ivfpq_topk(
-                codes, cents, cb, qv, k=5, nprobe=3, by_residual=True
-            ).collect()
-        ]
-        assert got[qid] == single, qid
-    # the offset must be load-bearing: flat-mode scoring of the same
-    # residual codes yields different adc values for the same rows
-    flat_scored = pq.ivfpq_batch_topk(
-        codes, cents, cb, panel, k=5, nprobe=3, by_residual=False
-    ).collect()
-    flat_adc = {(r["query_id"], r["vec_id"]): r["adc"] for r in flat_scored}
-    resid_adc = {(r["query_id"], r["vec_id"]): r["adc"] for r in batch}
-    common = set(flat_adc) & set(resid_adc)
-    assert common and any(flat_adc[p] != resid_adc[p] for p in common)
-
-    rerank = pq.ivfpq_batch_topk_rerank(
-        df, codes, cents, cb, panel, k=5, shortlist=50, nprobe=3,
-        by_residual=True,
-    ).collect()
-    got_rr = {}
-    for r in rerank:
-        got_rr.setdefault(r["query_id"], []).append((r["vec_id"], r["cosine"]))
-    for qid, qv in panel:
-        single = [
-            (r["vec_id"], r["cosine"])
-            for r in pq.ivfpq_topk_rerank(
-                df, codes, cents, cb, qv, k=5, shortlist=50, nprobe=3,
-                by_residual=True,
-            ).collect()
-        ]
-        assert got_rr[qid] == single, qid
-
-
-def test_ivfpq_recall_audit_certify_batch_column(spark, sf_dir):
-    """certify_batch=True appends a batch_consistent boolean that is
-    TRUE for every audit query at the graded parameters — the graded
-    slot's end-to-end proof that the batched panel retrieval equals
-    the per-query loop, scores included."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(4).collect()
-    ]
-    out = pq.ivfpq_recall_audit(
-        df, queries, 64, k=10, shortlist=200, nprobe=7,
-        min_recall=0.7, certify_batch=True,
-    ).collect()
-    assert len(out) == 4
-    for r in out:
-        assert r["within_bound"], (r["query_id"], r["recall"])
-        assert r["batch_consistent"], r["query_id"]
-
-
-def test_ivfpq_batch_plan_is_native_broadcast(spark, sf_dir):
+def test_ivfpq_batch_plan_is_native_broadcast(spark, sf_dir, built):
     """The batch scoring plan must stay JVM-side (no Python eval) with
     the query dimension broadcast (a KB-scale panel must never shuffle
-    the codes scan)."""
-    import contextlib
-    import io
-
+    the codes scan), and the ADC score must be the unrolled element_at
+    sum — no lambda or aggregate() fold, which is a CodegenFallback
+    expression and would pull the scoring Project out of whole-stage
+    codegen."""
     df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8)
-    panel = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(3).collect()
-    ]
-    out = pq.ivfpq_batch_topk(codes, cents, cb, panel, k=5, nprobe=3)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain(mode="formatted")
-    plan = buf.getvalue()
+    codes, cents, cb = built
+    out = pq.ivfpq_batch_topk(codes, cents, cb, _panel(df, 3), k=5, nprobe=3)
+    plan = _plan(out)
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "Broadcast" in plan
-
-
-def test_ivfpq_residual_contract_and_score_identity(spark, sf_dir):
-    """by_residual=True must (a) hold the recall>=0.7 contract at the
-    graded parameters, and (b) score each row as EXACTLY the per-bucket
-    offset q·c_b plus the residual-LUT sum — verified against a numpy
-    replica of the LUT and the driver-side offsets, so the column
-    arithmetic can't silently drop the offset or double-apply it."""
-    df = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = [
-        (r["vec_id"], list(r["embedding"])) for r in df.limit(4).collect()
+    scoring = [
+        ln for ln in plan.splitlines() if "__lut" in ln and "element_at" in ln
     ]
-    out = pq.ivfpq_recall_audit(
-        df, queries, 64, k=10, shortlist=200, nprobe=7,
-        min_recall=0.7, by_residual=True,
-    ).collect()
-    for r in out:
-        assert r["within_bound"], (r["query_id"], r["recall"])
-
-    codes, cents, cb = pq.ivfpq_build(df, 64, nlist=8, by_residual=True)
-    qv = queries[0][1]
-    got = {
-        r["vec_id"]: r["adc"]
-        for r in pq.ivfpq_topk(
-            codes, cents, cb, qv, k=30, nprobe=8, by_residual=True
-        ).collect()
-    }
-    rows = {
-        r["vec_id"]: (r["bucket"], list(r["codes"]))
-        for r in codes.filter(F.col("vec_id").isin(*got)).collect()
-    }
-    # numpy LUT replica (the existing adc test's construction) + the
-    # exact offsets from the shared kernel
-    q = np.asarray(qv, dtype=float)
-    q = q / (np.linalg.norm(q) or 1.0)
-    lut = [
-        [float(np.dot(q[s * 8 : (s + 1) * 8], np.asarray(c))) for c in cb[s]]
-        for s in range(8)
-    ]
-    offs = pq._bucket_offsets(cents, qv, list(range(8)))
-    for vid, adc in got.items():
-        b, cs = rows[vid]
-        want = offs[b] + sum(lut[s][cs[s]] for s in range(8))
-        assert math.isclose(adc, round(want, 6), abs_tol=1.5e-6), vid
+    assert scoring, plan
+    for ln in scoring:
+        assert "lambda" not in ln and "aggregate(" not in ln, ln
