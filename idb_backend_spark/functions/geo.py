@@ -14,8 +14,10 @@ Architecture (the part that matters at 100 TB):
   coarse grid (rg.py:21-50) before any exact containment test — the
   polygon set is a dimension table, never shuffled with the data.
 
-shapely is optional: without it the reverse geocoder falls back to a
-pure-Python ray cast with identical semantics for simple rings.
+Polygon containment is one pure-Python even-odd ray cast, so a
+lookup's answer never depends on which optional packages are installed
+(shapely's ``intersects`` counts a ring-edge point as inside; the ray
+cast, like the shim's native point_in_polygon, does not).
 """
 
 from __future__ import annotations
@@ -444,20 +446,10 @@ def mangle_string(s: str) -> str:
 # --------------------------------------------------------------------------
 
 
-try:  # pragma: no cover - optional exact-geometry backend
-    from shapely.geometry import Point as _ShpPoint
-    from shapely.geometry import Polygon as _ShpPolygon
-    from shapely.prepared import prep as _shp_prep
-
-    HAVE_SHAPELY = True
-except ImportError:
-    HAVE_SHAPELY = False
-
-
 def _ring_contains(ring: list[tuple[float, float]], lon: float, lat: float) -> bool:
-    """Even-odd ray cast over one [ (lon, lat), ... ] ring (pure Python —
-    the shapely-absent fallback; same crossing rule the shim's native
-    point_in_polygon expression unrolls)."""
+    """Even-odd ray cast over one [ (lon, lat), ... ] ring (pure Python;
+    same crossing rule the shim's native point_in_polygon expression
+    unrolls)."""
     inside = False
     n = len(ring)
     for i in range(n):
@@ -483,9 +475,8 @@ class GridGeocoder:
     backward compatibility. The 1° bucket index replicates the
     reference's prefilter exactly: a candidate set per integer
     (lon, lat) cell built from ring bounding boxes, exact containment
-    only inside the shortlist. With shapely installed the containment
-    test runs on prepared geometries; without it, a pure-Python even-odd
-    ray cast — identical semantics for simple rings.
+    only inside the shortlist: an inclusive-edge test for boxes, the
+    even-odd ray cast (`_ring_contains`) for rings.
 
     The instance is built on the driver and shipped to executors inside a
     pandas UDF closure (broadcast-sized: a few thousand floats even for a
@@ -497,7 +488,6 @@ class GridGeocoder:
         # ("ring", [(lon, lat), ...]) with even-odd ray cast
         self.shapes: dict[str, list[tuple[str, object]]] = {}
         self.grid: dict[tuple[int, int], list[str]] = {}
-        self._prepared: dict[tuple[str, int], object] = {}
         for code, shapes in regions.items():
             parsed: list[tuple[str, object]] = []
             for shape in shapes:
@@ -520,18 +510,12 @@ class GridGeocoder:
                         if code not in cell:
                             cell.append(code)
             self.shapes[code] = parsed
-            if HAVE_SHAPELY:  # pragma: no cover - shapely optional
-                for i, (kind, geom) in enumerate(parsed):
-                    if kind == "ring":
-                        self._prepared[(code, i)] = _shp_prep(_ShpPolygon(geom))
 
-    def _contains(self, code: str, i: int, kind: str, geom, lon: float,
-                  lat: float) -> bool:
+    @staticmethod
+    def _contains(kind: str, geom, lon: float, lat: float) -> bool:
         if kind == "box":
             x1, y1, x2, y2 = geom
             return x1 <= lon <= x2 and y1 <= lat <= y2
-        if HAVE_SHAPELY:  # pragma: no cover
-            return self._prepared[(code, i)].intersects(_ShpPoint(lon, lat))
         return _ring_contains(geom, lon, lat)
 
     def lookup(self, lon: float, lat: float) -> str | None:
@@ -539,8 +523,8 @@ class GridGeocoder:
         if not cands:
             return None
         for code in cands:
-            for i, (kind, geom) in enumerate(self.shapes[code]):
-                if self._contains(code, i, kind, geom, lon, lat):
+            for kind, geom in self.shapes[code]:
+                if self._contains(kind, geom, lon, lat):
                     return code
         return None
 

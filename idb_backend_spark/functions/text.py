@@ -331,28 +331,20 @@ def punct_ratio(c: Column | str) -> Column:
     return F.when(n > 0, npunct.cast("double") / n).otherwise(F.lit(0.0))
 
 
-def marker_hits(c: Column | str, words: list[str]) -> Column:
-    """Occurrences of any of ``words`` as whole tokens of the normalized
-    text — value-identical to ``size(filter(tokens(c), isin(words)))``
-    (same normalization, whole-token matches only, duplicates counted),
-    but fully native: the higher-order ArrayFilter is a CodegenFallback
-    whose per-element lambda evaluates interpreted — measured ~2x slower
-    than this padded regexp_count on the lang-ID scan at sf0.1. NULL
-    text yields NULL (callers' when-guards already treat that as zero
-    hits, matching the old form's behavior through size()).
-    """
-    return marker_hits_from_norm(normalize_text(c), words)
-
-
 def marker_hits_from_norm(norm: Column, words: list[str]) -> Column:
-    """marker_hits over an ALREADY-normalized string (normalize_text
-    output). Split out (r15, the py_double_norm rationale): lang_id runs
-    one marker scan per language and quality_score another, and each
-    expression-form call re-inlined the whole normalize chain (case
-    fold + whitespace-collapse regexp over the full document) — staging
-    the normalized text once as a column leaves only the semantic
-    regexp_count scans. marker_hits == from_norm(normalize_text) by
-    construction."""
+    """Occurrences of any of ``words`` as whole tokens of an
+    ALREADY-normalized string (normalize_text output) — value-identical
+    to ``size(filter(split(norm, ' '), isin(words)))`` (whole-token
+    matches only, duplicates counted), but fully native: the
+    higher-order ArrayFilter is a CodegenFallback whose per-element
+    lambda evaluates interpreted — measured ~2x slower than this padded
+    regexp_count on the lang-ID scan at sf0.1. NULL text yields NULL.
+
+    Callers stage normalize_text once as a column and pass it here:
+    language ID runs one marker scan per language and the quality score
+    another, and an expression form that normalized inside re-inlined
+    the whole normalize chain (case fold + whitespace-collapse regexp
+    over the full document) per scan (the py_double_norm rationale)."""
     if not words:
         return F.lit(0)
     import re as _re
@@ -362,80 +354,36 @@ def marker_hits_from_norm(norm: Column, words: list[str]) -> Column:
     return F.regexp_count(padded, F.lit(pat))
 
 
-def stopword_ratio_from_tokens(
-    t: Column, stopwords: list[str] | None = None
-) -> Column:
-    """stopword_ratio over a pre-tokenized array column (for callers
-    that only have the array; prefer the text-input forms, which count
-    hits natively via marker_hits)."""
-    sw = stopwords or LANG_MARKERS["en"]
-    hits = F.size(F.filter(t, lambda x: x.isin(sw)))
-    return F.when(F.size(t) > 0, hits.cast("double") / F.size(t)).otherwise(
-        F.lit(0.0)
-    )
-
-
-def stopword_ratio(c: Column | str, stopwords: list[str] | None = None) -> Column:
-    sw = stopwords or LANG_MARKERS["en"]
-    t = tokens(c)
-    return F.when(
-        F.size(t) > 0, marker_hits(c, sw).cast("double") / F.size(t)
-    ).otherwise(F.lit(0.0))
-
-
-def quality_score(c: Column | str, stopwords: list[str] | None = None) -> Column:
-    """Composite document-quality heuristic in [0, 1]: rewards reasonable
-    length and stopword presence, penalizes punctuation soup. The shape
-    (length/punct/stopword ratios) follows common LLM-corpus filters
-    (C4/Gopher-style rules)."""
-    return quality_score_from_tokens(c, tokens(c), stopwords)
-
-
-def quality_score_from_tokens(
-    c: Column | str, t: Column, stopwords: list[str] | None = None
-) -> Column:
-    """quality_score with the token array staged by the caller.
-
-    NULL text scores NULL (least() skips null operands in both Spark and
-    DuckDB, so the unguarded formula scored a null document 0.5 — above
-    most keep-thresholds); the punctuation penalty is floored at 0 so
-    the documented [0, 1] range actually holds for punctuation soup."""
-    # hits natively via marker_hits (t is tokens(c) per this function's
-    # contract, so the text-derived count is the same value); the staged
-    # t still carries the denominator without re-tokenizing
-    col = F.col(c) if isinstance(c, str) else c
-    sw = stopwords or LANG_MARKERS["en"]
-    return _quality_core(col, t, marker_hits(c, sw))
-
-
 def quality_score_from_norm(
     c: Column | str, norm: Column, stopwords: list[str] | None = None,
     hits: Column | None = None,
 ) -> Column:
-    """quality_score with the NORMALIZED text staged by the caller —
-    tokens(c) == split(norm, ' ') and the stopword scan counts on the
-    same norm, so the value is identical while the normalize chain
-    (case fold + whitespace-collapse regexp) is paid once per row
-    instead of per consumer. Raw ``c`` still feeds the length/punct
-    signals, which the heuristic defines over the verbatim text.
+    """Composite document-quality heuristic in [0, 1] (C4/Gopher-style
+    rules): rewards reasonable length and stopword presence, penalizes
+    punctuation soup.
 
-    ``hits`` (r16): a pre-computed stopword-occurrence count — pass
-    ``marker_hits_from_array(staged_lang_marker_hits, sw)`` when a
-    lang_marker_hits column is already staged for language ID (the
-    default stopword list IS the en marker list, so the tally comes
-    free off the same single document scan). Caller's responsibility:
-    hits must equal marker_hits_from_norm(norm, sw)."""
+    The NORMALIZED text is staged by the caller: the tokens are
+    split(norm, ' ') == tokens(c) and the stopword scan counts on the
+    same norm, so the normalize chain (case fold + whitespace-collapse
+    regexp) is paid once per row instead of per consumer. Raw ``c``
+    feeds the length/punct signals, which the heuristic defines over
+    the verbatim text. NULL text scores
+    NULL (least() skips null operands in both Spark and DuckDB, so an
+    unguarded formula would score a null document 0.5 — above most
+    keep-thresholds); the punctuation penalty is floored at 0 so the
+    [0, 1] range holds for punctuation soup.
+
+    ``hits``: a pre-computed stopword-occurrence count — pass
+    ``marker_hits_from_norm(staged_lang_marker_hits_string, sw)`` when a
+    lang_marker_hits_string column is already staged for language ID
+    (the default stopword list IS the en marker list, so the tally
+    comes free off the same single document scan). Caller's
+    responsibility: hits must equal marker_hits_from_norm(norm, sw)."""
     col = F.col(c) if isinstance(c, str) else c
     sw = stopwords or LANG_MARKERS["en"]
     if hits is None:
         hits = marker_hits_from_norm(norm, sw)
-    return _quality_core(col, F.split(norm, " "), hits)
-
-
-def _quality_core(col: Column, t: Column, hits: Column) -> Column:
-    """The quality formula over (raw text, token array, stopword hits) —
-    one body shared by the tokens- and norm-staged forms so they cannot
-    drift."""
+    t = F.split(norm, " ")
     n = F.length(col)
     len_score = F.least(n.cast("double") / F.lit(500.0), F.lit(1.0))
     sw_ratio = F.when(
@@ -449,22 +397,6 @@ def _quality_core(col: Column, t: Column, hits: Column) -> Column:
     )
 
 
-def lang_scores(c: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
-    """Per-language marker-hit counts -> map<lang, int>."""
-    markers = markers or LANG_MARKERS
-    entries = [
-        F.struct(
-            F.lit(lang).alias("key"),
-            # coalesce to -1 on NULL text: the previous size(filter())
-            # form returned -1 there (legacy sizeOfNull), and map
-            # consumers may rely on that sentinel
-            F.coalesce(marker_hits(c, words), F.lit(-1)).alias("value"),
-        )
-        for lang, words in markers.items()
-    ]
-    return F.map_from_entries(F.array(*entries))
-
-
 def _lang_argmax(hits_by_lang: dict[str, Column]) -> Column:
     """Argmax over per-language hit counts; deterministic tie-break by
     language code ascending; 'und' when no marker matches.
@@ -476,7 +408,7 @@ def _lang_argmax(hits_by_lang: dict[str, Column]) -> Column:
 
     The no-match fallback is a SENTINEL ENTRY in the same array
     (hits=0, priority above every language, lang='und'), not a
-    ``when(best.hits > 0, ...)`` wrapper (r16): the wrapper referenced
+    ``when(best.hits > 0, ...)`` wrapper: the wrapper referenced
     ``best`` twice — condition and value — and CaseWhen branch contexts
     defeat codegen CSE, so the whole tally array (5 document scans in
     the pre-fusion form) was built TWICE per row. Equivalence: a
@@ -505,25 +437,19 @@ def _lang_argmax(hits_by_lang: dict[str, Column]) -> Column:
     return F.array_max(F.array(*entries))["lang"]
 
 
-def lang_id(c: Column | str, markers: dict[str, list[str]] | None = None) -> Column:
-    """Argmax language by native whole-token marker hits (marker_hits);
-    'und' when no marker matches, ties break by language code."""
-    return lang_id_from_norm(normalize_text(c), markers)
-
-
 def lang_marker_hits_string(
     norm: Column, markers: dict[str, list[str]] | None = None
 ) -> Column:
     """EVERY language's marker-token occurrences extracted in ONE
-    document scan, re-joined as a short space-separated string (r16,
-    VERDICT r15 item 8): regexp_extract_all over the union alternation
-    of all marker words, array_join ' '. Per-language tallies and
-    lang_id then run their usual regexp_count / argmax over THIS string
+    document scan, re-joined as a short space-separated string:
+    regexp_extract_all over the union alternation of all marker words,
+    array_join ' '. Per-language tallies and lang_id_from_norm then run
+    their usual regexp_count / argmax over THIS string
     (it satisfies the from_norm contract: single-space-separated
     tokens), so the 5 per-language full-document scans — plus the
     quality stopword scan when its list is the en markers — collapse to
     one document scan + scans of a string that only holds the matched
-    tokens. Interleaved A/B sf0.1: lang_id median ratio 0.89 (9/10
+    tokens. Interleaved A/B sf0.1: language-ID median ratio 0.89 (9/10
     pairs); the corpus enrichment stage is locally neutral (median
     1.01 — its documents are ~120 bytes) and strictly better in
     document-scan count (6 -> 1), which is what scales with document
@@ -560,34 +486,15 @@ def lang_marker_hits_string(
 def lang_id_from_norm(
     norm: Column, markers: dict[str, list[str]] | None = None
 ) -> Column:
-    """lang_id over an ALREADY-normalized string — the expression form
-    re-inlines the normalize chain once PER LANGUAGE (5 case-fold +
-    whitespace-collapse passes over the document per row); callers that
-    stage normalize_text as a column pay it once.
-    lang_id == from_norm(normalize_text) by construction."""
+    """Argmax language by native whole-token marker hits
+    (marker_hits_from_norm) over an ALREADY-normalized string; 'und'
+    when no marker matches, ties break by language code. Callers stage
+    normalize_text as a column once — a form that normalized inside
+    would re-inline the normalize chain once PER LANGUAGE (5 case-fold
+    + whitespace-collapse passes over the document per row)."""
     markers = markers or LANG_MARKERS
     return _lang_argmax(
         {lang: marker_hits_from_norm(norm, markers[lang]) for lang in markers}
-    )
-
-
-def lang_id_from_tokens(
-    t: Column, markers: dict[str, list[str]] | None = None
-) -> Column:
-    """lang_id for callers that only have the token array (the text-input
-    form counts hits natively and is preferred)."""
-    markers = markers or LANG_MARKERS
-
-    def _pred(words):
-        # single-arg lambda factory: a default-arg closure would make PySpark
-        # bind the second parameter to the array index
-        return lambda x: x.isin(words)
-
-    return _lang_argmax(
-        {
-            lang: F.size(F.filter(t, _pred(markers[lang])))
-            for lang in markers
-        }
     )
 
 
@@ -637,15 +544,6 @@ def shingles_from_tokens(
     )
     sh = F.when(n >= k, win).otherwise(F.array(norm))
     return F.array_distinct(sh) if distinct else sh
-
-
-def shingles(c: Column | str, k: int = 3) -> Column:
-    """Distinct word k-shingles of the normalized text -> array<string>.
-
-    Convenience form that inlines tokenization — fine for tests/small data;
-    hot paths must stage `tokens()` + `normalize_text()` through a
-    projection and use `shingles_from_tokens` (see its docstring)."""
-    return shingles_from_tokens(tokens(c), normalize_text(c), k)
 
 
 def dup_token_fraction(t: Column) -> Column:
@@ -744,15 +642,6 @@ def chunks_from_tokens(t: Column, chunk: int, overlap: int) -> Column:
             ).alias("chunk_text"),
         ),
     )
-
-
-def char_ngrams(c: Column | str, n: int = 5) -> Column:
-    """Distinct character n-grams of normalized text -> array<string>."""
-    s = normalize_text(c)
-    ln = F.length(s)
-    idx = F.sequence(F.lit(1), F.greatest(ln - n + 1, F.lit(1)))
-    grams = F.transform(idx, lambda i: s.substr(i, F.lit(n)))
-    return F.array_distinct(grams)
 
 
 def pack_sequences(

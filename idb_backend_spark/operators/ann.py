@@ -48,7 +48,7 @@ def _assign(df: DataFrame, centroids: list, vec_col: str) -> DataFrame:
     an expression tree exponential in nlist: measured on Spark 4.1.2,
     nlist=12 took 32 s to ANALYZE and the default nlist=16 OOMed the
     driver before reading any data (the same argmax hazard class
-    functions/text.lang_id_from_tokens documents). Ties break toward
+    functions/text._lang_argmax documents). Ties break toward
     the LOWEST bucket index via the -idx field, matching
     _probe_buckets — divergent tie-breaks would send queries with
     duplicate centroids to the empty twin bucket."""

@@ -114,7 +114,8 @@ def nb_hash_model(
     model: (j, c1, c0) token counts per feature bucket and class —
     <= n_buckets rows, localCheckpointed (it feeds the class totals AND
     the score join; without the pin each consumer re-explodes the
-    corpus — the sketch-reuse pattern from operators/dedup.minhash).
+    corpus — the sketch-reuse pattern from
+    operators/dedup.minhash_lsh_pairs).
     scalars: {"tot1", "tot0" (class token totals), "n1", "n0" (class
     doc counts), "v" (occupied buckets — the smoothing vocabulary),
     "n_buckets"} — bounded aggregates over the model frame,

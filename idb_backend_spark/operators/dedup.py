@@ -12,6 +12,16 @@ Four tiers, increasing recall / cost:
   simhash        — 64-bit fingerprints; near-dups = small Hamming distance,
                    bucketed by fingerprint chunks (pigeonhole: two fingerprints
                    within distance d share at least one of d+1 chunks).
+
+The MinHash contract is defined once here and shared by the in-frame
+tiers and the persistent index (operators/neardup_index.py), so an
+incremental probe scores exactly like the batch pass:
+  _shingle_df           (id, sh) word shingles off staged tokens
+  _band_structs         the band geometry check and the (band, key) hash
+  _band_rows            (id, band, key, ...) rows, one per document band
+  _lanes                the m0..m{n-1} signature lanes as one array
+  _estimate_verified    lane-agreement estimate, rounded and thresholded
+  _exact_verified       exact shingle-set Jaccard verify of candidates
 """
 
 from __future__ import annotations
@@ -220,7 +230,16 @@ def _band_structs(num_hashes: int, bands: int) -> list[Column]:
     """(band, key) struct columns off a signature frame's lane columns —
     the ONE band-key definition, shared by the in-frame candidate kernel
     below and the persistent index (operators/neardup_index.py), so an
-    index built today and a probe compiled tomorrow hash identically."""
+    index built today and a probe compiled tomorrow hash identically.
+
+    Raises on a geometry where ``bands`` does not evenly divide
+    ``num_hashes``: bands > num_hashes makes every band key empty (a
+    silent O(n^2) cross product); a non-divisor silently drops trailing
+    lanes and quietly lowers recall below the configured width."""
+    if bands > num_hashes or num_hashes % bands != 0:
+        raise ValueError(
+            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
+        )
     rows_per_band = num_hashes // bands
     return [
         F.struct(
@@ -239,6 +258,81 @@ def _band_structs(num_hashes: int, bands: int) -> list[Column]:
     ]
 
 
+def _band_rows(
+    sig: DataFrame, num_hashes: int, bands: int, *carry: Column
+) -> DataFrame:
+    """(id, band, key, *carry) off a signature frame: one row per
+    (document, band). The in-frame candidate self-join, the index rows
+    and the probe's batch keys are all this projection."""
+    rows = sig.select(
+        "id",
+        F.explode(F.array(*_band_structs(num_hashes, bands))).alias("bk"),
+        *carry,
+    )
+    return rows.select("id", "bk.*", *rows.columns[2:])
+
+
+def _lanes(num_hashes: int) -> Column:
+    """A signature frame's m0..m{n-1} lane columns as one array."""
+    return F.array(*[F.col(f"m{j}") for j in range(num_hashes)])
+
+
+def _estimate_verified(
+    pairs: DataFrame, a: str, b: str, num_hashes: int, threshold: float
+) -> DataFrame:
+    """(a, b, est_jaccard) for the pairs whose signatures, carried as
+    lane arrays ``sig_a``/``sig_b``, agree on at least ``threshold`` of
+    their lanes. The estimate is rounded to 6 dp and the threshold
+    applies to the rounded value."""
+    agree = F.zip_with("sig_a", "sig_b", lambda x, y: x == y)
+    est = F.size(F.filter(agree, lambda m: m)) / F.lit(float(num_hashes))
+    return (
+        pairs.withColumn("est_jaccard", F.round(est, 6))
+        .filter(F.col("est_jaccard") >= threshold)
+        .select(a, b, "est_jaccard")
+    )
+
+
+def _exact_verified(
+    pairs: DataFrame,
+    a: str,
+    sh_a: DataFrame,
+    b: str,
+    sh_b: DataFrame,
+    threshold: float,
+    hint: str | None = None,
+) -> DataFrame:
+    """(a, b, jaccard) for the candidate ``pairs`` whose true shingle-set
+    Jaccard reaches ``threshold``; ``sh_a``/``sh_b`` are (id, sh) frames
+    for the ids in column ``a``/``b``.
+
+    The filter is on the EXACT ratio and the rounding is for display
+    only — matching ngram_jaccard_pairs and the shared exact-Jaccard SQL
+    oracle (synth.EXACT_JACCARD_SQL); thresholding the rounded value
+    admits pairs in [threshold - 5e-7, threshold) the oracle drops.
+
+    The in-frame tiers pass ``hint="shuffle_hash"``: broadcasting a
+    shingle side re-evaluates the shingle pass once PER SIDE; as shuffle
+    joins the two sh subplans share one Exchange (the second is a
+    ReusedExchange), so the corpus is shingled once. At scale the
+    shingle table is corpus-sized — never broadcastable."""
+
+    def side(sh: DataFrame, key: str, col: str) -> DataFrame:
+        renamed = sh.withColumnsRenamed({"id": key, "sh": col})
+        return renamed.hint(hint) if hint else renamed
+
+    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
+        F.array_union("sh_a", "sh_b")
+    )
+    return (
+        pairs.join(side(sh_a, a, "sh_a"), a)
+        .join(side(sh_b, b, "sh_b"), b)
+        .filter(jac >= threshold)
+        .withColumn("jaccard", F.round(jac, 6))
+        .select(a, b, "jaccard")
+    )
+
+
 def _minhash_candidate_pairs(
     sig: DataFrame, num_hashes: int, bands: int
 ) -> DataFrame:
@@ -248,9 +342,7 @@ def _minhash_candidate_pairs(
     keys straight off the lane columns; candidates carry only ids, and
     the self-join keys on (band, key) so the shuffle is bounded by
     bucket sizes, not n²."""
-    banded = sig.select(
-        "id", F.explode(F.array(*_band_structs(num_hashes, bands))).alias("bk")
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    banded = _band_rows(sig, num_hashes, bands)
     # SHUFFLE_HASH (the hamming_pairs rationale): the default
     # broadcast of one banded side re-executes the ENTIRE signature
     # subtree (a full shingle+minhash pass over the corpus) to build the
@@ -284,15 +376,6 @@ def minhash_lsh_pairs(
     only form inside LSH buckets: the self-join key is (band, band_hash), so
     the shuffle is bounded by bucket sizes, not n².
     """
-    if bands > num_hashes or num_hashes % bands != 0:
-        # bands > num_hashes makes every band key empty (a silent O(n^2)
-        # cross product); a non-divisor silently drops trailing lanes
-        # and quietly lowers recall below the configured width
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
-        )
-    rows_per_band = num_hashes // bands
-
     # Materialize the signature once: it feeds the banded self-join AND both
     # verification joins; without this the shingle+agg subtree re-runs per
     # consumer when exchange reuse misses. 5k-row/64-col signatures are tiny
@@ -306,19 +389,11 @@ def minhash_lsh_pairs(
 
     # Verify candidates by signature-lane agreement (only candidate pairs
     # rejoin the signatures — a tiny fraction of n²).
-    sig_arr = sig.select(
-        "id", F.array(*[F.col(f"m{j}") for j in range(num_hashes)]).alias("sig")
-    )
-    est = F.size(
-        F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda m: m)
-    ) / F.lit(float(num_hashes))
-    return (
-        cand.join(sig_arr.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a")
-        .join(sig_arr.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
-        .withColumn("est_jaccard", F.round(est, 6))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
+    sig_arr = sig.select("id", _lanes(num_hashes).alias("sig"))
+    fetched = cand.join(
+        sig_arr.withColumnsRenamed({"id": "id_a", "sig": "sig_a"}), "id_a"
+    ).join(sig_arr.withColumnsRenamed({"id": "id_b", "sig": "sig_b"}), "id_b")
+    return _estimate_verified(fetched, "id_a", "id_b", num_hashes, threshold)
 
 
 def simhash_pairs(
@@ -406,13 +481,14 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     # anyway: the banded side IS the corpus, far over any broadcast
     # cap, and the bucketed equi-join is exactly the shape AQE
     # skew-split handles.
-    # Hot-key evidence (SCALING.md round-16 addendum): measured at
-    # 4x the bench corpus with ONE chunk key holding 10%/30% of all
-    # rows — completes, wall tracks the inherent n^2 pair output, build
-    # memory is the hot group's (id, fp) rows; a group large enough to
-    # break the build is an exact-duplicate flood the upstream exact
-    # dedup tier removes (and its pair OUTPUT would be the real failure
-    # under any strategy). Salting fallback documented there.
+    # Hot-key evidence (SCALING.md, "hot-key skew evidence for the
+    # SHUFFLE_HASH self-joins"): measured at 4x the bench corpus with
+    # ONE chunk key holding 10%/30% of all rows — completes, wall
+    # tracks the inherent n^2 pair output, build memory is the hot
+    # group's (id, fp) rows; a group large enough to break the build
+    # is an exact-duplicate flood the upstream exact dedup tier removes
+    # (and its pair OUTPUT would be the real failure under any
+    # strategy). Salting fallback documented there.
     return (
         banded.alias("a")
         .join(banded.alias("b").hint("shuffle_hash"), on=["chunk", "ckey"])
@@ -564,43 +640,11 @@ def minhash_exact_verified_pairs(
     # that would pay two signature-array joins and a per-pair
     # lane-agreement computation whose filter passes everything; the
     # exact-Jaccard verify below re-joins shingles anyway
-    if bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
-        )
     sig = minhash_signatures(df, text_col, id_col, shingle_k, num_hashes, seed)
-    sig_cand = _minhash_candidate_pairs(sig, num_hashes, bands)
-    sh = _shingle_df(df, text_col, id_col, shingle_k).select(
-        "id", F.col("sh")
-    )
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    # SHUFFLE_HASH on both shingle sides: broadcasting them
-    # re-evaluates the shingle pass once PER SIDE; as shuffle joins the
-    # two sh subplans share one Exchange (the second is a
-    # ReusedExchange), so the corpus is shingled once. At scale the
-    # shingle table is corpus-sized — never broadcastable.
-    return (
-        sig_cand.join(
-            sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}).hint(
-                "shuffle_hash"
-            ),
-            "id_a",
-        )
-        .join(
-            sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}).hint(
-                "shuffle_hash"
-            ),
-            "id_b",
-        )
-        # filter on the EXACT ratio, round only for display — matching
-        # ngram_jaccard_pairs and the shared exact-Jaccard SQL oracle
-        # (synth.EXACT_JACCARD_SQL); thresholding the rounded value
-        # admits pairs in [threshold - 5e-7, threshold) the oracle drops
-        .filter(jac >= threshold)
-        .withColumn("jaccard", F.round(jac, 6))
-        .select("id_a", "id_b", "jaccard")
+    cand = _minhash_candidate_pairs(sig, num_hashes, bands)
+    sh = _shingle_df(df, text_col, id_col, shingle_k)
+    return _exact_verified(
+        cand, "id_a", sh, "id_b", sh, threshold, hint="shuffle_hash"
     )
 
 
@@ -628,32 +672,9 @@ def simhash_exact_verified_pairs(
     cand = simhash_pairs(
         df, text_col, id_col, max_hamming=max_hamming
     ).select("id_a", "id_b")
-    sh = _shingle_df(df, text_col, id_col, shingle_k).select("id", "sh")
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    # SHUFFLE_HASH on both shingle sides — same single-shingle-pass
-    # rationale as minhash_exact_verified_pairs above
-    return (
-        cand.join(
-            sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}).hint(
-                "shuffle_hash"
-            ),
-            "id_a",
-        )
-        .join(
-            sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}).hint(
-                "shuffle_hash"
-            ),
-            "id_b",
-        )
-        # filter on the EXACT ratio, round only for display — matching
-        # ngram_jaccard_pairs and the shared exact-Jaccard SQL oracle
-        # (synth.EXACT_JACCARD_SQL); thresholding the rounded value
-        # admits pairs in [threshold - 5e-7, threshold) the oracle drops
-        .filter(jac >= threshold)
-        .withColumn("jaccard", F.round(jac, 6))
-        .select("id_a", "id_b", "jaccard")
+    sh = _shingle_df(df, text_col, id_col, shingle_k)
+    return _exact_verified(
+        cand, "id_a", sh, "id_b", sh, threshold, hint="shuffle_hash"
     )
 
 

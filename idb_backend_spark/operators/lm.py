@@ -75,7 +75,7 @@ def bigram_model(
     — it is model-sized (unique bigrams, not corpus-sized) and is read
     by three consumers (c_a, V, the score join); without the pin each
     would re-explode the corpus (the sketch-reuse pattern from
-    operators/dedup.minhash)."""
+    operators/dedup.minhash_lsh_pairs)."""
     ex = _exploded(docs, text_col, id_col)
     cab = (
         ex.groupBy("a", "b")

@@ -48,6 +48,14 @@ Index layout — ONE parquet row dataset plus a tiny immutable sidecar:
       renames — a crash mid-swap leaves a missing index (probes fail
       loudly on the absent meta), never new-geometry rows under
       old-geometry meta.
+
+Every MinHash decision comes from operators/dedup.py, so a probe scores
+exactly like the in-frame tiers: the signature (`minhash_signatures`),
+the band geometry check and band rows (`_band_structs`, `_band_rows`),
+the lane array (`_lanes`), the lane-agreement estimate
+(`_estimate_verified`) and the exact-Jaccard verify (`_exact_verified`
+over `_shingle_df`). Broadcasts of the batch side go through
+session._gate_broadcast.
 """
 
 from __future__ import annotations
@@ -56,10 +64,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from idb_backend_spark.operators.dedup import (
-    _band_structs,
+    _band_rows,
+    _estimate_verified,
+    _exact_verified,
+    _lanes,
     _shingle_df,
     minhash_signatures,
 )
+from idb_backend_spark.session import _gate_broadcast
 
 #: Bumped whenever the text canonicalization feeding the shingles changes
 #: (functions/text.py — e.g. the v2 cross-engine case fold). Persisted in
@@ -156,62 +168,21 @@ def _check_id_contract(df: DataFrame, what: str) -> int:
     return n
 
 
-def _broadcast_bytes_cap(spark: SparkSession) -> int:
-    """The session's autoBroadcastJoinThreshold in bytes (-1 = never
-    force a broadcast here; AQE may still convert at runtime)."""
-    raw = str(
-        spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    ).strip().lower()
-    units = {"k": 1 << 10, "m": 1 << 20, "g": 1 << 30}
-    for suffix, mult in units.items():
-        for s in (suffix + "b", suffix):
-            if raw.endswith(s):
-                return int(float(raw[: -len(s)])) * mult
-    # Spark also accepts a bare-bytes suffix ('10485760b')
-    if raw.endswith("b"):
-        raw = raw[:-1]
-    return int(raw)
-
-
-def _gate_broadcast(
-    df: DataFrame, est_bytes: int, spark: SparkSession
-) -> DataFrame:
-    """Broadcast ``df`` only when its estimated size fits the session's
-    broadcast threshold (the runtime-size-gate discipline of
-    operators/lm.py): the probe/replay-guard contract is "small batch
-    vs huge corpus", but a large ingest batch must DEGRADE to a plain
-    shuffled join, not blow the broadcast limit — same answer, heavier
-    exchange. With the threshold at -1 the frame is never force-
-    broadcast (AQE may still convert if runtime stats allow)."""
-    cap = _broadcast_bytes_cap(spark)
-    if 0 <= cap < est_bytes:
-        return df
-    return F.broadcast(df)
-
-
 def _index_rows(
     df: DataFrame, text_col: str, id_col: str, meta: dict
 ) -> DataFrame:
     """(id, band, key, sig) index rows for a document frame — the one
     shared builder, so build and add can never derive different rows."""
+    nh = meta["num_hashes"]
     sig = minhash_signatures(
         _null_safe(df, text_col),
         text_col,
         id_col,
         shingle_k=meta["shingle_k"],
-        num_hashes=meta["num_hashes"],
+        num_hashes=nh,
         seed=meta["seed"],
     )
-    lanes = F.array(
-        *[F.col(f"m{j}") for j in range(meta["num_hashes"])]
-    ).alias("sig")
-    return sig.select(
-        "id",
-        F.explode(
-            F.array(*_band_structs(meta["num_hashes"], meta["bands"]))
-        ).alias("bk"),
-        lanes,
-    ).select("id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"), "sig")
+    return _band_rows(sig, nh, meta["bands"], _lanes(nh).alias("sig"))
 
 
 def _stage_and_swap(
@@ -285,17 +256,7 @@ def build_neardup_index(
     row-group min/max stats on `key` stay tight — a probe pushed down as
     a key filter skips row groups; the bucket join reads clustered keys.
     """
-    if bands > num_hashes or num_hashes % bands != 0:
-        raise ValueError(
-            f"bands ({bands}) must evenly divide num_hashes ({num_hashes})"
-        )
     spark = df.sparkSession
-    # the bootstrap corpus is held to the same id contract as every
-    # add batch — a duplicate or NULL id at build time corrupts the
-    # index just as silently as one at add time (one bounded
-    # id-column aggregate; the corpus itself is scanned once more for
-    # the signature pass below)
-    _check_id_contract(df.select(F.col(id_col).alias("id")), "corpus")
     meta = {
         "shingle_k": int(shingle_k),
         "num_hashes": int(num_hashes),
@@ -303,6 +264,14 @@ def build_neardup_index(
         "seed": int(seed),
         "text_version": TEXT_VERSION,
     }
+    # built lazily up front so a bad band geometry raises before any job
+    rows = _index_rows(df, text_col, id_col, meta)
+    # the bootstrap corpus is held to the same id contract as every
+    # add batch — a duplicate or NULL id at build time corrupts the
+    # index just as silently as one at add time (one bounded
+    # id-column aggregate; the corpus itself is scanned once more for
+    # the signature pass below)
+    _check_id_contract(df.select(F.col(id_col).alias("id")), "corpus")
     # Stage the whole index (meta + rows) in a sibling dir, then swap by
     # checked renames — never overwrite in place: a crash between an
     # in-place meta write and the rows write during a geometry-CHANGING
@@ -311,12 +280,9 @@ def build_neardup_index(
 
     def _write(staging: str) -> None:
         _write_meta(spark, meta, staging)
-        (
-            _index_rows(df, text_col, id_col, meta)
-            .sortWithinPartitions("band", "key")
-            .write.mode("overwrite")
-            .parquet(_rows_path(staging))
-        )
+        rows.sortWithinPartitions("band", "key").write.mode(
+            "overwrite"
+        ).parquet(_rows_path(staging))
 
     _stage_and_swap(spark, index_path.rstrip("/"), _write)
 
@@ -417,8 +383,8 @@ def probe_neardup_index(
     every true pair, the same containment contract the graded
     minhash_exact_verified entry proves for the in-frame tier.
 
-    Probe plan at scale (r9 two-stage restructure — measured 5.6x at a
-    500 k-doc index, identical output):
+    Probe plan at scale (two stages — measured 5.6x faster than the
+    one-join probe at a 500 k-doc index, identical output):
 
     * DISCOVERY scans only (id, band, key) of the index — the repeated
       ``sig`` arrays (the overwhelming share of index bytes, ~8 KB/doc
@@ -452,6 +418,7 @@ def probe_neardup_index(
         raise ValueError("verify='exact' needs the corpus frame")
     spark = new_docs.sparkSession
     meta = read_meta(spark, index_path)
+    nh = meta["num_hashes"]
     # ONE minhash pass serves both stages (band keys for discovery,
     # lane arrays for the estimate): pinned via localCheckpoint —
     # n_batch x num_hashes longs, spilling to disk if a huge batch
@@ -461,18 +428,15 @@ def probe_neardup_index(
         text_col,
         id_col,
         shingle_k=meta["shingle_k"],
-        num_hashes=meta["num_hashes"],
+        num_hashes=nh,
         seed=meta["seed"],
     ).localCheckpoint(eager=True)
     # sizing count reads the just-checkpointed blocks — no extra scan
     # of the batch, no second minhash pass
     n_batch = sig.count()
-    new_keys = sig.select(
-        F.col("id").alias("new_id"),
-        F.explode(
-            F.array(*_band_structs(meta["num_hashes"], meta["bands"]))
-        ).alias("bk"),
-    ).select("new_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+    new_keys = _band_rows(sig, nh, meta["bands"]).withColumnRenamed(
+        "id", "new_id"
+    )
     idx = spark.read.parquet(_rows_path(index_path))
     key_bytes = n_batch * meta["bands"] * 80
     cand = (
@@ -485,61 +449,36 @@ def probe_neardup_index(
         .dropDuplicates(["new_id", "corpus_id"])
     )
     if verify == "estimate":
-        lanes = F.array(
-            *[F.col(f"m{j}") for j in range(meta["num_hashes"])]
-        )
         new_sigs = sig.select(
-            F.col("id").alias("new_id"), lanes.alias("new_sig")
+            F.col("id").alias("new_id"), _lanes(nh).alias("sig_a")
         )
-        sig_bytes = n_batch * (meta["num_hashes"] * 8 + 64)
+        sig_bytes = n_batch * (nh * 8 + 64)
         # candidate side LEFT, band-0 slice RIGHT: with parquet stats the
         # static planner broadcasts the slice only when it is actually
         # small; at scale it falls to a shuffle join and AQE re-plans
         # from runtime sizes (usually broadcasting the candidates)
-        fetched = (
-            cand.join(
-                idx.filter(F.col("band") == 0).select(
-                    F.col("id").alias("corpus_id"),
-                    F.col("sig").alias("corpus_sig"),
-                ),
-                "corpus_id",
-            )
-            .join(_gate_broadcast(new_sigs, sig_bytes, spark), "new_id")
+        fetched = cand.join(
+            idx.filter(F.col("band") == 0).select(
+                F.col("id").alias("corpus_id"), F.col("sig").alias("sig_b")
+            ),
+            "corpus_id",
+        ).join(_gate_broadcast(new_sigs, sig_bytes, spark), "new_id")
+        return _estimate_verified(
+            fetched, "new_id", "corpus_id", nh, threshold
         )
-        est = F.size(
-            F.filter(
-                F.zip_with("new_sig", "corpus_sig", lambda x, y: x == y),
-                lambda m: m,
-            )
-        ) / F.lit(float(meta["num_hashes"]))
-        return (
-            fetched.withColumn("est_jaccard", F.round(est, 6))
-            .filter(F.col("est_jaccard") >= threshold)
-            .select("new_id", "corpus_id", "est_jaccard")
-        )
-    pairs = cand
     cand_corpus = corpus.join(
-        pairs.select(F.col("corpus_id").alias(id_col)).distinct(),
+        cand.select(F.col("corpus_id").alias(id_col)).distinct(),
         id_col,
         "left_semi",
     )
-    sh_new = _shingle_df(
-        _null_safe(new_docs, text_col), text_col, id_col, meta["shingle_k"]
-    ).select(F.col("id").alias("new_id"), F.col("sh").alias("sh_a"))
-    sh_corpus = _shingle_df(
-        _null_safe(cand_corpus, text_col), text_col, id_col, meta["shingle_k"]
-    ).select(F.col("id").alias("corpus_id"), F.col("sh").alias("sh_b"))
-    jac = F.size(F.array_intersect("sh_a", "sh_b")) / F.size(
-        F.array_union("sh_a", "sh_b")
-    )
-    return (
-        pairs.join(sh_new, "new_id")
-        .join(sh_corpus, "corpus_id")
-        # exact-ratio filter, rounded for display — the shared contract
-        # with minhash_exact_verified_pairs / synth's Jaccard oracle
-        .filter(jac >= threshold)
-        .withColumn("jaccard", F.round(jac, 6))
-        .select("new_id", "corpus_id", "jaccard")
+    k = meta["shingle_k"]
+    return _exact_verified(
+        cand,
+        "new_id",
+        _shingle_df(_null_safe(new_docs, text_col), text_col, id_col, k),
+        "corpus_id",
+        _shingle_df(_null_safe(cand_corpus, text_col), text_col, id_col, k),
+        threshold,
     )
 
 
@@ -556,7 +495,7 @@ def probe_neardup_exact_sql(
     cross-pair set between the batch rows (``batch_pred``) and corpus
     rows (``corpus_pred``) of ``table`` at the threshold (the
     sub-``shingle_k``-token fallback shingle is the whole token list,
-    matching functions.similarity.shingles_from_tokens). The engine's
+    matching functions.text.shingles_from_tokens). The engine's
     output must be a SUBSET of this set — equal when the LSH bands
     recall every true pair — the same containment contract the graded
     minhash_exact_verified entry proves for the in-frame tier (pattern:

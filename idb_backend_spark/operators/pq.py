@@ -71,6 +71,7 @@ from pyspark.sql import functions as F
 
 from idb_backend_spark.functions.similarity import cosine_similarity
 from idb_backend_spark.operators import ann
+from idb_backend_spark.session import _gate_broadcast
 
 
 def _l2_normalize(vec: Column) -> Column:
@@ -179,9 +180,28 @@ def pq_train(
     raises (there is nothing to quantize).
     """
     d_sub = _check_geometry(dim, m)
-    norm = df.select(
-        F.col(id_col), _l2_normalize(F.col(vec_col)).alias("v")
+    norm = _normalized(df, vec_col, [id_col])
+    return _train_codebook(norm, id_col, d_sub, m, k, iterations, sample_seed)
+
+
+def _normalized(df: DataFrame, vec_col: str, keep: list[str]) -> DataFrame:
+    """(*keep, v) with ``v`` the L2-normalized vector, localCheckpointed:
+    the seed sample, every Lloyd round and the encode read it."""
+    return df.select(
+        *keep, _l2_normalize(F.col(vec_col)).alias("v")
     ).localCheckpoint(eager=True)
+
+
+def _train_codebook(
+    norm: DataFrame,
+    id_col: str,
+    d_sub: int,
+    m: int,
+    k: int,
+    iterations: int,
+    sample_seed: int,
+) -> list[list[list[float]]]:
+    """pq_train's seeding and Lloyd rounds over a ``_normalized`` frame."""
     sample = (
         norm.orderBy(F.xxhash64(F.col("v").cast("string"), F.lit(sample_seed)))
         .limit(k)
@@ -294,13 +314,19 @@ def ivfpq_build(
     sf0.01), because coarse centroids explain almost nothing on a
     cluster-free corpus.
     """
+    d_sub = _check_geometry(dim, m)
     assigned, centroids = ann.ivf_build(
         df, vec_col, id_col, nlist=nlist, iterations=ivf_iterations
     )
-    codebook = pq_train(
-        df, dim, vec_col, id_col, m=m, k=n_codes, iterations=pq_iterations
+    # one normalized, checkpointed (id, bucket, v) frame feeds both the
+    # codebook training and the encode: the corpus is normalized and
+    # assigned to its bucket once
+    keep = [id_col, "bucket"]
+    norm = _normalized(assigned, vec_col, keep)
+    codebook = _train_codebook(
+        norm, id_col, d_sub, m, n_codes, pq_iterations, sample_seed=42
     )
-    codes = pq_encode(assigned, codebook, vec_col, id_col, keep=("bucket",))
+    codes = _with_codes(norm, codebook, keep).drop("v")
     return codes, centroids, codebook
 
 
@@ -325,16 +351,14 @@ def ivfpq_batch_topk(
     panel's probe sets BEFORE the join — off an ann.ivf_write store
     that filter is a partition filter, so unprobed buckets are never
     read. The (query_id, bucket, lut) dimension then joins on bucket —
-    broadcast when it fits (size-gated, the neardup_index._gate_broadcast
-    discipline: estimate rows × lut bytes, fall back to a plain join) —
+    broadcast when it fits (size-gated by session._gate_broadcast:
+    estimate rows × lut bytes, fall back to a plain join) —
     adc_score scores each (row, query) pair and a per-query window keeps
     the top k. nprobe >= nlist probes every bucket: flat PQ.
 
     Output: (query_id, vec_id, adc, rank), rank 1..k per query,
     deterministic tie-break on vec_id.
     """
-    from idb_backend_spark.operators.neardup_index import _gate_broadcast
-
     spark = codes_df.sparkSession
     m, n_codes = len(codebook), len(codebook[0])
     rows = []

@@ -400,7 +400,7 @@ _SW_EN = synth.sql_word_list(text.LANG_MARKERS["en"])
     + synth.lang_score_cols_sql("toks") + " "
     "  FROM tok), "
     # NULL text -> NULL q and the penalty floored at 0: the exact clamp
-    # semantics of functions.text.quality_score_from_tokens
+    # semantics of functions.text.quality_score_from_norm
     "q AS (SELECT *, CASE WHEN text IS NULL THEN NULL ELSE "
     "  round(greatest(0.5 * len_score + 0.5 * least(swr * 5, 1.0) "
     "  - 0.25 * least(pr * 4, 1.0), 0.0), 6) END AS q, "

@@ -171,7 +171,8 @@ def lang_score_cols_sql(toks: str = "toks") -> str:
 def lang_case_sql() -> str:
     """Argmax over the marker scores, ties broken by language code
     ascending, zero hits -> 'und' — the oracle twin of
-    functions.text.lang_id, generated from the same LANG_MARKERS keys."""
+    functions.text.lang_id_from_norm, generated from the same
+    LANG_MARKERS keys."""
     from idb_backend_spark.functions.text import LANG_MARKERS
 
     langs = sorted(LANG_MARKERS)

@@ -292,6 +292,21 @@ def spread_for_compute(
     return df.repartition(n)
 
 
+def _gate_broadcast(df, est_bytes: int, spark):
+    """Broadcast ``df`` only when its estimated size fits the session's
+    autoBroadcastJoinThreshold (the runtime-size-gate discipline of
+    operators/lm.py). A "small side vs huge table" join — a near-dup
+    probe batch, a replay guard's id set, a PQ query panel — must
+    DEGRADE to a plain shuffled join when the small side grows past the
+    threshold, not blow the broadcast limit: same answer, heavier
+    exchange. At -1 (broadcast disabled) nothing is force-broadcast;
+    AQE may still convert at runtime if the stats allow."""
+    from pyspark.sql import functions as F
+
+    cap = _bytes_conf(spark, "spark.sql.autoBroadcastJoinThreshold", 10 << 20)
+    return df if est_bytes > cap else F.broadcast(df)
+
+
 def barrier_filter(df, cond):
     """``df.filter(cond)`` that cannot be pushed below the projections
     it reads from.

@@ -88,65 +88,6 @@ def test_fused_marker_scan_agrees_with_per_language_scans(spark):
     assert all(" " not in w for ws in LANG_MARKERS.values() for w in ws)
 
 
-def test_lang_scores_map_agrees_with_lang_id_argmax(spark):
-    from idb_backend_spark.functions.text import lang_id, lang_scores
-
-    df = spark.createDataFrame(
-        [
-            ("the quick fox and the dog of the north",),
-            ("der schnelle fuchs und der hund",),
-            ("",),
-            (None,),
-        ],
-        "text string",
-    )
-    rows = df.select(
-        lang_scores("text").alias("m"), lang_id("text").alias("pred")
-    ).collect()
-    for r in rows:
-        m = r["m"]
-        best = max(m.values())
-        if best <= 0:
-            assert r["pred"] == "und"
-        else:
-            # argmax with tie-break by language code ascending
-            assert r["pred"] == min(k for k, v in m.items() if v == best)
-    # NULL text keeps the legacy -1 sentinel in every map slot
-    assert set(rows[3]["m"].values()) == {-1}
-
-
-def test_stopword_ratio_from_tokens_matches_text_form(spark):
-    from idb_backend_spark.functions.text import (
-        stopword_ratio,
-        stopword_ratio_from_tokens,
-        tokens,
-    )
-
-    df = spark.createDataFrame(
-        [("the cat and the hat",), ("xyzzy plugh",), ("",)], "text string"
-    )
-    got = df.select(
-        stopword_ratio("text").alias("a"),
-        stopword_ratio_from_tokens(tokens("text")).alias("b"),
-    ).collect()
-    for r in got:
-        assert abs(r["a"] - r["b"]) < 1e-12
-
-
-def test_char_ngrams_golden(spark):
-    from idb_backend_spark.functions.text import char_ngrams
-
-    df = spark.createDataFrame([("AbAbA",), ("ab",)], "text string")
-    got = [
-        sorted(r["g"])
-        for r in df.select(char_ngrams("text", n=3).alias("g")).collect()
-    ]
-    # normalized 'ababa' -> trigrams {aba, bab}; short text -> one
-    # (truncated) gram, never an empty sequence
-    assert got[0] == ["aba", "bab"]
-    assert got[1] == ["ab"]
-
-
 def test_with_flags_folds_like_fold_flags(spark):
     """fold_flags takes both flag forms: a flag_when spec folds as
     ``when(cond, array(name))``, so its condition appears once in the

@@ -3,7 +3,8 @@ package, bench.py or the tests (retirement rationales, docstrings,
 comments — the grading audit trail) must name a file that actually
 exists, and a cited ``::test_function`` must exist inside that file.
 Cited ``tools/*.py`` scripts, ``plans/<dir>/<file>`` plan captures and
-repo-root ``*.md`` docs must exist too.
+repo-root ``*.md`` docs must exist too, and a cited module name such as
+``operators/dedup.minhash_lsh_pairs`` must be defined in that module.
 
 Round-8 defect #2 was exactly this drift: a dqs retirement rationale
 cited a flags test file that had never existed — a dangling citation in
@@ -13,6 +14,7 @@ tool or doc without repointing its citations is the same drift.
 
 from __future__ import annotations
 
+import ast
 import re
 from pathlib import Path
 
@@ -29,6 +31,14 @@ _DOC = re.compile(r"(?<![\w/.-])([\w-]+\.md)\b")
 # a capture under the repo-root plans/ directory — not a module of the
 # package's idb_backend_spark/plans/ (the lookbehind rejects the prefix)
 _PLAN = re.compile(r"(?<![\w/.-])plans/\w+/[\w.{},-]+")
+# a `<subpackage>.<module>.<name>` or `<subpackage>/<module>.<name>`
+# citation of a name in one of the package's modules, optionally behind
+# the package prefix
+_NAME = re.compile(
+    r"(?<![\w/.])(?:idb_backend_spark[./])?"
+    r"(functions|operators|plans|query|sources|export|streaming)"
+    r"[./](\w+)\.(\w+)"
+)
 
 
 def _plan_cites(text: str) -> list[str]:
@@ -46,6 +56,20 @@ def _plan_cites(text: str) -> list[str]:
                 for alt in b.group(1).split(",")
             ]
     return sorted(out)
+
+
+def _top_level_names(path: Path) -> set[str]:
+    """Functions, classes and assigned constants defined at the top level
+    of ``path`` — not names it imports, whose home is another module."""
+    names = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, ast.Assign):
+            names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+        elif isinstance(node, ast.AnnAssign) and isinstance(node.target, ast.Name):
+            names.add(node.target.id)
+    return names
 
 
 def _sources() -> list[Path]:
@@ -93,6 +117,43 @@ def test_cited_tools_and_docs_exist():
             if not (REPO / c).exists()
         ]
     assert not missing, "dangling tool/doc citations:\n" + "\n".join(missing)
+
+
+def test_cited_module_names_exist():
+    """A name cited through its module (``functions.text.tokens``,
+    ``operators/dedup.minhash_lsh_pairs``) must be a top-level name
+    defined in that module: a deleted, renamed or moved name leaves the
+    citation pointing at nothing."""
+    names: dict[Path, set[str]] = {}
+    n_cited, missing = 0, []
+    for src in _sources():
+        for m in _NAME.finditer(src.read_text()):
+            pkg, mod, name = m.groups()
+            if name == "py":  # a file path (operators/dedup.py), not a name
+                continue
+            n_cited += 1
+            path = PKG / pkg / f"{mod}.py"
+            if path.exists() and path not in names:
+                names[path] = _top_level_names(path)
+            if name not in names.get(path, ()):
+                missing.append(f"{src.relative_to(REPO)} cites {m.group(0)}")
+    assert n_cited, "expected at least one module.name citation"
+    assert not missing, "dangling module.name citations:\n" + "\n".join(missing)
+
+
+def test_module_name_citation_pattern():
+    text = (
+        "see operators/dedup.minhash_lsh_pairs and functions.text.tokens; "
+        "idb_backend_spark.plans.synth.EXACT_JACCARD_SQL; not "
+        "operators/dedup.py, x.operators.dedup.y or tools/scale_probe.py"
+    )
+    got = [m.groups() for m in _NAME.finditer(text)]
+    assert got == [
+        ("operators", "dedup", "minhash_lsh_pairs"),
+        ("functions", "text", "tokens"),
+        ("plans", "synth", "EXACT_JACCARD_SQL"),
+        ("operators", "dedup", "py"),
+    ]
 
 
 def test_plan_capture_citation_pattern():

@@ -695,12 +695,17 @@ def test_pick_license_unknown_version_does_not_block_later_fragment():
 def test_quality_score_null_and_range(spark):
     from pyspark.sql import functions as F
 
-    from idb_backend_spark.functions.text import quality_score
+    from idb_backend_spark.functions.text import (
+        normalize_text,
+        quality_score_from_norm,
+    )
 
     df = spark.createDataFrame(
         [(None,), ("!!!???;;;###@@@...",), ("the quick brown fox and the dog",)],
         "text string",
-    ).select(quality_score("text").alias("q"))
+    ).select(
+        quality_score_from_norm("text", normalize_text("text")).alias("q")
+    )
     rows = [r["q"] for r in df.collect()]
     assert rows[0] is None          # null text -> null, not 0.5
     assert rows[1] == 0.0           # punctuation soup floors at 0

@@ -553,8 +553,19 @@ def test_compact_aborts_on_concurrent_add(spark, index_dir, monkeypatch):
 
 def test_broadcast_bytes_cap_parses_spark_size_forms(spark):
     """Every size syntax Spark accepts for autoBroadcastJoinThreshold
-    must parse: bare int, bare-bytes 'b' suffix, k/m/g with and without
-    trailing 'b', and -1 (broadcast disabled)."""
+    must parse in the session's broadcast gate (session._gate_broadcast,
+    shared by the probe, the replay guard and the PQ query panel): bare
+    int, bare-bytes 'b' suffix, k/m/g with and without trailing 'b' —
+    a frame of exactly the cap broadcasts, one byte more does not — and
+    -1 (broadcast disabled: nothing is force-broadcast)."""
+    from idb_backend_spark.session import _gate_broadcast
+
+    df = spark.range(1)
+
+    def hinted(est_bytes: int) -> bool:
+        gated = _gate_broadcast(df, est_bytes, spark)
+        return "broadcast" in gated._jdf.queryExecution().logical().toString()
+
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     cases = [
         ("10485760", 10485760),
@@ -568,7 +579,10 @@ def test_broadcast_bytes_cap_parses_spark_size_forms(spark):
     try:
         for raw, want in cases:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", raw)
-            assert ni._broadcast_bytes_cap(spark) == want, raw
+            if want < 0:
+                assert not hinted(0), raw
+            else:
+                assert hinted(want) and not hinted(want + 1), raw
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 

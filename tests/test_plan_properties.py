@@ -96,6 +96,41 @@ def test_minhash_signature_partial_min(spark):
     assert p.count("Exchange") <= 2  # _spread round-robin + the sig agg
 
 
+def test_exact_verify_shingles_the_corpus_once(spark):
+    """The in-frame exact-Jaccard verify (dedup._exact_verified) joins
+    both sides of the candidate pairs to ONE shingle frame under
+    shuffle_hash, so the second side is a reused exchange and the verify
+    shingles the corpus once; the minhash tier adds one more shingle
+    projection for its signature (duplicate-keeping shingles, no
+    array_distinct). A broadcast or an unshared side would add a
+    shingle projection to the executed plan, which is counted on the
+    final adaptive plan after a run: minhash 2, simhash 1."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    cases = [
+        (
+            dedup.minhash_exact_verified_pairs(
+                docs, "text", "doc_id", threshold=0.8
+            ),
+            2,
+        ),
+        (
+            dedup.simhash_exact_verified_pairs(
+                docs, "text", "doc_id", max_hamming=10, threshold=0.8
+            ),
+            1,
+        ),
+    ]
+    for df, most in cases:
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().executedPlan()
+        text = final.toString()
+        n = text.count("transform(sequence")
+        assert 1 <= n <= most, text
+        # the verify's distinct shingles: one projection, one reuse
+        assert text.count("array_distinct(CASE") == 1, text
+        assert "Reused" in text, text
+
+
 def test_latest_per_key_agg_avoids_sort_exchange(spark):
     """W1 hot path: max_by top-1-per-key must plan as an aggregation
     with a map-side partial phase — no Window (which would shuffle and

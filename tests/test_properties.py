@@ -678,7 +678,11 @@ def test_marker_hits_matches_hof_filter(spark):
     regex metacharacters (the escaping path)."""
     from pyspark.sql import functions as F
 
-    from idb_backend_spark.functions.text import marker_hits, tokens
+    from idb_backend_spark.functions.text import (
+        marker_hits_from_norm,
+        normalize_text,
+        tokens,
+    )
 
     texts = [
         "the cat and the dog", "THE the The", "", "   ", None,
@@ -695,7 +699,10 @@ def test_marker_hits_matches_hof_filter(spark):
     for words in marker_sets:
         hof = F.size(F.filter(tokens("text"), lambda x: x.isin(words)))
         got = df.select(
-            F.coalesce(marker_hits("text", words), F.lit(-1)).alias("n"),
+            F.coalesce(
+                marker_hits_from_norm(normalize_text("text"), words),
+                F.lit(-1),
+            ).alias("n"),
             F.coalesce(hof, F.lit(-1)).alias("h"),
         ).collect()
         for r, t in zip(got, texts):

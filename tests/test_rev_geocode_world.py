@@ -281,8 +281,8 @@ def test_land_rings_disjoint_on_sample_grid():
                 hits = {
                     c
                     for c in cands
-                    for i, (kind, geom) in enumerate(g.shapes[c])
-                    if g._contains(c, i, kind, geom, lon, lat)
+                    for kind, geom in g.shapes[c]
+                    if g._contains(kind, geom, lon, lat)
                 }
                 if len(hits) > 1:
                     overlaps.append((lon, lat, sorted(hits)))
