@@ -1,14 +1,11 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default
 sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE compact JSON line to stdout (the driver tails the LAST 2000
-chars of stdout and parses the line — r11's full payload outgrew that
-window and the round's artifact recorded ``parsed: null``, so from r12
-the stdout line carries only the core fields and the FULL payload —
-per-query raw samples, canary sample arrays — is written to
-``BENCH_LOCAL.json`` next to this script; ``tests/test_bench_emit.py``
-pins the rendered stdout length under the budget at the current
-HEADLINE size):
+Prints ONE compact JSON line to stdout, small enough for a reader that
+keeps only the last 2000 chars of stdout; ``tests/test_bench_emit.py``
+pins its rendered length under ``STDOUT_BUDGET`` at the current HEADLINE
+size. The full payload — per-query raw samples and the canary sample
+arrays — goes to ``BENCH_LOCAL.json`` next to this script:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...},
    "rows": {...}, ..., "detail": "BENCH_LOCAL.json", "sf": ...}
 
@@ -17,47 +14,33 @@ top-1-per-key over the fact table, symmetrized-union aggregation, semi-join
 cross-filter, hash aggregations, exact + MinHash-LSH dedup, and brute-force
 cosine top-k.
 
-Timing materializes every output column through the `noop` sink
-("materialization": "noop" in the JSON). Rounds 1-5 timed `.count()`,
-which lets Catalyst PRUNE the projected expressions — a pure-projection
-query like the enrichment pipeline was being timed as scan+count with
-none of its columns computed (measured: 1.6 s counted vs ~19 s fully
-materialized at sf0.1). Totals from r6 onward are therefore honest but
-NOT comparable to earlier rounds' artifacts.
+Method (DESIGN.md, "Headline bench method"):
 
-Each query is timed THREE times and the MINIMUM reported ("timing":
-"min_of_3", methodology 3, bumped r12). r6-r11 used min_of_2
-(methodology 2); the r11 adjudication showed min-of-2 under-samples on
-this host — the same query recorded 0.51 s in the timed loop while its
-own 5-sample canary hit 0.394 s in the same session, so round-over-round
-deltas had become smaller than the sampling error. min_of_3 narrows
-that gap for ~13 s/run. Cross-round totals are comparable ONLY between
-artifacts with equal methodology. This is noise control, not
-cherry-picking: the host shows episodic multi-second stalls (the same
-1.1 s query measured 13.2 s in one run and 1.2 s in the next with zero
-guest-side load); the minimum measures the plan, and all raw samples
-are preserved in BENCH_LOCAL.json so the variance stays visible.
-
-"noise_canary" (r8+, additive): ONE fixed query re-materialized 5 extra
-times after the timed loop, its min/max recorded. Same-code totals on
-this host have spanned 13.0-22.8 s within one hour (r7 adjudication),
-so a cross-round total delta is only readable next to that round's own
-canary spread: if the canary spread swallows the delta, the delta is
-host weather, not a plan change.
-
-"noise_canary_pre" (r9+, additive): the SAME canary run once more
-BEFORE the timed loop, so a mid-run load shift — host weather arriving
-or leaving while the headline loop runs — is visible INSIDE one
-artifact: a pre/post spread mismatch means the loop was timed under
-changing load and its per-query deltas should be read against the
-WIDER of the two spreads.
-
-Row-drift pin (r12+): per-query RESULT row counts are compared against
-the previous run's BENCH_LOCAL.json at the same sf; any mismatch prints
-a ``# ROW-DRIFT WARNING`` line to stderr. Warn-only by
-design — a legitimate operator change can move a count — but a query
-that "improved" by silently returning fewer rows now leaves a visible
-mark in the round's log.
+- Noop sink. Every output column is materialized through the `noop`
+  sink ("materialization": "noop"). `.count()` would let Catalyst prune
+  the projected expressions: the enrichment pipeline measured 1.6 s
+  counted vs ~19 s fully materialized at sf0.1.
+- Warm-up. Every headline query runs once at sf0.001 (code paths), then
+  once more untimed at the benchmark sf before its timed samples, so the
+  JIT tail is not inside the measurement.
+- Min of 3 ("timing": "min_of_3", "methodology": 3). Each query is timed
+  three times and the minimum reported. Min-of-2 under-sampled: one
+  query recorded 0.51 s in the timed loop while its own canary hit
+  0.394 s in the same session, and the host stalls (one 1.1 s query
+  measured 13.2 s in one run and 1.2 s in the next, with no guest-side
+  load). The minimum measures the plan; all raw samples stay in
+  BENCH_LOCAL.json, so the variance stays visible. Totals compare only
+  at equal methodology.
+- Pre and post canaries. One fixed query ("noise_canary") is
+  re-materialized 5 times before and after the timed loop; its min/max
+  calibrate how much of a total delta the host produces on its own, and
+  a pre/post mismatch shows load that changed during the loop.
+  "canary_floor" is the lower of the two minima.
+- Row-drift pin. Per-query RESULT row counts are compared against the
+  previous run's BENCH_LOCAL.json at the same sf; a mismatch prints a
+  ``# ROW-DRIFT WARNING`` line to stderr. Warn-only — a legitimate
+  operator change can move a count — but a query that "improved" by
+  returning fewer rows leaves a visible mark.
 """
 
 from __future__ import annotations
@@ -82,7 +65,7 @@ HEADLINE = [
     "sibling_symmetrize",
     "crossfilter_semi_join",
     "citation_counts",
-    # r6: stats_daily_rollup's catalog entry was retired; the nested A7
+    # stats_daily_rollup's catalog entry was retired; the nested A7
     # shape (same rollup plus the freq-map agg) carries the timing now
     "stats_rollup_nested",
     "majority_vote",
@@ -95,7 +78,7 @@ HEADLINE = [
     "etl_enrichment_pipeline",
     "datum_shift_molodensky",
     "corpus_curation_pipeline",
-    # r11 promotions (S15/P15) — keep their timings on the headline so
+    # the S15/P15 entries — keep their timings on the headline so
     # the serving-view join and the dominance rollup stay perf-tracked
     "media_serving_table",
     "datasets_index_codes",
@@ -116,14 +99,14 @@ def compact_payload(
     canary_pre: dict | None,
     sf: float,
 ) -> dict:
-    """The stdout-line payload: everything the driver needs to record a
-    round (per-query timings + result rows + canary spread), nothing
+    """The stdout-line payload: everything needed to record a run
+    (per-query timings + result rows + canary spread), nothing
     that grows unboundedly (raw sample arrays live in BENCH_LOCAL.json).
     Kept as a pure function so tests can pin its rendered size."""
 
     def canary_min_max(c):
-        # min/max only — the 5-sample arrays are what pushed r11's line
-        # past the tail capture
+        # min/max only — the 5-sample arrays would push the line past
+        # the tail capture
         return (
             {"query": c["query"], "min": c["min"], "max": c["max"]}
             if c
@@ -136,27 +119,27 @@ def compact_payload(
         "value": round(total, 3),
         "unit": "sec",
         "queries": times,
-        # per-query RESULT row counts, so cross-round artifacts can
+        # per-query RESULT row counts, so runs can
         # normalize throughput and catch a query whose timing "improved"
         # because it silently returned fewer rows
         "rows": rows,
         # non-empty => 'value' sums only the SURVIVORS and must not be
-        # read as a speedup against a fully-green round
+        # read as a speedup against a fully-green run
         "failed": failed,
         # methodology version — bump ONLY when the timing method changes
-        # (v2 = noop + min_of_2, r6-r11; v3 = noop + min_of_3, r12+);
-        # cross-round deltas are meaningful only at equal methodology
+        # (v2 = noop + min_of_2; v3 = noop + min_of_3); deltas between
+        # runs are meaningful only at equal methodology
         "methodology": METHODOLOGY,
         "materialization": "noop",
         "timing": TIMING_LABEL,
         "noise_canary": nc,
         "noise_canary_pre": ncp,
-        # r16 (additive, VERDICT r15 item 7): the canary FLOOR — the
-        # best the host could do on the fixed canary query across both
-        # canary passes — as one machine-readable number, so cross-round
-        # total deltas can be separated from host drift mechanically
-        # (r15's 11 "regressed" queries tracked a 0.26 -> 0.343 floor
-        # shift) instead of by narrative. Timing methodology unchanged.
+        # the canary FLOOR — the best the host could do on the fixed
+        # canary query across both canary passes — as one
+        # machine-readable number, so total deltas between runs can be
+        # separated from host drift mechanically (11 "regressed" queries
+        # once tracked a 0.26 -> 0.343 floor shift) instead of by
+        # narrative
         "canary_floor": (
             min(x["min"] for x in (nc, ncp) if x) if (nc or ncp) else None
         ),
@@ -223,9 +206,9 @@ def main():
 
     # host-noise canary (additive context, NOT part of the total or the
     # per-query timings): one fixed mid-weight headline query, 5 repeat
-    # materializations; the spread calibrates how much of a cross-round
-    # total delta this host can produce on its own. Run BEFORE and AFTER
-    # the timed loop (r9) so a mid-run load shift shows inside one
+    # materializations; the spread calibrates how much of a total delta
+    # this host can produce on its own. Run BEFORE and AFTER the timed
+    # loop so a mid-run load shift shows inside one
     # artifact as a pre/post spread mismatch.
     canary_q = "majority_vote"
 
@@ -270,14 +253,14 @@ def main():
         try:
             # lookup INSIDE the try: a retired/renamed catalog entry not
             # yet reflected in HEADLINE must degrade to one failed row,
-            # not a KeyError that kills the JSON line the driver parses
+            # not a KeyError that kills the JSON line
             df = runnable[name](spark, sf_dir)
-            # one UNTIMED warm-up materialization at the benchmark SF
-            # (r13, verdict r12 task 2): the sf0.001 loop above warms
-            # code paths but not this plan's sf-specific JIT/codegen —
-            # r12's etl samples were still descending across all three
-            # timed runs ([4.233, 3.669, 3.34]), i.e. the warm-up tail
-            # sat inside the measurement; discard it explicitly
+            # one UNTIMED warm-up materialization at the benchmark SF: the
+            # sf0.001 loop above warms code paths but not this plan's
+            # sf-specific JIT/codegen — without it the etl samples still
+            # descended across all three timed runs ([4.233, 3.669, 3.34]),
+            # i.e. the warm-up tail sat inside the measurement; discard it
+            # explicitly
             materialize(df)
             runs = []
             for _ in range(TIMED_RUNS):
@@ -287,7 +270,7 @@ def main():
             n = df.count()  # untimed: row count for the report only
         except Exception as e:
             # one failing query must not swallow every other timing AND
-            # the JSON line the driver parses — record the failure and
+            # the JSON line — record the failure and
             # keep going
             times[name] = None
             rows[name] = None
@@ -319,7 +302,7 @@ def main():
     )
 
     # full payload — everything in the stdout core PLUS the raw sample
-    # arrays — to a local file for cross-round archaeology
+    # arrays — to a local file for later comparison
     full = dict(core)
     full["samples"] = samples
     full["noise_canary"] = canary_field(canary)

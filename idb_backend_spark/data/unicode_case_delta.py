@@ -6,7 +6,7 @@ against CPython's `str.lower`/`str.upper` over every assigned code
 point and records the 1:1 corrections as translate() src/dst strings.
 On this JDK 17 (Unicode 13) / CPython 3.11 (Unicode 14) pair the delta
 is exactly the case pairs Unicode assigned in version 14 — the
-Vithkuqi block and friends (VERDICT r14 finding #1's adjacent class).
+Vithkuqi block and friends (the class of the U+10570 fulltext skew).
 
 `py_lower_delta`/`py_upper_delta`: append after F.lower/F.upper where
 the expression mirrors a reference-Python `.lower()`/`.upper()`.

@@ -92,14 +92,14 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
     "ES": [(-11.5, 35.5, -1.0, 44.5), (-1.0, 37.5, 2.5, 40.5)],
     "PT": [(-13.0, 36.0, -8.7, 42.0)],
     "NO": [(2.0, 56.5, 12.0, 71.5), (12.0, 68.0, 31.0, 74.0)],
-    # south Baltic below 55.2 is PL's band (round 5: SE no longer claims
+    # south Baltic below 55.2 is PL's band (SE no longer claims
     # the Polish shelf)
     "SE": [(10.5, 55.2, 19.5, 61.0)],
     "DK": [(4.0, 53.5, 8.2, 57.8)],
     "DE": [(6.0, 53.5, 9.0, 55.5)],
     "NL": [(2.5, 51.5, 7.0, 55.5)],
     # Tyrrhenian/Ionian + the WEST half of the Adriatic only — the east
-    # Adriatic belongs to HR/SI/ME/AL's bands (round 5 split; the old
+    # Adriatic belongs to HR/SI/ME/AL's bands (split; the old
     # single box shadowed the whole east shore)
     "IT": [
         (8.0, 36.5, 19.0, 40.3),
@@ -107,7 +107,7 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
         (11.8, 44.6, 13.55, 45.8),
     ],
     "GR": [(19.5, 33.5, 28.5, 41.0)],
-    # round 5: carved around Cyprus' band (the old single box shadowed it)
+    # carved around Cyprus' band (the old single box shadowed it)
     "TR": [
         (25.0, 33.5, 31.8, 42.3),
         (31.8, 35.85, 36.5, 42.3),
@@ -133,7 +133,7 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
     "MY": [(98.5, 1.0, 105.5, 7.5)],
     "ID": [(93.0, -12.0, 120.0, 6.5)],
     "PH": [(116.5, 4.5, 127.5, 21.0)],
-    # round 5: carved around Taiwan's band (the old single box shadowed it)
+    # carved around Taiwan's band (the old single box shadowed it)
     "CN": [(105.5, 15.0, 119.8, 41.0), (119.8, 26.0, 126.0, 41.0)],
     "KR": [(123.5, 32.0, 132.0, 39.0)],
     "JP": [(128.0, 24.0, 148.0, 46.0)],
@@ -180,7 +180,7 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
     "GY": [(-59.5, 7.0, -56.8, 9.5)],
     "SR": [(-56.8, 6.0, -53.8, 8.5)],
     "GT": [(-93.0, 13.0, -90.5, 14.3)],
-    # ---- round-5 batch: new coastal countries + Baltic/Black/Adriatic
+    # ---- new coastal countries + Baltic/Black/Adriatic
     # gaps. (DJ was band-less in the first pass; it now has a tight
     # strait band in the priority-first block at the top of the dict.)
     "MR": [(-19.5, 16.3, -16.5, 21.2)],
@@ -200,7 +200,7 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
     "BE": [(2.2, 51.05, 3.25, 51.5)],
     "HR": [(15.2, 42.6, 18.1, 44.6), (13.9, 44.6, 15.6, 45.3)],
     "SI": [(13.55, 45.43, 13.85, 45.62)],
-    # round-5 island/coast bands. KP and BS, band-less in the first
+    # island/coast bands. KP and BS, band-less in the first
     # pass, now carry tight bands in the priority-first block at the
     # top; CY's band is the carve-out from TR's box above.
     "TW": [(119.8, 21.5, 123.5, 25.9)],
@@ -213,7 +213,7 @@ WORLD_EEZ: dict[str, list[tuple[float, float, float, float]]] = {
     "BN": [(113.8, 3.8, 115.5, 5.1)],
     "BD": [(90.0, 20.6, 92.3, 21.8)],
     "GL": [(-48.0, 59.5, -35.0, 65.0), (-75.0, 66.0, -55.0, 78.0)],
-    # --- round-5 NE-110m land additions' marine bands ---
+    # --- NE-110m land additions' marine bands ---
     "EH": [(-17.6, 20.8, -15.5, 27.6)],
     "PR": [(-67.6, 17.4, -65.2, 18.8)],
     "NC": [(163.0, -23.2, 167.5, -19.6)],

@@ -174,7 +174,7 @@ def finish_link(link: str) -> str:
     """Artifact-link finishing — force the https scheme
     (tasks/download.py:97,129 intent).
 
-    r10 sweep pin (tests/test_e2e_flagship.py
+    Sweep pin (tests/test_e2e_flagship.py
     test_finish_link_and_reference_py3_crash): the reference writes
     ``string.replace(link, "http:", "https:")`` — the Python-2 STRING
     MODULE function, which does not exist on its Python-3 runtime — so

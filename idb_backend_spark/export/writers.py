@@ -100,7 +100,7 @@ def write_csv_member(
         for part in sorted(glob.glob(os.path.join(tmp, "part-*"))):
             # newline='' — universal-newline translation would rewrite a
             # quoted value's embedded \r\n to \n DURING the copy,
-            # corrupting record bytes (r14 writer-interop fuzz finding:
+            # corrupting record bytes (writer-interop fuzz finding:
             # the reference's reader opens with newline='' and preserves
             # them, so the round-trip changed content and etag)
             with open(part, "r", encoding="utf-8", newline="") as pf:
@@ -331,7 +331,7 @@ def uniquevals_frame(
     )
     # the scientificname capitalize fold runs BEFORE counting AND before
     # the surrogate id (download.py:189-190 — v = v.capitalize(); the
-    # val_func hashes the folded k). r11 differential finding
+    # val_func hashes the folded k). Differential finding
     # (test_download_vs_reference): this export path previously skipped
     # the fold the graded A3 kernel applies — gate AND fold live in the
     # one shared helper so the two can never drift again. The null->''

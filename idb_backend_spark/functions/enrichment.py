@@ -58,7 +58,8 @@ def with_geo_normalize(df, lat_raw: Column, lon_raw: Column):
     column reads. Every parse is referenced 4-8 times from CaseWhen
     contexts, which codegen subexpression elimination cannot share, so
     an inline form re-inlines the whole parse chain at each reference
-    (OPTIMIZATION_r15.md §6). CollapseProject keeps the stage boundaries
+    (DESIGN.md, "Coordinate parse staged once"). CollapseProject keeps
+    the stage boundaries
     because the staged columns are referenced more than once by non-cheap
     consumers.
 

@@ -78,7 +78,7 @@ def relations_grabber(
     map = key absent); returns {outname: Column} for the type's
     RELATION_TABLE rows.
 
-    r10 differential finding: an EMPTY array under a TEXT relation key
+    Differential finding: an EMPTY array under a TEXT relation key
     raises IndexError in the reference (``...[f[1]][0]`` on [],
     :654/:664 — uncaught, it kills the whole indexing run for one
     malformed record). The engine yields NULL instead
@@ -118,7 +118,7 @@ def media_presence_flags(
     None``, and relationsGrabber emits an EMPTY list (not None) when an
     ``idigbio:links`` mediarecord array carries no extractable uuid
     (conversions.py:656-657) — that record still reports hasImage=true
-    (r9 parity correction; the old ``size > 0`` form reported false)."""
+    (parity correction; the old ``size > 0`` form reported false)."""
     has_media = mediarecords.isNotNull()
     has_specimen = records.isNotNull()
     return {
@@ -179,7 +179,7 @@ def wkt_polygon_ring(wkt: Column) -> Column:
 
     # py_strip, not F.trim: shapely tolerates tab/CR padding inside the
     # parens; a space-only trim left the first pair regex-anchored
-    # against a leading tab (the r12 whitespace-class sweep)
+    # against a leading tab (the whitespace-class sweep)
     pairs = F.split(py_strip(body), r"\s*,\s*")
     ring = F.transform(
         pairs,
@@ -393,7 +393,7 @@ def finalize_index_document(
     (indexer.py:79-83: ``len(v) > 0``, NO trim — a whitespace-only
     string is kept).
 
-    r10 sweep finding, pinned in tests/test_finalize.py: on the
+    Sweep finding, pinned in tests/test_finalize.py: on the
     reference's Python-3 runtime that skip is DEAD CODE — the
     ``isinstance(v, basestring)`` probe raises NameError (indexer.py
     never imports a py2 compat shim) straight into the bare ``except``,

@@ -22,8 +22,9 @@ FIRST_NUMBER_RE = r"([+-]?\d+(?:,\d{3})*(?:\.\d*)?)"
 #: Python str.strip()'s whitespace class (every BMP codepoint where
 #: str.isspace() is True) — btrim treats this as a SET of trim chars.
 #: F.trim strips ONLY U+0020, so a tab-padded value inside a
-#: comma-delimited field kept its tabs (r11 differential finding,
-#: test_delimited_vs_reference::test_value_strip_whitespace_class).
+#: comma-delimited field kept its tabs (differential finding,
+#: tests/test_delimited_vs_reference.py::
+#: test_value_strip_whitespace_class_vs_reference).
 _PY_STRIP_CHARS = (
     " \t\n\x0b\x0c\r\x1c\x1d\x1e\x1f\x85\xa0\u1680"
     "\u2000\u2001\u2002\u2003\u2004\u2005\u2006\u2007\u2008"
@@ -35,8 +36,8 @@ def blank_to_null(c: Column | str) -> Column:
     """The reference reader's value contract, exactly
     (delimited.py:275-277): every kept value is ``.strip()``-ed and an
     empty-after-strip value is DROPPED from the record dict (here:
-    null). r10 fix: the old form nulled whitespace-only values but kept
-    the padding on non-blank ones; r11 fix: strip Python's whole
+    null). Both halves hold: whitespace-only values become null AND
+    non-blank ones lose their padding, stripping Python's whole
     whitespace CLASS (btrim over the isspace set — one codegen'd
     character-set scan, no regex), not just spaces — the reference's
     ``lineArr[k].strip()`` removes tabs/CRs/vertical tabs too. (The
@@ -50,14 +51,14 @@ def py_strip(c: "Column | str") -> Column:
     """Python ``str.strip()`` as one native expression: btrim over the
     full isspace character set. Every engine fold that mirrors a
     reference ``.strip()`` must use this, not F.trim — F.trim removes
-    ONLY U+0020 (the r11 delimited finding and the r12 identifier-munge
+    ONLY U+0020 (the delimited finding and the identifier-munge
     finding are both this class)."""
     c = F.col(c) if isinstance(c, str) else c
     return F.btrim(c, F.lit(_PY_STRIP_CHARS))
 
 
 # --------------------------------------------------------------------------
-# Python numeric-literal parity (r12): the reference coerces provider
+# Python numeric-literal parity: the reference coerces provider
 # strings with float()/int()/Decimal(), which accept EVERY unicode
 # decimal digit (the Nd category, 650 non-ASCII chars), full-class
 # whitespace padding, and (strictly, for float/int) underscores between
@@ -84,7 +85,7 @@ _ND_DST = "".join(str(_ud.decimal(ch)) for ch in _ND_SRC)
 #: OWN Unicode tables (JDK 17 = Unicode 13) never decide what a digit
 #: is. The previous `\p{Nd}` spelling silently rejected digits Unicode
 #: assigned after the JVM's tables (Tangsa U+16AC0-16AC9, new in 14)
-#: that CPython's float()/int() accept — the r15 Unicode-skew sweep's
+#: that CPython's float()/int() accept — the Unicode-skew sweep's
 #: finding in this file (tests/test_unicode_skew_sweep.py).
 _PY_D = r"\d(?:_?\d)*"
 
@@ -258,7 +259,7 @@ def decimal_exponent(verbatim: Column | str) -> Column:
     Unparseable strings return 0 via the bare except; <=2 triggers the
     low-precision flag.
 
-    r10 differential finding: NaN/Infinity spellings do NOT except —
+    Differential finding: NaN/Infinity spellings do NOT except —
     Decimal parses them, ``as_tuple().exponent`` is the STRING 'n'/'F',
     and ``-1 * 'n'`` is python string REPETITION, so getExponent
     returns the EMPTY STRING. The py2 consumer (``exp <= 2``,
@@ -267,7 +268,7 @@ def decimal_exponent(verbatim: Column | str) -> Column:
     crash). Modeled as NULL here: the flag's when() treats NULL as
     false, reproducing the py2 outcome natively."""
     c = F.col(verbatim) if isinstance(verbatim, str) else verbatim
-    # Decimal(str) strips the FULL whitespace class (r12: a tab-padded
+    # Decimal(str) strips the FULL whitespace class (a tab-padded
     # verbatim coordinate still reads its true precision — F.trim left
     # it unparsed, mis-flagging it low-precision), accepts any unicode
     # Nd digit anywhere including the exponent, and deletes underscores
@@ -295,10 +296,10 @@ def decimal_exponent_from_norm(s: Column) -> Column:
     # — both fold to 0, exactly what the SQL twin's try_cast does (the
     # reference would return the astronomical exponent there; engine and
     # twin agree with each other, which is what the gate certifies).
-    # The empty-match arm short-circuits BEFORE the cast (r15, guide
-    # §1.2 per-task work): try_cast('' as int) is implemented with an
-    # internal NumberFormatException per row, and most coordinates have
-    # no scientific exponent — the unguarded form paid ~18 us/row of
+    # The empty-match arm short-circuits BEFORE the cast (DESIGN.md,
+    # "Exception-free empty exponent"): try_cast('' as int) is implemented
+    # with an internal NumberFormatException per row, and most coordinates
+    # have no scientific exponent — the unguarded form paid ~18 us/row of
     # exception overhead (sf0.1 A/B on the 600k-row frame: 0.73 s ->
     # 0.31 s for the frac - e_val projection). '' -> 0 is exactly what
     # coalesce(try_cast('')) produced.
@@ -317,7 +318,7 @@ def grab_first_uuid(c: Column | str) -> Column:
     """F9 helper — first UUID embedded in a string/URL (conversions.py:
     319-331). The matched group is returned VERBATIM — the reference's
     grabFirstUUID does no case fold, so an uppercase-hex uuid in a link
-    stays uppercase in the relation columns (r9 correction: an earlier
+    stays uppercase in the relation columns (parity correction: an earlier
     F.lower() here was a parity divergence, not a reference quirk)."""
     c = F.col(c) if isinstance(c, str) else c
     pat = r"([0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-[0-9a-fA-F]{12})"
@@ -330,7 +331,7 @@ def grab_first_uuid(c: Column | str) -> Column:
 #: escapes exist in Nd). Spelling the inventory out keeps the match set
 #: CPython's even where the JVM's `\p{Nd}` tables lag a Unicode version
 #: (Tangsa digits, new in 14, are invisible to JDK 17's regex engine —
-#: the r15 skew sweep).
+#: the Unicode-skew sweep).
 _ND_CLASS = "[0-9" + _ND_SRC + "]"
 
 
@@ -339,8 +340,8 @@ def genbank_accessions(c: Column | str) -> Column:
     findall over associatedSequences (conversions.py:838-853). ``\\d``
     there is Python's — the Unicode Nd category — where Java's is
     ASCII-only, so the engine spells the Nd inventory as an explicit
-    class (r12 differential finding: an accession written with
-    Arabic-Indic digits extracts in the reference; r15: `\\p{Nd}` still
+    class (differential finding: an accession written with
+    Arabic-Indic digits extracts in the reference; and `\\p{Nd}` still
     missed digits newer than the JVM's Unicode tables)."""
     c = F.col(c) if isinstance(c, str) else c
     return F.regexp_extract_all(

@@ -60,7 +60,7 @@ _MAGIC: list[tuple[bytes, str, str]] = [
     # ZIP signatures FIRST — the reference short-circuits them before
     # libmagic ever runs (media_validation.py:79-81: local file header,
     # empty archive, spanned archive). The 'datasets' bucket on the zip
-    # arms is an ENGINE-SIDE choice (r9 ADVICE): the reference's
+    # arms is an ENGINE-SIDE choice: the reference's
     # default_buckets has NO application/zip entry, so its validate()
     # raises UnknownBucketError for a zip with no explicit bucket —
     # here a sniffed zip routes to 'datasets' (the bucket DwC-A zips

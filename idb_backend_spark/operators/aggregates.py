@@ -84,8 +84,8 @@ def collection_counts(
     ]
     if not aggs:
         # zero pivot types: agg() rejects an empty expression list
-        # (same degenerate class as versioning.latest_per_key_agg,
-        # ADVICE r14) — the pivot of nothing is just the parents
+        # (same degenerate class as versioning.latest_per_key_agg)
+        # — the pivot of nothing is just the parents
         return df.select(parent).distinct()
     return df.groupBy(parent).agg(*aggs)
 
@@ -301,7 +301,7 @@ def usage_stats_rollup(
     collect.py:136 — pass ``F.to_json`` of a struct, whose field order
     is fixed by the schema, or a canonical string).
 
-    Shape (r15, guide §2.4 — ONE pass over the fact table): one
+    Shape (ONE pass over the fact table): one
     kv-unpivot + two grouped aggs (fine per-key sums, then map assembly).
     The per-group ``count``/``total`` scalars ride the SAME cascade as
     two synthetic dims with a constant key (``__count`` w=1, ``__total``
@@ -315,7 +315,7 @@ def usage_stats_rollup(
     wall neutral locally (the scan is 2 MB here); the win is the
     dropped second scan + join.
 
-    Output-type note (r16, ADVICE r15): a group whose term/query_hash/
+    Output-type note: a group whose term/query_hash/
     geocode are NULL in every row yields EMPTY maps ``{}`` where the
     old totals-LEFT-join shape produced NULL maps. The one call site
     string-renders through a coalesce that absorbs the difference (and

@@ -137,7 +137,7 @@ def apply_correction_rules(
     # always "differs": the reference's added branch
     # (record_corrector.py:243-247) fires unconditionally for a key the
     # record lacks — even a None correction value lands flag_<k>_added
-    # (r11 differential finding, test_corrections_vs_reference; the old
+    # (differential finding, test_corrections_vs_reference; the old
     # null-vs-null coalesce read that as a no-op and dropped the flag)
     differs = hit & (
         cur.isNull() | (F.lower(cur) != F.coalesce(new, F.lit("\0")))

@@ -413,8 +413,8 @@ def simhash_pairs(
     # term in hamming_pairs' join condition cannot infer an
     # isnotnull(fp) filter: that inferred filter pushes through the
     # banded projection and the spread exchange and re-evaluates the
-    # whole hashing UDF a second time below it (guide §4.4's
-    # duplication, observed as 2x ArrowEvalPython when the radius
+    # whole hashing UDF a second time below it (observed as 2x
+    # ArrowEvalPython when the radius
     # filter moved ahead of the dedup).
     fp = spread_for_compute(
         df.select(F.col(id_col), F.col(text_col))
@@ -481,7 +481,7 @@ def hamming_pairs(fp: DataFrame, max_hamming: int = 3) -> DataFrame:
     # anyway: the banded side IS the corpus, far over any broadcast
     # cap, and the bucketed equi-join is exactly the shape AQE
     # skew-split handles.
-    # Hot-key evidence (SCALING.md, "hot-key skew evidence for the
+    # Hot-key evidence (SCALING.md, "Hot-key skew evidence for the
     # SHUFFLE_HASH self-joins"): measured at 4x the bench corpus with
     # ONE chunk key holding 10%/30% of all rows — completes, wall
     # tracks the inherent n^2 pair output, build memory is the hot

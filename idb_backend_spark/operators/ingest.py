@@ -822,7 +822,7 @@ def ingest_outcomes_relational(
     # one-pass first-claim per identifier among gate1 survivors: a
     # min-over-window on the claim key needs ONE exchange; the earlier
     # groupBy + self-join formulation shuffled the exploded claims a
-    # second time for the join (r13 simplification, advice follow-up)
+    # second time for the join
     w_claim = Window.partitionBy(*member, "ident")
     dup_id_rows = (
         base.filter(gate1)
@@ -1014,8 +1014,8 @@ def ingest_subfiles_routed(
     work: a handful of mega-recordsets no longer pin one executor.
 
     ``kernel_max_rows`` default comes from the MEASURED memory profile
-    (SCALING.md, Round-13 addendum 1): the kernel's Python worker
-    holds ~3.6 KB/row end-to-end (pandas group + lookup dicts +
+    (SCALING.md, "Ingest kernel memory ceiling"): the kernel's Python
+    worker holds ~3.6 KB/row end-to-end (pandas group + lookup dicts +
     outcome rows; linear 250 k → 5 M rows), so
     1.2 M rows ≈ 4.1 GiB — a safe per-task budget on an 8–16 GiB
     executor. Scale it with the executor's python-worker budget:

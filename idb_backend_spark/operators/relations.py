@@ -28,7 +28,7 @@ def aggregate_identifiers(
 def symmetrize_edges(edges: DataFrame, r1: str = "r1", r2: str = "r2") -> DataFrame:
     """U1/J3 — undirected edge list -> both directions (db.py:62-66).
 
-    Deleted-filter asymmetry in the reference, r10 sweep note: the
+    Deleted-filter asymmetry in the reference: the
     per-item siblings map filters ``sibs.deleted = false`` (db.py:69),
     but the standalone ``idigbio_relations`` VIEW joins uuids with NO
     deleted filter (db.py:250-264) — a deleted sibling appears in the

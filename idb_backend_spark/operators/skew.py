@@ -58,7 +58,7 @@ def salted_agg(
     (sum of counts, sum of sums, min of mins, ...)."""
     if not partial_aggs or not final_aggs:
         # fail with the contract, not GroupedData.agg's bare assert
-        # (the degenerate-agg class from ADVICE r14)
+        # (the degenerate-agg class of versioning.latest_per_key_agg)
         raise ValueError(
             "salted_agg requires non-empty partial_aggs and final_aggs"
         )

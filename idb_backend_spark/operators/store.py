@@ -207,7 +207,6 @@ def apply_harvest_batch(
     history: DataFrame,
     batch: DataFrame,
     modified: Column,
-    detect_deletes: bool = True,
     delete_parents: list | None = None,
     cache_latest: bool = False,
 ) -> BatchResult:
@@ -254,30 +253,19 @@ def apply_harvest_batch(
     ).withColumn("modified", modified)
 
     carry = [c for c in ("type", "parent") if c in history.columns]
-    if detect_deletes:
-        live = cur.filter(F.col("etag") != TOMBSTONE_ETAG)
-        if delete_parents is not None:
-            live = live.filter(F.col("parent").isin(delete_parents))
-        elif "parent" in live.columns and "parent" in batch.columns:
-            parents = batch.select("parent").distinct()
-            live = live.join(
-                parents,
-                on=live["parent"].eqNullSafe(parents["parent"]),
-                how="leftsemi",
-            )
-        tombs = tombstones_for_deletes(
-            live.select("uuid", "version", *carry), batch, modified=modified
+    live = cur.filter(F.col("etag") != TOMBSTONE_ETAG)
+    if delete_parents is not None:
+        live = live.filter(F.col("parent").isin(delete_parents))
+    elif "parent" in live.columns and "parent" in batch.columns:
+        parents = batch.select("parent").distinct()
+        live = live.join(
+            parents,
+            on=live["parent"].eqNullSafe(parents["parent"]),
+            how="leftsemi",
         )
-    else:
-        # schema matches the detect_deletes=True shape (incl. type/parent
-        # when history carries them) so callers can append either result
-        # to history without mode-dependent column surgery
-        carry_schema = "".join(f", {c} string" for c in carry)
-        tombs = history.sparkSession.createDataFrame(
-            [],
-            f"uuid string{carry_schema}, version int, etag string, "
-            "modified timestamp",
-        )
+    tombs = tombstones_for_deletes(
+        live.select("uuid", "version", *carry), batch, modified=modified
+    )
 
     status = F.when(F.col("version") == 0, "create").otherwise("update")
     summary = (
@@ -305,7 +293,8 @@ def commit_gate(
     db_check.py:695-697).
 
     DOCUMENTED DIVERGENCE from the reference's literal code
-    (db_check.py:516-538; r9 audit CORRECTED by the r13 EXECUTED run —
+    (db_check.py:516-538; a transcription audit CORRECTED by the EXECUTED
+    run —
     tests/test_ingest_vs_reference.py::test_process_file_commit_gate_executed):
     the literal gate's entire threshold arithmetic is DEAD CODE.
     ``counts`` is keyed by the member's FILE name (``DwcaRecordFile
@@ -314,7 +303,7 @@ def commit_gate(
     continue`` skips EVERY member, ``type_commits`` stays empty, and
     ``commit_ok = all([])`` is True: **the reference always commits**
     (and the ``commit_ok = commit_force`` seed at :516 is overwritten
-    regardless). The r9 adjudication had transcribed counts as keyed
+    regardless). The transcription had read counts as keyed
     by type and read the condition as "inverted"; execution shows it
     never runs at all. This engine implements the evident intent the
     dead code was written for — abort on mass change relative to the

@@ -47,7 +47,8 @@ def latest_per_key_agg(
     ``ColumnPruning``'s NestedColumnAliasing then ping-ponged the join
     across that Project with fresh ``_extract_*`` aliases every
     iteration — the optimizer hit ``Max iterations (100)`` without
-    reaching a fixpoint (SCALING.md, Round-14 addendum 1).
+    reaching a fixpoint (SCALING.md, "Catalyst convergence: the Max
+    iterations (100) cycle closed").
     Row atomicity is preserved: the N ``max_by`` calls are structurally
     identical, so PhysicalAggregation dedupes them to ONE aggregation
     buffer — one winner row, fields torn from the same struct.

@@ -1,8 +1,6 @@
-"""Round-7 grade front: the corpus-pipeline operator tiers that were
-implemented, unit-tested, and twin-SQL-parity-proven in round 6 but had
-no catalog slot (the 11-entry grading queue in plans/catalog.py's
-round-6 docstring). Each entry here drives its operator end-to-end under
-the driver's oracle gate:
+"""Corpus-pipeline operator tiers that were implemented, unit-tested and
+twin-SQL-parity-proven before they had a catalog slot. Each entry here
+drives its operator end-to-end under the oracle gate:
 
 * ``cms_heavy_hitters`` — T34: EXACT heavy hitters behind a Count-Min
   prefilter. The oracle is plain GROUP BY ... HAVING because the CMS
@@ -19,7 +17,7 @@ the driver's oracle gate:
 * ``neardup_index_probe`` — T33 end-to-end: bootstrap the persistent
   MinHash/LSH index on half the corpus, ADD the other half in a second
   batch, COMPACT the fragmented rows, exact-verify-probe a held-out
-  batch, then (r8) drive the STREAMING GATE through a crash-replay —
+  batch, then drive the STREAMING GATE through a crash-replay —
   build, add, compact, probe, and gate all inside one graded path.
   The oracle is the true cross-pair shingle-Jaccard set (equality also
   certifies total LSH recall at the graded scale — the containment
@@ -33,12 +31,12 @@ the driver's oracle gate:
 * ``epoch_shuffle`` — deterministic per-epoch permutation (one range
   exchange, plan-asserted in tests/test_plan_properties.py); the graded
   md5 key column proves the permutation value-for-value.
-* ``sketch_audits`` — T29's audit half, FOLDED into one slot (verdict
-  r6 task 8): HLL++ distinct and Greenwald-Khanna quantile sketches
-  certified against their exact twins in the same aggregate; the oracle
-  pins the exact values and the always-TRUE within-bound contract, so
-  the slot fails iff a sketch ever leaves its advertised error bound.
-* ``perceptual_neardup`` — T35's first oracle (verdict r6 task 3):
+* ``sketch_audits`` — T29's audit half, FOLDED into one slot: HLL++ distinct
+  and Greenwald-Khanna quantile sketches certified against their exact twins
+  in the same aggregate; the oracle pins the exact values and the
+  always-TRUE within-bound contract, so the slot fails iff a sketch ever
+  leaves its advertised error bound.
+* ``perceptual_neardup`` — T35's first oracle:
   planted byte-identical blobs through image_phash and the shared
   pigeonhole Hamming kernel at radius 0, graded against the
   blob-equality pair set.
@@ -374,7 +372,7 @@ _QPROBS = [0.25, 0.5, 0.75, 0.9]
 
 
 def _sketch_audits_oracle() -> str:
-    """One slot for both audit contracts (verdict r6 task 8): exact
+    """One slot for both audit contracts: exact
     values + the always-TRUE within-bound booleans; the slot fails iff
     either sketch ever leaves its advertised bound. Composed FROM the
     per-audit twin builders so the contracts stay defined in one place

@@ -1,4 +1,4 @@
-"""Round-5 §3.1 composition entry — the dataset-download path users
+"""SURVEY §3.1 composition entry — the dataset-download path users
 actually run, end-to-end: shim compile → record↔media cross-filter (J5)
 → DwC-A export with citation counts (S10/S11) → read the archive back
 through the engine's own reader (S1) and grade the member contents.

@@ -1,4 +1,4 @@
-"""Round-4 parity entries: schema-driven typed projection, sketch
+"""Parity entries: schema-driven typed projection, sketch
 verification, streaming execution, and audio derivatives.
 
 These close the carried §2 partials: F2 (schema-table-driven verbatim
@@ -58,7 +58,7 @@ _RAW_SYNTH: dict[str, str] = {
         "CASE c_custkey % 3 WHEN 0 THEN ' Eastern  Bluebird ' "
         "WHEN 1 THEN NULL ELSE 'Red Fox' END"
     ),
-    # r9 — raw-data flag keys (grabAll's third flag source,
+    # raw-data flag keys (grabAll's third flag source,
     # conversions.py:960-962): presence of a flag_* KEY in the harvested
     # data appends its suffix to the flags array; the value is never
     # consulted. Planted on overlapping moduli so some rows carry both
@@ -118,7 +118,7 @@ def _typed_projection_oracle() -> str:
     # empty list is not None), so its weight scores unconditionally —
     # score(t, r) checks `is not None`, conversions.py:264-271
     score_terms.append("1")
-    # r9 — the raw-data flag fold (conversions.py:960-962): the flags
+    # the raw-data flag fold (conversions.py:960-962): the flags
     # column carries the stripped flag_* suffixes in map order, and
     # score(t, r) subtracts len(flags) (conversions.py:269-270)
     flag_parts = " || ".join(
@@ -150,11 +150,10 @@ def records_typed_projection(spark, sf_dir):
     The oracle SQL is generated from the same table — a change to the
     table changes both sides in lockstep.
 
-    r9 adds grabAll's RAW-DATA flag fold (conversions.py:960-962,
-    previously unimplemented): flag_*-prefixed KEYS of the raw map
-    append their stripped suffix to the flags array, and the dqs
-    subtraction sees them (score(t, r) counts len(flags)) — graded via
-    planted flag_ keys on overlapping moduli.
+    It includes grabAll's RAW-DATA flag fold (conversions.py:960-962):
+    flag_*-prefixed KEYS of the raw map append their stripped suffix to the
+    flags array, and the dqs subtraction sees them (score(t, r) counts
+    len(flags)) — graded via planted flag_ keys on overlapping moduli.
 
     Plan shape: map construction + per-column map lookups + lower/trim —
     one codegen stage over the scan, no shuffle, no Python.
@@ -182,7 +181,7 @@ def records_typed_projection(spark, sf_dir):
         "commonnames",
         grabbers.collect_common_names(F.col("data")["dwc:vernacularName"]),
     )
-    # r9 — grabAll's raw-data flag fold (conversions.py:960-962): flag_*
+    # grabAll's raw-data flag fold (conversions.py:960-962): flag_*
     # KEYS of the raw map append their suffix to the flags array (key
     # presence is the trigger; values never consulted); score(t, r)
     # then subtracts len(flags) through the same dqs kernel

@@ -33,7 +33,7 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 def latest_version_per_key(spark, sf_dir):
     """J1/W1 — LATERAL top-1-per-key (latest event per user)."""
     ev = _t(spark, sf_dir, "events")
-    # project before the kernel (r15 s3, guide §2.3): the max_by payload
+    # project before the kernel: the max_by payload
     # struct is opaque to column pruning — unprojected, the scan dragged
     # events.value and the props MAP through the aggregation buffers to
     # output 3 columns
@@ -95,8 +95,8 @@ def identifier_aggregation(spark, sf_dir):
 def sibling_symmetrize(spark, sf_dir):
     """J3/U1 — undirected edge symmetrization + per-node degree.
 
-    One full-data exchange (r15, guide §2.4 — share one exchange across
-    operations keyed the same way): an explicit hash repartition on
+    One full-data exchange (share one exchange across operations keyed
+    the same way): an explicit hash repartition on
     ``src`` satisfies BOTH downstream aggregations' clustering
     requirements (HashPartitioning(src) clusters (src, dst) dedup AND
     the per-src count), so the (src, dst) dedup and the degree count run
@@ -109,7 +109,7 @@ def sibling_symmetrize(spark, sf_dir):
     rejected for exactly that reason); for adversarial hot-node graphs
     the two-exchange countDistinct form remains the salting fallback.
 
-    Precondition (r16, ADVICE r15): the dedup groupBy counts a NULL dst
+    Precondition: the dedup groupBy counts a NULL dst
     as a sibling group where the former countDistinct(dst) skipped
     NULLs. Both edge endpoints here are non-null TPC-H keys
     (l_orderkey/l_partkey), so the forms agree; a future caller feeding
@@ -167,17 +167,16 @@ def anti_join_deletes(spark, sf_dir):
     return gone.select("c_custkey", "c_name").orderBy("c_custkey")
 
 
-# Catalog entry `latest_object_per_url` retired from GRADING in round 8
-# to free a window slot for `tfidf_top_terms` (catalog.py retirement
-# rule). J6 stays covered: the operator body is the SAME
-# versioning.latest_per_key_agg max_by(struct) kernel that
-# `latest_version_per_key` drives to a green row in the same catalog
-# (J6 binds it to a composite fact key instead of a single entity
-# key — key arity changes the grouping expression, not the kernel), and
-# the kernel's window-form equivalence is pinned by
-# tests/test_plan_properties.py. Registered graded=False rather than
-# deleted because bench.py's HEADLINE set times this query every round —
-# it is the repo's large-fact-table top-1-per-key timing anchor.
+# Catalog entry `latest_object_per_url` retired from GRADING to free a
+# window slot for `tfidf_top_terms` (catalog.py retirement rule). J6 stays
+# covered: the operator body is the SAME versioning.latest_per_key_agg
+# max_by(struct) kernel that `latest_version_per_key` drives to a green row
+# in the same catalog (J6 binds it to a composite fact key instead of a
+# single entity key — key arity changes the grouping expression, not the
+# kernel), and the kernel's window-form equivalence is pinned by
+# tests/test_plan_properties.py. Registered graded=False rather than deleted
+# because bench.py's HEADLINE set times this query on every run — it is the
+# repo's large-fact-table top-1-per-key timing anchor.
 @query("latest_object_per_url", graded=False)
 def latest_object_per_url(spark, sf_dir):
     """J6 — DISTINCT ON (url) ... ORDER BY modified DESC pattern.
@@ -218,7 +217,7 @@ def latest_object_per_url(spark, sf_dir):
 
 @query(
     "reconcile_etag_diff",
-    # r10 — the reference's STORE-driven resume rule exactly
+    # the reference's STORE-driven resume rule exactly
     # (index_from_postgres.py:186-222): work set = store rows minus
     # etag-equal minus never-indexed tombstones (ok%7=0 plants the
     # tombstone etag; those absent from the index — ok%3=0 — are
@@ -279,8 +278,8 @@ def citation_counts(spark, sf_dir):
     return agg.hit_counts(orders, F.col("o_totalprice") >= 150000, "recordset")
 
 
-# A2 (filtered total count) — catalog entry `total_count` retired in
-# round 6 to fit the 50-slot grading window (catalog.py retirement rule).
+# A2 (filtered total count) — catalog entry `total_count` retired to
+# free a catalog slot (catalog.py retirement rule).
 # The operator stays covered: `download_e2e` drives the shim-compiled
 # filter -> count composition end-to-end (its citation totals come from
 # compile_shim-filtered counts), the count/hit_counts aggregation shape
@@ -290,7 +289,7 @@ def citation_counts(spark, sf_dir):
 
 @query(
     "unique_values_counts",
-    # r10: second arm plants a mixed-case scientificname column — the
+    # second arm plants a mixed-case scientificname column — the
     # reference capitalize()s scientificname values BEFORE counting
     # (download.py:189-190), merging the three case variants into ONE
     # 'Acer rubrum' bucket; nulls still land on the uncapitalized ''
@@ -333,7 +332,7 @@ def unique_values_counts(spark, sf_dir):
     )
 
 
-# RETIRED (round 6, third pass): `max_watermark` — A5 is a one-line
+# RETIRED: `max_watermark` — A5 is a one-line
 # grouped max (aggregates.max_watermark, which stays and gains a direct
 # unit test in tests/test_quantize.py::test_max_watermark_operator); the
 # watermark mechanic keeps driver evidence inside `ingest_summary` (run
@@ -363,8 +362,8 @@ def collection_counts_pivot(spark, sf_dir):
     return out.orderBy("user_id")
 
 
-# A7 (basic daily rollup) — catalog entry `stats_daily_rollup` retired in
-# round 6 to free a grading slot for `export_jobs_queue` (catalog.py
+# A7 (basic daily rollup) — catalog entry `stats_daily_rollup` retired to
+# free a grading slot for `export_jobs_queue` (catalog.py
 # retirement rule). The A7 operator stays driver-graded through
 # `stats_rollup_nested` (q_store.py — the full nested-freq-map shape);
 # agg.stats_rollup remains unit-tested in tests/test_plan_properties.py.
@@ -399,22 +398,22 @@ def majority_vote(spark, sf_dir):
     )
 
 
-# Catalog entry `dqs_score` retired in round 8 to free a window slot
+# Catalog entry `dqs_score` retired to free a catalog slot
 # for `pq_recall_audit` (catalog.py retirement rule). A8/F18 stay
 # driver-graded in the same catalog: `records_typed_projection`
 # computes its dqs column through the real table-driven kernel
 # (functions.flags.dqs_score_for over the §1.4 typed schema's
 # weights/maxscore — the reference's conversions.py:218-224,:264-271
 # shape), and `etl_enrichment_pipeline` grades the flag-subtracting
-# dqs_score form every other round. The retired entry's inline
+# dqs_score form. The retired entry's inline
 # presence-count formula over `documents` was a simplified restatement
 # of the same weighted-presence arithmetic, not a distinct kernel;
 # functions.flags keeps its unit coverage in tests/test_typed_schema.py::
 # test_dqs_score_for_matches_reference_fold.
 
 
-# O1 (LIMIT/OFFSET page) — catalog entry `keyset_pagination` retired in
-# round 6 to free a grading slot for `video_frame_sample` (catalog.py
+# O1 (LIMIT/OFFSET page) — catalog entry `keyset_pagination` retired to
+# free a grading slot for `video_frame_sample` (catalog.py
 # retirement rule). O1 stays driver-graded through `keyset_deep_page`
 # (the continuation walk, which exercises the same ordered-page
 # machinery deeper), and paginate()/keyset equivalence is pinned by
@@ -445,7 +444,7 @@ def grab_first_number_q(spark, sf_dir):
     ).orderBy("event_id")
 
 
-# RETIRED (round 6, second pass): `date_features` — F8's derived
+# RETIRED: `date_features` — F8's derived
 # year/month/startdayofyear features are three built-in projections
 # (F.year/F.month/F.dayofyear, conversions.py:626-627) with no custom
 # operator behind them; the F8 machinery that can actually break
@@ -543,15 +542,14 @@ def ordered_group_iteration(spark, sf_dir):
     out = agg.ordered_group_rollup(ev, "user_id", ["ts"], "event_id")
     return out.select("user_id", "ordered_values", "n").orderBy("user_id")
 
-
 # Static-datasets-index dominant codes (generate_static_datasets_index
-# .py:74-100). PROMOTED to a graded slot in round 11 (the slot freed by
-# the ann_cosine_topk retirement, q_textsim.py — verdict r10 task 1;
-# registered graded=False in r10 only because the catalog sat at the
-# 100-entry ceiling). The kernel quirks (strict >0.9 gate with the
-# total-docs denominator, the single-bucket OR arm, verbatim cc vs
-# true_ic-folded ic, count-desc/key-asc top bucket) stay unit-pinned in
-# tests/test_datasets_index.py; the oracle grades them end-to-end.
+# .py:74-100). Graded in the slot the ann_cosine_topk retirement freed
+# (q_textsim.py); it had been registered graded=False only because the
+# catalog sat at the 100-entry ceiling. The kernel quirks (strict >0.9
+# gate with the total-docs denominator, the single-bucket OR arm,
+# verbatim cc vs true_ic-folded ic, count-desc/key-asc top bucket) stay
+# unit-pinned in tests/test_datasets_index.py; the oracle grades them
+# end-to-end.
 _DATASETS_INDEX_ORACLE = (
     "WITH g AS (SELECT CAST(user_id % 6 AS VARCHAR) AS rs, "
     "  CASE CAST(user_id % 6 AS INT) "

@@ -1,4 +1,4 @@
-"""Round-5 scale-path entries — the maintenance and skew operators that
+"""Scale-path entries — the maintenance and skew operators that
 were unit-only, executed under the driver's oracle gate, plus the
 composed training-corpus pipeline.
 
@@ -310,7 +310,7 @@ def training_corpus_e2e(spark, sf_dir):
     from idb_backend_spark.operators.sampling import split_assignment
 
     docs = _t(spark, sf_dir, "documents")
-    # normalized text staged once (r15 s3): the gate + tokenization ran
+    # normalized text staged once: the gate + tokenization ran
     # the normalize chain 3x per row in the expression forms
     docs = docs.withColumn("__norm", text.normalize_text("text"))
     from idb_backend_spark.session import barrier_filter

@@ -52,7 +52,7 @@ def shim_term_terms(spark, sf_dir):
     )
 
 
-# Catalog entry `shim_range_prefix` retired in round 7, FOLDED into
+# Catalog entry `shim_range_prefix` retired, FOLDED into
 # `shim_exists_range` below (catalog.py retirement rule): one combined
 # conjunction now drives exists + explicit range (both bounds) + prefix
 # through the same shim compilation the two entries exercised
@@ -98,9 +98,9 @@ _SHIM_BBOX = {
     }
 }
 
-# Entry `shim_geo_distance` retired round 11 (slot freed for the P15
+# Entry `shim_geo_distance` retired (slot freed for the P15
 # `media_serving_table` promotion, q_store.py), FOLDED into
-# `shim_geo_bounding_box` below — the same fold discipline as r10's
+# `shim_geo_bounding_box` below — the same fold discipline as
 # shim_geo_polygon -> shim_geo_shape: P9's one distinct piece is the
 # `{"type": "geo_distance", ...}` shim DISPATCH plus the haversine
 # kernel, and both now grade inside the bbox slot as the projected
@@ -134,7 +134,7 @@ _HAV_SQL = (
 )
 def shim_geo_bbox(spark, sf_dir):
     """P8/P9 — geo_bounding_box filter over the engine's geopoint
-    struct, with the retired shim_geo_distance slot folded in (r11):
+    struct, with the retired shim_geo_distance slot folded in:
     `in_dist_p9` is P9's `{"type": "geo_distance"}` dispatch compiled
     through the shim (query_shim.py:80-84) projected as a flag, and
     `dist_km` is the haversine kernel itself — both stay driver-graded

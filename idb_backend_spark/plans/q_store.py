@@ -45,7 +45,7 @@ from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
 # the anti-join delete DETECTION shape is `anti_join_deletes`
 # (q_relational), and `versioning.tombstones_for_deletes` itself — the
 # fixed-tombstone-etag emission — runs INSIDE the driver-graded
-# `ingest_e2e` (apply_harvest_batch's detect_deletes path: tombstones
+# `ingest_e2e` (apply_harvest_batch's delete detection: tombstones
 # are unioned into the history whose live latest view is value-hashed)
 # and inside `store_compaction`/`streaming_incremental_merge`'s
 # TOMBSTONE_ETAG latest-view arms.
@@ -290,8 +290,8 @@ def _etl_oracle_sql() -> str:
 def _etl_raw_frame(spark, sf_dir):
     """The etl pipeline's shared input stage: synthesized verbatim
     projection over the spread lineitem scan, staged geo normalization,
-    and the Molodensky shift (the staged-flags comparison over this
-    subtree is in OPTIMIZATION_r16.md §1)."""
+    and the Molodensky shift (why the flags read staged values:
+    DESIGN.md, "Flag conditions evaluated once")."""
     # the enrichment stack costs ~10x its scan bytes; a narrow scan
     # strands every other core on the whole row-wise pipeline
     # (guarded: no exchange when the scan is wide)
@@ -390,8 +390,8 @@ def _etl_raw_frame(spark, sf_dir):
     # staged normalization and staged shift: each binds its expensive
     # subexpressions once as columns — the parse subtree for the
     # normalize (codegen CSE skips CaseWhen branch contexts; 1.53 s ->
-    # 0.94 s on this frame, OPTIMIZATION_r15.md §6), the per-datum
-    # constants for the shift (janino 64 KB limit)
+    # 0.94 s on this frame, DESIGN.md, "Coordinate parse staged once"),
+    # the per-datum constants for the shift (janino 64 KB limit)
     raw = E.with_geo_normalize(raw, F.col("lat_s"), F.col("lon_s"))
     raw = with_molodensky_shift(
         raw, F.col("__geo_lat"), F.col("__geo_lon"), F.col("datum_s")
@@ -1577,13 +1577,13 @@ def media_serving_table(spark, sf_dir):
         (F.crc32(F.col("etag")) % 2 == 0).alias("derivatives"),
         F.lit("ingest").alias("owner"),
     ).dropDuplicates(["etag"])
-    # kv=True: the view renders the canonical sorted k=v; string
+    # the view renders the canonical sorted k=v; string
     # natively (concat_ws over the fixed alphabetical key set) — the
     # old map + array_sort/transform render pulled the whole response
     # Project out of whole-stage codegen (map_filter/transform are
     # CodegenFallback); value equality pinned by
     # tests/test_views.py::test_media_api_record_kv_matches_map_render
-    v = media_serving_view(media, media_objects, objects, kv=True)
+    v = media_serving_view(media, media_objects, objects)
     return v.select(
         "url",
         "media_url",

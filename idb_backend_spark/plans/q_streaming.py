@@ -1,8 +1,8 @@
-"""Round-5 §2.10 entries — the streaming paths EXECUTED under the
+"""SURVEY §2.10 entries — the streaming paths EXECUTED under the
 driver's batch-SQL oracle gate.
 
-`streaming_windowed_rollup` (q_parity) proved the harness pattern in
-round 4; these close the remaining unit-only streaming surfaces:
+`streaming_windowed_rollup` (q_parity) proved the harness pattern;
+these close the remaining unit-only streaming surfaces:
 
 * ``streaming_incremental_merge`` — the engine's CDC story (the Spark
   replacement for the reference's poll-loop daemon,

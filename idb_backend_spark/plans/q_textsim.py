@@ -339,12 +339,12 @@ def pq_recall_audit_q(spark, sf_dir):
     methods share one pq.recall_audit: one build, one exact top-k of
     the panel, and one batched panel retrieval per probe width (the
     one-codes-pass shape that carries the deployment economics,
-    SCALING.md). Audit-contract grading (the sketch_audits pattern):
-    the graded columns are the exact-cosine id sets (real content, same
-    6-dp rounding as the brute-force tier) plus the per-method recall
-    contract booleans (pq>=0.8, ivfpq>=0.7) — the slot fails iff either
-    retrieval path degrades below its advertised bound. Raw recall
-    values are engine-side-only and deliberately NOT graded."""
+    SCALING.md, "TF-IDF and PQ tiers at 10×"). Audit-contract grading (the
+    sketch_audits pattern): the graded columns are the exact-cosine id sets
+    (real content, same 6-dp rounding as the brute-force tier) plus the
+    per-method recall contract booleans (pq>=0.8, ivfpq>=0.7) — the slot
+    fails iff either retrieval path degrades below its advertised bound. Raw
+    recall values are engine-side-only and deliberately NOT graded."""
     emb = _t(spark, sf_dir, "embeddings")
     panel = [
         (r["vec_id"], list(r["embedding"]))
@@ -466,11 +466,11 @@ def corpus_curation_pipeline(spark, sf_dir):
     # stack then evaluated per row in the pushed filter AND again in
     # the projection. The nondeterministic conjunct makes the gate
     # non-pushable, so it reads the staged columns: one evaluation,
-    # parallel (guide §2.3/§4.4-class duplication, native variant).
+    # parallel (DESIGN.md, "Barrier filter above the spread").
     filtered = barrier_filter(
         enriched, (F.col("q") >= 0.3) & (F.col("n_tok") >= 5)
     )
-    # project-before-the-exchange (guide §2.3): the per-language rollup
+    # project-before-the-exchange: the per-language rollup
     # below reads only (lang, n_tok, q, doc_id) — the text column exists
     # solely to compute the dedup fingerprint, so it must not ride the
     # dedup shuffle (at corpus scale the text IS the bytes)

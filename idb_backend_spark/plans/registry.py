@@ -8,6 +8,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from idb_backend_spark.session import _apply_semantic_conf, spread_for_compute
+
 
 Q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE: dict[str, str] = {}
@@ -17,34 +19,11 @@ ORACLE: dict[str, str] = {}
 UNGRADED: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-_EXCLUDE_CONF = "spark.sql.optimizer.excludedRules"
-_INFER_GEN_RULE = (
-    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
-)
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    # Defensive for driver-owned sessions (our own session.py sets these at
-    # construction): nanosecond parquet timestamps are unreadable by Spark
-    # unless mapped to long (converted back below), and
-    # InferFiltersFromGenerate re-inlines expensive array builders into
-    # pushed-down `size(arr) > 0` filters (see session.py). Guarded so the
-    # table loader does not repeatedly mutate shared session state.
-    if spark.conf.get(_NANOS_CONF, "false") != "true":
-        spark.conf.set(_NANOS_CONF, "true")
-    # session timezone pinned to UTC (session.py does the same at
-    # construction): F.window and TIMESTAMP literals are session-tz
-    # dependent, so a driver-owned session in another zone would rebucket
-    # near-midnight events away from the DuckDB oracles' naive calendar
-    if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-    excluded = spark.conf.get(_EXCLUDE_CONF, None) or ""
-    if _INFER_GEN_RULE not in excluded:
-        spark.conf.set(
-            _EXCLUDE_CONF,
-            f"{excluded},{_INFER_GEN_RULE}" if excluded else _INFER_GEN_RULE,
-        )
+    # Defensive for sessions a caller built, which get_spark did not:
+    # the nanos-as-long read converted below, the UTC zone and the
+    # excluded generate-filter rule all come from the one session helper.
+    _apply_semantic_conf(spark)
     df = spark.read.parquet(_table_path(sf_dir, name))
     if name == "events":
         from pyspark.sql.types import LongType
@@ -117,8 +96,6 @@ def _t_spread(
     file listing at all. ``by_range`` ranges instead of hashes the
     placement — see spread_for_compute (for queries whose output is
     ordered by the spread keys)."""
-    from idb_backend_spark.session import spread_for_compute
-
     df = _t(spark, sf_dir, name)
     paths = _table_paths(sf_dir, name)
     if paths is None:

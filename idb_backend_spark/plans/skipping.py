@@ -23,17 +23,14 @@ against). Pruning by bucket membership is therefore exact only for
 whole-token matching — a substring probe ('cat' against a document
 containing only 'cats') would be wrongly pruned, because hash('cat') is
 not in the file's bucket set while `contains()` would match.
-`fulltext_scan` exposes both contracts explicitly:
-
-* ``mode='token'`` (default) — ES-analyzer-style conjunction of
-  whole-token matches (what the reference's `_all` match with
-  operator:and actually does, query_shim.py:123-133). Pruning is exact:
-  no false negatives possible.
-* ``mode='substring'`` — substring `contains()` semantics (the shim's
-  opt-in ``substring: true`` flavor; plain P7 compiles to token mode).
-  The whole-token index CANNOT safely prune for substrings, so this
-  mode reads every file and applies the residual only; it exists so
-  callers who need substring parity never get silent row loss.
+`fulltext_scan` therefore matches ES-analyzer-style: a conjunction of
+whole-token matches (what the reference's `_all` match with operator:and
+actually does, query_shim.py:123-133), through the same
+`functions.text.whole_token_match` the shim's P7 compiler uses, so
+pruning is exact — no false negatives possible. The shim's opt-in
+``substring: true`` flavor has no index path: the whole-token index
+cannot prune for substrings, so those queries go through `compile_shim`
+over the full table.
 """
 
 from __future__ import annotations
@@ -41,10 +38,10 @@ from __future__ import annotations
 from functools import reduce
 from operator import and_
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from idb_backend_spark.functions.text import analyzer_tokens
+from idb_backend_spark.functions.text import analyzer_tokens, whole_token_match
 
 #: bucket space for token hashes — 2^20 buckets keeps per-file sets exact
 #: enough that collisions are rare while the index stays tiny
@@ -224,54 +221,19 @@ def prune_files(
     return files
 
 
-def token_match(query: str, fulltext_col: str = "fulltext") -> Column:
-    """Whole-token conjunction predicate — ES `_all` match semantics.
-
-    A row matches iff EVERY query token appears as a whole analyzer token
-    of the fulltext column, under the same `analyzer_tokens` tokenization
-    the index build uses. By construction every matching row's file
-    carries all the query tokens' buckets, so whole-token-index pruning
-    admits a superset of the matching files (exact — no false negatives).
-    """
-    from idb_backend_spark.functions.text import whole_token_match
-
-    # shared single-source matcher (functions/text.py) — identical
-    # expression to the shim's P7 compiler, by construction
-    return whole_token_match(fulltext_col, query)
-
-
 def fulltext_scan(
     spark: SparkSession,
     table_path: str,
     index_path: str,
     query: str,
     fulltext_col: str = "fulltext",
-    mode: str = "token",
 ) -> DataFrame:
-    """Fulltext query with file skipping + exact residual filter.
-
-    ``mode='token'``: whole-token conjunction (see `token_match`); reads
-    only the files the index admits — exact, and an empty admissible set
-    returns an empty frame without touching data files.
-
-    ``mode='substring'``: the shim's opt-in ``substring: true`` flavor
-    (`query.shim` compiles plain P7 to token mode); the whole-token index
-    cannot prune for substring probes without dropping true matches, so
-    this mode scans all files and applies the residual only.
-    """
+    """Fulltext query with file skipping + exact residual filter: a
+    whole-token conjunction that reads only the files the index admits
+    — exact, and an empty admissible set returns an empty frame without
+    touching data files."""
     spark.catalog.refreshByPath(table_path)  # see update_token_index
     base = spark.read.parquet(table_path)
-    if mode == "substring":
-        from idb_backend_spark.query.shim import compile_shim
-
-        shim = {
-            fulltext_col: {
-                "type": "fulltext", "value": query, "substring": True,
-            }
-        }
-        return base.filter(compile_shim(shim, fulltext_col=fulltext_col))
-    if mode != "token":
-        raise ValueError(f"unknown fulltext_scan mode: {mode!r}")
     files = prune_files(
         spark, index_path, [query],
         all_files=base.inputFiles(),
@@ -282,4 +244,4 @@ def fulltext_scan(
     # table is partitioned — a bare leaf-file read would silently drop
     # those columns and diverge in schema from the empty-set path above
     pruned = spark.read.option("basePath", table_path).parquet(*files)
-    return pruned.filter(token_match(query, fulltext_col))
+    return pruned.filter(whole_token_match(fulltext_col, query))

@@ -269,7 +269,7 @@ def decimal_exponent_sql(col: str) -> str:
     ``-1 * Decimal(s).as_tuple().exponent`` (conversions.py:246-251):
     fractional-digit count minus any scientific exponent; 0 for
     anything Decimal() would reject; NULL for NaN/Infinity spellings
-    (the r10 differential finding — Decimal PARSES them, the exponent
+    (a reference-differential finding — Decimal PARSES them, the exponent
     is a string and ``-1 * 'n'`` is the empty string, which the py2
     ``<= 2`` consumer reads as not-low-precision). Kept here so every
     oracle that replicates the low-precision flag derives the exponent

@@ -104,10 +104,11 @@ def _fulltext(value: str, fulltext_col: str, substring: bool = False) -> Column:
     # WHOLE analyzer token of the fulltext column (what ES's analyzed
     # `_all` with operator:and does — query 'cat' does not match document
     # 'cats', but DOES match 'cat,' since the analyzer strips punctuation),
-    # identical to plans.skipping.token_match so the token index can prune
-    # for shim queries. ``substring: true`` in the spec opts into the
-    # legacy contains() semantics (whitespace query tokenization there, so
-    # punctuation in the query probes the raw text).
+    # the same whole_token_match as plans/skipping.fulltext_scan's
+    # residual, so the token index can prune for shim queries.
+    # ``substring: true`` in the spec opts into the legacy contains()
+    # semantics (whitespace query tokenization there, so punctuation in
+    # the query probes the raw text).
     from idb_backend_spark.functions.text import whole_token_match
 
     if value is None:
@@ -246,7 +247,7 @@ def _geo_shape(field: str, spec: dict) -> Column:
     # compile natively; other geometry types would route to Sedona when
     # available.
     #
-    # r10 sweep note (pinned in tests/test_shim.py
+    # Sweep note (pinned in tests/test_shim.py
     # test_reference_python_shim_geo_shape_is_broken): the reference's
     # PYTHON shim — the one its download/export pipeline uses — cannot
     # actually serve this type: geoShape/geoPolygon wrap the spec as

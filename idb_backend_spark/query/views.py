@@ -180,7 +180,7 @@ def media_api_record_kv(*args, **kwargs) -> Column:
     keys are a fixed literal set, so alphabetical key order is known at
     plan time, ``concat(k=, v)`` is NULL exactly when the map_filter
     would drop the entry, and concat_ws skips NULLs. The point is
-    PHYSICAL (r16, guide §4.1 "prefer built-ins"): map_filter and the
+    PHYSICAL (prefer built-ins): map_filter and the
     consumer-side transform/array_sort are higher-order functions —
     CodegenFallback expressions that knock the ENTIRE enclosing Project
     (the whole response assembly, storage-URL and preview-state chains
@@ -188,7 +188,8 @@ def media_api_record_kv(*args, **kwargs) -> Column:
     the same mechanism as the documented array_compact->ArrayFilter
     rejection in functions/flags.py. The concat_ws form stays inside
     codegen end to end (media_serving_table interleaved A/B at sf0.1:
-    see OPTIMIZATION_r16.md; equality pinned by
+    0.804 -> 0.475 s, DESIGN.md, "Media serving table renders k=v
+    natively"; equality pinned by
     tests/test_views.py::test_media_api_record_kv_matches_map_render)."""
     entries = _media_api_entries(*args, **kwargs)
     return F.concat_ws(
@@ -264,7 +265,7 @@ def record_view_links(
     # meets a verbatim sibling type 'recordset'; v2's pluralized
     # sibling 'recordset'+'s' meets the parent key 'recordsets'. A
     # bare map_concat THROWS DUPLICATED_MAP_KEY on exactly those rows
-    # (r11 differential finding, test_view_links_vs_reference), so the
+    # (differential finding, test_view_links_vs_reference), so the
     # parent side is filtered to the non-colliding keys first. The
     # coalesce keeps a NULL sibling map from nulling the whole result
     # (map_concat(links, NULL) is NULL — the reference's
@@ -306,13 +307,12 @@ def media_serving_view(
     objects,
     deriv: str | None = None,
     env: str = "prod",
-    kv: bool = False,
 ):
     """The full media-lookup serving table — MediaObject.fromurl's
     three-table join (db.py:618-656: media LEFT JOIN media_objects LEFT
     JOIN objects, DISTINCT ON (url) ORDER BY modified DESC — the J6
     latest-object-per-url) composed with the API response assembly
-    (media_storage_url / preview_state / media_api_record above). One
+    (media_storage_url / preview_state / media_api_record_kv above). One
     row per media url with everything respond_to_record reads, so the
     OLTP-ish lookup becomes a column read off a materialized view:
     uuid lookups resolve through the record's accessuri to a url
@@ -353,18 +353,17 @@ def media_serving_view(
         F.col("__bucket"), F.col("__oetag"), F.col("__derivs"), deriv, env=env
     )
     state = preview_state(murl, eff_mime, tob, F.col("last_status"))
-    # ``kv=True`` renders the response as the canonical sorted k=v;
-    # string via media_api_record_kv — value-identical to sorting and
-    # joining the map, but free of the map_filter/transform
+    # the response renders as the canonical sorted k=v; string via
+    # media_api_record_kv — value-identical to sorting and joining the
+    # media_api_record map, but free of the map_filter/transform
     # higher-order functions whose CodegenFallback drops this whole
     # Project (every chain above included) out of whole-stage codegen
-    record = media_api_record_kv if kv else media_api_record
     return j.select(
         "url",
         murl.alias("media_url"),
         state["text"].alias("preview_text"),
         state["cache"].alias("cache_s"),
-        record(
+        media_api_record_kv(
             F.col("url"),
             murl,
             tob,
@@ -374,5 +373,5 @@ def media_serving_view(
             eff_mime,
             F.col("last_status"),
             text=state["text"],
-        ).alias("response_kv" if kv else "response"),
+        ).alias("response_kv"),
     )

@@ -27,6 +27,48 @@ def _cpus() -> int:
             return os.cpu_count() or 1
 
 
+_EXCLUDED_RULES = "spark.sql.optimizer.excludedRules"
+_INFER_GEN_RULE = (
+    "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
+)
+_SEMANTIC_CONF = {
+    # Deterministic time semantics (oracle parity with naive
+    # timestamps): F.window and TIMESTAMP literals are session-tz
+    # dependent, so another zone would rebucket near-midnight events
+    # away from the DuckDB oracles' naive calendar.
+    "spark.sql.session.timeZone": "UTC",
+    # Parquet TIMESTAMP(NANOS) columns (events.ts) read as long nanos;
+    # plans/registry._t converts them to microsecond TIMESTAMP_NTZ —
+    # that loader is the one conversion point every catalog path uses.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
+
+def _apply_semantic_conf(spark: SparkSession) -> None:
+    """Set the session conf the engine's results depend on: the two
+    `_SEMANTIC_CONF` values, and InferFiltersFromGenerate appended to
+    the excluded optimizer rules (a rule already excluded stays so).
+
+    InferFiltersFromGenerate infers `size(arr) > 0` from every explode
+    and PushDownPredicate then substitutes the array expression into
+    that filter below the projections — for the engine's expensive
+    array builders (shingle windows, chunkers) that re-evaluates the
+    tokenization O(k·n) times per row INSIDE the scan stage (measured
+    20x on the shingle explode). Every generator in this engine
+    explodes arrays that are non-empty by construction, so the
+    inferred filter only costs. Each conf is written only when it
+    differs, so a shared session is not mutated on every call."""
+    for key, value in _SEMANTIC_CONF.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
+    excluded = spark.conf.get(_EXCLUDED_RULES, None) or ""
+    if _INFER_GEN_RULE not in excluded:
+        spark.conf.set(
+            _EXCLUDED_RULES,
+            f"{excluded},{_INFER_GEN_RULE}" if excluded else _INFER_GEN_RULE,
+        )
+
+
 def get_spark(
     app_name: str = "idb-backend-spark",
     shuffle_partitions: int | None = None,
@@ -49,24 +91,6 @@ def get_spark(
         # Arrow for every pandas_udf / toPandas path (UDF kernels: date parse,
         # geo, simhash) — row-at-a-time Python UDFs are banned in this engine.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # Deterministic time semantics (oracle parity with naive timestamps).
-        .config("spark.sql.session.timeZone", "UTC")
-        # Parquet TIMESTAMP(NANOS) columns (events.ts) read as long nanos;
-        # plans/registry._t converts them to microsecond TIMESTAMP_NTZ —
-        # that loader is the one conversion point every catalog path uses.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # InferFiltersFromGenerate infers `size(arr) > 0` from every
-        # explode and PushDownPredicate then substitutes the array
-        # expression into that filter below the projections — for the
-        # engine's expensive array builders (shingle windows, chunkers)
-        # that re-evaluates the tokenization O(k·n) times per row INSIDE
-        # the scan stage (measured 20x on the shingle explode). Every
-        # generator in this engine explodes arrays that are non-empty by
-        # construction, so the inferred filter only costs.
-        .config(
-            "spark.sql.optimizer.excludedRules",
-            "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
-        )
         # Align whole-stage-codegen's giving-up point with HotSpot's
         # actual JIT ceiling (-XX:HugeMethodLimit = 8000 bytecode bytes).
         # The default 65535 keeps stages whose generated consume loop is
@@ -88,6 +112,7 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
+    _apply_semantic_conf(spark)
     # The delimited read core intentionally reads header-bearing files
     # under a positional _cN schema (terms come from meta.xml or the
     # sniffed header — sources/delimited.py read_positional), which makes
@@ -246,7 +271,8 @@ def spread_for_compute(
     very work the spread parallelizes. The floor is 64 KiB
     (enrichment-class expression stacks cost ~1-4 us/byte, so a 64 KiB
     slice is ~0.1-0.3 s of compute — well above the ~10 ms task
-    overhead; the width A/B is in OPTIMIZATION_r16.md §2). At cluster
+    overhead; the width A/B is in DESIGN.md, "Data-proportional spread
+    width"). At cluster
     scale nothing changes: a wide scan still short-circuits above, and
     a genuinely large narrow input still spreads to every core.
     """
@@ -321,7 +347,8 @@ def barrier_filter(df, cond):
     the column).
 
     A standalone nondeterministic FILTER
-    (`where(spark_partition_id() >= 0)`, OPTIMIZATION_r15.md §7) only
+    (`where(spark_partition_id() >= 0)`, DESIGN.md, "Barrier filter above
+    the spread") only
     pins the RELATIVE order of filters, and a nondeterministic
     PREDICATE does not help either:
     PushPredicateThroughNonJoin pushes ANY filter through a Project

@@ -98,7 +98,7 @@ def _el_text(el) -> str:
     reference's Pipfile.lock pins): browser-innerText semantics — text
     runs whitespace-squashed and stripped, element (block) boundaries
     rendered as NEWLINES, edge boundaries stripped. pyquery 1.x
-    space-joined stripped segments instead; the r13 executed
+    space-joined stripped segments instead; the executed
     differential (tests/test_eml_vs_reference.py) pinned the 2.0
     behavior: ``<para>foo <ulink><citetitle>X</citetitle></ulink>
     bar</para>`` renders ``'foo\\nX\\nbar'``, not ``'foo X bar'``."""
@@ -231,8 +231,8 @@ def parse_eml(xml_bytes: bytes | str, id: str | None = None) -> dict:
 
     # logo: first resourceLogoUrl anywhere, raw .text (eml.py:39-42).
     # The KEY is only set when the element exists — the reference's
-    # `if rlu is not None` guard means key-absence, not None (r13
-    # executed-differential finding, tests/test_eml_vs_reference.py)
+    # `if rlu is not None` guard means key-absence, not None
+    # (executed-differential finding, tests/test_eml_vs_reference.py)
     logos = _find_all(root, "resourceLogoUrl")
     if logos:
         out["logo_url"] = logos[0].text

@@ -168,3 +168,87 @@ def test_plan_capture_citation_pattern():
         f"{d}base/q_before.txt",
         f"{d}noaqe/x_noaqe.txt",
     ]
+
+
+# a repo-root doc cited with a section: `<doc> §N` (a numbered heading,
+# as in SURVEY's §2.10) or `<doc>, "Heading text"` (a heading's leading
+# words, optionally ended by an ellipsis). The quoted name may wrap
+# across comment lines.
+_SECTION = re.compile(
+    r"(?<![\w/.-])([\w-]+\.md)"
+    r"(?:\s*§\s*(\d+(?:\.\d+)*)|,\s*\"([^\"]+)\")"
+)
+
+
+def _norm(text: str) -> str:
+    """Lower-cased, with comment markers at wrapped lines dropped, a
+    trailing ellipsis cut and whitespace runs collapsed."""
+    text = re.sub(r"\n\s*#", " ", text)
+    text = re.sub(r"(…|\.\.\.)\s*$", "", text.strip())
+    return " ".join(text.split()).lower()
+
+
+def _headings(doc: Path) -> list[str]:
+    return [
+        _norm(line.lstrip("#"))
+        for line in doc.read_text().splitlines()
+        if re.match(r"#{1,6} ", line)
+    ]
+
+
+def _section_misses(text: str, docs: Path) -> list[str]:
+    """Each section citation in ``text`` whose doc under ``docs`` is
+    absent or holds no matching heading."""
+    misses = []
+    for m in _SECTION.finditer(text):
+        doc, number, name = m.groups()
+        path = docs / doc
+        if not path.exists():
+            misses.append(f"{doc} (absent)")
+            continue
+        heads = _headings(path)
+        if number is not None:
+            pat = rf"{re.escape(number)}(\.|\s|$)"
+            ok = any(re.match(pat, h) for h in heads)
+        else:
+            ok = any(h.startswith(_norm(name)) for h in heads)
+        if not ok:
+            misses.append(m.group(0).replace("\n", " "))
+    return misses
+
+
+def test_cited_doc_sections_resolve():
+    """A cited section of a repo-root doc must be a heading in that doc:
+    renaming or deleting the heading leaves the citation pointing at
+    nothing. Scans the package, the tests and the tools."""
+    sources = [*_sources(), *(REPO / "tools").rglob("*.py")]
+    n_cited, missing = 0, []
+    for src in sources:
+        text = src.read_text()
+        n_cited += len(_SECTION.findall(text))
+        missing += [
+            f"{src.relative_to(REPO)} cites {c}"
+            for c in _section_misses(text, REPO)
+        ]
+    assert n_cited, "expected at least one doc-section citation"
+    assert not missing, "dangling doc sections:\n" + "\n".join(missing)
+
+
+def test_doc_section_citation_pattern(tmp_path):
+    # the doc names spelled apart so this file holds no citation of its own
+    doc = "NOTES" + ".md"
+    (tmp_path / doc).write_text(
+        "# Notes\n\n## 2. Inventory\n\n### 2.10 Streaming\n\n"
+        "### Hot-key skew evidence for the joins\n"
+    )
+    good = (
+        f'see {doc} §2, {doc} §2.10 and ({doc}, "hot-key skew evidence\n'
+        f'    # for the joins"), also {doc}, "Hot-key skew …"'
+    )
+    assert _section_misses(good, tmp_path) == []
+    bad = f'{doc} §3, {doc}, "cold-key skew", {"GONE" + ".md"}, "x"'
+    assert _section_misses(bad, tmp_path) == [
+        f"{doc} §3",
+        f'{doc}, "cold-key skew"',
+        "GONE" + ".md (absent)",
+    ]

@@ -390,7 +390,7 @@ def test_hamming_pairs_single_fingerprint_evaluation(spark):
     # ReuseExchange rule so the single-evaluation contract is visible
     # without executing a job. At runtime with AQE on the same reuse
     # happens via stage cache — verified by the sf0.1 A/B in
-    # OPTIMIZATION_r15.md.
+    # DESIGN.md, "Hamming pairs: one fingerprint pass".
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
@@ -716,7 +716,7 @@ def test_cms_heavy_hitters_all_joins_broadcast_no_python(spark, sf_dir):
     broadcast joins of the tiny counter frame (never a sort-merge join
     that would shuffle the probed rows per depth) with no Python stage
     and no cartesian product — the map-side-drop design the 10x-flat
-    scale probe measured (SCALING.md)."""
+    scale probe measured (SCALING.md, "Corpus-ops tier at 10×")."""
     from idb_backend_spark.operators import sketches
 
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
@@ -754,7 +754,7 @@ def test_staged_geo_normalize_parses_each_coordinate_once(spark):
     coordinate). Pinned on the optimized logical plan because the
     regression mode is expression duplication, not a physical-shape
     change (controlled A/B: 3.02 s -> 1.82 s on the sf0.1 bench frame,
-    OPTIMIZATION_r15.md §6)."""
+    DESIGN.md, "Coordinate parse staged once")."""
     from idb_backend_spark.functions.enrichment import with_geo_normalize
 
     cust = spark.read.parquet(f"{SF}/customer.parquet").select(

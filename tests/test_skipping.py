@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from idb_backend_spark.functions.text import fulltext_column
+from idb_backend_spark.functions.text import fulltext_column, whole_token_match
 from idb_backend_spark.plans import skipping
 
 
@@ -52,7 +52,7 @@ def test_prune_and_scan(spark, tmp_path):
         )
         expect = sorted(
             r["doc_id"]
-            for r in base.filter(skipping.token_match(q)).collect()
+            for r in base.filter(whole_token_match("fulltext", q)).collect()
         )
         assert got == expect, q
 
@@ -135,10 +135,11 @@ def test_update_token_index_is_incremental(spark, tmp_path):
 
 def test_substring_probe_is_not_silently_pruned(spark, tmp_path):
     """A query token that is a proper substring of an indexed token
-    ('zebr' ⊂ 'zebra') must not lose rows: token mode legitimately
-    returns nothing (no whole token 'zebr' exists), while substring mode
-    must return every contains() match despite the index lacking the
-    probe's bucket."""
+    ('zebr' ⊂ 'zebra') matches by whole tokens, the contract the index
+    prunes for: the scan legitimately returns nothing (no whole token
+    'zebr' exists) although contains() matches. The shim's substring
+    flavor, which the index cannot prune for, is covered in
+    tests/test_shim.py."""
     path = _table(spark, tmp_path)
     idx = str(tmp_path / "docs_tokidx3")
     base = spark.read.parquet(path)
@@ -150,18 +151,9 @@ def test_substring_probe_is_not_silently_pruned(spark, tmp_path):
     )
     assert expect  # the fixture has a 'zebra' row — contains() does match
 
-    # token mode: 'zebr' is not a whole token anywhere -> empty, by contract
-    tok = skipping.fulltext_scan(spark, path, idx, "zebr", mode="token")
+    # 'zebr' is not a whole token anywhere -> empty, by contract
+    tok = skipping.fulltext_scan(spark, path, idx, "zebr")
     assert tok.count() == 0
-
-    # substring mode: full shim semantics, no pruning, no lost rows
-    sub = sorted(
-        r["doc_id"]
-        for r in skipping.fulltext_scan(
-            spark, path, idx, "zebr", mode="substring"
-        ).collect()
-    )
-    assert sub == expect
 
 
 def test_unindexed_files_are_scanned_not_pruned(spark, tmp_path):

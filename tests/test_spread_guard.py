@@ -170,3 +170,33 @@ def test_cpus_unset_or_empty_falls_back_to_affinity(monkeypatch):
     assert session._cpus() == expect
     monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
     assert session._cpus() == 3
+
+
+def test_table_loader_sets_the_semantic_conf(spark, sf_dir):
+    """plans/registry._t readies a session it did not build: after it
+    runs, nanos-as-long, the UTC zone and the InferFiltersFromGenerate
+    exclusion hold, and a rule the session already excluded stays
+    excluded (the rule is appended, not substituted)."""
+    from idb_backend_spark.plans.registry import _t
+
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    tz = "spark.sql.session.timeZone"
+    rules = "spark.sql.optimizer.excludedRules"
+    other = "org.apache.spark.sql.catalyst.optimizer.CollapseRepartition"
+    saved = {k: spark.conf.get(k, None) for k in (nanos, tz, rules)}
+    try:
+        spark.conf.set(nanos, "false")
+        spark.conf.set(tz, "America/New_York")
+        spark.conf.set(rules, other)
+        _t(spark, sf_dir, "events")
+        assert spark.conf.get(nanos) == "true"
+        assert spark.conf.get(tz) == "UTC"
+        excluded = spark.conf.get(rules).split(",")
+        assert other in excluded
+        assert session._INFER_GEN_RULE in excluded
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

@@ -287,25 +287,6 @@ def test_merge_batch_collapses_in_batch_duplicates(spark):
     assert rows[0]["etag"] == "e5" and rows[0]["version"] == 0
 
 
-def test_tombstones_schema_is_mode_independent(spark):
-    """detect_deletes=False must return an EMPTY frame with the same
-    schema as the True mode (incl. type/parent) so callers can append
-    either result to history without per-mode column surgery."""
-    batch = spark.createDataFrame(
-        [("a", "records", "rs1", "e2", "a1")], BATCH_SCHEMA
-    )
-    on = st.apply_harvest_batch(
-        _history(spark), batch, modified=F.lit(_ts("2024-02-01T00:00:00")),
-        detect_deletes=True,
-    )
-    off = st.apply_harvest_batch(
-        _history(spark), batch, modified=F.lit(_ts("2024-02-01T00:00:00")),
-        detect_deletes=False,
-    )
-    assert off.tombstones.columns == on.tombstones.columns
-    assert off.tombstones.count() == 0
-
-
 def test_delete_scope_explicit_parents_protects_siblings(spark):
     """The mixed-batch hazard: a batch carrying rs1's children AND a
     parentless row would (in inferred mode) put NULL in the delete
@@ -350,8 +331,7 @@ def test_null_etag_batch_row_survives_dedup(spark):
         [("n1", "records", "rs1", None, "payload")], BATCH_SCHEMA
     )
     res = st.apply_harvest_batch(
-        _history(spark), batch, modified=F.lit(_ts("2024-02-01T00:00:00")),
-        detect_deletes=False,
+        _history(spark), batch, modified=F.lit(_ts("2024-02-01T00:00:00"))
     )
     rows = res.appended.collect()
     assert len(rows) == 1

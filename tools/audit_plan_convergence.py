@@ -1,7 +1,7 @@
-"""Catalog-wide Catalyst convergence audit (r14): build every
+"""Catalog-wide Catalyst convergence audit: build every
 ``queries()``/UNGRADED plan, force optimization, and report each
 entry's worst per-rule effective-invocation count from the
-QueryPlanningTracker. The r13 `Max iterations (100)` cycle showed up
+QueryPlanningTracker. The store's `Max iterations (100)` cycle showed up
 here as ~200 effective firings of PushDownLeftSemiAntiJoin /
 ColumnPruning; a healthy plan stays in single digits. Anything above
 the watch threshold is a latent fixpoint risk that a BIGGER

@@ -14,9 +14,9 @@ expression ids (``#123``) and temporary paths are normalized.
 ``--no-aqe`` renders with spark.sql.adaptive.enabled=false so that
 exchange reuse is visible in the capture: a pre-execution
 AdaptiveSparkPlan tree cannot show ReusedExchange (reuse happens at
-execution), which made the r15 dedup/sketch-tier after-captures unable
-to substantiate the "one fingerprint pass" claim the executing test
-pins (VERDICT r15 item 9). The rendered static plan is what the
+execution), so an adaptive capture of the dedup/sketch tiers cannot
+show the "one fingerprint pass" that the executing test pins. The
+rendered static plan is what the
 non-adaptive planner would run; the adaptive plan differs only by the
 AQE wrapper and runtime re-optimization.
 """

@@ -47,7 +47,7 @@ DATUMS = {
     "POTSDAM": (6377397.155, 299.1528128, 606.0, 23.0, 413.0),
     "HERMANNSKOGEL": (6377397.155, 299.1528128, 653.0, -212.0, 449.0),
     "GGRS87": (6378137.0, 298.257222101, -199.87, 74.79, 246.62),
-    # r8 extension — NIMA/DMA TR 8350.2 local mean shifts (NTF from the
+    # extension — NIMA/DMA TR 8350.2 local mean shifts (NTF from the
     # IGN mean, also in the proj registry), re-typed from the published
     # tables like the rows above.
     "ADINDAN": (6378249.145, 293.465, -166.0, -15.0, 204.0),

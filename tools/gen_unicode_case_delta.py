@@ -8,8 +8,8 @@ strings. The engine twins that mirror a reference `.lower()` (F1
 getfield, the fulltext `_fold_lower`) append this translate so their
 output matches CPython — and DuckDB's utf8proc, which also tracks a
 NEWER Unicode than the JVM — on code points whose case pair was
-assigned after the JVM's tables (the U+10570 Vithkuqi class,
-VERDICT r14 "What's wrong" #1 / next-round task 2).
+assigned after the JVM's tables (the U+10570 Vithkuqi class, which
+once made a fulltext query match nothing).
 
 Derivation is pure public data: the Unicode Character Database as
 shipped by CPython and by this JDK. Re-run after a JDK or CPython
@@ -116,7 +116,7 @@ against CPython's `str.lower`/`str.upper` over every assigned code
 point and records the 1:1 corrections as translate() src/dst strings.
 On this JDK 17 (Unicode 13) / CPython 3.11 (Unicode 14) pair the delta
 is exactly the case pairs Unicode assigned in version 14 — the
-Vithkuqi block and friends (VERDICT r14 finding #1's adjacent class).
+Vithkuqi block and friends (the class of the U+10570 fulltext skew).
 
 `py_lower_delta`/`py_upper_delta`: append after F.lower/F.upper where
 the expression mirrors a reference-Python `.lower()`/`.upper()`.

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 PROBES = [
     "exact_dedup",
     "minhash_lsh_pairs",
-    # (ngram_jaccard_pairs was retired in round 7 — q_textsim.py:84-92;
+    # (ngram_jaccard_pairs was retired — q_textsim.py:84-92;
     # minhash_exact_verified carries the exact-Jaccard semantics and is
     # probed via minhash_lsh_pairs)
     "corpus_curation_pipeline",
@@ -50,14 +50,14 @@ PROBES = [
     "training_corpus_e2e",
     "etl_enrichment_pipeline",
     "latest_object_per_url",
-    # r8 additions: the TF-IDF inversion (documents) and the PQ audit
+    # the TF-IDF inversion (documents) and the PQ audit
     # (embeddings — replicated via per-replica circular rotation)
     "tfidf_top_terms",
     "pq_recall_audit",
     # not a catalog entry: fixed-batch probe against the 1x and Nx
     # indexes (probe_neardup_scale) — the maintenance tier's claim
     "neardup_index_probe",
-    # not a catalog entry: the r12 cogrouped ingest row-loop kernel
+    # not a catalog entry: the cogrouped ingest row-loop kernel
     # (operators/ingest.py) probed at N x recordsets, constant rows per
     # recordset — the reference's own parallel grain (1 process per
     # recordset, db_check.py:743) re-expressed as cogroup groups
@@ -218,7 +218,7 @@ def time_entry(fn, spark, sf_dir: str, eager: bool = False) -> tuple[float, int]
     count is taken untimed for the report. ``eager`` starts the clock
     BEFORE the entry call (EAGER_PROBES).
 
-    MIN OF TWO runs at THIS factor (r9 fix): the big-factor dataset is
+    MIN OF TWO runs at THIS factor: the big-factor dataset is
     freshly written, so a single-shot timing charges the OS page-cache
     cold read of the whole table to the probed operator — measured 153 s
     cold vs 55 s warm on a 60 M-row latest-per-key, turning an honest
@@ -393,7 +393,8 @@ def probe_ingest_scale(spark, factor: int) -> dict:
         for pname, fn in (
             ("", ingest_subfiles),
             # the giant-recordset relational twin on the SAME shapes —
-            # reproducible source of SCALING.md round-12 addendum 3
+            # reproducible source of SCALING.md, "Giant-recordset
+            # relational path and router"
             ("_rel", ingest_outcomes_relational),
         ):
             res = fn(rows, lk)
