@@ -27,7 +27,7 @@ import re
 import math
 
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -478,9 +478,10 @@ class GridGeocoder:
     only inside the shortlist: an inclusive-edge test for boxes, the
     even-odd ray cast (`_ring_contains`) for rings.
 
-    The instance is built on the driver and shipped to executors inside a
-    pandas UDF closure (broadcast-sized: a few thousand floats even for a
-    world map at this granularity).
+    The instance is built on the driver and shipped to executors as a
+    broadcast variable (`rev_geocode_udf`): pickled, the packaged world
+    outlines are ~590 KiB and the EEZ bands ~410 KiB, too large to ride
+    inside every task's closure.
     """
 
     def __init__(self, regions: dict[str, list]):
@@ -622,7 +623,12 @@ def rev_geocode_udf(
     geocoder: GridGeocoder, eez_geocoder: GridGeocoder | None = None
 ):
     """Build the pandas UDF bound to driver-constructed geocoders (land
-    layer required, marine EEZ layer optional)."""
+    layer required, marine EEZ layer optional). The geocoders travel as
+    one broadcast variable, fetched once per executor; the UDF's own
+    closure holds only its handle."""
+    layers = SparkSession.active().sparkContext.broadcast(
+        (geocoder, eez_geocoder)
+    )
     schema = StructType(
         [
             StructField("lon", DoubleType()),
@@ -634,6 +640,7 @@ def rev_geocode_udf(
 
     @F.pandas_udf(schema)
     def _udf(lon: pd.Series, lat: pd.Series, iso: pd.Series) -> pd.DataFrame:
+        land, eez = layers.value
         rows = []
         for lo, la, code in zip(lon, lat, iso):
             if (
@@ -645,9 +652,7 @@ def rev_geocode_udf(
                 rows.append((None, None, None, None))
                 continue
             code = None if (code is None or (isinstance(code, float) and math.isnan(code))) else str(code)
-            lo2, la2, country, flags = rev_geocode_py(
-                geocoder, lo, la, code, eez_geocoder
-            )
+            lo2, la2, country, flags = rev_geocode_py(land, lo, la, code, eez)
             rows.append((lo2, la2, country, ",".join(flags) if flags else None))
         return pd.DataFrame(rows, columns=["lon", "lat", "country", "flags"])
 

@@ -519,21 +519,18 @@ def fingerprint_from_norm(norm: Column) -> Column:
     return F.md5(norm.cast("binary"))
 
 
-def shingles_from_tokens(
-    t: Column, norm: Column, k: int = 3, distinct: bool = True
-) -> Column:
-    """Distinct word k-shingles from a token-array *attribute* column.
+def shingles_from_tokens(t: Column, norm: Column, k: int = 3) -> Column:
+    """Distinct word k-shingles from a token-array *attribute* column —
+    the one shingle definition: the exact-Jaccard tiers count its set
+    sizes and the MinHash signature folds its lane minima (which a
+    repeated shingle would not change).
 
     ``t`` and ``norm`` MUST be attribute references (pass them through a
     select/withColumn boundary first): the windowing lambda evaluates
     ``element_at(t, ...)`` k times per position, so an inlined tokenization
     expression would be re-executed O(k·n) times per row — measured 20x
     slowdown at sf0.1. Rows with < k tokens yield the whole-text singleton
-    so short docs still participate in similarity.
-
-    ``distinct=False`` skips the array_distinct pass — correct for
-    consumers whose downstream aggregate is duplicate-insensitive (MinHash
-    lane mins), where the dedup is pure overhead."""
+    so short docs still participate in similarity."""
     n = F.size(t)
     idx = F.sequence(F.lit(0), F.greatest(n - k, F.lit(0)))
     win = F.transform(
@@ -542,8 +539,7 @@ def shingles_from_tokens(
             " ", *[F.element_at(t, (i + j + 1).cast("int")) for j in range(k)]
         ),
     )
-    sh = F.when(n >= k, win).otherwise(F.array(norm))
-    return F.array_distinct(sh) if distinct else sh
+    return F.array_distinct(F.when(n >= k, win).otherwise(F.array(norm)))
 
 
 def dup_token_fraction(t: Column) -> Column:

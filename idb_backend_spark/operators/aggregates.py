@@ -90,52 +90,6 @@ def collection_counts(
     return df.groupBy(parent).agg(*aggs)
 
 
-def stats_rollup(
-    df: DataFrame,
-    ts_col: str,
-    group_cols: list[str],
-    value_col: str | None = None,
-) -> DataFrame:
-    """A7 (core shape) — daily usage rollup: count + total per
-    (day, *group_cols) (collect.py:88-119)."""
-    day = F.date_trunc("day", F.col(ts_col)).cast("date").alias("day")
-    aggs = [F.count(F.lit(1)).alias("count")]
-    if value_col:
-        aggs.append(F.round(F.sum(value_col), 2).alias("total"))
-    return df.groupBy(day, *group_cols).agg(*aggs)
-
-
-def stats_rollup_nested(
-    df: DataFrame,
-    ts_col: str,
-    group_cols: list[str],
-    term_col: str,
-) -> DataFrame:
-    """A7 (full shape) — rollup plus within-group term frequency map
-    (collect.py:132-217): two grouped aggs, the finer one folded into a
-    sorted array<struct(term,count)> per group."""
-    day = F.date_trunc("day", F.col(ts_col)).cast("date")
-    fine = (
-        df.withColumn("day", day)
-        .groupBy("day", *group_cols, term_col)
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-    # map_from_entries REJECTS null keys at runtime, so one null term —
-    # a request with no user-agent, say — would otherwise kill the job.
-    # A null term contributes to the group's total but gets no map entry
-    # (collect_list drops null elements, which the when() produces).
-    entry = F.when(
-        F.col(term_col).isNotNull(),
-        F.struct(F.col(term_col), F.col("n")),
-    )
-    return fine.groupBy("day", *group_cols).agg(
-        F.sum("n").alias("count"),
-        F.map_from_entries(F.sort_array(F.collect_list(entry))).alias(
-            "items"
-        ),
-    )
-
-
 def duplicate_groups(df: DataFrame, keys: list[str]) -> DataFrame:
     """A10/U4 — duplicate detection: key groups occurring more than once
     (db_check.py:270-297)."""

@@ -16,7 +16,8 @@ Four tiers, increasing recall / cost:
 The MinHash contract is defined once here and shared by the in-frame
 tiers and the persistent index (operators/neardup_index.py), so an
 incremental probe scores exactly like the batch pass:
-  _shingle_df           (id, sh) word shingles off staged tokens
+  _shingle_df           (id, sh) distinct word shingles off staged tokens
+  minhash_signatures    the lane minima folded from a shingle frame
   _band_structs         the band geometry check and the (band, key) hash
   _band_rows            (id, band, key, ...) rows, one per document band
   _lanes                the m0..m{n-1} signature lanes as one array
@@ -42,11 +43,13 @@ from idb_backend_spark.functions.text import (
 from idb_backend_spark.session import spread_for_compute
 
 
-def _shingle_df(
-    df: DataFrame, text_col: str, id_col: str, k: int, distinct: bool = True
-) -> DataFrame:
-    """(id, sh) with tokenization staged through projection boundaries so
-    the shingle window reads attributes, not re-evaluated expressions."""
+def _shingle_df(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """(id, sh): each document's distinct word k-shingles — the one
+    shingle frame every MinHash consumer reads (the signature, the exact
+    verify, the persistent index), so a caller that feeds several of
+    them builds it once and hands each the same frame. Tokenization is staged
+    through projection boundaries so the shingle window reads
+    attributes, not re-evaluated expressions."""
     staged = spread_for_compute(
         df.select(F.col(id_col), F.col(text_col))
     ).select(
@@ -55,10 +58,7 @@ def _shingle_df(
         normalize_text(text_col).alias("__norm"),
     )
     return staged.select(
-        "id",
-        shingles_from_tokens(F.col("__t"), F.col("__norm"), k, distinct).alias(
-            "sh"
-        ),
+        "id", shingles_from_tokens(F.col("__t"), F.col("__norm"), k).alias("sh")
     )
 
 
@@ -189,33 +189,27 @@ def ngram_jaccard_pairs(
 
 
 def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    shingle_k: int = 3,
-    num_hashes: int = 64,
-    seed: int = 42,
+    sh: DataFrame, num_hashes: int = 64, seed: int = 42
 ) -> DataFrame:
-    """(id, m0..m{n-1}) MinHash signature lanes.
+    """(id, m0..m{n-1}) MinHash signature lanes of an (id, sh) shingle
+    frame built by `_shingle_df`.
 
     Signature as ONE hash aggregation: explode the shingles to an inverted
     index, hash each shingle once, then take per-lane min() aggregates.
     Map-side partial aggregation makes this a single bounded shuffle keyed
     by doc id — the formulation that survives 100 TB (the nested 64-lane
     array-expression alternative falls out of codegen and runs interpreted,
-    ~20x slower measured at sf0.1).
+    ~20x slower measured at sf0.1). A frame already hash-partitioned on
+    ``id`` aggregates with no exchange of its own.
 
     explode_outer: see ngram_jaccard_pairs — avoids the inferred size()>0
-    filter that re-inlines the shingle expression. distinct=False: lane
-    mins are duplicate-insensitive, so array_distinct is pure overhead.
+    filter that re-inlines the shingle expression.
     """
     from idb_backend_spark.functions.similarity import MERSENNE_P, _hash_params
 
     params = _hash_params(num_hashes, seed)
-    inv = (
-        _shingle_df(df, text_col, id_col, shingle_k, distinct=False)
-        .select("id", F.explode_outer("sh").alias("g"))
-        .select("id", F.pmod(F.xxhash64("g"), F.lit(MERSENNE_P)).alias("h"))
+    inv = sh.select("id", F.explode_outer("sh").alias("g")).select(
+        "id", F.pmod(F.xxhash64("g"), F.lit(MERSENNE_P)).alias("h")
     )
     lane_aggs = [
         F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE_P))).alias(
@@ -382,7 +376,7 @@ def minhash_lsh_pairs(
     # relative to the corpus, and at scale this is the natural
     # persist-the-sketch point anyway.
     sig = minhash_signatures(
-        df, text_col, id_col, shingle_k, num_hashes, seed
+        _shingle_df(df, text_col, id_col, shingle_k), num_hashes, seed
     ).localCheckpoint(eager=False)
 
     cand = _minhash_candidate_pairs(sig, num_hashes, bands)
@@ -640,9 +634,12 @@ def minhash_exact_verified_pairs(
     # that would pay two signature-array joins and a per-pair
     # lane-agreement computation whose filter passes everything; the
     # exact-Jaccard verify below re-joins shingles anyway
-    sig = minhash_signatures(df, text_col, id_col, shingle_k, num_hashes, seed)
+    # ONE shingle frame, hash-partitioned on id: the signature aggregate
+    # and both verify join sides read that one exchange (the others are
+    # ReusedExchange), so the corpus is shingled once
+    sh = _shingle_df(df, text_col, id_col, shingle_k).repartition("id")
+    sig = minhash_signatures(sh, num_hashes, seed)
     cand = _minhash_candidate_pairs(sig, num_hashes, bands)
-    sh = _shingle_df(df, text_col, id_col, shingle_k)
     return _exact_verified(
         cand, "id_a", sh, "id_b", sh, threshold, hint="shuffle_hash"
     )

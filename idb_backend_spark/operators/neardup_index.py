@@ -50,12 +50,12 @@ Index layout — ONE parquet row dataset plus a tiny immutable sidecar:
       old-geometry meta.
 
 Every MinHash decision comes from operators/dedup.py, so a probe scores
-exactly like the in-frame tiers: the signature (`minhash_signatures`),
-the band geometry check and band rows (`_band_structs`, `_band_rows`),
-the lane array (`_lanes`), the lane-agreement estimate
-(`_estimate_verified`) and the exact-Jaccard verify (`_exact_verified`
-over `_shingle_df`). Broadcasts of the batch side go through
-session._gate_broadcast.
+exactly like the in-frame tiers: the shingle frame (`_shingle_df`), the
+signature folded from it (`minhash_signatures`), the band geometry
+check and band rows (`_band_structs`, `_band_rows`), the lane array
+(`_lanes`), the lane-agreement estimate (`_estimate_verified`) and the
+exact-Jaccard verify (`_exact_verified`) over the same shingle frame.
+Broadcasts of the batch side go through session._gate_broadcast.
 """
 
 from __future__ import annotations
@@ -174,14 +174,9 @@ def _index_rows(
     """(id, band, key, sig) index rows for a document frame — the one
     shared builder, so build and add can never derive different rows."""
     nh = meta["num_hashes"]
-    sig = minhash_signatures(
-        _null_safe(df, text_col),
-        text_col,
-        id_col,
-        shingle_k=meta["shingle_k"],
-        num_hashes=nh,
-        seed=meta["seed"],
-    )
+    k = meta["shingle_k"]
+    sh = _shingle_df(_null_safe(df, text_col), text_col, id_col, k)
+    sig = minhash_signatures(sh, nh, meta["seed"])
     return _band_rows(sig, nh, meta["bands"], _lanes(nh).alias("sig"))
 
 
@@ -418,19 +413,17 @@ def probe_neardup_index(
         raise ValueError("verify='exact' needs the corpus frame")
     spark = new_docs.sparkSession
     meta = read_meta(spark, index_path)
-    nh = meta["num_hashes"]
+    nh, k = meta["num_hashes"], meta["shingle_k"]
+    # the batch's one shingle frame: its signature and (verify="exact")
+    # its side of the exact verify
+    new_sh = _shingle_df(_null_safe(new_docs, text_col), text_col, id_col, k)
     # ONE minhash pass serves both stages (band keys for discovery,
     # lane arrays for the estimate): pinned via localCheckpoint —
     # n_batch x num_hashes longs, spilling to disk if a huge batch
     # outgrows storage memory
-    sig = minhash_signatures(
-        _null_safe(new_docs, text_col),
-        text_col,
-        id_col,
-        shingle_k=meta["shingle_k"],
-        num_hashes=nh,
-        seed=meta["seed"],
-    ).localCheckpoint(eager=True)
+    sig = minhash_signatures(new_sh, nh, meta["seed"]).localCheckpoint(
+        eager=True
+    )
     # sizing count reads the just-checkpointed blocks — no extra scan
     # of the batch, no second minhash pass
     n_batch = sig.count()
@@ -471,11 +464,10 @@ def probe_neardup_index(
         id_col,
         "left_semi",
     )
-    k = meta["shingle_k"]
     return _exact_verified(
         cand,
         "new_id",
-        _shingle_df(_null_safe(new_docs, text_col), text_col, id_col, k),
+        new_sh,
         "corpus_id",
         _shingle_df(_null_safe(cand_corpus, text_col), text_col, id_col, k),
         threshold,

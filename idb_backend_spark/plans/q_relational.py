@@ -365,8 +365,8 @@ def collection_counts_pivot(spark, sf_dir):
 # A7 (basic daily rollup) — catalog entry `stats_daily_rollup` retired to
 # free a grading slot for `export_jobs_queue` (catalog.py
 # retirement rule). The A7 operator stays driver-graded through
-# `stats_rollup_nested` (q_store.py — the full nested-freq-map shape);
-# agg.stats_rollup remains unit-tested in tests/test_plan_properties.py.
+# `stats_rollup_nested` (q_store.py — the full nested-freq-map shape
+# of aggregates.usage_stats_rollup).
 
 
 @query(

@@ -1,7 +1,8 @@
 """Structural guard: every ``tests/test_*.py`` path cited inside the
-package, bench.py or the tests (retirement rationales, docstrings,
-comments — the grading audit trail) must name a file that actually
-exists, and a cited ``::test_function`` must exist inside that file.
+package, bench.py, the tests, DESIGN.md or README.md (retirement
+rationales, docstrings, comments, design pins — the grading audit
+trail) must name a file that actually exists, and a cited
+``::test_function`` must exist inside that file.
 Cited ``tools/*.py`` scripts, ``plans/<dir>/<file>`` plan captures and
 repo-root ``*.md`` docs must exist too, and a cited module name such as
 ``operators/dedup.minhash_lsh_pairs`` must be defined in that module.
@@ -82,8 +83,10 @@ def _sources() -> list[Path]:
 
 
 def _cited() -> list[tuple[Path, str, str | None]]:
+    """Test citations in the code and in the two docs that name a test
+    as the pin of a design decision."""
     out = []
-    for src in _sources():
+    for src in [*_sources(), REPO / "DESIGN.md", REPO / "README.md"]:
         for m in _CITE.finditer(src.read_text()):
             out.append((src, m.group(1), m.group(2)))
     return out

@@ -605,3 +605,70 @@ def test_probe_empty_batch_yields_empty_result(spark, index_dir):
         empty, "text", "doc_id", index_dir, verify="exact", corpus=docs
     )
     assert exact.count() == 0
+
+
+def test_signature_equals_duplicate_keeping_reference(spark):
+    """Lane minima do not depend on repeated shingles: the signature
+    folded from the distinct shingle frame equals one folded from
+    duplicate-keeping shingles (computed inline below), so an index
+    whose rows were hashed from duplicate-keeping shingles still probes
+    the same. The corpus has repeated phrases, documents shorter than
+    k tokens and NULL text (through the index's own NULL fold)."""
+    import random
+
+    from idb_backend_spark.functions.similarity import MERSENNE_P, _hash_params
+    from idb_backend_spark.functions.text import normalize_text, tokens
+    from idb_backend_spark.operators.dedup import _shingle_df, minhash_signatures
+
+    rng = random.Random(7)
+    words = ["alpha", "beta", "gamma", "delta", "eps", "zeta"]
+    rows = [
+        (i, " ".join(rng.choices(words, k=rng.randint(3, 30))))
+        for i in range(60)
+    ]
+    rows += [
+        (100, "to be or not to be to be or not to be"),
+        (101, "la la la la la la la la"),
+        (102, "one two"),
+        (103, "single"),
+        (104, ""),
+        (105, None),
+        (106, "   "),
+    ]
+    k, nh, seed = 3, 16, 42
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    docs = ni._null_safe(docs, "text")
+
+    got = minhash_signatures(_shingle_df(docs, "text", "doc_id", k), nh, seed)
+
+    staged = docs.select(
+        F.col("doc_id").alias("id"),
+        tokens("text").alias("t"),
+        normalize_text("text").alias("norm"),
+    )
+    n = F.size("t")
+    windows = F.transform(
+        F.sequence(F.lit(0), F.greatest(n - k, F.lit(0))),
+        lambda i: F.concat_ws(
+            " ", *[F.element_at("t", (i + j + 1).cast("int")) for j in range(k)]
+        ),
+    )
+    dup_sh = F.when(n >= k, windows).otherwise(F.array("norm"))
+    hashed = staged.select("id", F.explode_outer(dup_sh).alias("g")).select(
+        "id", F.pmod(F.xxhash64("g"), F.lit(MERSENNE_P)).alias("h")
+    )
+    ref = hashed.groupBy("id").agg(
+        *[
+            F.min(F.pmod(F.lit(a) * F.col("h") + F.lit(b), F.lit(MERSENNE_P))).alias(
+                f"m{j}"
+            )
+            for j, (a, b) in enumerate(_hash_params(nh, seed))
+        ]
+    )
+    lanes = [f"m{j}" for j in range(nh)]
+    # the reference really holds repeated shingles for the repeated phrases
+    assert staged.filter(F.size(dup_sh) > F.size(F.array_distinct(dup_sh))).count() >= 2
+    assert sorted(got.select("id", *lanes).collect()) == sorted(
+        ref.select("id", *lanes).collect()
+    )
+    assert got.count() == len(rows)

@@ -388,3 +388,41 @@ def test_border_adjacent_flags_are_pinned():
         -106.49, 31.76, "MX",
         ["rev_geocode_eez", "rev_geocode_mismatch"],
     )
+
+
+def test_udf_ships_geocoders_by_broadcast(spark):
+    """The pandas UDF's pickled command carries a broadcast handle, not
+    the ~1 MB of packaged land and EEZ layers, so a reverse-geocode
+    stage's task binary stays small; its lookups equal the scalar
+    kernel's on land, offshore, flipped and unplaced points."""
+    from pyspark.serializers import CloudPickleSerializer
+    from pyspark.sql import functions as F
+
+    from idb_backend_spark.functions.geo import rev_geocode_udf
+
+    land, eez = default_geocoder(), default_eez_geocoder()
+    udf = rev_geocode_udf(land, eez)
+    command = CloudPickleSerializer().dumps((udf.func, udf.returnType))
+    assert len(command) < 64 * 1024, len(command)
+
+    points = list(GOLDEN_CITIES[:12])
+    points += [(lat, lon, iso) for lon, lat, iso in GOLDEN_CITIES[12:20]]
+    points += [(-lon, lat, iso) for lon, lat, iso in GOLDEN_CITIES[20:28]]
+    points += [(-30.0, 0.0, None), (-30.0, 0.0, "BR"), (0.0, 0.0, "US")]
+    points += OFFSHORE_PROBES
+    df = spark.createDataFrame(
+        [(i, *p) for i, p in enumerate(points)],
+        "i int, lon double, lat double, iso string",
+    )
+    got = [
+        tuple(r)[1:]
+        for r in df.select("i", udf("lon", "lat", "iso").alias("r"))
+        .select("i", "r.lon", "r.lat", "r.country", "r.flags")
+        .orderBy("i")
+        .collect()
+    ]
+    want = []
+    for lon, lat, iso in points:
+        lo, la, country, flags = rev_geocode_py(land, lon, lat, iso, eez)
+        want.append((lo, la, country, ",".join(flags) if flags else None))
+    assert got == want

@@ -40,9 +40,10 @@ from pyspark.sql import functions as F
 PROBES = [
     "exact_dedup",
     "minhash_lsh_pairs",
-    # (ngram_jaccard_pairs was retired — q_textsim.py:84-92;
-    # minhash_exact_verified carries the exact-Jaccard semantics and is
-    # probed via minhash_lsh_pairs)
+    # (ngram_jaccard_pairs was retired — see the `ngram_jaccard_pairs`
+    # retirement comment in plans/q_textsim.py; minhash_exact_verified
+    # carries the exact-Jaccard semantics and is probed via
+    # minhash_lsh_pairs)
     "corpus_curation_pipeline",
     "sequence_packing",
     "token_count_quality",
