@@ -22,8 +22,6 @@ def write_index_table(
     partition_by: list[str] | None = None,
     cluster_by: list[str] | None = None,
     max_records_per_file: int = 1_000_000,
-    mode: str = "overwrite",
-    fmt: str = "parquet",
 ) -> None:
     """Write the typed analytical table with a scan-friendly layout.
 
@@ -54,24 +52,12 @@ def write_index_table(
             *[F.col(c) for c in shuffle_keys], tie
         )
         out = out.sortWithinPartitions(*shuffle_keys)
-    writer = out.write.mode(mode).option(
+    writer = out.write.mode("overwrite").option(
         "maxRecordsPerFile", max_records_per_file
     )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).save(path)
-
-
-def compact(
-    spark_df: DataFrame, target_partitions: int | None = None
-) -> DataFrame:
-    """Small-file compaction pass (the OPTIMIZE analog): coalesce a table
-    rewritten by many incremental merges back to healthy file counts.
-    AQE already coalesces shuffle output; this is for explicit rewrites."""
-    n = target_partitions or max(
-        1, spark_df.sparkSession.sparkContext.defaultParallelism // 2
-    )
-    return spark_df.coalesce(n)
+    writer.parquet(path)
 
 
 def parent_routing(

@@ -22,9 +22,9 @@ cast, like the shim's native point_in_polygon, does not).
 
 from __future__ import annotations
 
-import re
-
+import functools
 import math
+import re
 
 import pandas as pd
 from pyspark.sql import Column, SparkSession
@@ -530,18 +530,20 @@ class GridGeocoder:
         return None
 
 
+@functools.cache
 def default_geocoder() -> GridGeocoder:
     """Geocoder over the packaged coarse world outlines
-    (data/world_regions.py)."""
+    (data/world_regions.py), built once per process."""
     from idb_backend_spark.data.world_regions import WORLD_REGIONS
 
     return GridGeocoder(WORLD_REGIONS)
 
 
+@functools.cache
 def default_eez_geocoder() -> GridGeocoder:
     """Geocoder over the packaged offshore EEZ bands (data/world_eez.py) —
     the marine fallback layer (reference rg.py:60-62 get_rg_eez over the
-    EEZ_land shapefile)."""
+    EEZ_land shapefile), built once per process."""
     from idb_backend_spark.data.world_eez import WORLD_EEZ
 
     return GridGeocoder(WORLD_EEZ)
@@ -619,16 +621,37 @@ def rev_geocode_py(
     return lon, lat, country, flags
 
 
+#: (SparkContext, land, eez, broadcast) of the last layers broadcast
+_last_layers: tuple | None = None
+
+
+def _layers_broadcast(geocoder: GridGeocoder, eez_geocoder: GridGeocoder | None):
+    """The broadcast of ``(geocoder, eez_geocoder)`` on the active
+    SparkContext, reused while the same layer objects are asked for on
+    the same live context. Every broadcast leaves its pickle (~1 MB for
+    the packaged layers) in the driver's temp dir until the context
+    stops, and the catalog rebuilds its reverse-geocode plans with the
+    same cached packaged layers."""
+    global _last_layers
+    sc = SparkSession.active().sparkContext
+    if _last_layers is not None:
+        last_sc, land, eez, bc = _last_layers
+        live = last_sc is sc and sc._jsc is not None
+        if live and land is geocoder and eez is eez_geocoder:
+            return bc
+    bc = sc.broadcast((geocoder, eez_geocoder))
+    _last_layers = (sc, geocoder, eez_geocoder, bc)
+    return bc
+
+
 def rev_geocode_udf(
     geocoder: GridGeocoder, eez_geocoder: GridGeocoder | None = None
 ):
     """Build the pandas UDF bound to driver-constructed geocoders (land
     layer required, marine EEZ layer optional). The geocoders travel as
-    one broadcast variable, fetched once per executor; the UDF's own
-    closure holds only its handle."""
-    layers = SparkSession.active().sparkContext.broadcast(
-        (geocoder, eez_geocoder)
-    )
+    one broadcast variable (`_layers_broadcast`), fetched once per
+    executor; the UDF's own closure holds only its handle."""
+    layers = _layers_broadcast(geocoder, eez_geocoder)
     schema = StructType(
         [
             StructField("lon", DoubleType()),

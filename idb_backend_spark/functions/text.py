@@ -229,7 +229,7 @@ def whole_token_match(c: Column | str, query: str) -> Column:
     (reference query_shim.py:123-133).
 
     The single source of truth for whole-token matching — the shim's P7
-    compiler (query/shim._fulltext) and the token-index residual filter
+    compiler (query/shim.compile_shim) and the token-index residual filter
     (plans/skipping.fulltext_scan) both call this, so index pruning can
     never diverge from shim filtering. Query tokens come from the
     ENGINE (`query_tokens`), so they always agree with what

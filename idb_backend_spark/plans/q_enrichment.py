@@ -17,7 +17,11 @@ from idb_backend_spark.operators import (  # noqa: F401
 from idb_backend_spark.functions import grabbers, text  # noqa: F401
 from idb_backend_spark.plans import synth
 from idb_backend_spark.plans.registry import _t, _t_spread, query
-from idb_backend_spark.query.shim import compile_shim, shim_to_sql  # noqa: F401
+from idb_backend_spark.query.shim import (  # noqa: F401
+    compile_shim,
+    point_in_polygon_sql,
+    shim_to_sql,
+)
 from idb_backend_spark.plans.synth import decimal_exponent_sql
 from idb_backend_spark.plans.synth import GEO_LAT as _GEO_LAT
 from idb_backend_spark.plans.synth import GEO_LON as _GEO_LON
@@ -34,24 +38,6 @@ from idb_backend_spark.functions import finalize as FIN
 from idb_backend_spark.functions.flags import flag_column
 
 _POLY = [[-100.0, 10.0], [-60.0, 10.0], [-80.0, 45.0]]  # [lon, lat] ring
-
-
-def _poly_crossing_sql(lat: str, lon: str, poly) -> str:
-    """The same unrolled ray-cast crossing test the shim compiler emits
-    (edge-by-edge XOR), as SQL: crossing-count parity."""
-    terms = []
-    pts = poly[:-1] if poly[0] == poly[-1] else poly
-    n = len(pts)
-    for i in range(n):
-        x1, y1 = pts[i]
-        x2, y2 = pts[(i + 1) % n]
-        if y1 == y2:
-            continue
-        terms.append(
-            f"CAST((({y1} > {lat}) != ({y2} > {lat})) AND "
-            f"({lon} < ({lat} - ({y1})) * ({(x2 - x1) / (y2 - y1)!r}) + ({x1})) AS INT)"
-        )
-    return "(" + " + ".join(terms) + ") % 2 = 1"
 
 
 # Entry `shim_geo_polygon` retired (slot freed for
@@ -78,11 +64,11 @@ _POLY_P11 = [[-100.0, 10.0], [-80.0, 10.0], [-90.0, 45.0]]
     "SELECT c_custkey, lat, lon, "
     "(lat <= 40.0 AND lat >= 20.0 AND lon >= -90.0 AND lon <= -70.0)"
     " AS in_env, "
-    f"({_poly_crossing_sql('lat', 'lon', _POLY_P11)}) AS in_poly_p11 "
+    f"({point_in_polygon_sql('lat', 'lon', _POLY_P11)}) AS in_poly_p11 "
     "FROM (SELECT c_custkey, "
     f"{_GEO_LAT} AS lat, {_GEO_LON} AS lon FROM customer) g "
-    f"WHERE ({_poly_crossing_sql('lat', 'lon', _POLY)}) "
-    f"AND NOT ({_poly_crossing_sql('lat', 'lon', _HOLE)}) "
+    f"WHERE ({point_in_polygon_sql('lat', 'lon', _POLY)}) "
+    f"AND NOT ({point_in_polygon_sql('lat', 'lon', _HOLE)}) "
     "ORDER BY c_custkey",
 )
 def shim_geo_shape(spark, sf_dir):
@@ -94,27 +80,23 @@ def shim_geo_shape(spark, sf_dir):
     ray-cast kernel reached through P11's `{"type": "geo_polygon",
     "points": ...}` dispatch (query_shim.py:89-90), so both predicate
     spellings stay driver-graded in one slot."""
-    from idb_backend_spark.query.shim import single_filter
-
     g = (
         _t(spark, sf_dir, "customer")
         .withColumn("lat", F.expr(_GEO_LAT))
         .withColumn("lon", F.expr(_GEO_LON))
         .withColumn("geopoint", F.struct(F.col("lat"), F.col("lon")))
     )
-    poly_with_hole = single_filter(
-        "geopoint",
-        {
+    poly_with_hole = compile_shim({
+        "geopoint": {
             "type": "geo_shape",
             "shape": {"type": "polygon", "coordinates": [_POLY, _HOLE]},
         },
-    )
-    envelope = single_filter(
-        "geopoint",
-        {"type": "geo_shape", "shape": {"type": "envelope", "coordinates": _ENV}},
-    )
-    poly_p11 = single_filter(
-        "geopoint", {"type": "geo_polygon", "points": _POLY_P11}
+    })
+    envelope = compile_shim({
+        "geopoint": {"type": "geo_shape", "shape": {"type": "envelope", "coordinates": _ENV}},
+    })
+    poly_p11 = compile_shim(
+        {"geopoint": {"type": "geo_polygon", "points": _POLY_P11}}
     )
     return (
         g.filter(poly_with_hole)

@@ -26,8 +26,7 @@ def shim_fulltext(spark, sf_dir):
     """P7 — fulltext AND of whole-token matches over the precomputed
     fulltext column (ES analyzed-`_all` + operator:and semantics,
     reference query_shim.py:123-133; analyzer tokenization strips
-    punctuation on both sides; substring contains() is opt-in via
-    ``substring: true``)."""
+    punctuation on both sides)."""
     docs = _t(spark, sf_dir, "documents").withColumn(
         "fulltext", F.lower(F.col("text"))
     )

@@ -27,10 +27,7 @@ not in the file's bucket set while `contains()` would match.
 whole-token matches (what the reference's `_all` match with operator:and
 actually does, query_shim.py:123-133), through the same
 `functions.text.whole_token_match` the shim's P7 compiler uses, so
-pruning is exact — no false negatives possible. The shim's opt-in
-``substring: true`` flavor has no index path: the whole-token index
-cannot prune for substrings, so those queries go through `compile_shim`
-over the full table.
+pruning is exact — no false negatives possible.
 """
 
 from __future__ import annotations

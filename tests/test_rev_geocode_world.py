@@ -426,3 +426,34 @@ def test_udf_ships_geocoders_by_broadcast(spark):
         lo, la, country, flags = rev_geocode_py(land, lon, lat, iso, eez)
         want.append((lo, la, country, ",".join(flags) if flags else None))
     assert got == want
+
+
+def test_plan_builds_share_one_layers_broadcast(spark, sf_dir, monkeypatch):
+    """Three reverse-geocode plan builds in one session bind the packaged
+    layers' one broadcast: at most one pickle file joins the driver's
+    temp dir (the first build of the session writes it), not three. The
+    lookups equal those of a plan whose layers are built and broadcast
+    afresh."""
+    import os
+
+    from idb_backend_spark.data.world_eez import WORLD_EEZ
+    from idb_backend_spark.data.world_regions import WORLD_REGIONS
+    from idb_backend_spark.functions import geo
+    from idb_backend_spark.plans.catalog import Q
+
+    temp_dir = spark.sparkContext._temp_dir
+    before = set(os.listdir(temp_dir))
+    plans = [
+        Q[name](spark, sf_dir)
+        for name in ("rev_geocode", "rev_geocode_offshore", "rev_geocode")
+    ]
+    assert len(set(os.listdir(temp_dir)) - before) <= 1
+    got = [p.collect() for p in plans]
+    assert got[0] == got[2]
+
+    monkeypatch.setattr(geo, "default_geocoder", lambda: geo.GridGeocoder(WORLD_REGIONS))
+    monkeypatch.setattr(geo, "default_eez_geocoder", lambda: geo.GridGeocoder(WORLD_EEZ))
+    before = set(os.listdir(temp_dir))
+    fresh = [Q[name](spark, sf_dir).collect() for name in ("rev_geocode", "rev_geocode_offshore")]
+    assert len(set(os.listdir(temp_dir)) - before) == 2
+    assert fresh == got[:2]

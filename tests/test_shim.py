@@ -91,19 +91,12 @@ def test_fulltext_and_semantics(df):
 def test_fulltext_whole_token_default(df):
     # ES analyzed-_all semantics: a query token that is a proper substring
     # of a document token must NOT match ('alb' vs 'alba', 'rubr' vs
-    # 'rubrum') — only substring: true opts into contains() semantics.
+    # 'rubrum').
     assert _genera(df, {"data": {"type": "fulltext", "value": "alb"}}) == []
     assert _genera(df, {"data": {"type": "fulltext", "value": "rubr"}}) == []
-    assert _genera(
-        df, {"data": {"type": "fulltext", "value": "alb", "substring": True}}
-    ) == ["quercus alba"]
-    assert _genera(
-        df, {"data": {"type": "fulltext", "value": "rubr", "substring": True}}
-    ) == ["acer rubrum"]
-    # whole-token queries behave identically in both modes
-    assert _genera(
-        df, {"data": {"type": "fulltext", "value": "alba", "substring": True}}
-    ) == _genera(df, {"data": {"type": "fulltext", "value": "alba"}})
+    assert _genera(df, {"data": {"type": "fulltext", "value": "alba"}}) == [
+        "quercus alba"
+    ]
 
 
 def test_fulltext_analyzer_strips_punctuation(spark):
@@ -212,39 +205,6 @@ def test_unknown_predicate_raises(df):
         compile_shim({"genus": {"type": "bogus"}})
 
 
-def test_sql_emission_matches_spark(spark, df):
-    """The emitted SQL must select the same rows as the compiled Column."""
-    import duckdb
-
-    pdf = df.drop("geopoint").toPandas()
-    con = duckdb.connect()
-    con.register("t", pdf)
-    shims = [
-        {"genus": "ACER"},
-        {"genus": ["acer", "Quercus"]},
-        {"count": {"type": "range", "gte": 5, "lt": 12}},
-        {"name": {"type": "prefix", "value": "que"}},
-        {"genus": {"type": "missing"}},
-        {"fulltext": {"type": "fulltext", "value": "alba georgia"}},
-        {"fulltext": {"type": "fulltext", "value": "alb"}},
-        {"fulltext": {"type": "fulltext", "value": "alb", "substring": True}},
-        {"fulltext": {"type": "fulltext", "value": "rubrum florida"}},
-        {"fulltext": {"type": "fulltext", "value": "Alba, georgia!"}},
-        {},
-    ]
-    for shim in shims:
-        spark_names = sorted(
-            r.name for r in df.filter(compile_shim(shim)).select("name").collect()
-        )
-        sql_names = sorted(
-            r[0]
-            for r in con.execute(
-                f"SELECT name FROM t WHERE {shim_to_sql(shim)}"
-            ).fetchall()
-        )
-        assert spark_names == sql_names, shim
-
-
 def test_empty_terms_list_matches_nothing_both_paths(df):
     """P2 with an empty list: always-false on the Column path, and the
     SQL emission must be the runnable constant FALSE — 'IN ()' is a
@@ -268,20 +228,6 @@ def test_prefix_like_escapes_metachars_in_sql(df):
     assert duckdb.sql(f"SELECT {hit_sql}").fetchone()[0] is True
     # and the underscore stays a literal: 'myxval...' must NOT match
     miss_sql = sql.replace("lower(f)", "'myxvalue'")
-    assert duckdb.sql(f"SELECT {miss_sql}").fetchone()[0] is False
-
-
-def test_substring_fulltext_escapes_like_metachars(df):
-    """Substring mode is a LITERAL contains() on the Column path, so the
-    SQL emission must escape % and _ in query tokens."""
-    import duckdb
-
-    sql = shim_to_sql(
-        {"fulltext": {"type": "fulltext", "value": "100%", "substring": True}}
-    )
-    hit_sql = sql.replace("fulltext", "'price 100% off'")
-    assert duckdb.sql(f"SELECT {hit_sql}").fetchone()[0] is True
-    miss_sql = sql.replace("fulltext", "'price 1000 off'")
     assert duckdb.sql(f"SELECT {miss_sql}").fetchone()[0] is False
 
 
@@ -361,7 +307,7 @@ def test_sql_emission_property_parity(spark):
     @settings(max_examples=60, deadline=None, derandomize=True)
     @given(
         value=probe,
-        kind=st.sampled_from(["term", "terms", "prefix", "substring"]),
+        kind=st.sampled_from(["term", "terms", "prefix", "fulltext"]),
     )
     def check(value, kind):
         if kind == "term":
@@ -371,13 +317,7 @@ def test_sql_emission_property_parity(spark):
         elif kind == "prefix":
             shim = {"v": {"type": "prefix", "value": value}}
         else:
-            if not value.strip():
-                return  # empty substring probe = match-all on both sides
-            shim = {
-                "fulltext": {
-                    "type": "fulltext", "value": value, "substring": True,
-                }
-            }
+            shim = {"fulltext": {"type": "fulltext", "value": value}}
         spark_ids = sorted(
             r["id"] for r in sdf.filter(compile_shim(shim)).collect()
         )
@@ -415,40 +355,139 @@ def test_bare_geojson_geometry_compiles(spark):
     generic unrecognized-spec error."""
     from pyspark.sql import functions as F
 
-    from idb_backend_spark.query.shim import single_filter
-
     ring = [[0.0, 0.0], [2.0, 0.0], [2.0, 2.0], [0.0, 2.0], [0.0, 0.0]]
     df = spark.createDataFrame(
         [(1.0, 1.0), (5.0, 5.0)], "lat double, lon double"
     ).select(F.struct("lat", "lon").alias("geopoint"))
     inside = df.filter(
-        single_filter("geopoint", {"type": "Polygon", "coordinates": [ring]})
+        compile_shim({"geopoint": {"type": "Polygon", "coordinates": [ring]}})
     ).count()
     assert inside == 1
     env = df.filter(
-        single_filter(
-            "geopoint",
-            {"type": "envelope", "coordinates": [[-1.0, 1.5], [1.5, -1.0]]},
-        )
+        compile_shim({
+            "geopoint": {
+                "type": "envelope", "coordinates": [[-1.0, 1.5], [1.5, -1.0]],
+            },
+        })
     ).count()
     assert env == 1
 
 
-def test_sql_emitter_malformed_spec_parity():
-    """The SQL emitter raises the SAME ShimError the Column path does for
-    malformed specs — an empty range previously emitted invalid SQL '()'
-    and a value-less prefix crashed with AttributeError."""
-    import pytest
-
-    from idb_backend_spark.query.shim import ShimError, shim_to_sql
-
+def test_sql_emitter_malformed_spec_parity(spark):
+    """Both emitters raise ShimError for every malformed spec: an empty
+    range once emitted invalid SQL '()', a value-less prefix crashed
+    with AttributeError, and a spec still asking for the removed
+    fulltext ``substring`` flavor must not quietly match whole tokens."""
+    bad_box = {"fulltext": "acer", "top_left": {"lat": 1.0, "lon": 2.0}}
     for spec in (
         {"count": {"type": "range"}},
         {"name": {"type": "prefix"}},
         {"x": {"type": "weird", "gte": 5}},
+        {"genus": {"type": "bogus"}},
+        {"geopoint": bad_box},
+        {"fulltext": {"type": "fulltext"}},
+        {"fulltext": {"type": "fulltext", "value": "alb", "substring": True}},
+        {"fulltext": {"type": "fulltext", "value": "alb", "substring": False}},
+        {"x": {"fulltext": "alb", "substring": True}},
+        {"geopoint": {"lat": 1.0, "lon": 2.0, "distance": "5parsecs"}},
+        {"geopoint": {"type": "geo_shape",
+                      "shape": {"type": "linestring", "coordinates": [[0, 0]]}}},
+        {"geopoint": {"type": "MultiPolygon", "coordinates": []}},
+        {"geopoint": {"type": "Polygon", "coordinates": []}},
     ):
         with pytest.raises(ShimError):
+            compile_shim(spec)
+        with pytest.raises(ShimError):
             shim_to_sql(spec)
+
+
+def test_sql_emission_matches_spark(spark):
+    """The emitted SQL must select the same rows as the compiled Column:
+    every predicate kind, the polygon family included, through
+    compile_shim on Spark and through shim_to_sql on DuckDB over one
+    Arrow copy of the rows (geopoint a lat/lon struct, one of them with
+    NULL coordinates)."""
+    import duckdb
+
+    from idb_backend_spark.query.shim import _COLUMN, _parse
+
+    rows = spark.createDataFrame(
+        [
+            ("acer rubrum", "Acer", 5, "acer rubrum florida", 29.6, -82.3),
+            ("quercus alba", "quercus", 12, "quercus alba georgia", 33.7, -84.4),
+            ("origin", None, None, "unknown", 0.0, 0.0),
+            ("east", "Abies", 7, "pacific east", 0.0, 175.0),
+            ("west", "abies", 20, "pacific west", 0.0, -175.0),
+            ("square", "Betula", 1, "inside square", 1.0, 1.0),
+            ("far", "betula", 3, "far square", 11.0, 11.0),
+            ("nowhere", "Acer", 9, "no coordinates", None, None),
+        ],
+        "name string, genus string, count int, fulltext string,"
+        " lat double, lon double",
+    ).selectExpr(
+        "name", "genus", "count", "fulltext",
+        "named_struct('lat', lat, 'lon', lon) AS geopoint",
+    )
+    con = duckdb.connect()
+    con.register("t", rows.toArrow())
+
+    box = [[-90.0, 25.0], [-75.0, 25.0], [-75.0, 36.0], [-90.0, 36.0]]
+    hole = [[-83.0, 29.0], [-81.0, 29.0], [-81.0, 30.0], [-83.0, 30.0]]
+    square = [[0.5, 0.5], [2.0, 0.5], [2.0, 2.0], [0.5, 2.0], [0.5, 0.5]]
+    far = [[10, 10], [12, 10], [12, 12], [10, 12]]  # integer vertices
+    shims = [
+        ({"genus": "ACER"}, ["acer rubrum", "nowhere"]),
+        ({"genus": ["abies", "Betula"]}, ["east", "far", "square", "west"]),
+        ({"genus": {"type": "exists"}}, None),
+        ({"genus": {"type": "missing"}}, ["origin"]),
+        ({"count": {"type": "range", "gte": 5, "lt": 12}}, None),
+        ({"count": {"lte": 3}}, ["far", "square"]),
+        ({"name": {"type": "prefix", "value": "QUE"}}, ["quercus alba"]),
+        ({"f": {"type": "fulltext", "value": "Pacific"}}, ["east", "west"]),
+        ({"f": {"type": "fulltext", "value": "alba georgia"}}, ["quercus alba"]),
+        ({"f": {"type": "fulltext", "value": "alb"}}, []),
+        ({"f": {"type": "fulltext", "value": "rubrum florida"}}, ["acer rubrum"]),
+        ({"f": {"type": "fulltext", "value": "Alba, georgia!"}}, ["quercus alba"]),
+        ({"geopoint": {"type": "geo_bounding_box",
+                       "top_left": {"lat": 31.0, "lon": -85.0},
+                       "bottom_right": {"lat": 28.0, "lon": -80.0}}},
+         ["acer rubrum"]),
+        ({"geopoint": {"top_left": {"lat": 5, "lon": 170},
+                       "bottom_right": {"lat": -5, "lon": -170}}},
+         ["east", "west"]),
+        ({"geopoint": {"type": "geo_distance", "lat": 29.65, "lon": -82.32,
+                       "distance": "50km"}}, ["acer rubrum"]),
+        ({"geopoint": {"type": "geo_polygon", "points": far}}, ["far"]),
+        ({"geopoint": {"type": "Polygon", "coordinates": [square]}},
+         ["square"]),
+        ({"geopoint": {"type": "geo_shape",
+                       "shape": {"type": "polygon", "coordinates": [box, hole]}}},
+         ["quercus alba"]),
+        ({"geopoint": {"type": "MultiPolygon",
+                       "coordinates": [[box, hole], [square], [far]]}},
+         ["far", "quercus alba", "square"]),
+        ({"geopoint": {"type": "geo_shape",
+                       "shape": {"type": "envelope",
+                                 "coordinates": [[170.0, 10.0], [-170.0, -10.0]]}}},
+         ["east", "west"]),
+        ({"genus": {"type": "exists"}, "count": {"gt": 4}}, None),
+        ({}, None),
+    ]
+    kinds = {p.kind for shim, _ in shims for p in _parse(shim, False)}
+    assert kinds == set(_COLUMN)
+    for shim, want in shims:
+        spark_names = sorted(
+            r.name for r in rows.filter(compile_shim(shim)).select("name").collect()
+        )
+        sql_names = sorted(
+            r[0]
+            for r in con.execute(
+                f"SELECT name FROM t WHERE {shim_to_sql(shim)}"
+            ).fetchall()
+        )
+        assert spark_names == sql_names, shim
+        if want is not None:
+            assert spark_names == want, shim
 
 
 def test_reference_python_shim_geo_shape_is_broken(spark):

@@ -6,7 +6,7 @@ import glob
 
 from pyspark.sql import functions as F
 
-from idb_backend_spark.export.sink import compact, write_index_table
+from idb_backend_spark.export.sink import write_index_table
 
 
 def test_write_index_table_layout(spark, tmp_path):
@@ -40,11 +40,6 @@ def test_write_index_table_layout(spark, tmp_path):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "PartitionFilters: [isnotnull(type" in plan
-
-
-def test_compact_reduces_partitions(spark):
-    df = spark.range(0, 1000).repartition(64)
-    assert compact(df, 4).rdd.getNumPartitions() == 4
 
 
 def test_parent_routing_pins(spark):

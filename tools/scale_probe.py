@@ -66,37 +66,33 @@ PROBES = [
 ]
 
 
+def _write_replicas(df, dst: str, name: str, factor: int, shift) -> None:
+    """Write ``df`` (replica 0) unioned with ``shift(df, i)`` for each
+    replica i in 1..factor-1 as ``dst/name.parquet``."""
+    out = df
+    for i in range(1, factor):
+        out = out.unionByName(shift(df, i))
+    out.write.mode("overwrite").parquet(f"{dst}/{name}.parquet")
+
+
 def build_scaled(spark, src: str, dst: str, factor: int) -> None:
-    docs = spark.read.parquet(f"{src}/documents.parquet")
-    parts = []
-    for i in range(factor):
-        if i == 0:
-            parts.append(docs)
-            continue
+    def shift(docs, i):
         sfx = f"_{i}"
-        tagged = docs.select(
+        return docs.select(
             (F.col("doc_id") + i * 10_000_000).alias("doc_id"),
             F.array_join(
-                F.transform(
-                    F.split("text", " "),
-                    lambda x: F.concat(x, F.lit(sfx)),  # noqa: B023 — sfx
-                    # rebound per loop below via default-free closure: the
-                    # expression is BUILT inside this iteration, so the
-                    # closure's cell holds this iteration's sfx when the
-                    # Column is constructed (never use a default arg here:
-                    # PySpark would bind it to the array index)
-                ),
+                # sfx is local to this call, so the lambda needs no
+                # default arg (PySpark would bind one to the array index)
+                F.transform(F.split("text", " "), lambda x: F.concat(x, F.lit(sfx))),
                 " ",
             ).alias("text"),
             "lang",
             "source",
             "n_chars",
         )
-        parts.append(tagged)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{dst}/documents.parquet")
+
+    docs = spark.read.parquet(f"{src}/documents.parquet")
+    _write_replicas(docs, dst, "documents", factor, shift)
 
 
 def build_scaled_embeddings(spark, src: str, dst: str, factor: int) -> None:
@@ -110,13 +106,10 @@ def build_scaled_embeddings(spark, src: str, dst: str, factor: int) -> None:
     # truncate/pad replicas (and corrupt the recall probe) if the table's
     # geometry ever changed
     dim = len(emb.select("embedding").first()["embedding"])
-    parts = []
-    for i in range(factor):
-        if i == 0:
-            parts.append(emb)
-            continue
+
+    def shift(emb, i):
         r = (i - 1) % (dim - 1) + 1  # 1..dim-1: rotation 0 would copy exactly
-        rotated = emb.select(
+        return emb.select(
             (F.col("vec_id") + i * 10_000_000).alias("vec_id"),
             F.concat(
                 F.slice("embedding", r + 1, dim - r),
@@ -124,11 +117,8 @@ def build_scaled_embeddings(spark, src: str, dst: str, factor: int) -> None:
             ).alias("embedding"),
             "label",
         )
-        parts.append(rotated)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{dst}/embeddings.parquet")
+
+    _write_replicas(emb, dst, "embeddings", factor, shift)
 
 
 def build_scaled_events(spark, src: str, dst: str, factor: int) -> None:
@@ -140,28 +130,21 @@ def build_scaled_events(spark, src: str, dst: str, factor: int) -> None:
     ev = spark.read.parquet(f"{src}/events.parquet")
     ts_is_long = dict(ev.dtypes)["ts"] == "bigint"  # nanos-as-long read
     day_ns = 86_400 * 1_000_000_000
-    parts = []
-    for i in range(factor):
-        if i == 0:
-            parts.append(ev)
-            continue
-        ts_shift = (
-            F.col("ts") + F.lit(i * day_ns)
-            if ts_is_long
-            else F.col("ts") + F.make_dt_interval(days=F.lit(i))
-        )
-        shifted = ev.withColumns(
+
+    def shift(ev, i):
+        return ev.withColumns(
             {
                 "event_id": F.col("event_id") + i * 10_000_000,
                 "user_id": F.col("user_id") + i * 1_000_000,
-                "ts": ts_shift,
+                "ts": (
+                    F.col("ts") + F.lit(i * day_ns)
+                    if ts_is_long
+                    else F.col("ts") + F.make_dt_interval(days=F.lit(i))
+                ),
             }
         )
-        parts.append(shifted)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{dst}/events.parquet")
+
+    _write_replicas(ev, dst, "events", factor, shift)
 
 
 def build_scaled_lineitem(spark, src: str, dst: str, factor: int) -> None:
@@ -170,23 +153,13 @@ def build_scaled_lineitem(spark, src: str, dst: str, factor: int) -> None:
     COUNT grows with the data, group SIZE does not, matching how a real
     corpus grows."""
     li = spark.read.parquet(f"{src}/lineitem.parquet")
-    parts = []
-    for i in range(factor):
-        if i == 0:
-            parts.append(li)
-            continue
-        shifted = li.withColumns(
-            {
-                "l_orderkey": F.col("l_orderkey") + i * 100_000_000,
-                "l_partkey": F.col("l_partkey") + i * 10_000_000,
-                "l_suppkey": F.col("l_suppkey") + i * 1_000_000,
-            }
-        )
-        parts.append(shifted)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{dst}/lineitem.parquet")
+    _write_replicas(li, dst, "lineitem", factor, lambda li, i: li.withColumns(
+        {
+            "l_orderkey": F.col("l_orderkey") + i * 100_000_000,
+            "l_partkey": F.col("l_partkey") + i * 10_000_000,
+            "l_suppkey": F.col("l_suppkey") + i * 1_000_000,
+        }
+    ))
 
 
 #: entries whose work runs EAGERLY inside the entry body (training
@@ -241,13 +214,9 @@ def build_scaled_part(spark, src: str, dst: str, factor: int) -> None:
     the FULL key in the discovery probe) stay replica-unique — the url
     domain grows with the data, matching how a real media table grows."""
     pt = spark.read.parquet(f"{src}/part.parquet").select("p_partkey")
-    parts = [pt]
-    for i in range(1, factor):
-        parts.append(pt.select((F.col("p_partkey") + i * 10_000_000).alias("p_partkey")))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    out.write.mode("overwrite").parquet(f"{dst}/part.parquet")
+    _write_replicas(pt, dst, "part", factor, lambda pt, i: pt.select(
+        (F.col("p_partkey") + i * 10_000_000).alias("p_partkey")
+    ))
 
 
 def probe_discovery_scale(spark, f1_dir: str, fN_dir: str, factor: int) -> dict:
